@@ -23,15 +23,6 @@ def percentile(values: list[float], q: float) -> float:
     return s[rank - 1]
 
 
-def median(values: list[float]) -> float:
-    """Middle value (mean of the two middle values for an even count)."""
-    if not values:
-        raise ValueError("median of an empty sample")
-    s = sorted(values)
-    n = len(s)
-    return s[n // 2] if n % 2 else (s[n // 2 - 1] + s[n // 2]) / 2.0
-
-
 def union_length(intervals: list[tuple[float, float]]) -> float:
     """Total length covered by a set of [start, end] intervals."""
     total, cur_s, cur_e = 0.0, None, None
@@ -124,6 +115,35 @@ def self_times(spans: list[dict]) -> dict[int, float]:
     return out
 
 
+def run_beside(tasks: list) -> None:
+    """Run each callable on a thread of its own, wait for all of them,
+    then re-raise the first error any of them raised."""
+    errors: list[BaseException] = []
+
+    def guarded(task) -> None:
+        try:
+            task()
+        except BaseException as exc:  # re-raised below
+            errors.append(exc)
+
+    threads = [threading.Thread(target=guarded, args=(t,)) for t in tasks]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    if errors:
+        raise errors[0]
+
+
+def seconds_by_kind(results: list[dict]) -> dict[str, float]:
+    """Summed wall time of recorded operations, per operation kind."""
+    out: dict[str, float] = {}
+    for r in results:
+        k = r["op"]["kind"]
+        out[k] = out.get(k, 0.0) + r["end"] - r["start"]
+    return out
+
+
 def dir_bytes(root: str) -> int:
     """Bytes of every regular file under `root` (0 when absent)."""
     total = 0
@@ -171,3 +191,12 @@ def rows_equal(got: list, want: list) -> bool:
     return len(got) == len(want) and all(
         len(g) == len(w) and all(values_equal(x, y) for x, y in zip(g, w))
         for g, w in zip(got, want))
+
+
+def row_sets_equal(got: list, want: list) -> bool:
+    """Row lists equal in any order: both sorted by their text form, then
+    compared as `rows_equal` does."""
+    def key(row):
+        return tuple(str(_norm(v)) for v in row)
+
+    return rows_equal(sorted(got, key=key), sorted(want, key=key))

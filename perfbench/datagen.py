@@ -4,8 +4,8 @@ Writes the TPC-H-ish star schema plus `documents` and `embeddings` with
 the column names and parquet types `hive_nexr_spark.io.register_views`
 expects, one parquet FILE per table (the documents stream reader filters
 the directory by file name). Sizes follow the driver test data at
-sf0.01: lineitem 60,000 rows, orders 15,000 and 500 documents. The same
-seed writes the same bytes.
+sf0.01: lineitem 60,000 rows, orders 15,000, 500 documents and 500
+embeddings. The same seed writes the same bytes.
 """
 
 from __future__ import annotations
@@ -24,6 +24,7 @@ N_PART = 2000
 N_ORDERS = 15000
 N_LINEITEM = 60000
 N_DOCS = 500
+N_VECS, DIM, N_LABELS = 500, 64, 10
 
 WORDS = ("a agg batch big column customer data dup fast filter group hash "
          "join key line merge order part query row scan slow small sort "
@@ -143,9 +144,21 @@ def _documents(rng):
             "n_chars": pa.array([len(t) for t in texts], pa.int64())}
 
 
+def _embeddings(rng):
+    """Unit vectors scattered around one centre per label."""
+    centres = rng.normal(size=(N_LABELS, DIM))
+    label = rng.integers(0, N_LABELS, N_VECS)
+    v = centres[label] + 0.8 * rng.normal(size=(N_VECS, DIM))
+    v = (v / np.linalg.norm(v, axis=1, keepdims=True)).astype(np.float32)
+    return {"vec_id": pa.array(np.arange(N_VECS), pa.int64()),
+            "embedding": pa.array(list(v), pa.list_(pa.float32())),
+            "label": pa.array(label, pa.int32())}
+
+
 TABLES = {"region": _region, "nation": _nation, "customer": _customer,
           "supplier": _supplier, "part": _part, "orders": _orders,
-          "lineitem": _lineitem, "documents": _documents}
+          "lineitem": _lineitem, "documents": _documents,
+          "embeddings": _embeddings}
 
 
 def generate(out_dir: str, seed: int, tables: list[str]) -> None:

@@ -71,7 +71,7 @@ class Engine:
         Returns the seconds spent in each step."""
         t0 = time.perf_counter()
         from hive_nexr_spark import scratch
-        from hive_nexr_spark.io import register_views
+        from hive_nexr_spark.queries.base import ensure_views
         from hive_nexr_spark.session import get_session
 
         # process-scratch dirs (module-managed index scratch) land
@@ -83,7 +83,9 @@ class Engine:
         t2 = time.perf_counter()
         self.spark.sql("SHOW DATABASES").collect()
         t3 = time.perf_counter()
-        register_views(self.spark, self.dirs["data"])
+        # io.register_views, kept in the package's per-session view cache
+        # that the datapipe and streaming entry points read through
+        ensure_views(self.spark, self.dirs["data"])
         t4 = time.perf_counter()
         out = {"import_s": t1 - t0, "session_s": t2 - t1,
                "metastore_s": t3 - t2, "views_s": t4 - t3}
@@ -95,14 +97,6 @@ class Engine:
             out["hiveql_init_s"] = time.perf_counter() - t4
         out["total_s"] = time.perf_counter() - t0
         return out
-
-    def stop_session(self) -> None:
-        if self.server is not None:
-            self.server.shutdown()
-            self.server = None
-        if self.spark is not None:
-            self.spark.stop()
-            self.spark = None
 
     def jvm_pid(self) -> int:
         from pyspark import SparkContext
@@ -118,7 +112,12 @@ class Engine:
         """Stop the session, then the JVM, and wait for the JVM to exit."""
         from pyspark import SparkContext
 
-        self.stop_session()
+        if self.server is not None:
+            self.server.shutdown()
+            self.server = None
+        if self.spark is not None:
+            self.spark.stop()
+            self.spark = None
         gw = SparkContext._gateway
         if gw is None:
             return

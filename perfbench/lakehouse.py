@@ -1,43 +1,70 @@
 """`lakehouse_ingest`: writes beside reads on one `sources/snapshots`
-table and one persisted LSH dedup index.
+table, a persisted LSH dedup index and a persisted IVF-PQ vector index,
+plus one streaming ingest and a short batch pass of datapipe keys.
 
 The seed fixes one operation sequence. Table writes are partitioned
 appends of orders slices, deletes, merge-upserts and periodic partition
 and full compactions; table reads are the latest version, an older
-version and the change set between two versions. An LSH dedup index is
-built once, before the clock starts, and then takes an add, a delete, a
-compaction and a query. The sequence ends with snapshot expiry and
-orphan removal. Before the clock starts, the same kinds of table
-operation also run once on a separate warm-up table, so the timed phase
-does not pay first-use compilation.
+version and the change set between two versions. One
+`stream_dedup_ingest` call gates the planted-duplicate arrival stream
+against the persisted LSH index it builds; that index then takes an add,
+a delete, a compaction and a query. The IVF-PQ index is built before the
+clock starts and then takes an add, a delete and a query, in that order.
+A datapipe key runs after the table round, and the sequence ends with
+snapshot expiry and orphan removal. Before the clock starts, the table
+operations also run once on a separate warm-up table, so the timed phase
+does not pay their first-use compilation; the index, stream and datapipe
+operations pay theirs, as a one-shot job would.
 
-Every read is checked against a pure-Python model of the sequence.
+Table reads and LSH queries are checked against a pure-Python model of
+the sequence; IVF-PQ queries, the stream's decisions and the datapipe
+keys against the repository's DuckDB oracles over the same parquet.
 """
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import random
+import threading
 import time
+from statistics import median
 
-from common import dir_bytes, median
+from common import dir_bytes, row_sets_equal, run_beside
 
 SLICE = 300            # orders rows per append
 N_DELETE = 10          # keys per delete
 N_UPSERT = (6, 4)      # (updated, inserted) keys per upsert
 NEW_KEY0 = 10_000_000  # inserted keys live above every orders key
+# Reads cost a fraction of a write here; a round reads after each write
+# so that one round holds enough read samples for a p90.
 ROUND = ("append", "read", "delete", "time_travel", "upsert", "changes",
-         "read")
-SECONDS_PER_ROUND = 10.0  # sizes the rounds to about --seconds
-LSH_BUILD_DOCS, DOC_BATCH = 300, 50
+         "read", "time_travel")
+SECONDS_PER_ROUND = 20.0  # one round at --seconds 20, with the index,
+                          # stream and datapipe operations besides
+# stream_dedup_ingest builds its LSH index on documents 0-199 and brings
+# in documents 200-249 and planted duplicates; the LSH operations after it
+# work on that index and add documents from 250 on.
+LSH_BUILD_DOCS, LSH_ADD_FROM, DOC_BATCH = 200, 250, 50
+EXACT, NEAR = 100_000, 200_000  # planted duplicate ids: doc_id + these
 THRESHOLD = 0.5
-BUILDS = ("lsh_build",)  # run before the clock starts
-INDEX_OPS = ("lsh_add", "lsh_delete", "lsh_query", "lsh_compact")
+N_IVF_QUERIES = 10  # vec_id < 10 are the IVF-PQ query vectors
+# the index is built on the queries and the even vec_ids; the add brings
+# in the odd ones (the repository oracle's add-batch split)
+IVF_BUILD_PRED = "vec_id < 10 OR vec_id % 2 = 0"
+DATAPIPE_KEYS = ("dedup_minhash_lsh_full",)
+BUILDS = ("ivf_build",)  # run before the clock starts
+LSH_OPS = ("lsh_add", "lsh_delete", "lsh_query", "lsh_compact")
+IVF_OPS = ("ivf_add", "ivf_delete", "ivf_query")  # in this order
 WRITES = {"append", "delete", "upsert", "compact", "compact_partition",
-          "expire", "orphans", "lsh_build", "lsh_add", "lsh_delete",
-          "lsh_compact"}
+          "expire", "orphans", "lsh_add", "lsh_delete",
+          "lsh_compact", "ivf_build", "ivf_add", "ivf_delete",
+          "stream_ingest"}
+READS = {"read", "time_travel", "changes", "lsh_query", "ivf_query"}
+ORACLED = ("ivf_query", "stream_ingest", "datapipe")  # DuckDB-checked
 TABLE_WRITES = ("append", "delete", "upsert", "compact", "compact_partition")
+STREAM_DURATIONS = ("addBatch", "walCommit", "queryPlanning", "getBatch")
 
 
 def make_ops(seed: int, rounds: int) -> list[dict]:
@@ -46,8 +73,9 @@ def make_ops(seed: int, rounds: int) -> list[dict]:
     rng = random.Random(f"lake:{seed}")
     ops: list[dict] = [{"kind": k} for k in BUILDS]
     st = {"version": 0, "live": set(), "slice": 0, "new_key": NEW_KEY0,
-          "last_compact": 0, "appended": False, "doc_next": LSH_BUILD_DOCS,
-          "docs": set(range(LSH_BUILD_DOCS)), "deleted_docs": set()}
+          "last_compact": 0, "appended": False, "doc_next": LSH_ADD_FROM,
+          "docs": set(range(LSH_BUILD_DOCS)), "deleted_docs": set(),
+          "ivf_deleted": None}
 
     def table_op(kind: str) -> dict:
         if kind == "append":
@@ -109,12 +137,26 @@ def make_ops(seed: int, rounds: int) -> list[dict]:
                 range(450, 500), 2) + rng.sample(
                 sorted(st["deleted_docs"]), min(2, len(st["deleted_docs"])))
             return {"kind": kind, "ids": sorted(set(probes))}
+        if kind == "ivf_delete":
+            m = rng.randrange(5, 10)
+            st["ivf_deleted"] = (m, rng.randrange(m))
+            return {"kind": kind, "mod": m, "rem": st["ivf_deleted"][1]}
+        elif kind == "ivf_query":
+            return {"kind": kind, "deleted": st["ivf_deleted"]}
         return {"kind": kind}
 
     ops.append(table_op("append"))
-    index_plan = list(INDEX_OPS)
-    rng.shuffle(index_plan)
-    slots = sorted(rng.sample(range(rounds * len(ROUND)), len(index_plan)))
+    lsh = list(LSH_OPS)
+    rng.shuffle(lsh)
+    # the LSH ops work on the stream's index, so they come after it; the
+    # IVF-PQ ops keep their order, at seeded places among the others
+    others = ["stream_ingest"] + lsh
+    n = len(others) + len(IVF_OPS)
+    at = set(rng.sample(range(n), len(IVF_OPS)))
+    ivf, rest = iter(IVF_OPS), iter(others)
+    index_plan = [next(ivf) if i in at else next(rest) for i in range(n)]
+    slots = sorted(rng.sample(range(rounds * len(ROUND)),
+                              min(n, rounds * len(ROUND))))
     pos = 0
     for r in range(rounds):
         kinds = list(ROUND)
@@ -130,6 +172,7 @@ def make_ops(seed: int, rounds: int) -> list[dict]:
             pos += 1
     while index_plan:
         ops.append(index_op(index_plan.pop(0)))
+    ops += [{"kind": "datapipe", "key": k} for k in DATAPIPE_KEYS]
     keep = max(1, st["version"] - 2)
     ops += [{"kind": "expire", "keep_from": keep}, {"kind": "orphans"},
             {"kind": "read", "version": st["version"]},
@@ -139,18 +182,128 @@ def make_ops(seed: int, rounds: int) -> list[dict]:
     return ops
 
 
-# One table write of each kind and a change read, on a table of its own.
+# The table operations whose first call compiles much more than later
+# ones do, on a table of its own. (A compaction's first call costs about
+# what later ones do.)
 WARMUP = [
     {"kind": "append", "lo": 0, "hi": SLICE},                       # v1
     {"kind": "delete", "keys": list(range(0, 2 * N_DELETE, 2))},    # v2
     {"kind": "upsert", "rows": [(1, 100), (NEW_KEY0, 200)],
      "template": 0},                                                # v3
     {"kind": "changes", "from": 1, "to": 3},
-    {"kind": "compact_partition", "part": "F"},                     # v4
-    {"kind": "compact"},                                            # v5
 ]
 for _i, _op in enumerate(WARMUP):
     _op["id"] = f"warm{_i}"
+
+
+def oracle_sql(op: dict) -> str:
+    """DuckDB SQL for the rows an oracle-checked operation must return."""
+    from hive_nexr_spark.queries import datapipe_q, streaming_q
+
+    k = op["kind"]
+    if k == "datapipe":
+        return datapipe_q.ORACLE[op["key"]]
+    if k == "stream_ingest":
+        return streaming_q.ORACLE["dedup_stream_ingest_gate"]
+    if k == "ivf_query":  # after the add, and the delete if any
+        visible = None
+        if op["deleted"]:
+            m, r = op["deleted"]
+            visible = (f"NOT (co.vec_id >= {N_IVF_QUERIES} "
+                       f"AND co.vec_id % {m} = {r})")
+        return datapipe_q._ivf_pq_residual_sql(
+            n_queries=N_IVF_QUERIES, train_pred=IVF_BUILD_PRED,
+            visible_pred=visible)
+    raise ValueError(k)
+
+
+class Oracle:
+    """DuckDB over the run's parquet, for the oracle-checked operations.
+    One DuckDB thread: it runs beside the Spark work of the prepare
+    phase."""
+
+    def __init__(self, data_dir: str):
+        import duckdb
+
+        self.con = duckdb.connect(config={"threads": 1})
+        for t in ("documents", "embeddings"):
+            self.con.execute(f"CREATE VIEW {t} AS SELECT * FROM "
+                             f"read_parquet('{data_dir}/{t}.parquet')")
+
+    def rows(self, sql: str) -> tuple[list[str], list[tuple]]:
+        cur = self.con.execute(sql)
+        return [d[0].lower() for d in cur.description], cur.fetchall()
+
+    def close(self) -> None:
+        self.con.close()
+
+
+def mismatch(expected: tuple[list[str], list[tuple]], rows: list,
+             cols: list[str]) -> str | None:
+    """None when `rows` (columns `cols`) equal the oracle's rows as a set;
+    else what differs. Columns match by name, in any order."""
+    names, want = expected
+    cols = [c.lower() for c in cols]
+    if sorted(cols) != sorted(names):
+        return f"columns {cols}, oracle {names}"
+    idx = [names.index(c) for c in cols]
+    want = [tuple(w[i] for i in idx) for w in want]
+    if not row_sets_equal(rows, want):
+        return f"{len(rows)} rows differ from the oracle's {len(want)}"
+    return None
+
+
+class StreamProgress:
+    """Sums the progress events of every streaming query the session runs
+    while it is attached (traced runs only)."""
+
+    def __init__(self, spark):
+        from pyspark.sql.streaming import StreamingQueryListener
+
+        outer = self
+
+        class Listener(StreamingQueryListener):
+            def onQueryStarted(self, event):
+                pass
+
+            def onQueryProgress(self, event):
+                outer._progress(event.progress)
+
+            def onQueryIdle(self, event):
+                pass
+
+            def onQueryTerminated(self, event):
+                outer._terminated.set()
+
+        self.spark = spark
+        self.batches = self.input_rows = 0
+        self.ms = dict.fromkeys(STREAM_DURATIONS, 0)
+        self._terminated = threading.Event()
+        self._listener = Listener()
+        spark.streams.addListener(self._listener)
+
+    def _progress(self, p) -> None:
+        self.batches += 1
+        self.input_rows += p.numInputRows
+        for k in STREAM_DURATIONS:
+            self.ms[k] += p.durationMs.get(k, 0)
+
+    def wait_terminated(self) -> None:
+        """Block until the last query's termination event arrives, so its
+        progress events are all counted."""
+        if not self._terminated.wait(60):
+            raise RuntimeError("no termination event from the stream")
+        self._terminated.clear()
+
+    def close(self) -> None:
+        self.spark.streams.removeListener(self._listener)
+
+    def metrics(self) -> dict[str, float]:
+        if not self.batches:
+            raise RuntimeError("no streaming progress event was received")
+        return {"streaming.batches": self.batches,
+                "streaming.input_rows": self.input_rows,
+                **{f"streaming.{k}_ms": v for k, v in self.ms.items()}}
 
 
 # -- pure-Python model ---------------------------------------------------
@@ -216,7 +369,7 @@ def jaccard(a: set[str], b: set[str]) -> float:
 
 class LakehouseWorkload:
     name = "lakehouse_ingest"
-    tables = ("orders", "documents")
+    tables = ("orders", "documents", "embeddings")
     serve = False
 
     def __init__(self, engine, seed: int, seconds: int, tracer):
@@ -227,7 +380,9 @@ class LakehouseWorkload:
         root = engine.dirs["tables"]
         self.base = os.path.join(root, "orders_snap")
         self.warm_base = os.path.join(root, "warmup_snap")
-        self.lsh_root = os.path.join(root, "lsh_index")
+        self.lsh_root = None  # the streaming ingest's index, once it ran
+        self.ivf_root = os.path.join(root, "ivf_pq_index")
+        self.stream = None  # progress listener, traced runs only
         self.results: list[dict] = []
         self.handlers: list[tuple[str, float, float]] = []
         self.commit_files: list[tuple[int, int]] = []
@@ -237,73 +392,78 @@ class LakehouseWorkload:
     def prepare(self) -> None:
         import pyarrow.parquet as pq
 
+        from hive_nexr_spark.datapipe._cache import release_tracked
+
         spark = self.engine.spark
         data = self.engine.dirs["data"]
         os.makedirs(self.base)
         os.makedirs(self.warm_base)
         self.orders = spark.read.parquet(f"{data}/orders.parquet")
         self.docs = spark.read.parquet(f"{data}/documents.parquet")
+        self.emb = spark.read.parquet(f"{data}/embeddings.parquet")
         ot = pq.read_table(f"{data}/orders.parquet")
         self.orders_arrow = ot
         self.order_rows = {r["o_orderkey"]: r for r in ot.to_pylist()}
         self.cents = {k: round(r["o_totalprice"] * 100)
                       for k, r in self.order_rows.items()}
-        self.doc_text = {r["doc_id"]: r["text"] for r in
-                         pq.read_table(f"{data}/documents.parquet").to_pylist()}
+        doc_text = {r["doc_id"]: r["text"] for r in
+                    pq.read_table(f"{data}/documents.parquet").to_pylist()}
+        # the stream's planted duplicates: exact copies and 'zzz ' + text
+        self.all_text = {**doc_text}
+        for d, t in doc_text.items():
+            self.all_text[d + EXACT] = t
+            self.all_text[d + NEAR] = "zzz " + t
+        self.emb_ids = pq.read_table(f"{data}/embeddings.parquet",
+                                     columns=["vec_id"])["vec_id"].to_pylist()
         self._seen_files: dict[str, int] = {}
         self._scan_new_files()
-        self._run_ops(WARMUP, self.warm_base, record=False)
-        # the index is built once, outside the timed phase; its build
-        # time is a per-layer metric
-        self._run_ops([op for op in self.ops if op["kind"] in BUILDS],
-                      self.base)
+        # The warm-up table, the IVF-PQ build and the DuckDB oracles share
+        # nothing, so they run side by side: the untimed part is most of a
+        # run. The build time (a per-layer metric) is taken beside the
+        # others, and the build's files are counted once all have ended.
+        def warm_up() -> None:
+            for op in WARMUP:
+                self._time_op(op, self.warm_base)
+
+        def build() -> None:
+            for op in self.ops:
+                if op["kind"] in BUILDS:
+                    self.results.append(self._time_op(op, self.base))
+
+        run_beside([warm_up, build, self._expect])
+        self.written += self._scan_new_files()[1]
+        release_tracked()
 
     # -- running ----------------------------------------------------------
 
     def run(self) -> None:
-        self._run_ops([op for op in self.ops if op["kind"] not in BUILDS],
-                      self.base)
+        if self.tracer.enabled:
+            self.stream = StreamProgress(self.engine.spark)
+        try:
+            self._run_ops([op for op in self.ops
+                           if op["kind"] not in BUILDS])
+        finally:
+            if self.stream is not None:
+                self.stream.close()
         self.manifest_bytes = sum(
             os.path.getsize(os.path.join(self.base, f))
             for f in os.listdir(self.base) if f.endswith(".json"))
 
-    def _run_ops(self, ops: list[dict], base: str,
-                 record: bool = True) -> None:
-        from pyspark.sql import functions as F
-
-        from hive_nexr_spark.datapipe import dedup
-        from hive_nexr_spark.sources import snapshots
-
-        spark, tr = self.engine.spark, self.tracer
-        sc = spark.sparkContext
-        fp_cols = [F.count("*"), F.sum("o_orderkey"),
-                   F.sum(F.col("o_totalprice").cast("decimal(30,2)"))]
-
-        def fp(df):
-            with tr.span("spark.collect"):
-                c, s, p = df.agg(*fp_cols).collect()[0]
-            return (c, s or 0, round((p or 0) * 100))
-
-        def call(name, fn, *a, **kw):
-            with tr.span(name):
-                return fn(*a, **kw)
+    def _run_ops(self, ops: list[dict]) -> None:
+        """The timed operations, one after another, each recorded."""
+        from hive_nexr_spark.datapipe._cache import release_tracked
 
         for op in ops:
             k = op["kind"]
-            payload = self._payload(op)
-            gid = f"pb-{op['id']}"
-            if tr.enabled:
-                sc.setJobGroup(gid, "perfbench")
-            t0 = time.perf_counter()
-            with tr.span(f"op.{k}", op=gid):
-                out = self._execute(op, payload, base, call, fp, spark,
-                                    snapshots, dedup)
-            t1 = time.perf_counter()
-            if not record:
-                continue
-            if k not in BUILDS:
-                self.handlers.append((gid, t0, t1))
-            rec = {"op": op, "start": t0, "end": t1, "out": out}
+            rec = self._time_op(op, self.base)
+            # cached blocks of one operation must not serve the next
+            release_tracked()
+            if k == "stream_ingest":
+                self.lsh_root = self._stream_index_root()
+                if self.stream is not None:
+                    self.stream.wait_terminated()
+            self.handlers.append((f"pb-{op['id']}", rec["start"],
+                                  rec["end"]))
             if k in WRITES:
                 files, nbytes = self._scan_new_files()
                 self.written += nbytes
@@ -314,9 +474,57 @@ class LakehouseWorkload:
                     op.get("version", op.get("to")))
             self.results.append(rec)
 
-    def _execute(self, op, payload, base, call, fp, spark, snapshots,
-                 dedup):
-        k = op["kind"]
+    def _stream_index_root(self) -> str:
+        """The LSH index `stream_dedup_ingest` built and admitted into: the
+        one directory it made under the package's process-scratch root
+        (`<root>/dedup_ingest_<hex>_<pid>/<hex>`)."""
+        found = glob.glob(os.path.join(
+            self.engine.dirs["scratch"], f"dedup_ingest_*_{os.getpid()}",
+            "*"))
+        if len(found) != 1:
+            raise RuntimeError(f"found {len(found)} stream indexes: {found}")
+        return found[0]
+
+    def _time_op(self, op: dict, base: str) -> dict:
+        """Run one operation on the table at `base` under its own job
+        group; its input DataFrame is built before the clock starts."""
+        gid = f"pb-{op['id']}"
+        if self.tracer.enabled:
+            self.engine.spark.sparkContext.setJobGroup(gid, "perfbench")
+        payload = self._payload(op)
+        t0 = time.perf_counter()
+        with self.tracer.span(f"op.{op['kind']}", op=gid):
+            out = self._execute(op, payload, base)
+        return {"op": op, "start": t0, "end": time.perf_counter(),
+                "out": out}
+
+    def _execute(self, op, payload, base):
+        from pyspark.sql import functions as F
+
+        from hive_nexr_spark.datapipe import dedup, similarity
+        from hive_nexr_spark.queries import datapipe_q
+        from hive_nexr_spark.sources import snapshots
+        from hive_nexr_spark.streaming import neardup
+
+        spark, k = self.engine.spark, op["kind"]
+        data = self.engine.dirs["data"]
+
+        def call(name, fn, *a, **kw):
+            with self.tracer.span(name):
+                return fn(*a, **kw)
+
+        def collect(df):
+            with self.tracer.span("spark.collect"):
+                return [tuple(r) for r in df.collect()], df.columns
+
+        def fp(df):
+            with self.tracer.span("spark.collect"):
+                c, s, p = df.agg(
+                    F.count("*"), F.sum("o_orderkey"),
+                    F.sum(F.col("o_totalprice").cast("decimal(30,2)")),
+                ).collect()[0]
+            return (c, s or 0, round((p or 0) * 100))
+
         if k == "append":
             return call("sources.commit_append_partitioned",
                         snapshots.commit_append_partitioned, spark, base,
@@ -349,9 +557,6 @@ class LakehouseWorkload:
         if k == "orphans":
             return len(call("sources.remove_orphans",
                             snapshots.remove_orphans, base, 0))
-        if k == "lsh_build":
-            return call("lsh_index.build", dedup.lsh_index_build, payload,
-                        self.lsh_root, max_doc_id=LSH_BUILD_DOCS)
         if k == "lsh_add":
             return call("lsh_index.add_batch", dedup.lsh_index_add_batch,
                         spark, self.lsh_root, payload)
@@ -364,8 +569,26 @@ class LakehouseWorkload:
         if k == "lsh_query":
             df = call("lsh_index.query", dedup.lsh_index_query, spark,
                       self.lsh_root, payload, THRESHOLD)
-            with self.tracer.span("spark.collect"):
-                return [tuple(r) for r in df.collect()]
+            return collect(df)[0]
+        if k == "ivf_build":
+            return call("ivf_pq.build_index", similarity.ivf_pq_build_index,
+                        payload, self.ivf_root, n_queries=N_IVF_QUERIES)
+        if k == "ivf_add":
+            return call("ivf_pq.add_batch", similarity.ivf_pq_add_batch,
+                        spark, self.ivf_root, payload)
+        if k == "ivf_delete":
+            return call("ivf_pq.delete", similarity.ivf_pq_delete, spark,
+                        self.ivf_root, payload)
+        if k == "ivf_query":
+            return collect(call("ivf_pq.query_index",
+                                similarity.ivf_pq_query_index, spark,
+                                self.ivf_root, payload))
+        if k == "stream_ingest":
+            return collect(call("streaming.stream_dedup_ingest",
+                                neardup.stream_dedup_ingest, spark, data))
+        if k == "datapipe":
+            fn = datapipe_q.QUERIES[op["key"]]
+            return collect(call(f"datapipe.{op['key']}", fn, spark, data))
         raise ValueError(k)
 
     def _payload(self, op: dict):
@@ -384,8 +607,6 @@ class LakehouseWorkload:
             rows = [{**self.order_rows.get(x, tmpl), "o_orderkey": x,
                      "o_totalprice": c / 100} for x, c in op["rows"]]
             return spark.createDataFrame(rows, self.orders.schema)
-        if k == "lsh_build":
-            return self.docs.filter(F.col("doc_id") < LSH_BUILD_DOCS)
         if k == "lsh_add":
             return self.docs.filter((F.col("doc_id") >= op["lo"])
                                     & (F.col("doc_id") < op["hi"]))
@@ -394,13 +615,28 @@ class LakehouseWorkload:
                                          "doc_id bigint")
         if k == "lsh_query":
             return self.docs.filter(F.col("doc_id").isin(op["ids"]))
+        vec = F.col("vec_id")
+        if k == "ivf_build":
+            return self.emb.filter((vec < N_IVF_QUERIES) | (vec % 2 == 0))
+        if k == "ivf_add":
+            return self.emb.filter((vec >= N_IVF_QUERIES) & (vec % 2 == 1))
+        if k == "ivf_delete":
+            return self.emb.filter(
+                (vec >= N_IVF_QUERIES) & (vec % op["mod"] == op["rem"])
+            ).select("vec_id")
+        if k == "ivf_query":
+            return self.emb.filter(vec < N_IVF_QUERIES).select(
+                vec.alias("query_id"),
+                F.col("embedding").cast("array<double>").alias("qv"))
         return None
 
     def _scan_new_files(self) -> tuple[int, int]:
         """(files, bytes) that appeared under the table and index roots
         since the last scan. Every writer here lands new file names."""
         files = nbytes = 0
-        for root in (self.base, self.lsh_root):
+        for root in (self.base, self.lsh_root, self.ivf_root):
+            if root is None:
+                continue
             for dirpath, _d, names in os.walk(root):
                 for n in names:
                     p = os.path.join(dirpath, n)
@@ -425,7 +661,11 @@ class LakehouseWorkload:
         out = {"read": [], "write": []}
         for r in self.timed():
             ms = (r["end"] - r["start"]) * 1e3
-            out["write" if r["op"]["kind"] in WRITES else "read"].append(ms)
+            k = r["op"]["kind"]
+            if k in WRITES:
+                out["write"].append(ms)
+            elif k in READS:
+                out["read"].append(ms)
         return out
 
     def wall(self) -> float:
@@ -435,12 +675,24 @@ class LakehouseWorkload:
     def attempted(self) -> int:
         return len(self.ops)
 
+    def _expect(self) -> None:
+        """The DuckDB oracles' rows for the oracle-checked operations.
+        They depend only on the inputs, so they are made before the
+        clock."""
+        oracle = Oracle(self.engine.dirs["data"])
+        try:
+            self.expected = {op["id"]: oracle.rows(oracle_sql(op))
+                             for op in self.ops if op["kind"] in ORACLED}
+        finally:
+            oracle.close()
+
     def check(self, data_dir: str) -> list[str]:
-        """Failures as "<op id>: <what>", against the model."""
+        """Failures as "<op id>: <what>", against the model and the
+        DuckDB oracles."""
         model = TableModel()
         failures = []
-        docs = set(range(LSH_BUILD_DOCS))
-        sh = {d: shingles(t) for d, t in self.doc_text.items()}
+        docs, admitted = set(range(LSH_BUILD_DOCS)), set()
+        sh = {d: shingles(t) for d, t in self.all_text.items()}
         for r in self.results:
             op, out, k = r["op"], r["out"], r["op"]["kind"]
             if k in TABLE_WRITES:
@@ -465,7 +717,25 @@ class LakehouseWorkload:
                 docs -= set(op["ids"])
             elif k == "lsh_query":
                 failures += self._check_lsh(op, out, docs, sh)
-        self.live = {"table": model.snaps[-1], "docs": docs}
+            elif k in ORACLED:
+                bad = mismatch(self.expected[op["id"]], *out)
+                if bad:
+                    failures.append(
+                        f"{op['id']}: {op.get('key', k)} {bad}")
+                if k == "stream_ingest":  # what the gate admitted
+                    rows, cols = out
+                    i, a = cols.index("doc_id"), cols.index("admitted")
+                    admitted = {row[i] for row in rows if row[a] == 1}
+                    docs |= admitted
+        ivf = {v for v in self.emb_ids if v < N_IVF_QUERIES or v % 2 == 0}
+        for op in self.ops:
+            if op["kind"] == "ivf_add":
+                ivf |= {v for v in self.emb_ids if v % 2 == 1}
+            elif op["kind"] == "ivf_delete":
+                ivf -= {v for v in self.emb_ids if v >= N_IVF_QUERIES
+                        and v % op["mod"] == op["rem"]}
+        self.live = {"table": model.snaps[-1], "docs": docs, "vecs": ivf,
+                     "admitted": admitted}
         return failures
 
     @staticmethod
@@ -481,6 +751,9 @@ class LakehouseWorkload:
         bad += [f"{op['id']}: live doc {p} did not match itself"
                 for p in op["ids"] if p in docs and (p, p) not in found]
         return bad
+
+    def known_defects(self) -> list[str]:
+        return []
 
     def amplification(self, data_dir: str, scratch: str) -> dict[str, float]:
         """write_amp: bytes written under the table and index roots ÷ the
@@ -501,8 +774,8 @@ class LakehouseWorkload:
             return total
 
         ot = self.orders_arrow
-        docs = pq.read_table(f"{data_dir}/documents.parquet",
-                             columns=["doc_id", "text"])
+        emb = pq.read_table(f"{data_dir}/embeddings.parquet",
+                            columns=["vec_id", "embedding"])
 
         def orders_rows(prices: dict[int, int]) -> pa.Table:
             tmpl = self.order_rows[0]
@@ -510,11 +783,16 @@ class LakehouseWorkload:
                      "o_totalprice": c / 100} for k, c in prices.items()]
             return pa.Table.from_pylist(rows, schema=ot.schema)
 
+        def doc_rows(ids) -> pa.Table:
+            ids = sorted(ids)
+            return pa.table({"doc_id": pa.array(ids, pa.int64()),
+                             "text": [self.all_text[d] for d in ids]})
+
         def pick(t, col, ids):
             return t.filter(pc.is_in(t[col], pa.array(sorted(ids),
                                                       pa.int64())))
 
-        sub_rows, keys, doc_ids = {}, [], set()
+        sub_rows, keys, doc_ids, vec_ids = {}, [], set(), set()
         for op in self.ops:
             k = op["kind"]
             if k == "append":
@@ -526,22 +804,34 @@ class LakehouseWorkload:
                 keys += op["keys"]
             elif k == "lsh_delete":
                 keys += op["ids"]
-            elif k == "lsh_build":
+            elif k == "stream_ingest":
                 doc_ids |= set(range(LSH_BUILD_DOCS))
             elif k == "lsh_add":
                 doc_ids |= set(range(op["lo"], op["hi"]))
+            elif k == "ivf_build":
+                vec_ids |= {v for v in self.emb_ids
+                            if v < N_IVF_QUERIES or v % 2 == 0}
+            elif k == "ivf_add":
+                vec_ids |= {v for v in self.emb_ids if v % 2 == 1}
+            elif k == "ivf_delete":
+                keys += [v for v in self.emb_ids if v >= N_IVF_QUERIES
+                         and v % op["mod"] == op["rem"]]
         submitted = plain([
             orders_rows(sub_rows),
             pa.table({"key": pa.array(keys, pa.int64())}),
-            pick(docs, "doc_id", doc_ids)])
+            doc_rows(doc_ids | self.live["admitted"]),
+            pick(emb, "vec_id", vec_ids)])
         live = plain([orders_rows(self.live["table"]),
-                      pick(docs, "doc_id", self.live["docs"])])
+                      doc_rows(self.live["docs"]),
+                      pick(emb, "vec_id", self.live["vecs"])])
         on_disk = sum(dir_bytes(r) for r in
-                      (self.base, self.lsh_root))
+                      (self.base, self.lsh_root, self.ivf_root))
         return {"write_amp": self.written / submitted,
                 "space_amp": on_disk / live}
 
-    def layer_metrics(self) -> dict[str, float]:
+    def layer_metrics(self, jobs: list[dict]) -> dict[str, float]:
+        from engine import job_totals
+
         by_kind: dict[str, list[float]] = {}
         for r in self.results:
             by_kind.setdefault(r["op"]["kind"], []).append(
@@ -571,9 +861,28 @@ class LakehouseWorkload:
             / len(self.commit_files),
             "sources.manifest_bytes": self.manifest_bytes,
             "sources.dirs_per_read": sum(dirs) / len(dirs),
-            "lsh_index.build_ms": p50("lsh_build"),
             "lsh_index.add_ms": p50("lsh_add"),
             "lsh_index.delete_ms": p50("lsh_delete"),
             "lsh_index.compact_ms": p50("lsh_compact"),
             "lsh_index.query_ms": p50("lsh_query"),
+            "ivf_pq.build_ms": p50("ivf_build"),
+            "ivf_pq.add_ms": p50("ivf_add"),
+            "ivf_pq.delete_ms": p50("ivf_delete"),
+            "ivf_pq.query_ms": p50("ivf_query"),
+            **self.stream.metrics(),
+            **self._datapipe_metrics(jobs, job_totals),
         }
+
+    def _datapipe_metrics(self, jobs, job_totals) -> dict[str, float]:
+        out = {}
+        for r in self.results:
+            op = r["op"]
+            if op["kind"] != "datapipe":
+                continue
+            tot = job_totals([j for j in jobs
+                              if j["group"] == f"pb-{op['id']}"])
+            pre = f"datapipe.{op['key']}."
+            out[pre + "wall_s"] = r["end"] - r["start"]
+            out[pre + "tasks"] = tot["tasks"]
+            out[pre + "shuffle_write_bytes"] = tot["shuffle_write_bytes"]
+        return out

@@ -40,11 +40,12 @@ def test_lakehouse_ops_repeat_per_seed():
 def test_serve_shares():
     for ops in serve.make_ops(3, 50):
         kinds = [op["kind"] for op in ops]
+        n_w = round(50 * serve.WRITE_SHARE)
         assert len(ops) == 50
-        assert kinds.count("write") == 5
-        assert kinds.count("readback") == 5
+        assert kinds.count("write") == n_w
+        assert kinds.count("readback") == n_w
         reads = [op for op in ops if op["kind"] == "read"]
-        assert sum(op["fresh"] for op in reads) == 20
+        assert sum(op["fresh"] for op in reads) == (50 - 2 * n_w) // 2
         assert reads[0]["fresh"]
         # every write is followed by the read-back of its partition
         for i, op in enumerate(ops):
@@ -83,14 +84,31 @@ def test_lakehouse_versions_are_consistent():
         "expire", "orphans", "read", "time_travel"]
 
 
+@pytest.mark.parametrize("rounds", [1, 3])
+def test_lakehouse_index_stream_and_datapipe_ops(rounds):
+    for seed in range(1, 6):
+        kinds = [op["kind"] for op in lakehouse.make_ops(seed, rounds)]
+        assert kinds[:1] == list(lakehouse.BUILDS)
+        # the IVF-PQ query sees the add and the delete before it
+        assert [k for k in kinds if k.startswith("ivf_")][1:] == list(
+            lakehouse.IVF_OPS)
+        assert kinds.count("stream_ingest") == 1
+        # the LSH ops work on the index the stream builds
+        first_lsh = min(kinds.index(k) for k in lakehouse.LSH_OPS)
+        assert kinds.index("stream_ingest") < first_lsh
+        keys = [op["key"] for op in lakehouse.make_ops(seed, rounds)
+                if op["kind"] == "datapipe"]
+        assert sorted(keys) == sorted(lakehouse.DATAPIPE_KEYS)
+
+
 def test_datagen_repeats_per_seed(tmp_path):
     a, b, c = tmp_path / "a", tmp_path / "b", tmp_path / "c"
-    datagen.generate(str(a), 4, ["orders", "documents"])
-    datagen.generate(str(b), 4, ["documents", "orders", "nation"])
-    datagen.generate(str(c), 5, ["orders"])
-    orders = (a / "orders.parquet").read_bytes()
-    assert orders == (b / "orders.parquet").read_bytes()
-    assert orders != (c / "orders.parquet").read_bytes()
+    datagen.generate(str(a), 4, ["orders", "embeddings"])
+    datagen.generate(str(b), 4, ["embeddings", "orders", "nation"])
+    datagen.generate(str(c), 5, ["orders", "embeddings"])
+    for t in ("orders.parquet", "embeddings.parquet"):
+        assert (a / t).read_bytes() == (b / t).read_bytes()
+        assert (a / t).read_bytes() != (c / t).read_bytes()
 
 
 # -- arithmetic ----------------------------------------------------------
@@ -104,11 +122,6 @@ def test_percentile_nearest_rank():
     assert common.percentile([5, 1, 4, 2, 3], 90) == 5
     with pytest.raises(ValueError):
         common.percentile([], 50)
-
-
-def test_median():
-    assert common.median([3, 1, 2]) == 2
-    assert common.median([4, 1, 3, 2]) == 2.5
 
 
 def test_union_and_clipping():
@@ -148,6 +161,12 @@ def test_rows_equal_tolerates_float_order_only():
     assert common.rows_equal([[1, 0.1 + 0.2]], [(1, 0.3)])
     assert not common.rows_equal([[1, 0.3]], [(1, 0.31)])
     assert not common.rows_equal([[1]], [(1,), (2,)])
+
+
+def test_row_sets_equal_ignores_row_order():
+    assert common.row_sets_equal([(2, "b"), (1, "a")], [(1, "a"), (2, "b")])
+    assert common.row_sets_equal([(1, 0.1 + 0.2)], [(1, 0.3)])
+    assert not common.row_sets_equal([(1, "a")], [(1, "a"), (1, "a")])
 
 
 # -- lakehouse model -----------------------------------------------------
