@@ -938,68 +938,31 @@ def lsh_index_add_batch(spark, index_root: str,
 
 
 def lsh_index_delete(spark, index_root: str, keys: DataFrame) -> int:
-    """MERGE-ON-READ delete for the persisted LSH dedup index — the
-    lifecycle half the snapshot table (`sources/snapshots.py:61`) and
-    the ANN index already have: removing documents from the corpus must
-    tombstone their shingle/band rows without rewriting any index data.
-
-    `keys` is a one-column (doc_id) DataFrame of documents to remove.
-    They are written as a TOMBSTONE parquet dir — work O(|keys|)
-    regardless of index size — and committed as one atomic manifest
-    bump appending to a `tombstones` index table. Queries at the new
-    version anti-join tombstoned doc_ids out of candidate generation;
-    every PRE-delete version lists no (or fewer) tombstone dirs and
-    stays AS-OF readable with the deleted documents still matching.
-
-    SEQUENCED (r12, `index_manifest.applicable_tombs`): the tombstone
-    carries its commit version and applies only to index dirs committed
-    EARLIER — so delete(X) followed by `lsh_index_add_batch` re-adding X
-    makes X matchable again at HEAD (the re-add's dirs have a larger
-    sequence), while reads pinned before the re-add still exclude it.
-    Returns the new manifest version."""
+    """MERGE-ON-READ delete for the persisted LSH dedup index: `keys`
+    (one doc_id column) lands as a sequenced tombstone through
+    `index_manifest.commit_tombstones`, the same delete the snapshot
+    table (`snapshots.commit_delete`) and the vector index
+    (`similarity.ivf_pq_delete`) make. No index data file is rewritten;
+    queries at the new version stop matching the deleted documents,
+    every pre-delete version stays AS-OF readable, and a later
+    `lsh_index_add_batch` re-adding a document makes it matchable
+    again. Returns the new manifest version."""
     from ..sources import index_manifest as idx
 
-    tag = f"b{idx.latest_version(index_root) + 1:05d}"
-    tdir = idx.new_data_dir(index_root, "tombstones", tag)
-    tomb = keys.select("doc_id")
-    tomb.write.mode("overwrite").parquet(tdir)
-    return idx.append_table_dirs(
-        index_root, {"tombstones": [tdir]},
-        schemas={"tombstones": tomb.schema.json()})
+    return idx.commit_tombstones(index_root, keys, "doc_id")
 
 
 def lsh_index_compact(spark, index_root: str) -> int:
-    """COMPACTION for the persisted LSH dedup index (merge-on-read →
-    rewritten baseline; the `sources/snapshots.py:80` recipe over the
-    index-manifest layer): materialize the VISIBLE shingle/band rows
-    (tombstones applied) into one fresh directory per table and commit
-    a manifest listing only those, with no tombstones — queries stop
-    paying the anti-join, content never changes (pytest pins query
-    equality pre/post; pre-compaction versions stay AS-OF readable).
-    At scale this also binpacks the per-add-batch small files. Returns
-    the new manifest version."""
+    """COMPACTION for the persisted LSH dedup index: the visible
+    shingle/band rows (tombstones applied) rewritten into one fresh dir
+    per table by `index_manifest.compact_tables` (the index form of
+    `snapshots.compact`). Queries stop paying the anti-join, content
+    never changes, pre-compaction versions stay AS-OF readable.
+    Returns the new manifest version."""
     from ..sources import index_manifest as idx
 
-    man = idx.read_manifest(index_root)
-    tag = f"b{man['version'] + 1:05d}c"
-    sh = _index_scan_sequenced(spark, man, "shingles")
-    bd = _index_scan_sequenced(spark, man, "bands")
-    sdir = idx.new_data_dir(index_root, "shingles", tag)
-    sh.write.mode("overwrite").parquet(sdir)
-    bdir = idx.new_data_dir(index_root, "bands", tag)
-    bd.write.mode("overwrite").parquet(bdir)
-    return idx.commit_manifest(index_root, man["params"],
-                               {"shingles": [sdir], "bands": [bdir]},
-                               base_version=man["version"])
-
-
-def _index_scan_sequenced(spark, man: dict, table: str) -> DataFrame:
-    """Scan one manifest table with SEQUENCED tombstones applied — the
-    doc_id instance of the shared `index_manifest.scan_sequenced`
-    (generalized r13; the vector index uses the vec_id instance)."""
-    from ..sources import index_manifest as idx
-
-    return idx.scan_sequenced(spark, man, table, "doc_id")
+    return idx.compact_tables(spark, index_root, ["shingles", "bands"],
+                              "doc_id")
 
 
 def lsh_index_query(spark, index_root: str, probe_docs: DataFrame,
@@ -1014,16 +977,16 @@ def lsh_index_query(spark, index_root: str, probe_docs: DataFrame,
     (`lsh_index_delete`) are anti-joined out of the band table before
     candidate generation — one broadcast of the O(|deleted|) key set
     per sequence group, SEQUENCED so a deleted-then-re-admitted doc
-    matches again from its re-add dirs (`_index_scan_sequenced`); the
-    shingle fetch applies the same scan, so verification never reads a
+    matches again from its re-add dirs (`index_manifest.scan_sequenced`);
+    the shingle fetch applies the same scan, so verification never reads a
     stale pre-delete array for a re-admitted doc. Output: (doc_a =
     index doc, doc_b = probe doc, jaccard), deduped across multi-band
     matches."""
     from ..sources import index_manifest as idx
 
     man = idx.read_manifest(index_root, version)
-    bands_t = _index_scan_sequenced(spark, man, "bands")
-    toks_t = _index_scan_sequenced(spark, man, "shingles")
+    bands_t = idx.scan_sequenced(spark, man, "bands", "doc_id")
+    toks_t = idx.scan_sequenced(spark, man, "shingles", "doc_id")
     probes = hof_bands(
         _with_shingles(probe_docs.select("doc_id", "text"))
         .select("doc_id", "sh")

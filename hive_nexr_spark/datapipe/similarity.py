@@ -1477,56 +1477,29 @@ def ivf_pq_add_batch(spark, index_root: str,
 
 
 def ivf_pq_delete(spark, index_root: str, keys: DataFrame) -> int:
-    """DELETE vectors from the persisted IVF-PQ index (r13 — the
-    lifecycle asymmetry the r12 verdict flagged: the LSH dedup index
-    and the snapshot table both had sequenced deletes, the vector
-    index didn't; takedown/opt-out removal from a vector index is a
-    real production requirement). `keys` is a one-column (vec_id)
-    DataFrame; it lands as a TOMBSTONE parquet dir — work O(|keys|)
-    regardless of index size, no code file rewritten — committed as
-    one atomic manifest bump appending to a `tombstones` index table.
-
-    SEQUENCED (`index_manifest.applicable_tombs` — the r12 LSH
-    recipe): the tombstone applies only to codes dirs committed
-    EARLIER, so delete(X) → `ivf_pq_add_batch` re-adding X makes X
-    retrievable again at HEAD (the re-add dir outsequences the
-    tombstone) while reads pinned at the post-delete version still
-    exclude it, and every pre-delete version stays AS-OF exact.
-    Returns the new manifest version."""
+    """DELETE vectors from the persisted IVF-PQ index (takedown/opt-out
+    removal): `keys` (one vec_id column) lands as a sequenced tombstone
+    through `index_manifest.commit_tombstones`, the delete the LSH
+    dedup index shares. No code file is rewritten; delete(X) →
+    `ivf_pq_add_batch` re-adding X makes X retrievable again at HEAD,
+    reads pinned at the post-delete version still exclude it, and every
+    pre-delete version stays AS-OF exact. Returns the new manifest
+    version."""
     from ..sources import index_manifest as idx
 
-    tag = f"b{idx.latest_version(index_root) + 1:05d}"
-    tdir = idx.new_data_dir(index_root, "tombstones", tag)
-    tomb = keys.select("vec_id")
-    tomb.write.mode("overwrite").parquet(tdir)
-    return idx.append_table_dirs(
-        index_root, {"tombstones": [tdir]},
-        schemas={"tombstones": tomb.schema.json()})
+    return idx.commit_tombstones(index_root, keys, "vec_id")
 
 
 def ivf_pq_compact(spark, index_root: str) -> int:
-    """COMPACTION for the persisted vector index (merge-on-read →
-    rewritten baseline; the `lsh_index_compact` recipe): materialize
-    the VISIBLE code rows (sequenced tombstones applied) into one
-    fresh codes directory and commit a manifest listing only that,
-    with no tombstones — queries stop paying the anti-join, the
-    frozen coarse/codebook artifacts carry over untouched (their dirs
-    and sequences are listed verbatim), content never changes.
-    Pre-compaction versions stay AS-OF readable. Returns the new
-    manifest version."""
+    """COMPACTION for the persisted vector index: the visible code rows
+    (sequenced tombstones applied) rewritten into one fresh codes dir
+    by `index_manifest.compact_tables`; the frozen coarse/codebook
+    artifacts carry over untouched (same dirs, same sequences).
+    Content never changes and pre-compaction versions stay AS-OF
+    readable. Returns the new manifest version."""
     from ..sources import index_manifest as idx
 
-    man = idx.read_manifest(index_root)
-    visible = idx.scan_sequenced(spark, man, "codes", "vec_id")
-    kdir = idx.new_data_dir(index_root, "codes",
-                            f"b{man['version'] + 1:05d}c")
-    (visible.select("vec_id", "cell", "j", "code")
-     .write.mode("overwrite").parquet(kdir))
-    tables = {"coarse": man["tables"]["coarse"],
-              "codebooks": man["tables"]["codebooks"],
-              "codes": [kdir]}
-    return idx.commit_manifest(index_root, man["params"], tables,
-                               base_version=man["version"])
+    return idx.compact_tables(spark, index_root, ["codes"], "vec_id")
 
 
 def ivf_pq_query_index(spark, index_root: str, queries: DataFrame,

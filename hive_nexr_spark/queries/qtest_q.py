@@ -772,14 +772,17 @@ ORACLE = {
     """,
 }
 
-def _golden_rows_oracle(qout: str, cols: list[str]) -> str:
+def _golden_rows_oracle(qout: str, cols: list[str]) -> str | None:
     """DuckDB oracle pinned VERBATIM to a reference golden transcript's
     result rows — the strongest oracle form: the driver hash-checks our
-    engine against the reference's own 2011 output."""
+    engine against the reference's own 2011 output. None when the
+    transcript file is absent (the key then has no oracle)."""
     import os
 
     path = os.path.join(
         "/root/reference/ql/src/test/results/clientpositive", qout)
+    if not os.path.exists(path):
+        return None
     rows = []
     with open(path, errors="replace") as fh:
         for ln in fh:
@@ -793,8 +796,10 @@ def _golden_rows_oracle(qout: str, cols: list[str]) -> str:
             f"t({', '.join(cols)})")
 
 
-ORACLE["qfile_rand_pruner1"] = _golden_rows_oracle(
-    "rand_partitionpruner1.q.out", ["key", "value"])
+_rand_pruner1 = _golden_rows_oracle("rand_partitionpruner1.q.out",
+                                    ["key", "value"])
+if _rand_pruner1:
+    ORACLE["qfile_rand_pruner1"] = _rand_pruner1
 ORACLE["qfile_symlink_text"] = "SELECT CAST(16 AS BIGINT) AS cnt"
 
 # knob-variant files run the identical query as their base file, so they

@@ -12,7 +12,18 @@ indirection is what makes point-in-time reads cheap and atomic.
 The engine mechanics are real: manifests are JSON files on disk, delta
 dirs are parquet, readers use `spark.read.parquet(*dirs)` over the
 manifest's list. Only the catalog (a scratch dir instead of a metastore
-table-property chain) is simplified.
+table-property chain) is simplified. The commit protocol (exclusive
+create, sequenced tombstones, append retry, expiry and orphan reclaim)
+is the one in `index_manifest.py`; this module keeps the snapshot
+format `<base>/v{N}.json`:
+
+    dirs         data dirs visible at this version
+    deletes      tombstone dirs (equality deletes on `key`)
+    dir_seqs     data dir → committing version (Iceberg v2 data
+                 sequence number); delete_seqs: same for tombstones
+    dir_parts    data dir → partition value (partitioned appends)
+    schema       field-ID schema [{"id", "name"}], or None until the
+                 first ALTER initializes tracking
 """
 
 from __future__ import annotations
@@ -20,105 +31,70 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameReader, SparkSession
 from pyspark.sql import functions as F
+
+from . import index_manifest as idx
+
+_EMPTY = {"dirs": [], "deletes": [], "key": None, "dir_seqs": {},
+          "delete_seqs": {}, "dir_parts": {}, "schema": None}
+
+
+def _log(base: str) -> idx.ManifestLog:
+    return idx.ManifestLog(base, base, 0,
+                           lambda m: m["dirs"] + m["deletes"])
+
+
+def _latest(base: str) -> int:
+    return idx.latest_number(base)
 
 
 def _load_manifest(base: str, version: int) -> dict:
-    with open(os.path.join(base, f"v{version}.json")) as fh:
-        man = json.load(fh)
-    man.setdefault("deletes", [])
-    man.setdefault("key", None)
-    # sequence maps (Iceberg v2 data-sequence-number semantics, added
-    # r11): dir_seqs/delete_seqs stamp each data dir / tombstone dir
-    # with the version that committed it; an equality tombstone applies
-    # only to data dirs with a STRICTLY SMALLER sequence. Manifests
-    # written before the maps existed default to "tombstones apply to
-    # everything" (tomb seq = +inf, dir seq = -1) — the old behavior.
-    man.setdefault("dir_seqs", {})
-    man.setdefault("delete_seqs", {})
-    # partition map (r12): data dir → partition value, for
-    # partition-scoped maintenance; absent on unpartitioned commits
-    man.setdefault("dir_parts", {})
-    # field-ID schema (r13, Iceberg column-mapping semantics): ordered
-    # [{"id": int, "name": str}] — the column set AND names visible at
-    # this version. None = schema tracking not initialized (legacy
-    # behavior: merged parquet footers). Initialized lazily by the
-    # first ALTER (rename/drop); ids are stable across renames, so
-    # history resolves by id, never by name.
-    man.setdefault("schema", None)
-    return man
-
-
-def _applicable_tombs(man: dict, data_dir: str) -> tuple[str, ...]:
-    """The tombstone dirs whose sequence EXCEEDS this data dir's — the
-    only deletes a reader applies to it."""
-    dseq = man["dir_seqs"].get(data_dir, -1)
-    return tuple(sorted(
-        t for t in man["deletes"]
-        if man["delete_seqs"].get(t, float("inf")) > dseq))
+    return _log(base).load(version)
 
 
 def _write_manifest(base: str, man: dict) -> None:
-    """Atomic + EXCLUSIVE manifest write (write temp, hard-link to the
-    final name): a crashed committer leaves the table at the previous
-    version, never a torn manifest — and a concurrent committer racing
-    the same version number raises `ManifestConflictError` instead of
-    silently clobbering (the minimal optimistic-concurrency guard; the
-    documented posture is single-writer, and this makes a violation
-    loud). Losers re-read the latest version and retry."""
-    from .index_manifest import ManifestConflictError
-
-    # schema carries forward automatically: committers that predate (or
-    # don't care about) schema tracking inherit the previous version's
-    # field-ID schema unchanged — only the alter ops pass one explicitly
-    if "schema" not in man:
-        if man["version"] > 1:
-            try:
-                man["schema"] = _load_manifest(
-                    base, man["version"] - 1).get("schema")
-            except FileNotFoundError:
-                man["schema"] = None
-        else:
-            man["schema"] = None
-    path = os.path.join(base, f"v{man['version']}.json")
-    tmp = path + f".tmp.{os.getpid()}"
-    with open(tmp, "w") as fh:
-        json.dump(man, fh)
-    try:
-        os.link(tmp, path)
-    except FileExistsError:
-        raise ManifestConflictError(
-            f"snapshot v{man['version']} already committed under {base}; "
-            "re-read the latest version and retry") from None
-    finally:
-        os.remove(tmp)
+    """Exclusively commit one manifest (`index_manifest.
+    create_exclusive`): a concurrent committer racing the same version
+    raises `ManifestConflictError` instead of clobbering. Fields a
+    hand-written manifest leaves out take their empty defaults."""
+    idx.create_exclusive(_log(base).path(man["version"]),
+                         {**_EMPTY, **man})
 
 
-def _commit(base: str, version: int, new_dir: str | None) -> list[str]:
+def _prev(base: str, version: int) -> dict:
+    """The manifest a commit of `version` builds on (the empty table
+    for version 1)."""
+    return _load_manifest(base, version - 1) if version > 1 else _EMPTY
+
+
+def _commit_changes(base: str, prev: dict, version: int,
+                    **changes) -> int:
+    """Commit `version` = `prev` with `changes` applied: every field a
+    commit does not touch (tombstones, key, sequences, partitions,
+    schema) carries over."""
+    _write_manifest(base, {**prev, **changes, "version": version})
+    return version
+
+
+def _commit(base: str, version: int, new_dir: str | None) -> int:
     """Append-only commit: manifest v<N> = v<N-1> dirs + the new delta
-    dir (delete/tombstone state carries over). Returns the committed
-    dir list."""
-    prev: list[str] = []
-    deletes: list[str] = []
-    key = None
-    dir_seqs: dict[str, int] = {}
-    delete_seqs: dict[str, int] = {}
-    dir_parts: dict[str, str] = {}
-    if version > 1:
-        man = _load_manifest(base, version - 1)
-        prev, deletes, key = man["dirs"], man["deletes"], man["key"]
-        dir_seqs, delete_seqs = man["dir_seqs"], man["delete_seqs"]
-        dir_parts = man["dir_parts"]
-    dirs = prev + ([new_dir] if new_dir else [])
-    if new_dir:
-        dir_seqs = {**dir_seqs, new_dir: version}
-    _write_manifest(base, {"version": version, "dirs": dirs,
-                           "deletes": deletes, "key": key,
-                           "dir_seqs": dir_seqs,
-                           "delete_seqs": delete_seqs,
-                           "dir_parts": dir_parts})
-    return dirs
+    dir, stamped with sequence N."""
+    prev = _prev(base, version)
+    new = [new_dir] if new_dir else []
+    return _commit_changes(
+        base, prev, version, dirs=prev["dirs"] + new,
+        dir_seqs={**prev["dir_seqs"], **{d: version for d in new}})
+
+
+def _scan(spark: SparkSession, man: dict, dirs: list[str],
+          reader: DataFrameReader, **kw) -> DataFrame:
+    """`index_manifest.read_sequenced` over a snapshot manifest: its
+    `deletes` are the tombstones, keyed on `key`."""
+    return idx.read_sequenced(
+        reader, dirs, man["deletes"],
+        {**man["dir_seqs"], **man["delete_seqs"]}, man["key"],
+        spark.read, **kw)
 
 
 def commit_delete(spark: SparkSession, base: str, keys: DataFrame,
@@ -136,46 +112,21 @@ def commit_delete(spark: SparkSession, base: str, keys: DataFrame,
     v = _latest(base) + 1
     tdir = os.path.join(base, f"tombstones_v{v}")
     keys.select(key_col).write.parquet(tdir)
-    man = _load_manifest(base, v - 1)
-    _write_manifest(base, {"version": v, "dirs": man["dirs"],
-                           "deletes": man["deletes"] + [tdir],
-                           "key": key_col,
-                           "dir_seqs": man["dir_seqs"],
-                           "delete_seqs": {**man["delete_seqs"],
-                                           tdir: v},
-                           "dir_parts": man["dir_parts"]})
-    return v
+    prev = _prev(base, v)
+    return _commit_changes(
+        base, prev, v, deletes=prev["deletes"] + [tdir], key=key_col,
+        delete_seqs={**prev["delete_seqs"], tdir: v})
 
 
 def commit_append_with_retry(base: str, new_dir: str | None,
                              max_retries: int = 8) -> tuple[int, int]:
-    """OPTIMISTIC-CONCURRENCY append (r13 — the ergonomic layer over
-    the r12 `ManifestConflictError` guard, which is loud but manual):
-    re-read the latest version, attempt the commit, and on a version
-    collision re-base and retry with jittered backoff, up to
-    `max_retries` times. Appends are always re-basable — the loser's
-    dir list is recomputed from the winner's manifest, so two
-    committers racing DISJOINT appends both succeed and the serialized
-    history contains both (the Iceberg commit-retry model; conflicts
-    that are not plain appends — e.g. competing schema changes — must
-    stay loud, which is why only the append path gets a retry
-    wrapper). Returns (committed version, conflicts retried)."""
-    import random
-    import time
-
-    from .index_manifest import ManifestConflictError
-
-    attempts = 0
-    while True:
-        try:
-            v = _latest(base) + 1
-            _commit(base, v, new_dir)
-            return v, attempts
-        except ManifestConflictError:
-            attempts += 1
-            if attempts > max_retries:
-                raise
-            time.sleep(random.uniform(0, 0.01 * attempts))
+    """OPTIMISTIC-CONCURRENCY append: `_commit` of the next version
+    under `index_manifest.retry_conflicts`. Each attempt re-reads the
+    latest version, so two committers racing DISJOINT appends both
+    succeed and the serialized history contains both. Returns
+    (committed version, conflicts retried)."""
+    return idx.retry_conflicts(
+        lambda: _commit(base, _latest(base) + 1, new_dir), max_retries)
 
 
 def commit_merge_upsert(spark: SparkSession, base: str,
@@ -196,15 +147,12 @@ def commit_merge_upsert(spark: SparkSession, base: str,
     updates.write.parquet(udir)
     tdir = os.path.join(base, f"tombstones_v{v}")
     updates.select(key_col).write.parquet(tdir)
-    man = _load_manifest(base, v - 1)
-    _write_manifest(base, {"version": v, "dirs": man["dirs"] + [udir],
-                           "deletes": man["deletes"] + [tdir],
-                           "key": key_col,
-                           "dir_seqs": {**man["dir_seqs"], udir: v},
-                           "delete_seqs": {**man["delete_seqs"],
-                                           tdir: v},
-                           "dir_parts": man["dir_parts"]})
-    return v
+    prev = _prev(base, v)
+    return _commit_changes(
+        base, prev, v, dirs=prev["dirs"] + [udir],
+        deletes=prev["deletes"] + [tdir], key=key_col,
+        dir_seqs={**prev["dir_seqs"], udir: v},
+        delete_seqs={**prev["delete_seqs"], tdir: v})
 
 
 def compact(spark: SparkSession, base: str) -> int:
@@ -220,12 +168,9 @@ def compact(spark: SparkSession, base: str) -> int:
     v = _latest(base) + 1
     cdir = os.path.join(base, f"compacted_v{v}")
     read_version(spark, base, v - 1).write.parquet(cdir)
-    man = _load_manifest(base, v - 1)
-    _write_manifest(base, {"version": v, "dirs": [cdir],
-                           "deletes": [], "key": man["key"],
-                           "dir_seqs": {cdir: v}, "delete_seqs": {},
-                           "dir_parts": {}})
-    return v
+    return _commit_changes(base, _prev(base, v), v, dirs=[cdir],
+                           deletes=[], dir_seqs={cdir: v},
+                           delete_seqs={}, dir_parts={})
 
 
 def commit_append_partitioned(spark: SparkSession, base: str,
@@ -243,10 +188,8 @@ def commit_append_partitioned(spark: SparkSession, base: str,
     from urllib.parse import unquote
 
     v = _latest(base) + 1
-    prev = _load_manifest(base, v - 1) if v > 1 else {
-        "dirs": [], "deletes": [], "key": None, "dir_seqs": {},
-        "delete_seqs": {}, "dir_parts": {}}
-    dirs, parts = list(prev["dirs"]), dict(prev.get("dir_parts", {}))
+    prev = _prev(base, v)
+    dirs, parts = list(prev["dirs"]), dict(prev["dir_parts"])
     seqs = dict(prev["dir_seqs"])
     # ONE scan + one shuffled-by-value write for ALL partition values
     # (guide §2.4 — the r12 form ran `df.filter(col == val).write` per
@@ -281,12 +224,25 @@ def commit_append_partitioned(spark: SparkSession, base: str,
         parts[d] = str(val)
         seqs[d] = v
     shutil.rmtree(tmp)
-    _write_manifest(base, {"version": v, "dirs": dirs,
-                           "deletes": prev["deletes"],
-                           "key": prev["key"], "dir_seqs": seqs,
-                           "delete_seqs": prev["delete_seqs"],
-                           "dir_parts": parts})
-    return v
+    return _commit_changes(base, prev, v, dirs=dirs, dir_seqs=seqs,
+                           dir_parts=parts)
+
+
+def _replace_dirs(base: str, man: dict, old: list[str], new_dir: str,
+                  part: str | None) -> int:
+    """Commit the next version with the data dirs `old` replaced by the
+    compacted `new_dir` (tagged with partition `part` unless None);
+    every other dir keeps its path, sequence and partition, and the
+    tombstones stay listed for them."""
+    v = man["version"] + 1
+    parts = {d: p for d, p in man["dir_parts"].items() if d not in old}
+    if part is not None:
+        parts[new_dir] = part
+    seqs = {d: s for d, s in man["dir_seqs"].items() if d not in old}
+    seqs[new_dir] = v
+    return _commit_changes(
+        base, man, v, dirs=[d for d in man["dirs"] if d not in old]
+        + [new_dir], dir_seqs=seqs, dir_parts=parts)
 
 
 def compact_partition(spark: SparkSession, base: str,
@@ -304,40 +260,15 @@ def compact_partition(spark: SparkSession, base: str,
     correct without rewriting or splitting delete files. Content is
     unchanged by construction (oracle + pytest pin it); pre-compaction
     versions stay AS-OF readable. Returns the new version."""
-    from functools import reduce
-
-    v = _latest(base) + 1
-    man = _load_manifest(base, v - 1)
-    parts_map = man.get("dir_parts", {})
+    man = _load_manifest(base, _latest(base))
     affected = [d for d in man["dirs"]
-                if parts_map.get(d) == str(part_value)]
+                if man["dir_parts"].get(d) == str(part_value)]
     if not affected:
         raise ValueError(f"no data dirs for partition {part_value!r}")
-    groups: dict[tuple[str, ...], list[str]] = {}
-    for d in affected:
-        groups.setdefault(_applicable_tombs(man, d), []).append(d)
-    pieces = []
-    for tombs, dirs in groups.items():
-        df = spark.read.parquet(*dirs)
-        if tombs:
-            tk = spark.read.parquet(*tombs)
-            df = df.join(F.broadcast(tk), man["key"], "left_anti")
-        pieces.append(df)
-    merged = reduce(lambda a, b: a.unionByName(b), pieces)
     tag = str(part_value).replace("/", "_").replace(" ", "_")
-    cdir = os.path.join(base, f"compacted_v{v}_p{tag}")
-    merged.write.parquet(cdir)
-    dirs = [d for d in man["dirs"] if d not in affected] + [cdir]
-    parts = {d: p for d, p in parts_map.items() if d not in affected}
-    parts[cdir] = str(part_value)
-    seqs = {d: s for d, s in man["dir_seqs"].items() if d not in affected}
-    seqs[cdir] = v
-    _write_manifest(base, {"version": v, "dirs": dirs,
-                           "deletes": man["deletes"], "key": man["key"],
-                           "dir_seqs": seqs,
-                           "delete_seqs": man["delete_seqs"],
-                           "dir_parts": parts})
-    return v
+    cdir = os.path.join(base, f"compacted_v{man['version'] + 1}_p{tag}")
+    _scan(spark, man, affected, spark.read).write.parquet(cdir)
+    return _replace_dirs(base, man, affected, cdir, str(part_value))
 
 
 def _payload_bytes(d: str) -> int:
@@ -363,140 +294,43 @@ def compact_binpack(spark: SparkSession, base: str,
     current version unchanged. Partition tags survive only if every
     rewritten dir shares one value. Returns the (possibly unchanged)
     latest version."""
-    from functools import reduce
-
-    v = _latest(base) + 1
-    man = _load_manifest(base, v - 1)
+    man = _load_manifest(base, _latest(base))
     small = [d for d in man["dirs"]
              if _payload_bytes(d) < target_bytes]
     if len(small) < 2:
-        return v - 1
-    groups: dict[tuple[str, ...], list[str]] = {}
-    for d in small:
-        groups.setdefault(_applicable_tombs(man, d), []).append(d)
-    pieces = []
-    for tombs, dirs in groups.items():
-        df = spark.read.option("mergeSchema", "true").parquet(*dirs)
-        if tombs:
-            tk = spark.read.parquet(*tombs)
-            df = df.join(F.broadcast(tk), man["key"], "left_anti")
-        pieces.append(df)
-    merged = reduce(
-        lambda a, b: a.unionByName(b, allowMissingColumns=True), pieces)
-    cdir = os.path.join(base, f"binpack_v{v}")
-    merged.write.parquet(cdir)
-    parts_map = man.get("dir_parts", {})
-    small_parts = {parts_map.get(d) for d in small}
-    dirs = [d for d in man["dirs"] if d not in small] + [cdir]
-    parts = {d: p for d, p in parts_map.items() if d not in small}
-    if len(small_parts) == 1 and None not in small_parts:
-        parts[cdir] = small_parts.pop()
-    seqs = {d: s for d, s in man["dir_seqs"].items() if d not in small}
-    seqs[cdir] = v
-    _write_manifest(base, {"version": v, "dirs": dirs,
-                           "deletes": man["deletes"], "key": man["key"],
-                           "dir_seqs": seqs,
-                           "delete_seqs": man["delete_seqs"],
-                           "dir_parts": parts})
-    return v
+        return man["version"]
+    cdir = os.path.join(base, f"binpack_v{man['version'] + 1}")
+    _scan(spark, man, small,
+          spark.read.option("mergeSchema", "true")).write.parquet(cdir)
+    small_parts = {man["dir_parts"].get(d) for d in small}
+    part = small_parts.pop() if len(small_parts) == 1 else None
+    return _replace_dirs(base, man, small, cdir, part)
 
 
 def expire_snapshots(base: str, keep_from: int) -> list[str]:
-    """SNAPSHOT EXPIRY: drop manifests with version < `keep_from`, then
-    delete any data/tombstone directory no surviving manifest
-    references. Kept versions are bit-identical afterward (their
-    manifests list only surviving dirs); expired versions raise on read
-    — the storage-reclaim half of the lifecycle (Iceberg
-    expire_snapshots semantics). Returns the removed directories.
-
-    `keep_from` must be <= the latest committed version — a higher value
-    would empty the kept set and reclaim every data dir (see
-    `index_manifest.expire_versions`)."""
-    import shutil
-
-    latest = _latest(base)
-    if keep_from > latest:
-        raise ValueError(
-            f"keep_from={keep_from} exceeds latest committed version "
-            f"{latest} under {base}: refusing to expire every manifest")
-    # named refs protect their versions (Iceberg semantics): expiring a
-    # tagged/branched snapshot would dangle the pointer
+    """SNAPSHOT EXPIRY: `index_manifest.ManifestLog.expire` over the
+    table (manifests below `keep_from` dropped, then every data and
+    tombstone dir no surviving manifest references), after refusing to
+    expire a version a named ref still pins (Iceberg semantics:
+    expiring a tagged/branched snapshot would dangle the pointer).
+    Returns the removed directories."""
     pinned = {n: r["version"] for n, r in _load_refs(base).items()
               if r["version"] < keep_from}
     if pinned:
         raise ValueError(
             f"refs {sorted(pinned)} pin versions below keep_from="
             f"{keep_from}; drop or move them before expiring")
-    keep = [_load_manifest(base, v) for v in range(keep_from, latest + 1)]
-    referenced = {d for m in keep for d in m["dirs"] + m["deletes"]}
-    removed: list[str] = []
-    for v in range(1, keep_from):
-        path = os.path.join(base, f"v{v}.json")
-        if os.path.exists(path):
-            os.remove(path)
-    for entry in os.listdir(base):
-        full = os.path.join(base, entry)
-        if (os.path.isdir(full) and full not in referenced
-                and not entry.startswith("v")):
-            shutil.rmtree(full)
-            removed.append(full)
-    return removed
+    return _log(base).expire(keep_from)
 
 
 def remove_orphans(base: str,
                    older_than_seconds: float = 3 * 86400) -> list[str]:
-    """ORPHAN-FILE cleanup for the snapshot table (Iceberg
-    remove_orphan_files semantics; the index-root twin is
-    `index_manifest.remove_orphans`): delete any directory under the
-    table root that no committed manifest references as a data or
-    tombstone dir — the leftovers of a writer that crashed between the
-    data write and the manifest commit. Visible content at every
-    version is unchanged by construction. Returns the removed dirs.
-
-    `older_than_seconds` (default 3 days — Iceberg's
-    remove_orphan_files default, for the same reason): a LIVE writer
-    that has landed its data dir but not yet committed its manifest is
-    indistinguishable from a crashed one; the age cutoff keeps cleanup
-    from racing an in-flight commit. Pass 0 only when no writer can be
-    active (tests, single-process maintenance windows)."""
-    import shutil
-    import time
-
-    latest = _latest(base)
-    referenced: set[str] = set()
-    for v in range(1, latest + 1):
-        if not os.path.exists(os.path.join(base, f"v{v}.json")):
-            continue  # expired version
-        man = _load_manifest(base, v)
-        referenced |= set(man["dirs"]) | set(man["deletes"])
-    cutoff = time.time() - older_than_seconds
-    removed: list[str] = []
-    for entry in sorted(os.listdir(base)):
-        full = os.path.join(base, entry)
-        if (os.path.isdir(full) and full not in referenced
-                and _tree_mtime(full) <= cutoff):
-            shutil.rmtree(full)
-            removed.append(full)
-    return removed
-
-
-def _tree_mtime(path: str) -> float:
-    """Newest mtime of the dir or anything directly inside it — a
-    writer still landing files keeps this fresh."""
-    times = [os.path.getmtime(path)]
-    for entry in os.listdir(path):
-        try:
-            times.append(os.path.getmtime(os.path.join(path, entry)))
-        except OSError:
-            pass
-    return max(times)
-
-
-def _latest(base: str) -> int:
-    vs = [int(f[1:-5]) for f in os.listdir(base)
-          if f.startswith("v") and f.endswith(".json")
-          and not f.endswith(".tmp")]
-    return max(vs, default=0)
+    """ORPHAN cleanup for the snapshot table: `index_manifest.
+    ManifestLog.remove_orphans` (dirs no committed manifest references
+    as data or tombstone dir, older than `older_than_seconds`; default
+    3 days, Iceberg's remove_orphan_files default). Returns the removed
+    dirs."""
+    return _log(base).remove_orphans(older_than_seconds)
 
 
 def read_version(spark: SparkSession, base: str, version: int) -> DataFrame:
@@ -509,41 +343,26 @@ def read_version(spark: SparkSession, base: str, version: int) -> DataFrame:
     anti-join, and dirs newer than every tombstone scan clean. The
     common shapes collapse to one or two groups: append-only tables
     have none tombstoned; a MERGE's own dir is the lone clean group."""
-    from functools import reduce
-
     man = _load_manifest(base, version)
-    if man.get("schema"):
+    if man["schema"]:
         return _read_version_evolved(spark, base, man)
     # mergeSchema: commits may EVOLVE the schema (a later delta adds a
     # column — Iceberg add-column semantics); the merged read surfaces
     # the union schema with NULLs for pre-evolution rows. (Iceberg keeps
     # the schema in metadata instead of merging footers; the property —
     # old files never rewritten on ADD COLUMN — is the same.)
-    reader = spark.read.option("mergeSchema", "true")
-    if not man["deletes"]:
-        return reader.parquet(*man["dirs"])
-    groups: dict[tuple[str, ...], list[str]] = {}
-    for d in man["dirs"]:
-        groups.setdefault(_applicable_tombs(man, d), []).append(d)
-    parts = []
-    for tombs, dirs in groups.items():
-        df = reader.parquet(*dirs)
-        if tombs:
-            tk = spark.read.parquet(*tombs)
-            df = df.join(F.broadcast(tk), man["key"], "left_anti")
-        parts.append(df)
-    return reduce(
-        lambda a, b: a.unionByName(b, allowMissingColumns=True), parts)
+    return _scan(spark, man, man["dirs"],
+                 spark.read.option("mergeSchema", "true"))
 
 
 def _first_schema_version(base: str, upto: int) -> int:
     """Earliest version whose manifest carries a field-ID schema — the
     schema-initialization commit. Its names ARE the physical column
     names of every earlier data dir (no rename can precede schema
-    tracking), so legacy dirs resolve through it."""
+    tracking), so older dirs resolve through it."""
     for v in range(1, upto + 1):
         try:
-            if _load_manifest(base, v).get("schema"):
+            if _load_manifest(base, v)["schema"]:
                 return v
         except FileNotFoundError:
             continue
@@ -562,52 +381,33 @@ def _read_version_evolved(spark: SparkSession, base: str,
     rewrite, a dropped column is simply not selected (hidden, files
     untouched, still visible AS-OF pre-drop), and fields a dir never
     wrote arrive NULL via the union. Tombstones apply per sequence
-    group exactly as in the legacy path."""
-    from functools import reduce
-
+    group exactly as in the plain path; the write schema is one more
+    group key."""
     target = man["schema"]
     first_v = _first_schema_version(base, man["version"])
     cache: dict[int, list[dict]] = {}
 
-    def write_schema(seq: int) -> list[dict]:
-        v = seq if seq >= first_v else first_v
-        if v not in cache:
-            cache[v] = _load_manifest(base, v)["schema"]
-        return cache[v]
+    def write_version(d: str) -> int:
+        return max(man["dir_seqs"][d], first_v)
 
-    reader = spark.read.option("mergeSchema", "true")
-    groups: dict[tuple, list[str]] = {}
-    for d in man["dirs"]:
-        seq = man["dir_seqs"].get(d, -1)
-        ws_v = seq if seq >= first_v else first_v
-        groups.setdefault((_applicable_tombs(man, d), ws_v),
-                          []).append(d)
-    parts = []
-    for (tombs, ws_v), dirs in groups.items():
-        df = reader.parquet(*dirs)
-        if tombs:
-            tk = spark.read.parquet(*tombs)
-            df = df.join(F.broadcast(tk), man["key"], "left_anti")
-        phys = {f["id"]: f["name"] for f in write_schema(ws_v)}
-        sel = [F.col(phys[f["id"]]).alias(f["name"]) for f in target
-               if f["id"] in phys and phys[f["id"]] in df.columns]
-        parts.append(df.select(*sel))
-    return reduce(
-        lambda a, b: a.unionByName(b, allowMissingColumns=True), parts)
+    def project(df: DataFrame, ws_v: int) -> DataFrame:
+        if ws_v not in cache:
+            cache[ws_v] = _load_manifest(base, ws_v)["schema"]
+        phys = {f["id"]: f["name"] for f in cache[ws_v]}
+        return df.select(*[F.col(phys[f["id"]]).alias(f["name"])
+                           for f in target if f["id"] in phys
+                           and phys[f["id"]] in df.columns])
+
+    return _scan(spark, man, man["dirs"],
+                 spark.read.option("mergeSchema", "true"),
+                 group=write_version, project=project)
 
 
 def _commit_metadata(base: str, man: dict, schema: list[dict]) -> int:
     """Metadata-only commit: next version = same dirs / deletes /
     sequences / partitions, new field-ID schema. O(1) — no data file
     touched; this is what makes RENAME/DROP free at 100 TB."""
-    v = man["version"] + 1
-    _write_manifest(base, {"version": v, "dirs": man["dirs"],
-                           "deletes": man["deletes"], "key": man["key"],
-                           "dir_seqs": man["dir_seqs"],
-                           "delete_seqs": man["delete_seqs"],
-                           "dir_parts": man["dir_parts"],
-                           "schema": schema})
-    return v
+    return _commit_changes(base, man, man["version"] + 1, schema=schema)
 
 
 def init_schema_tracking(spark: SparkSession, base: str) -> int:
@@ -620,7 +420,7 @@ def init_schema_tracking(spark: SparkSession, base: str) -> int:
     through. Returns the version whose manifest carries the schema
     (the existing one if already initialized)."""
     man = _load_manifest(base, _latest(base))
-    if man.get("schema"):
+    if man["schema"]:
         return man["version"]
     names: list[str] = []
     for d in man["dirs"]:
@@ -746,30 +546,14 @@ def compaction_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stats(3).unionByName(stats(4))
 
 
-def _refs_path(base: str) -> str:
-    return os.path.join(base, "refs.json")
-
-
-def _refs_seq(base: str) -> int:
-    """Latest committed refs sequence (0 = only the legacy unversioned
-    refs.json, or no refs at all)."""
-    seqs = [int(f[5:-5]) for f in os.listdir(base)
-            if f.startswith("refs.") and f.endswith(".json")
-            and f[5:-5].isdigit()]
-    return max(seqs, default=0)
-
-
 def _load_refs_versioned(base: str) -> tuple[dict, int]:
     """Refs state + the sequence it was read at (the CAS expectation a
-    subsequent `_write_refs` must present)."""
-    seq = _refs_seq(base)
-    path = (os.path.join(base, f"refs.{seq}.json") if seq
-            else _refs_path(base))
-    try:
-        with open(path) as fh:
-            return json.load(fh), seq
-    except FileNotFoundError:
+    subsequent `_write_refs` must present; 0 = no refs yet)."""
+    seq = idx.latest_number(base, "refs.")
+    if not seq:
         return {}, 0
+    with open(os.path.join(base, f"refs.{seq}.json")) as fh:
+        return json.load(fh), seq
 
 
 def _load_refs(base: str) -> dict:
@@ -777,28 +561,14 @@ def _load_refs(base: str) -> dict:
 
 
 def _write_refs(base: str, refs: dict, expect_seq: int) -> None:
-    """EXCLUSIVE refs commit (same write-temp + hard-link CAS as
-    `_write_manifest`): refs state lives in sequenced refs.<N>.json
-    files; a writer commits expect_seq+1, and two concurrent ref
-    writers racing the same sequence get a loud
-    `ManifestConflictError` instead of last-writer-wins silently
-    dropping one update (the advisor's r12 finding — the mutable
-    refs.json was the one metadata file without the guard). Losers
-    re-read (which picks up the winner's refs) and retry."""
-    from .index_manifest import ManifestConflictError
-
-    path = os.path.join(base, f"refs.{expect_seq + 1}.json")
-    tmp = path + f".tmp.{os.getpid()}"
-    with open(tmp, "w") as fh:
-        json.dump(refs, fh)
-    try:
-        os.link(tmp, path)
-    except FileExistsError:
-        raise ManifestConflictError(
-            f"refs sequence {expect_seq + 1} already committed under "
-            f"{base}; re-read the refs and retry") from None
-    finally:
-        os.remove(tmp)
+    """EXCLUSIVE refs commit (`index_manifest.create_exclusive`, as for
+    manifests): refs state lives in sequenced refs.<N>.json files; a
+    writer commits expect_seq+1, so two ref writers racing the same
+    sequence get a loud `ManifestConflictError` instead of
+    last-writer-wins silently dropping one update. Losers re-read
+    (which picks up the winner's refs) and retry."""
+    idx.create_exclusive(os.path.join(base, f"refs.{expect_seq + 1}.json"),
+                         refs)
 
 
 def set_ref(base: str, name: str, version: int,
@@ -808,9 +578,9 @@ def set_ref(base: str, name: str, version: int,
     pins, reproducibility anchors); a `branch` is a movable pointer that
     may only FAST-FORWARD (version must not decrease — the
     write-audit-publish publish step is exactly this move). Refs live in
-    one atomically-replaced refs.json beside the manifests; readers
-    resolve a ref to its version, then read that version's manifest —
-    the pointer costs nothing at scan time."""
+    exclusively-created refs.<N>.json files beside the manifests
+    (`_write_refs`); readers resolve a ref to its version, then read
+    that version's manifest — the pointer costs nothing at scan time."""
     if version > _latest(base) or version < 1:
         raise ValueError(f"ref {name!r} targets uncommitted version "
                          f"{version} (latest = {_latest(base)})")
@@ -1188,8 +958,6 @@ def changes_between(spark: SparkSession, base: str, v_from: int,
     disappears from the insert CDC, while a key deleted in an EARLIER
     version and re-inserted in this window is correctly reported as an
     insert (older deletes never apply to newer files)."""
-    from functools import reduce
-
     m_from = _load_manifest(base, v_from)
     m_to = _load_manifest(base, v_to)
     new_dirs = [d for d in m_to["dirs"] if d not in m_from["dirs"]]
@@ -1207,17 +975,7 @@ def changes_between(spark: SparkSession, base: str, v_from: int,
     some_dir = (m_from["dirs"] or m_to["dirs"])[0]
     schema_src = spark.read.parquet(some_dir)
     if new_dirs:
-        groups: dict[tuple[str, ...], list[str]] = {}
-        for d in new_dirs:
-            groups.setdefault(_applicable_tombs(m_to, d), []).append(d)
-        parts = []
-        for tombs, dirs in groups.items():
-            df = spark.read.parquet(*dirs)
-            if tombs:
-                tk = spark.read.parquet(*tombs)
-                df = df.join(F.broadcast(tk), m_to["key"], "left_anti")
-            parts.append(df)
-        inserted = reduce(lambda a, b: a.unionByName(b), parts)
+        inserted = _scan(spark, m_to, new_dirs, spark.read)
     else:
         inserted = schema_src.limit(0)
     if new_tombs:

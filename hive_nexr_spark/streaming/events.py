@@ -26,13 +26,18 @@ def _move_slice_file(src_df: DataFrame, tmp: str, b, dest: str) -> None:
     (r13 latent crash: `next()` over a missing/empty dir raised
     StopIteration) — fall back to writing an empty parquet file with
     `src_df`'s schema, which is what the old per-slice
-    `filter(...).coalesce(1).write` always produced."""
+    `filter(...).coalesce(1).write` always produced. A slice staged as
+    more than one part file raises: moving only one would silently drop
+    the others' rows."""
     import glob
     import shutil
 
     pdir = os.path.join(tmp, f"_b={b}")
     parts = (sorted(glob.glob(os.path.join(pdir, "*.parquet")))
              if os.path.isdir(pdir) else [])
+    if len(parts) > 1:
+        raise RuntimeError(f"staged slice {pdir} has {len(parts)} part "
+                           "files; expected one")
     if parts:
         shutil.move(parts[0], dest)
         return

@@ -224,6 +224,7 @@ def test_partition_compaction_touches_only_target(spark, sf_dir):
     is the committing version)."""
     from pyspark.sql import functions as F
 
+    from hive_nexr_spark.sources import index_manifest as idx
     from hive_nexr_spark.sources import snapshots as sn
 
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
@@ -260,7 +261,8 @@ def test_partition_compaction_touches_only_target(spark, sf_dir):
     # tombstone still listed (applies to untouched dirs), but not to
     # the fresh dir
     assert man4["deletes"] == man3["deletes"]
-    assert sn._applicable_tombs(man4, targets4[0]) == ()
+    assert idx.applicable_tombs({**man4["dir_seqs"], **man4["delete_seqs"]},
+                                man4["deletes"], targets4[0]) == ()
     # content identical at v4; v1..v3 AS-OF intact
     post = {r["o_orderkey"] for r in
             sn.read_version(spark, base, 4)

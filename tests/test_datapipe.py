@@ -1151,10 +1151,10 @@ def test_lsh_index_delete_tombstones_and_asof(dfs, spark):
 
 
 def test_lsh_index_reinsert_after_delete_sequenced(dfs, spark):
-    """SEQUENCED index tombstones (r12, the snapshots._applicable_tombs
-    recipe propagated): delete(X) → add_batch re-admitting X must make X
-    matchable again at HEAD (the re-add dirs outsequence the tombstone),
-    while the pre-delete version still matches everything, the
+    """SEQUENCED index tombstones (the shared
+    index_manifest.read_sequenced): delete(X) → add_batch re-admitting X
+    must make X matchable again at HEAD (the re-add dirs outsequence the
+    tombstone), while the pre-delete version still matches everything, the
     post-delete/pre-re-add version excludes X, and compaction preserves
     the HEAD content. This is exactly the delete-then-re-ingest flow the
     streaming gate makes likely — silently lost under the pre-r12

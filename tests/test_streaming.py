@@ -431,7 +431,8 @@ def test_move_slice_file_empty_slice(dfs, tmp_path):
     """The staged-slice mover must tolerate a slice with ZERO rows
     (no `_b=` dir written at all — the r13 latent StopIteration): it
     falls back to an empty parquet file with the source schema, which
-    is what the old per-slice coalesce(1) write produced."""
+    is what the old per-slice coalesce(1) write produced. A slice staged
+    as more than one part file must raise instead of moving one."""
     from pyspark.sql import functions as F
 
     from hive_nexr_spark.streaming.events import _move_slice_file
@@ -451,3 +452,8 @@ def test_move_slice_file_empty_slice(dfs, tmp_path):
     assert empty.count() == 0
     assert [f.name for f in empty.schema.fields] \
         == [f.name for f in events.schema.fields]
+    # a slice staged as two part files must fail loudly, not move one
+    (events.limit(4).withColumn("_b", F.lit(2))
+     .repartition(2).write.mode("append").partitionBy("_b").parquet(tmp))
+    with pytest.raises(RuntimeError, match="2 part files"):
+        _move_slice_file(events, tmp, 2, str(tmp_path / "b2.parquet"))
