@@ -1976,13 +1976,16 @@ def run_qfile(spark: SparkSession, qfile: str,
             rp = os.path.realpath(p)
             if rp.startswith("/tmp/") and rp != "/tmp":
                 shutil.rmtree(rp, ignore_errors=True)
-    # constructs that reject temp views (CREATE TABLE LIKE, persistent
+    # each fixture, `src` included, is built only when the qfile names it,
+    # so a self-contained qfile never reads the fixture data files.
+    # Constructs that reject temp views (CREATE TABLE LIKE, persistent
     # CREATE VIEW, partition DDL) need the fixtures as REAL tables
     has_views = bool(re.search(r"CREATE\s+(OR\s+REPLACE\s+)?VIEW", text,
                                re.IGNORECASE))
-    make_src(spark, as_table=has_views or bool(re.search(
-        r"(LIKE|ALTER\s+TABLE)\s+(?:`?default`?\.)?`?src`?\b"
-        r"|\bdefault\s*\.\s*`?src`?\b", text, re.IGNORECASE)))
+    if re.search(r"\bsrc\b", text, re.IGNORECASE):
+        make_src(spark, as_table=has_views or bool(re.search(
+            r"(LIKE|ALTER\s+TABLE)\s+(?:`?default`?\.)?`?src`?\b"
+            r"|\bdefault\s*\.\s*`?src`?\b", text, re.IGNORECASE)))
     if "src_thrift" in text.lower():
         make_src_thrift(spark)
     if "src_json" in text.lower():

@@ -2,9 +2,14 @@
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 import __spark_entry__ as entry_mod
+from hive_nexr_spark.sources.qtest import QFILE_DIR
+
+EXIM_01 = os.path.join(QFILE_DIR, "exim_01_nonpart.q")
 
 
 def test_entry_smoke(spark):
@@ -114,6 +119,8 @@ def test_all_queries_run_at_smoke_sf(spark, sf_dir):
         df.limit(5).collect()
 
 
+@pytest.mark.skipif(not os.path.exists(EXIM_01),
+                    reason=f"needs {EXIM_01} from the Hive 0.8 source tree")
 def test_qfile_db_leak_then_unqualified_write(spark, sf_dir):
     """Regression (round-10 red): exim_01_nonpart.q DROPs its own database
     (`importer`) while it is still the session's current database; the
