@@ -8,14 +8,29 @@ Scale path: sign-LSH bucketing (random-hyperplane) — corpus and queries are
 hashed to sign-pattern buckets; the exact rerank join touches only same-
 bucket candidates. At 100 TB: bucket histogram is skew-checked; hyperplanes
 are a broadcast literal; everything shuffles by bucket key only.
+
+IVF-PQ (Jégou et al. 2011): every PQ / IVF-PQ operator and the persisted
+index are composed from one copy of each stage — coarse training
+(`_coarse`), PQ decomposition (`_pq_sub`), codebook training
+(`_pq_codebooks`, `_residual_train`), encoding (`_pq_encode`,
+`_residual_encode`), probe routing (`_probes`), lookup tables (`_raw_lut`,
+`_pq_lut`), ADC scoring (`_adc_rank`, `_residual_search`) and the exact
+recall baseline (`_exact_topk`, `_with_recall`).
 """
 
 from __future__ import annotations
+
+from functools import reduce
+from operator import and_
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ._cache import tracked_persist, tracked_persist_extend
+
+
+def _sumsq(a: Column) -> Column:
+    return F.aggregate(a, F.lit(0.0).cast("double"), lambda acc, x: acc + x * x)
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -27,11 +42,49 @@ def _dot(a: Column, b: Column) -> Column:
 
 
 def _norm(a: Column) -> Column:
-    return F.sqrt(F.aggregate(a, F.lit(0.0).cast("double"), lambda acc, x: acc + x * x))
+    return F.sqrt(_sumsq(a))
+
+
+def _cos(a: Column, b: Column) -> Column:
+    return _dot(a, b) / (_norm(a) * _norm(b))
+
+
+def _d2(a: Column, b: Column) -> Column:
+    """Squared euclidean distance as a fixed-order left fold."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+        F.lit(0.0).cast("double"), lambda acc, x: acc + x)
 
 
 def _as_double(col: str) -> Column:
     return F.col(col).cast("array<double>")
+
+
+def _split(emb: DataFrame, n_queries: int) -> tuple[DataFrame, DataFrame]:
+    """(vec_id, v) → (queries (query_id, qv), corpus (vec_id, v)): the
+    vectors with vec_id < n_queries are the query set."""
+    queries = emb.filter(F.col("vec_id") < n_queries).select(
+        F.col("vec_id").alias("query_id"), F.col("v").alias("qv"))
+    return queries, emb.filter(F.col("vec_id") >= n_queries)
+
+
+def _top(df: DataFrame, k: int, part: str, *order: Column) -> DataFrame:
+    """The first `k` rows of each `part` group in `order`, numbered in
+    column `rank`."""
+    w = Window.partitionBy(part).orderBy(*order)
+    return (df.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k))
+
+
+def _cosine_topk(pairs: DataFrame, k: int) -> DataFrame:
+    """(query_id, qv, vec_id, v) candidate pairs → (query_id,
+    neighbor_id, rank): top-k by cosine, ties to the lower id."""
+    scored = pairs.select(
+        "query_id", F.col("vec_id").alias("neighbor_id"),
+        _cos(F.col("qv"), F.col("v")).alias("cosine"))
+    return _top(scored, k, "query_id", F.col("cosine").desc(),
+                F.col("neighbor_id")).select("query_id", "neighbor_id",
+                                             "rank")
 
 
 _MAX_ARTIFACT_ROWS = 1_000_000  # driver-safety bound; real artifacts are ≤ thousands
@@ -54,18 +107,17 @@ def _local_artifact(df: DataFrame) -> DataFrame:
     are transported verbatim — no arithmetic — so every downstream
     result is bit-identical; what changes is the PLAN: consumers
     reference an O(rows) leaf instead of re-inlining the whole training
-    subtree, which the r13 measurement pass found dominating these
-    keys' wall as DRIVER time (Catalyst treePatternBits walks + Janino
-    codegen over the unrolled 64-dim-sum trees; thread dumps in
-    OPTIMIZATION_r13.md). Guide §3.3: very large plans make planning
-    itself the bottleneck — materialize intermediates; §5: the driver
-    transfer here is k artifact rows, never corpus data.
+    subtree, whose Catalyst walks and codegen over the unrolled
+    64-dim-sum trees otherwise dominate these keys' wall as DRIVER time
+    (thread dumps in OPTIMIZATION_r13.md). Guide §3.3: very large plans
+    make planning itself the bottleneck — materialize intermediates;
+    §5: the driver transfer here is k artifact rows, never corpus data.
 
-    coalesce(1): createDataFrame parallelizes the rows over
-    defaultParallelism (32 locally), so every broadcast build / write
-    over the leaf was a 32-task wave (r13 driver sidecars: the
-    per-consumer task storms on the IVF-PQ keys). One partition is the
-    right shape for a k-row artifact at any scale.
+    Partitioning: createDataFrame spreads the rows over
+    defaultParallelism partitions, and the leaf is left that way.
+    Coalescing it to one partition serialized the HOF encode stages
+    that run over it (OPTIMIZATION_r14.md, "Rejected after
+    measurement").
 
     ExistingRDD carries no size statistics (defaults to
     spark.sql.defaultSizeInBytes), so consumers joining the leaf must
@@ -82,10 +134,9 @@ def _local_artifact(df: DataFrame) -> DataFrame:
     # k-row artifact aggregation needs a handful of reducers at ANY
     # corpus scale (the map side is partially aggregated, so reduce
     # input is n_maps × k rows), and the session default (core count)
-    # just schedules empty tasks. The suite independently runs these
-    # operators at shuffle_partitions=4 (tests/conftest.py) with the
-    # same oracle-exact values, and the r14 sf0.01 sweep re-verified
-    # all 12 similarity keys under this exact setting.
+    # just schedules empty tasks. tests/test_similarity_pipeline.py
+    # checks that the operators' answers do not move with the session's
+    # values of either setting.
     prev_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
     prev_sp = spark.conf.get("spark.sql.shuffle.partitions", "32")
     try:
@@ -107,22 +158,8 @@ def _local_artifact(df: DataFrame) -> DataFrame:
 def brute_force_topk(embeddings: DataFrame, k: int = 3, n_queries: int = 10) -> DataFrame:
     """Exact cosine top-k: query set broadcast against a single corpus scan."""
     emb = embeddings.select("vec_id", _as_double("embedding").alias("v"))
-    queries = emb.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv"))
-    corpus = emb.filter(F.col("vec_id") >= n_queries)
-    scored = corpus.join(F.broadcast(queries)).select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        (_dot(F.col("qv"), F.col("v")) / (_norm(F.col("qv")) * _norm(F.col("v")))
-         ).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    queries, corpus = _split(emb, n_queries)
+    return _cosine_topk(corpus.join(F.broadcast(queries)), k)
 
 
 def mips_topk(embeddings: DataFrame, k: int = 3,
@@ -150,17 +187,13 @@ def mips_topk(embeddings: DataFrame, k: int = 3,
     zip_with/aggregate math (no Python), per-query ranking windows
     partition by the bounded query set."""
     emb = embeddings.select("vec_id", _as_double("embedding").alias("v"))
-    queries = emb.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv"))
+    queries, corpus = _split(emb, n_queries)
     # persisted: two consumers rescan it (the Phi aggregate and the
     # scoring join) — at scale Phi is computed once per corpus version
     # and stored with it, exactly this plan's cache materialization
-    corpus = tracked_persist(emb.filter(F.col("vec_id") >= n_queries))
-    phi2 = corpus.agg(
-        F.max(F.aggregate(F.col("v"), F.lit(0.0).cast("double"),
-                          lambda acc, x: acc + x * x)).alias("phi2"))
-    n2x = F.aggregate(F.col("v"), F.lit(0.0).cast("double"),
-                      lambda acc, x: acc + x * x)
+    corpus = tracked_persist(corpus)
+    phi2 = corpus.agg(F.max(_sumsq(F.col("v"))).alias("phi2"))
+    n2x = _sumsq(F.col("v"))
     aug = F.sqrt(F.greatest(F.col("phi2") - n2x, F.lit(0.0)))
     # augmented dot: q' carries 0 in the extra coordinate, so the term
     # aug * 0 rides along literally; augmented corpus norm is computed
@@ -181,14 +214,20 @@ def mips_topk(embeddings: DataFrame, k: int = 3,
     # last-ulp differences in the per-vector norm_aug recomputation
     # cannot invert exactly- or near-tied inner products relative to the
     # oracle (which ranks by raw ip, then neighbor_id)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_aug").desc(), F.col("ip").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id",
-                F.round("ip", 6).alias("inner_product"), "rank")
-    )
+    return _top(scored, k, "query_id", F.col("cos_aug").desc(),
+                F.col("ip").desc(), F.col("neighbor_id")).select(
+        "query_id", "neighbor_id",
+        F.round("ip", 6).alias("inner_product"), "rank")
+
+
+def _sign_bits(vcol: Column, planes: list[list[float]]) -> Column:
+    """Sign-LSH bucket: one '1'/'0' per hyperplane, by the sign of the
+    dot product."""
+    return F.concat(*[
+        F.when(_dot(vcol, F.array(*[F.lit(x) for x in p])) >= 0, "1"
+               ).otherwise("0")
+        for p in planes
+    ])
 
 
 def lsh_topk(embeddings: DataFrame, n_planes: int = 4, n_queries: int = 10,
@@ -198,39 +237,43 @@ def lsh_topk(embeddings: DataFrame, n_planes: int = 4, n_queries: int = 10,
     data-INDEPENDENT plane family `embedding_dups_lsh` uses). The planes
     are broadcast literals baked into the plan: no driver collect, no
     extra corpus scan, and a re-ingest of the corpus cannot change any
-    bucket (the previous variant derived planes from the last corpus
-    vectors via two `.collect()` round-trips)."""
+    bucket."""
     planes = hash_planes(1, n_planes, dim)[0]
     emb = embeddings.select("vec_id", _as_double("embedding").alias("v"))
+    queries, corpus = _split(emb, n_queries)
+    corpus = corpus.withColumn("bkt", _sign_bits(F.col("v"), planes))
+    queries = queries.withColumn("bkt", _sign_bits(F.col("qv"), planes))
+    return _cosine_topk(corpus.join(F.broadcast(queries), "bkt"), k)
 
-    def bucket(vcol: Column) -> Column:
-        bits = [
-            F.when(_dot(vcol, F.array(*[F.lit(x) for x in p])) >= 0, "1"
-                   ).otherwise("0")
-            for p in planes
-        ]
-        return F.concat(*bits)
 
-    corpus = emb.filter(F.col("vec_id") >= n_queries).withColumn(
-        "bkt", bucket(F.col("v")))
-    queries = (
-        emb.filter(F.col("vec_id") < n_queries)
-        .select(F.col("vec_id").alias("query_id"), F.col("v").alias("qv"))
-        .withColumn("bkt", bucket(F.col("qv")))
-    )
-    scored = corpus.join(F.broadcast(queries), "bkt").select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        (_dot(F.col("qv"), F.col("v")) / (_norm(F.col("qv")) * _norm(F.col("v")))
-         ).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+def _sampled_cells(corpus: DataFrame, queries: DataFrame, cents: DataFrame,
+                   nprobe: int, sfx: str = "") -> DataFrame:
+    """Sampled-centroid IVF routing by cosine: each corpus vector goes
+    to the cell whose centroid scores highest (ties to the higher cell —
+    a max over (s, cell)), each query probes its `nprobe` best cells.
+    Routing compares the columns named `v`, `cv`, `qv` plus `sfx`
+    (`mips_ivf_topk` routes on its augmented `va`/`cva`/`qva`). Returns
+    (cell, vec_id, v, query_id, qv) for every corpus vector in a probed
+    cell.
+
+    Assignment is a nested-centroid argMAX projection (zero Exchange:
+    a join+groupBy form would shuffle corpus rows with their vector
+    payloads); probing broadcasts n_queries × nprobe rows."""
+    vc, cc, qc = "v" + sfx, "cv" + sfx, "qv" + sfx
+    nested = cents.agg(F.collect_list(F.struct("cell", cc)).alias("_cents"))
+    best_cell = F.array_max(F.transform(
+        F.col("_cents"),
+        lambda c: F.struct(_cos(F.col(vc), c[cc]).alias("s"),
+                           c["cell"].alias("cell")),
+    ))["cell"]
+    assigned = (corpus.crossJoin(F.broadcast(nested))
+                .select("vec_id", best_cell.alias("cell"), "v"))
+    probes = _top(
+        queries.join(F.broadcast(cents)).select(
+            "query_id", "qv", _cos(F.col(qc), F.col(cc)).alias("s"), "cell"),
+        nprobe, "query_id", F.col("s").desc(), F.col("cell"),
+    ).select("query_id", "qv", "cell")
+    return assigned.join(F.broadcast(probes), "cell")
 
 
 def ivf_topk(embeddings: DataFrame, k: int = 3, n_queries: int = 10,
@@ -245,72 +288,19 @@ def ivf_topk(embeddings: DataFrame, k: int = 3, n_queries: int = 10,
     set would drop into the same plan as a broadcast table).
 
     100 TB shape: assignment is corpus × broadcast(centroids) followed by a
-    map-side-combined `max(struct(sim, cell))` groupBy — the shuffle carries
-    one row per corpus vector, never the |corpus|×|centroids| cross product.
-    Probing broadcasts `n_queries × nprobe` rows; the rerank join touches
-    only vectors in probed cells. Per-query ranking windows partition by
-    query_id (bounded query set).
-
-    Bench-history note (round-6 profiling of the round-5 2.38→3.40 s
-    drift, zero code change): in one JVM at sf0.1 the FIRST execution of
-    this query costs 4.6 s and every subsequent execution 2.0-2.6 s — the
-    premium is whole-stage-codegen/JIT compilation of this operator's
-    higher-order-function expressions, and bench.py times each query's
-    single (first) execution, so the wall time swings by how much of that
-    compilation was already absorbed by whichever queries ran earlier in
-    the loop. Same variance class as the dedup_embedding_lsh_full r4
-    drift (see note below); the physical shape (broadcast centroids,
-    map-side-combined argmax, probe-bounded rerank) is pinned by
-    tests/test_plans.py:126 and is steady-state ~2.2 s."""
+    nested-centroid argmax projection — no shuffle carries the
+    |corpus|×|centroids| cross product. Probing broadcasts
+    `n_queries × nprobe` rows; the rerank join touches only vectors in
+    probed cells. Per-query ranking windows partition by query_id
+    (bounded query set). The first execution in a JVM pays the
+    whole-stage-codegen/JIT cost of the higher-order-function
+    expressions (4.6 s vs 2.0-2.6 s warm at sf0.1), so a single timed
+    run swings with what earlier queries already compiled."""
     emb = embeddings.select("vec_id", _as_double("embedding").alias("v"))
-    queries = emb.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv"))
-    corpus = emb.filter(F.col("vec_id") >= n_queries)
+    queries, corpus = _split(emb, n_queries)
     cents = corpus.filter(F.col("vec_id") % stride == 0).select(
         F.col("vec_id").alias("cell"), F.col("v").alias("cv"))
-
-    # nested-centroid argMAX projection (r9: zero-Exchange assignment —
-    # the join+groupBy form shuffled corpus rows with vector payloads;
-    # max over (s, cell) keeps the identical higher-cell tie-break)
-    nested = cents.agg(
-        F.collect_list(F.struct("cell", "cv")).alias("_cents"))
-    best_cell = F.array_max(F.transform(
-        F.col("_cents"),
-        lambda c: F.struct(
-            (_dot(F.col("v"), c["cv"])
-             / (_norm(F.col("v")) * _norm(c["cv"]))).alias("s"),
-            c["cell"].alias("cell"),
-        ),
-    ))["cell"]
-    assigned = (
-        corpus.crossJoin(F.broadcast(nested))
-        .select("vec_id", best_cell.alias("cell"), "v")
-    )
-
-    qsim = (_dot(F.col("qv"), F.col("cv"))
-            / (_norm(F.col("qv")) * _norm(F.col("cv"))))
-    wq = Window.partitionBy("query_id").orderBy(F.col("s").desc(), F.col("cell"))
-    probes = (
-        queries.join(F.broadcast(cents))
-        .select("query_id", "qv", qsim.alias("s"), "cell")
-        .withColumn("pr", F.row_number().over(wq))
-        .filter(F.col("pr") <= nprobe)
-        .select("query_id", "qv", "cell")
-    )
-
-    scored = assigned.join(F.broadcast(probes), "cell").select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        (_dot(F.col("qv"), F.col("v")) / (_norm(F.col("qv")) * _norm(F.col("v")))
-         ).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    return _cosine_topk(_sampled_cells(corpus, queries, cents, nprobe), k)
 
 
 def mips_ivf_topk(embeddings: DataFrame, k: int = 3, n_queries: int = 10,
@@ -335,19 +325,14 @@ def mips_ivf_topk(embeddings: DataFrame, k: int = 3, n_queries: int = 10,
     probed cells only; augmentation adds one JVM-side array element, no
     extra pass."""
     emb = embeddings.select("vec_id", _as_double("embedding").alias("v"))
-    queries = emb.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv"))
-    corpus = emb.filter(F.col("vec_id") >= n_queries)
-    sq = F.aggregate(F.col("v"), F.lit(0.0).cast("double"),
-                     lambda acc, x: acc + x * x)
-    phi2 = corpus.agg(F.max(sq).alias("phi2"))
+    queries, corpus = _split(emb, n_queries)
+    phi2 = corpus.agg(F.max(_sumsq(F.col("v"))).alias("phi2"))
 
     def augmented(vcol):
-        n2 = F.aggregate(vcol, F.lit(0.0).cast("double"),
-                         lambda acc, x: acc + x * x)
         return F.concat(
             vcol,
-            F.array(F.sqrt(F.greatest(F.col("phi2") - n2, F.lit(0.0)))))
+            F.array(F.sqrt(F.greatest(F.col("phi2") - _sumsq(vcol),
+                                      F.lit(0.0)))))
 
     corpus_a = (corpus.crossJoin(F.broadcast(phi2))
                 .select("vec_id", "v", augmented(F.col("v")).alias("va")))
@@ -360,49 +345,15 @@ def mips_ivf_topk(embeddings: DataFrame, k: int = 3, n_queries: int = 10,
         "query_id", "qv",
         F.concat(F.col("qv"),
                  F.array(F.lit(0.0).cast("double"))).alias("qva"))
-
-    # zero-Exchange nested argmax assignment in AUGMENTED space (the
-    # ivf_topk recipe; higher-cell tie-break preserved)
-    nested = cents.agg(
-        F.collect_list(F.struct("cell", "cva")).alias("_cents"))
-    best_cell = F.array_max(F.transform(
-        F.col("_cents"),
-        lambda c: F.struct(
-            (_dot(F.col("va"), c["cva"])
-             / (_norm(F.col("va")) * _norm(c["cva"]))).alias("s"),
-            c["cell"].alias("cell"),
-        ),
-    ))["cell"]
-    assigned = (
-        corpus_a.crossJoin(F.broadcast(nested))
-        .select("vec_id", best_cell.alias("cell"), "v")
-    )
-
-    qsim = (_dot(F.col("qva"), F.col("cva"))
-            / (_norm(F.col("qva")) * _norm(F.col("cva"))))
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("s").desc(), F.col("cell"))
-    probes = (
-        queries_a.join(F.broadcast(cents))
-        .select("query_id", "qv", qsim.alias("s"), "cell")
-        .withColumn("pr", F.row_number().over(wq))
-        .filter(F.col("pr") <= nprobe)
-        .select("query_id", "qv", "cell")
-    )
-
-    scored = assigned.join(F.broadcast(probes), "cell").select(
+    scored = _sampled_cells(corpus_a, queries_a, cents, nprobe, "a").select(
         "query_id",
         F.col("vec_id").alias("neighbor_id"),
         _dot(F.col("qv"), F.col("v")).alias("ip"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("ip").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id",
-                F.round("ip", 6).alias("inner_product"), "rank")
-    )
+    return _top(scored, k, "query_id", F.col("ip").desc(),
+                F.col("neighbor_id")).select(
+        "query_id", "neighbor_id",
+        F.round("ip", 6).alias("inner_product"), "rank")
 
 
 def hard_negative_mining(embeddings: DataFrame, k: int = 3,
@@ -432,17 +383,13 @@ def hard_negative_mining(embeddings: DataFrame, k: int = 3,
     scored = corpus.join(F.broadcast(anchors)).select(
         "query_id", "qlabel",
         F.col("vec_id").alias("neighbor_id"), "label",
-        (_dot(F.col("qv"), F.col("v"))
-         / (_norm(F.col("qv")) * _norm(F.col("v")))).alias("cos"))
+        _cos(F.col("qv"), F.col("v")).alias("cos"))
     best_pos = (scored.filter(F.col("label") == F.col("qlabel"))
                 .groupBy("query_id")
                 .agg(F.max("cos").alias("best_pos_cos")))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id"))
     return (
-        scored.filter(F.col("label") != F.col("qlabel"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        _top(scored.filter(F.col("label") != F.col("qlabel")), k,
+             "query_id", F.col("cos").desc(), F.col("neighbor_id"))
         .join(F.broadcast(best_pos), "query_id", "left")
         .select("query_id", "neighbor_id",
                 F.round("cos", 6).alias("cosine"), "rank",
@@ -551,33 +498,17 @@ def embedding_dups_lsh(embeddings: DataFrame, threshold: float = 0.99,
     once (bands persisted), not once per join side. Candidates collapse to
     distinct bare id-pairs BEFORE the exact-verify stage, which fetches
     vectors back by id; verification cost is |candidates|, not
-    |collisions|.
-
-    Bench-history note (round-5 investigation of the round-4 +41% drift):
-    sf0.1 wall times were 4.5 s (r3) → 6.4 s (r4) → 5.0 s (r5) with ZERO
-    changes to this file across those rounds — the swing is bench-harness
-    environment variance (JIT/page-cache state under the sequential query
-    loop), not a plan regression; the physical shape (bands persisted
-    once, id-only self-join, no cartesian) is pinned by
-    tests/test_plans.py."""
+    |collisions|. The physical shape (bands persisted once, id-only
+    self-join, no cartesian) is pinned by tests/test_plans.py."""
     planes = hash_planes(tables, bits, dim)
     emb = with_synthetic_vec_dups(embeddings, dim=dim)
-
-    def bucket(t: int) -> Column:
-        return F.concat(*[
-            F.when(
-                _dot(F.col("v"),
-                     F.array(*[F.lit(x) for x in planes[t][j]])) >= 0,
-                "1",
-            ).otherwise("0")
-            for j in range(bits)
-        ])
 
     bands = emb.select(
         "vec_id",
         F.explode(
             F.array(*[
-                F.struct(F.lit(t).alias("tbl"), bucket(t).alias("bkt"))
+                F.struct(F.lit(t).alias("tbl"),
+                         _sign_bits(F.col("v"), planes[t]).alias("bkt"))
                 for t in range(tables)
             ])
         ).alias("tb"),
@@ -601,12 +532,8 @@ def embedding_dups_lsh(embeddings: DataFrame, threshold: float = 0.99,
     verified = (
         cand.join(va, "id_a")
         .join(vb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            (_dot(F.col("va"), F.col("vb"))
-             / (_norm(F.col("va")) * _norm(F.col("vb")))).alias("cosine"),
-        )
+        .select("id_a", "id_b",
+                _cos(F.col("va"), F.col("vb")).alias("cosine"))
     )
     return (
         verified.filter(F.col("cosine") >= threshold)
@@ -627,42 +554,76 @@ def embedding_cosine_dups(embeddings: DataFrame, threshold: float = 0.99,
         .select(
             F.col("a.vec_id").alias("id_a"),
             F.col("b.vec_id").alias("id_b"),
-            (_dot(F.col("a.v"), F.col("b.v"))
-             / (_norm(F.col("a.v")) * _norm(F.col("b.v")))).alias("cosine"),
+            _cos(F.col("a.v"), F.col("b.v")).alias("cosine"),
         )
         .filter(F.col("cosine") >= threshold)
         .select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))
     )
 
 
+def _nest(cents: DataFrame, arr: str, *by: str) -> DataFrame:
+    """(…, cluster, cv) rows → one row per `by` group (one row in all
+    when `by` is empty) carrying its centroids as the struct array
+    `arr`. Broadcast onto the vectors, this turns nearest-centroid
+    election into a PURE PROJECTION (`_nearest`) — zero Exchange, where
+    a join+groupBy election shuffles a corpus-sized row set with its
+    vector payload. The argmin is order-independent, so the unsorted
+    collect_list is still deterministic. Scope: right for SMALL centroid
+    sets (coarse quantizers, PQ codebooks, k ≲ thousands — the array
+    must broadcast and evaluate per row); a million-centroid fine
+    quantizer would return to the join+groupBy form, sharded."""
+    return cents.groupBy(*by).agg(
+        F.collect_list(F.struct("cluster", "cv")).alias(arr))
+
+
+def _nearest(vcol: Column, arr: str) -> Column:
+    """argmin_{c ∈ arr} ||vcol − c.cv||² with ties to the lower cluster
+    id (the min compares (d2, cluster)), as one JVM expression over the
+    nested array."""
+    return F.array_min(F.transform(
+        F.col(arr),
+        lambda c: F.struct(_d2(vcol, c["cv"]).alias("d2"),
+                           c["cluster"].alias("cluster")),
+    ))["cluster"]
+
+
+def _assign(vecs: DataFrame, cents: DataFrame, name: str,
+            *cols) -> DataFrame:
+    """(vec_id, v, …) × (cluster, cv) centroids → (vec_id, `name`,
+    *cols): every vector's nearest centroid, by the broadcast
+    nested-centroid projection."""
+    return (
+        vecs.crossJoin(F.broadcast(_nest(cents, "_cents")))
+        .select("vec_id", _nearest(F.col("v"), "_cents").alias(name), *cols)
+    )
+
+
+def _means(assigned: DataFrame, v: str, width: int, *keys: str) -> DataFrame:
+    """The Lloyd recompute: per `keys` group, the member count `n` and
+    the element-wise mean `cv` of the `width`-long array column `v` —
+    one map-side-combined groupBy, the one shuffle an iteration needs."""
+    return assigned.groupBy(*keys).agg(
+        F.count("*").alias("n"),
+        *[F.sum(F.col(v)[i]).alias(f"s{i}") for i in range(width)],
+    ).select(
+        *keys, "n",
+        F.array(*[F.col(f"s{i}") / F.col("n") for i in range(width)]
+                ).alias("cv"),
+    )
+
+
 def _kmeans_centroids(emb: DataFrame, k: int, iters: int,
                       dim: int) -> DataFrame:
-    """Lloyd training loop shared by `kmeans_clusters` (reporting) and
-    `ivf_kmeans_topk` (trained-quantizer IVF): returns (cluster, n, cv)
-    after `iters` rounds, one lazy unrolled plan. Per iteration:
-    assignment is a nested-centroid `array_min` PROJECTION (broadcast
-    1-row centroid array — zero Exchange; the r8 join+groupBy form
-    shuffled the corpus WITH its vector payload once per iteration);
-    recompute = groupBy cluster with `dim` partial sums — the one
-    corpus shuffle an iteration fundamentally needs. Init centroids are
-    the vectors with vec_id < k; squared euclidean, ties to the lower
-    cluster id — bit-equal to the previous form."""
+    """Lloyd training loop shared by `kmeans_clusters`, `semdedup`,
+    `knn_join` and every IVF coarse quantizer: returns (cluster, n, cv)
+    after `iters` rounds, one lazy unrolled plan. Init centroids are the
+    vectors with vec_id < k; assignment is the nested-centroid
+    projection (squared euclidean, ties to the lower cluster id)."""
     cents = emb.filter(F.col("vec_id") < k).select(
         F.col("vec_id").cast("int").alias("cluster"), F.col("v").alias("cv"))
-
     for _ in range(iters):
-        assigned = (
-            emb.crossJoin(F.broadcast(_nest_centroids(cents)))
-            .select(_nearest_cluster(F.col("v")).alias("cluster"), "v")
-        )
-        cents = assigned.groupBy("cluster").agg(
-            F.count("*").alias("n"),
-            *[F.sum(F.col("v")[i]).alias(f"s{i}") for i in range(dim)],
-        ).select(
-            "cluster", "n",
-            F.array(*[F.col(f"s{i}") / F.col("n") for i in range(dim)]
-                    ).alias("cv"),
-        )
+        cents = _means(_assign(emb, cents, "cluster", "v"), "v", dim,
+                       "cluster")
     return cents
 
 
@@ -680,12 +641,12 @@ def kmeans_clusters(embeddings: DataFrame, k: int = 8, iters: int = 2,
     Output after `iters` rounds: (cluster, n_members, centroid_checksum)
     with the checksum = round(sum of centroid components, 6).
 
-    100 TB shape, per iteration: assignment = corpus × broadcast(k
-    centroids) then a map-side-combined min(struct) groupBy — exactly one
-    corpus-row per vector through the shuffle; recompute = groupBy cluster
-    with `dim` partial sums (k rows per map partition through the
-    shuffle). The trained centroids drop into `ivf_topk`'s broadcast
-    centroid slot as the trained-quantizer IVF variant.
+    100 TB shape, per iteration: assignment = corpus × broadcast(1-row
+    nested centroid array) as a projection — no corpus shuffle;
+    recompute = groupBy cluster with `dim` partial sums (k rows per map
+    partition through the shuffle). The trained centroids drop into
+    `ivf_topk`'s broadcast centroid slot as the trained-quantizer IVF
+    variant.
     """
     emb = embeddings.select("vec_id", _as_double("embedding").alias("v"))
     cents = _kmeans_centroids(emb, k, iters, dim)
@@ -716,32 +677,27 @@ def semdedup(embeddings: DataFrame, n_clusters: int = 8, iters: int = 2,
     policy). Output: (vec_id, cluster, is_dup) per vector.
 
     100 TB shape: training/assignment broadcast the k-row centroid table
-    (map-side-combined argmin, one corpus row per vector through the
-    shuffle); the dup search self-joins ON THE CLUSTER KEY ONLY — cost is
+    (nested-centroid argmin projection, no corpus shuffle); the dup
+    search self-joins ON THE CLUSTER KEY ONLY — cost is
     Σ|cell|², bounded by choosing k ∝ corpus size (SemDedup's own
     posture), never a corpus-wide cartesian; the distinct dup-id set
     left-joins back as a boolean mark (ids only, no vector payload)."""
     emb = with_synthetic_vec_dups(embeddings, dim=dim)
     # cents stays LAZY: it has exactly ONE consumer (the assignment
     # below, whose tracked_persist materializes training exactly once),
-    # so collecting it into a literal bought no consumer-dedup and
-    # added eager collect jobs — the r13 driver sidecar measured the
-    # _local_artifact form at 16→24 tasks / ×2.99 wall (VERDICT r13
-    # item 1); reverted r14.
+    # so collecting it into a leaf buys no consumer-dedup and adds
+    # eager collect jobs (measured 16→24 tasks and ×2.99 wall, VERDICT
+    # r13 item 1).
     cents = _kmeans_centroids(emb, n_clusters, iters, dim).select(
         "cluster", "cv")
 
-    # `nv` precomputes each vector's norm ONCE at assignment time (r14):
-    # the pair search below evaluates its predicate over Σ|cell|² pairs,
-    # and the norm is a 64-term HOF fold — computing it per PAIR ran it
-    # 2·Σ|cell|² times instead of once per vector. Same expression over
-    # the same doubles → bit-identical values, so cos is unchanged.
-    assigned = (
-        emb.crossJoin(F.broadcast(_nest_centroids(cents)))
-        .select("vec_id", _nearest_cluster(F.col("v")).alias("cluster"),
-                "v", _norm(F.col("v")).alias("nv"))
-    )
-    assigned = tracked_persist(assigned)
+    # `nv` precomputes each vector's norm ONCE at assignment time: the
+    # pair search below evaluates its predicate over Σ|cell|² pairs, and
+    # the norm is a 64-term HOF fold — computing it per PAIR would run
+    # it 2·Σ|cell|² times. Same expression over the same doubles →
+    # bit-identical values.
+    assigned = tracked_persist(_assign(
+        emb, cents, "cluster", "v", _norm(F.col("v")).alias("nv")))
 
     a, b = assigned.alias("a"), assigned.alias("b")
     cos = (_dot(F.col("a.v"), F.col("b.v"))
@@ -761,6 +717,20 @@ def semdedup(embeddings: DataFrame, n_clusters: int = 8, iters: int = 2,
     )
 
 
+def _probes(queries: DataFrame, coarse: DataFrame, nprobe: int,
+            *carry: str) -> DataFrame:
+    """(query_id, qv, …) × coarse (cluster, cv) → (query_id, *carry,
+    cell): each query's top-`nprobe` nearest cells by squared euclidean,
+    ties to the lower cluster (broadcast-centroid window — the probe
+    routing of every trained-quantizer IVF variant)."""
+    return _top(
+        queries.join(F.broadcast(coarse)).select(
+            "query_id", *carry, _d2(F.col("qv"), F.col("cv")).alias("d2"),
+            "cluster"),
+        nprobe, "query_id", F.col("d2").asc(), F.col("cluster"),
+    ).select("query_id", *carry, F.col("cluster").alias("cell"))
+
+
 def ivf_kmeans_topk(embeddings: DataFrame, k: int = 3, n_queries: int = 10,
                     n_cells: int = 8, iters: int = 2, dim: int = 64,
                     nprobe: int = 2) -> DataFrame:
@@ -772,57 +742,121 @@ def ivf_kmeans_topk(embeddings: DataFrame, k: int = 3, n_queries: int = 10,
     cosine like the other ANN variants.
 
     100 TB shape: training = `iters` × (corpus × broadcast(k centroids) →
-    map-side-combined min(struct) → k-row recompute) in ONE lazy plan;
+    nested argmin projection → k-row recompute) in ONE lazy plan;
     assignment reuses the same broadcast pattern; probing broadcasts
     n_queries × nprobe rows; the rerank join touches only vectors in
     probed cells. The k-row centroid table is always broadcast — nothing
     driver-side, no cross product through a shuffle."""
     emb = embeddings.select("vec_id", _as_double("embedding").alias("v"))
-    # cents stays LAZY (the r10-measured decision, restored r14): its
-    # two consumers are both BROADCAST builds of a k-row table, so the
-    # duplicated training subtree is two cheap broadcast jobs — the r13
-    # _local_artifact wrap added eager collect jobs instead (driver
-    # sidecar: tasks 14→29, no wall win; VERDICT r13 item 2) and hid
-    # the training joins from the plan contract pinned in
+    # cents stays LAZY: its two consumers are both BROADCAST builds of a
+    # k-row table, so the duplicated training subtree costs two cheap
+    # broadcast jobs; a `_local_artifact` leaf added eager collect jobs
+    # instead (tasks 14→29, no wall win; VERDICT r13 item 2) and hid the
+    # training joins from the plan contract pinned in
     # tests/test_plans.py::test_ivf_kmeans_trained_quantizer_broadcasts.
     cents = _kmeans_centroids(emb, n_cells, iters, dim).select(
         "cluster", "cv")
+    queries, corpus = _split(emb, n_queries)
+    assigned = _assign(corpus, cents, "cell", "v")
+    probes = _probes(queries, cents, nprobe, "qv")
+    return _cosine_topk(assigned.join(F.broadcast(probes), "cell"), k)
 
-    corpus = emb.filter(F.col("vec_id") >= n_queries)
-    queries = emb.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv"))
 
-    assigned = (
-        corpus.crossJoin(F.broadcast(_nest_centroids(cents)))
-        .select("vec_id", _nearest_cluster(F.col("v")).alias("cluster"),
-                "v")
-    )
+def _coarse(emb: DataFrame, n_cells: int, iters: int,
+            dim: int) -> DataFrame:
+    """The trained coarse quantizer (cluster, cv) as a bounded leaf."""
+    return _local_artifact(
+        _kmeans_centroids(emb, n_cells, iters, dim).select("cluster", "cv"))
 
-    d2q = F.aggregate(
-        F.zip_with(F.col("qv"), F.col("cv"), lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0).cast("double"), lambda acc, x: acc + x)
-    wq = Window.partitionBy("query_id").orderBy("d2", "cluster")
-    probes = (
-        queries.join(F.broadcast(cents))
-        .select("query_id", "qv", d2q.alias("d2"), "cluster")
-        .withColumn("pr", F.row_number().over(wq))
-        .filter(F.col("pr") <= nprobe)
-        .select("query_id", "qv", "cluster")
-    )
 
-    scored = assigned.join(F.broadcast(probes), "cluster").select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        (_dot(F.col("qv"), F.col("v"))
-         / (_norm(F.col("qv")) * _norm(F.col("v")))).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id"))
+def _pq_sub(df: DataFrame, m: int, sd: int, *keys: str,
+            v: str = "v") -> DataFrame:
+    """(*keys, v) → one row per (*keys, subspace j) with the `sd`-long
+    subvector slice `sv` — the PQ decomposition that training, encoding
+    and every lookup table consume. `keys` defaults to (vec_id,)."""
+    keys = keys or ("vec_id",)
+    return df.select(
+        *keys,
+        F.explode(F.array(*[
+            F.struct(F.lit(j).alias("j"),
+                     F.slice(v, j * sd + 1, sd).alias("sv"))
+            for j in range(m)
+        ])).alias("s"),
+    ).select(*keys, F.col("s.j").alias("j"), F.col("s.sv").alias("sv"))
+
+
+def _pq_encode(sub: DataFrame, cb: DataFrame, name: str = "code",
+               *cols) -> DataFrame:
+    """(vec_id, j, sv) × codebooks (j, cluster, cv) → (vec_id, j, `name`,
+    *cols): nearest-code election as a nested-codebook projection after
+    an m-row broadcast join on j — no election shuffle."""
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
+        sub.join(F.broadcast(_nest(cb, "_cbs", "j")), "j")
+        .select("vec_id", "j", _nearest(F.col("sv"), "_cbs").alias(name),
+                *cols)
     )
+
+
+def _pq_codebooks(sub: DataFrame, ks: int, sd: int, iters: int,
+                  init: DataFrame | None = None) -> DataFrame:
+    """Per-subspace Lloyd codebooks (j, cluster, cv): init = subvectors
+    of vec_id < ks, squared euclidean, ties to the lower id — the shared
+    deterministic spec of every PQ variant. ``init`` overrides the seed
+    codebook — the residual trainer seeds from corpus residuals, whose
+    ids don't start at 0."""
+    cb = init if init is not None else sub.filter(
+        F.col("vec_id") < ks).select(
+        "j", F.col("vec_id").cast("int").alias("cluster"),
+        F.col("sv").alias("cv"))
+    for _ in range(iters):
+        cb = _means(_pq_encode(sub, cb, "cluster", "sv"), "sv", sd,
+                    "j", "cluster")
+    return cb.select("j", "cluster", "cv")
+
+
+def _pq_lut(qsub: DataFrame, cb: DataFrame, *keys: str) -> DataFrame:
+    """ADC lookup table: every (*keys, j) query subvector's squared
+    distance to every code of subspace j — (*keys, j, cluster, d2),
+    built from a broadcast of the m × ks codebook table."""
+    return qsub.join(F.broadcast(cb), "j").select(
+        *keys, "j", "cluster", _d2(F.col("sv"), F.col("cv")).alias("d2"))
+
+
+def _raw_lut(sub: DataFrame, cb: DataFrame, n_queries: int) -> DataFrame:
+    """The per-query raw-vector LUT (n_queries × m × ks rows)."""
+    return _pq_lut(sub.filter(F.col("vec_id") < n_queries)
+                   .withColumnRenamed("vec_id", "query_id"), cb, "query_id")
+
+
+def _adc_rank(cand: DataFrame, lut: DataFrame, k: int) -> DataFrame:
+    """ADC scoring: join candidate codes (vec_id, j, code, …) against
+    the broadcast LUT, sum the per-subspace distances, keep the top-k
+    per query (ties to the lower vec_id). The join also keys on
+    query_id when the candidates carry one (probe-restricted IVF
+    candidates) and on the cell when the LUT carries one (residual
+    LUTs: the query residual differs per probed cell). Both sides are
+    aliased: a bare reference to a column both inherit from one
+    lineage would build a trivially-true predicate."""
+    on = [("j", "j"), ("code", "cluster")]
+    if "query_id" in cand.columns:
+        on.insert(0, ("query_id", "query_id"))
+    if "cell" in lut.columns:
+        on.append(("cell", "cell"))
+    qside = "_ca" if "query_id" in cand.columns else "_lu"
+    ca, lu = cand.alias("_ca"), lut.alias("_lu")
+    scored = (
+        ca.join(F.broadcast(lu), reduce(and_, [
+            F.col(f"_ca.{a}") == F.col(f"_lu.{b}") for a, b in on]))
+        .select(F.col(f"{qside}.query_id").alias("query_id"),
+                F.col("_ca.vec_id").alias("vec_id"),
+                F.col("_lu.d2").alias("d2"))
+        .groupBy("query_id", "vec_id")
+        .agg(F.sum("d2").alias("approx_d2"))
+    )
+    return _top(scored, k, "query_id", F.col("approx_d2").asc(),
+                F.col("vec_id")).select(
+        "query_id", F.col("vec_id").alias("neighbor_id"),
+        "rank", F.round("approx_d2", 6).alias("approx_d2"))
 
 
 def pq_topk(embeddings: DataFrame, k: int = 3, n_queries: int = 10,
@@ -852,195 +886,36 @@ def pq_topk(embeddings: DataFrame, k: int = 3, n_queries: int = 10,
     index (IVF-PQ), with identical plumbing."""
     sd = dim // m
     emb = embeddings.select("vec_id", _as_double("embedding").alias("v"))
-    sub = emb.select(
-        "vec_id",
-        F.explode(F.array(*[
-            F.struct(F.lit(j).alias("j"),
-                     F.slice("v", j * sd + 1, sd).alias("sv"))
-            for j in range(m)
-        ])).alias("s"),
-    ).select("vec_id", F.col("s.j").alias("j"), F.col("s.sv").alias("sv"))
-
-    cb = sub.filter(F.col("vec_id") < ks).select(
-        "j", F.col("vec_id").cast("int").alias("cluster"),
-        F.col("sv").alias("cv"))
-    d2 = F.aggregate(
-        F.zip_with(F.col("sv"), F.col("cv"), lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0).cast("double"), lambda acc, x: acc + x)
-    for _ in range(iters):
-        assigned = (
-            sub.join(F.broadcast(cb), "j")
-            .select("vec_id", "j", "sv", d2.alias("d2"), "cluster")
-            .groupBy("vec_id", "j")
-            .agg(F.min(F.struct("d2", "cluster", "sv")).alias("a"))
-            .select("j", F.col("a.cluster").alias("cluster"),
-                    F.col("a.sv").alias("sv"))
-        )
-        cb = assigned.groupBy("j", "cluster").agg(
-            F.count("*").alias("n"),
-            *[F.sum(F.col("sv")[i]).alias(f"s{i}") for i in range(sd)],
-        ).select(
-            "j", "cluster",
-            F.array(*[F.col(f"s{i}") / F.col("n") for i in range(sd)]
-                    ).alias("cv"),
-        )
-
-    corpus_sub = sub.filter(F.col("vec_id") >= n_queries)
+    sub = _pq_sub(emb, m, sd)
+    cb = _pq_codebooks(sub, ks, sd, iters)
+    # corpus codes by a map-side-combined (vec_id, j) min(struct)
+    # election — the same (d2, cluster) tie-break as `_pq_encode`'s
+    # projection; this operator keeps the groupBy form, whose
+    # partial_min tests/test_plans.py pins as its code election
     codes = (
-        corpus_sub.join(F.broadcast(cb), "j")
-        .select("vec_id", "j", d2.alias("d2"), "cluster")
+        sub.filter(F.col("vec_id") >= n_queries)
+        .join(F.broadcast(cb), "j")
+        .select("vec_id", "j", _d2(F.col("sv"), F.col("cv")).alias("d2"),
+                "cluster")
         .groupBy("vec_id", "j")
         .agg(F.min(F.struct("d2", "cluster")).alias("a"))
         .select("vec_id", "j", F.col("a.cluster").alias("code"))
     )
-    lut = (
-        sub.filter(F.col("vec_id") < n_queries)
-        .withColumnRenamed("vec_id", "query_id")
-        .join(F.broadcast(cb), "j")
-        .select("query_id", "j", "cluster", d2.alias("d2"))
-    )
-    scored = (
-        codes.join(F.broadcast(lut),
-                   (codes["j"] == lut["j"]) & (codes["code"] == lut["cluster"]))
-        .groupBy("query_id", "vec_id")
-        .agg(F.sum("d2").alias("approx_d2"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("approx_d2").asc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                "rank", F.round("approx_d2", 6).alias("approx_d2"))
-    )
+    return _adc_rank(codes, _raw_lut(sub, cb, n_queries), k)
 
 
-def _pq_sub(emb: DataFrame, m: int, sd: int) -> DataFrame:
-    """(vec_id, v) → one row per (vec_id, subspace j) with the subvector
-    slice — the PQ decomposition both training and encoding consume."""
-    return emb.select(
-        "vec_id",
-        F.explode(F.array(*[
-            F.struct(F.lit(j).alias("j"),
-                     F.slice("v", j * sd + 1, sd).alias("sv"))
-            for j in range(m)
-        ])).alias("s"),
-    ).select("vec_id", F.col("s.j").alias("j"), F.col("s.sv").alias("sv"))
-
-
-def _pq_d2() -> Column:
-    return F.aggregate(
-        F.zip_with(F.col("sv"), F.col("cv"), lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0).cast("double"), lambda acc, x: acc + x)
-
-
-def _nest_codebooks(cb: DataFrame) -> DataFrame:
-    """(j, cluster, cv) → one row per SUBSPACE carrying its whole
-    codebook as an array — the per-subspace analogue of
-    `_nest_centroids`: the nearest-code election becomes a projection
-    after an m-row broadcast join on j, instead of a ks-fold row blowup
-    plus a (vec_id, j) groupBy shuffle."""
-    return cb.groupBy("j").agg(
-        F.collect_list(F.struct("cluster", "cv")).alias("_cbs"))
-
-
-def _nearest_code(svcol: Column) -> Column:
-    """argmin over the subspace codebook array `_cbs` by squared
-    euclidean, ties to the lower cluster — bit-equal to the min(struct)
-    election it replaces."""
-    return F.array_min(F.transform(
-        F.col("_cbs"),
-        lambda c: F.struct(
-            F.aggregate(
-                F.zip_with(svcol, c["cv"],
-                           lambda x, y: (x - y) * (x - y)),
-                F.lit(0.0).cast("double"), lambda acc, x: acc + x,
-            ).alias("d2"),
-            c["cluster"].alias("cluster"),
-        ),
-    ))["cluster"]
-
-
-def _pq_codebooks(sub: DataFrame, ks: int, sd: int, iters: int,
-                  init: DataFrame | None = None) -> DataFrame:
-    """Per-subspace Lloyd codebooks (init = subvectors of vec_id < ks,
-    squared euclidean, ties to the lower id) — the shared deterministic
-    spec of pq_topk / ivf_pq_topk. Assignment is the nested-codebook
-    projection; the per-(j, cluster) mean recompute is the one shuffle
-    an iteration needs. ``init`` overrides the seed codebook (j, cluster,
-    cv) — the residual trainer seeds from corpus residuals, whose ids
-    don't start at 0."""
-    cb = init if init is not None else sub.filter(
-        F.col("vec_id") < ks).select(
-        "j", F.col("vec_id").cast("int").alias("cluster"),
-        F.col("sv").alias("cv"))
-    for _ in range(iters):
-        assigned = (
-            sub.join(F.broadcast(_nest_codebooks(cb)), "j")
-            .select("j", _nearest_code(F.col("sv")).alias("cluster"),
-                    "sv")
-        )
-        cb = assigned.groupBy("j", "cluster").agg(
-            F.count("*").alias("n"),
-            *[F.sum(F.col("sv")[i]).alias(f"s{i}") for i in range(sd)],
-        ).select(
-            "j", "cluster",
-            F.array(*[F.col(f"s{i}") / F.col("n") for i in range(sd)]
-                    ).alias("cv"),
-        )
-    return cb
-
-
-def _pq_encode(sub: DataFrame, cb: DataFrame) -> DataFrame:
-    """(vec_id, j, sv) × codebooks → (vec_id, j, code): nearest-code
-    election as a nested-codebook projection — no election shuffle."""
-    return (
-        sub.join(F.broadcast(_nest_codebooks(cb)), "j")
-        .select("vec_id", "j", _nearest_code(F.col("sv")).alias("code"))
-    )
-
-
-def _nest_centroids(cents: DataFrame) -> DataFrame:
-    """(cluster, cv) rows → ONE row carrying every centroid as an array
-    of structs. Broadcast-crossJoined onto the corpus, this turns
-    nearest-centroid assignment into a PURE PROJECTION (`array_min` over
-    a per-row transform) — zero Exchange, where the join+groupBy form
-    shuffles a corpus-sized row set (with its vector payload) per
-    assignment. The argmin is order-independent, so the unsorted
-    collect_list is still deterministic; the min compares (d2, cluster)
-    — the identical lower-cluster tie-break as the min(struct) it
-    replaces, hence bit-equal results (r9 scale refactor; every oracle
-    unchanged). Scope: right for SMALL centroid sets (coarse quantizers,
-    k ≲ thousands — the array must broadcast and evaluate per row); a
-    million-centroid fine quantizer would return to the join+groupBy
-    form, sharded."""
-    return cents.agg(
-        F.collect_list(F.struct("cluster", "cv")).alias("_cents"))
-
-
-def _nearest_cluster(vcol: Column) -> Column:
-    """argmin_{c ∈ _cents} ||vcol − c.cv||² with ties to the lower
-    cluster id, as a single JVM expression over the nested array."""
-    return F.array_min(F.transform(
-        F.col("_cents"),
-        lambda c: F.struct(
-            F.aggregate(
-                F.zip_with(vcol, c["cv"], lambda x, y: (x - y) * (x - y)),
-                F.lit(0.0).cast("double"), lambda acc, x: acc + x,
-            ).alias("d2"),
-            c["cluster"].alias("cluster"),
-        ),
-    ))["cluster"]
-
-
-def _coarse_assign(vecs: DataFrame, coarse: DataFrame,
-                   out_col: str = "cell") -> DataFrame:
-    """(vec_id, v) × coarse centroids → (vec_id, cell): nested-centroid
-    argmin routing — a projection, no corpus exchange."""
-    return (
-        vecs.crossJoin(F.broadcast(_nest_centroids(coarse)))
-        .select("vec_id", _nearest_cluster(F.col("v")).alias(out_col))
-    )
+def _raw_ivf_pq(emb: DataFrame, cells: DataFrame, probes: DataFrame,
+                n_queries: int, m: int, ks: int, sd: int, pq_iters: int,
+                k: int) -> DataFrame:
+    """Raw-vector IVF-PQ scoring: PQ codebooks trained on the raw
+    subvectors (a bounded leaf), corpus codes joined to their coarse
+    `cells` (vec_id, cell), and only the `probes` (query_id, cell)
+    cells' codes ranked by ADC against the raw per-query LUT."""
+    sub = _pq_sub(emb, m, sd)
+    cb = _local_artifact(_pq_codebooks(sub, ks, sd, pq_iters))
+    codes = _pq_encode(sub.filter(F.col("vec_id") >= n_queries), cb)
+    cand = codes.join(cells, "vec_id").join(F.broadcast(probes), "cell")
+    return _adc_rank(cand, _raw_lut(sub, cb, n_queries), k)
 
 
 def _residuals(vecs: DataFrame, coarse: DataFrame) -> DataFrame:
@@ -1050,116 +925,99 @@ def _residuals(vecs: DataFrame, coarse: DataFrame) -> DataFrame:
     coarse quantizer did NOT explain). Cell routing is the zero-Exchange
     nested-centroid argmin; the subtraction is a broadcast-joined
     `zip_with` projection — no corpus shuffle anywhere."""
+    return _minus_centroid(_assign(vecs, coarse, "cell", "v"), coarse,
+                           "v", "rv", "vec_id", "cell")
+
+
+def _minus_centroid(df: DataFrame, coarse: DataFrame, v: str, out: str,
+                    *keys: str) -> DataFrame:
+    """(*keys incl. cell, v) → (*keys, out = v − centroid(cell)), the
+    centroid joined from a broadcast of the coarse table."""
     ccv = coarse.select(F.col("cluster").alias("cell"),
                         F.col("cv").alias("_ccv"))
-    return (
-        vecs.crossJoin(F.broadcast(_nest_centroids(coarse)))
-        .select("vec_id", _nearest_cluster(F.col("v")).alias("cell"), "v")
-        .join(F.broadcast(ccv), "cell")
-        .select("vec_id", "cell",
-                F.zip_with("v", F.col("_ccv"),
-                           lambda x, y: x - y).alias("rv"))
-    )
+    return df.join(F.broadcast(ccv), "cell").select(
+        *keys, F.zip_with(v, F.col("_ccv"), lambda x, y: x - y).alias(out))
 
 
-def _residual_codebooks(res: DataFrame, corpus: DataFrame, m: int,
-                        ks: int, sd: int, pq_iters: int
-                        ) -> tuple[DataFrame, DataFrame]:
-    """Train per-subspace PQ codebooks on RESIDUAL subvectors and return
-    (codebooks, residual subvector table). Seed = residuals of the `ks`
-    LOWEST corpus vec_ids (a k-bounded TakeOrdered — queries own ids
-    < n_queries, so the raw-variant's vec_id < ks seed can't apply);
-    cluster labels are the seed vec_ids themselves (labels need not be
-    contiguous — elections tie-break to the lower label identically in
-    both engines)."""
-    subr = _pq_sub(res.select("vec_id", F.col("rv").alias("v")), m, sd)
+def _residual_sub(res: DataFrame, m: int, sd: int) -> DataFrame:
+    return _pq_sub(res.select("vec_id", F.col("rv").alias("v")), m, sd)
+
+
+def _residual_train(corpus: DataFrame, coarse: DataFrame, m: int, ks: int,
+                    sd: int, pq_iters: int) -> tuple[DataFrame, DataFrame]:
+    """IVFADC residual training over the corpus: returns (res, cb) —
+    `res` the corpus residuals (vec_id, cell, rv), persisted because
+    training and encoding both read them (EXTEND form: the caller's
+    persist of the embeddings stays alive), and `cb` the per-subspace
+    codebooks trained on the residual subvectors, as a bounded leaf.
+    Seed = residuals of the `ks` LOWEST corpus vec_ids (a k-bounded
+    TakeOrdered — queries own ids < n_queries, so the raw-variant's
+    vec_id < ks seed can't apply); cluster labels are the seed vec_ids
+    themselves (labels need not be contiguous — elections tie-break to
+    the lower label identically in both engines)."""
+    res = tracked_persist_extend(_residuals(corpus, coarse))
+    subr = _residual_sub(res, m, sd)
     init_ids = corpus.select("vec_id").orderBy("vec_id").limit(ks)
     init_cb = (
         subr.join(F.broadcast(init_ids), "vec_id")
         .select("j", F.col("vec_id").cast("int").alias("cluster"),
                 F.col("sv").alias("cv"))
     )
-    return _pq_codebooks(subr, ks, sd, pq_iters, init=init_cb), subr
+    return res, _local_artifact(
+        _pq_codebooks(subr, ks, sd, pq_iters, init=init_cb))
 
 
-def _residual_lut(queries: DataFrame, probes: DataFrame,
-                  coarse: DataFrame, cb: DataFrame, m: int,
-                  sd: int) -> DataFrame:
-    """Per-(query, PROBED CELL) ADC lookup table — the defining IVFADC
-    twist: the query residual q − centroid(cell) differs per probed
-    cell, so each (query, cell) pair gets its own m × ks distance table
-    (Jégou et al. 2011 §IV-A eq. 17). Size n_queries × nprobe × m × ks —
-    broadcast; built from broadcasts, zero Exchange."""
-    ccv = coarse.select(F.col("cluster").alias("cell"),
-                        F.col("cv").alias("_ccv"))
-    qres = (
-        queries.join(F.broadcast(probes), "query_id")
-        .join(F.broadcast(ccv), "cell")
-        .select("query_id", "cell",
-                F.zip_with("qv", F.col("_ccv"),
-                           lambda x, y: x - y).alias("rqv"))
-    )
-    qsub = qres.select(
-        "query_id", "cell",
-        F.explode(F.array(*[
-            F.struct(F.lit(j).alias("j"),
-                     F.slice("rqv", j * sd + 1, sd).alias("sv"))
-            for j in range(m)
-        ])).alias("s"),
-    ).select("query_id", "cell", F.col("s.j").alias("j"),
-             F.col("s.sv").alias("sv"))
-    return qsub.join(F.broadcast(cb), "j").select(
-        "query_id", "cell", "j", "cluster", _pq_d2().alias("d2"))
+def _residual_encode(res: DataFrame, cb: DataFrame, m: int,
+                     sd: int) -> DataFrame:
+    """Residuals (vec_id, cell, rv) → codes (vec_id, cell, j, code), the
+    one encoder of the in-plan scorers, the index build and the index
+    add-batch — so encode-at-build equals encode-at-add by construction."""
+    return (_pq_encode(_residual_sub(res, m, sd), cb)
+            .join(res.select("vec_id", "cell"), "vec_id")
+            .select("vec_id", "cell", "j", "code"))
 
 
-def _probes(queries: DataFrame, coarse: DataFrame,
-            nprobe: int) -> DataFrame:
-    """Top-`nprobe` nearest coarse cells per query (broadcast-centroid
-    window — the shared probe-routing spec of every IVF variant)."""
-    d2q = F.aggregate(
-        F.zip_with(F.col("qv"), F.col("cv"), lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0).cast("double"), lambda acc, x: acc + x)
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("d2").asc(), F.col("cluster"))
-    return (
-        queries.join(F.broadcast(coarse))
-        .select("query_id", d2q.alias("d2"), "cluster")
-        .withColumn("pr", F.row_number().over(wq))
-        .filter(F.col("pr") <= nprobe)
-        .select("query_id", F.col("cluster").alias("cell"))
-    )
+def _residual_search(queries: DataFrame, probes: DataFrame,
+                     coarse: DataFrame, cb: DataFrame, codes: DataFrame,
+                     m: int, sd: int, k: int) -> DataFrame:
+    """IVFADC query over (coarse, codebooks, codes): the per-(query,
+    PROBED CELL) ADC lookup table — the query residual q − centroid(cell)
+    differs per probed cell, so each (query, cell) pair gets its own
+    m × ks distance table (Jégou et al. 2011 §IV-A eq. 17; n_queries ×
+    nprobe × m × ks rows, broadcast, built from broadcasts) — then ADC
+    over the probed cells' codes. `probes` is (query_id, cell). The
+    in-plan scorers and `ivf_pq_query_index` all rank through here."""
+    qres = _minus_centroid(queries.join(F.broadcast(probes), "query_id"),
+                           coarse, "qv", "rqv", "query_id", "cell")
+    lut = _pq_lut(_pq_sub(qres, m, sd, "query_id", "cell", v="rqv"), cb,
+                  "query_id", "cell")
+    return _adc_rank(codes.join(F.broadcast(probes), "cell"), lut, k)
 
 
-def _adc_rank(cand: DataFrame, lut: DataFrame, on_cell: bool,
-              k: int) -> DataFrame:
-    """Join candidate codes against the broadcast LUT, sum per-subspace
-    distances, rank per query. ``on_cell``: residual LUTs key on the
-    probed cell too (per-cell query residual); raw LUTs don't. Both
-    sides carry a query_id descending from the same probe lineage, so
-    the join aliases explicitly (a bare column reference resolves
-    trivially-true)."""
-    ca, lu = cand.alias("_ca"), lut.alias("_lu")
-    cond = ((F.col("_ca.query_id") == F.col("_lu.query_id"))
-            & (F.col("_ca.j") == F.col("_lu.j"))
-            & (F.col("_ca.code") == F.col("_lu.cluster")))
-    if on_cell:
-        cond = cond & (F.col("_ca.cell") == F.col("_lu.cell"))
-    scored = (
-        ca.join(F.broadcast(lu), cond)
-        .select(F.col("_ca.query_id").alias("query_id"),
-                F.col("_ca.vec_id").alias("vec_id"),
-                F.col("_lu.d2").alias("d2"))
-        .groupBy("query_id", "vec_id")
-        .agg(F.sum("d2").alias("approx_d2"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("approx_d2").asc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                "rank", F.round("approx_d2", 6).alias("approx_d2"))
-    )
+def _exact_topk(corpus: DataFrame, queries: DataFrame, k: int) -> DataFrame:
+    """Exact-d2 top-k (query_id, neighbor_id) per query — the recall
+    baseline, as a bounded leaf (k × n_queries rows)."""
+    scored = corpus.join(F.broadcast(queries)).select(
+        "query_id", F.col("vec_id").alias("neighbor_id"),
+        _d2(F.col("qv"), F.col("v")).alias("exact_d2"))
+    return _local_artifact(
+        _top(scored, k, "query_id", F.col("exact_d2").asc(),
+             F.col("neighbor_id")).select("query_id", "neighbor_id"))
+
+
+def _with_recall(out: DataFrame, exact: DataFrame, k: int, cols: list,
+                 **runs: DataFrame) -> DataFrame:
+    """`out` projected to `cols` plus, for each named top-k run, that
+    run's per-query recall@k against `exact` (0.0 for a query with no
+    hit)."""
+    for name, topk in runs.items():
+        hits = (topk.join(F.broadcast(exact), ["query_id", "neighbor_id"],
+                          "left_semi")
+                .groupBy("query_id")
+                .agg(F.round(F.count("*") / F.lit(float(k)), 6).alias(name)))
+        out = out.join(F.broadcast(hits), "query_id", "left")
+    return out.select(*cols,
+                      *[F.coalesce(n, F.lit(0.0)).alias(n) for n in runs])
 
 
 def ivf_pq_residual_topk(embeddings: DataFrame, k: int = 3,
@@ -1197,89 +1055,33 @@ def ivf_pq_residual_topk(embeddings: DataFrame, k: int = 3,
     drop them for the pure index path (`ivf_pq_build_index`, which
     persists the residual form without the comparison)."""
     sd = dim // m
-    # emb persisted for the whole operator (r14, guide §5): each
-    # artifact collect below is its own job, and without the cache every
-    # one re-scanned the source parquet — the r13 driver sidecar
-    # measured this key's input bytes ×9.5 after the literals landed.
+    # emb persisted for the whole operator (guide §5): each artifact
+    # collect below is its own job, and without the cache every one
+    # re-scans the source parquet (input bytes ×9.5, r13 sidecar).
     emb = tracked_persist(
         embeddings.select("vec_id", _as_double("embedding").alias("v")))
     # BOUNDED trained artifacts (n_cells centroids, n_queries*nprobe
     # probes, m*ks codebooks, k*n_queries exact baseline) land as
     # parallelized leaves (`_local_artifact` — bit-identical values,
-    # one producing job each): the r13 profile found this key's wall
-    # dominated by DRIVER time (10-49 s gap) from every consumer
-    # re-walking and re-codegening the unrolled training subtrees; as
-    # leaves, the downstream plans (residual projection, encode, LUT,
-    # ADC rank, recall joins) are all O(small). The earlier
-    # persist-at-1-partition form kept the full logical trees alive in
-    # every consumer's plan. (A localCheckpoint variant was measured
-    # and rejected earlier: `.rdd` forces serial physical planning per
-    # artifact — +6 s build for −3 s execution on this key.)
-    coarse = _local_artifact(
-        _kmeans_centroids(emb, n_cells, coarse_iters, dim)
-        .select("cluster", "cv"))
-    corpus = emb.filter(F.col("vec_id") >= n_queries)
-    queries = emb.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv"))
+    # one producing job each), so the downstream plans (residual
+    # projection, encode, LUT, ADC rank, recall joins) are all O(small)
+    # instead of re-walking the unrolled training subtrees. (A
+    # localCheckpoint variant was measured and rejected: `.rdd` forces
+    # serial physical planning per artifact — +6 s build for −3 s
+    # execution on this key.)
+    coarse = _coarse(emb, n_cells, coarse_iters, dim)
+    queries, corpus = _split(emb, n_queries)
     probes = _local_artifact(_probes(queries, coarse, nprobe))
-
-    # `res` is the one CORPUS-SIZED reused intermediate — persisted,
-    # never collected (guide §5: the driver does no data work); EXTEND
-    # form so it doesn't evict the operator's own emb persist above
-    res = tracked_persist_extend(_residuals(corpus, coarse))
-    cb_r_t, subr = _residual_codebooks(res, corpus, m, ks, sd, pq_iters)
-    cb_r = _local_artifact(cb_r_t)
-    codes_r = _pq_encode(subr, cb_r).join(
-        res.select("vec_id", "cell"), "vec_id")
-    lut_r = _residual_lut(queries, probes, coarse, cb_r, m, sd)
-    topk_r = _adc_rank(codes_r.join(F.broadcast(probes), "cell"),
-                       lut_r, True, k)
-
+    res, cb_r = _residual_train(corpus, coarse, m, ks, sd, pq_iters)
+    topk_r = _residual_search(queries, probes, coarse, cb_r,
+                              _residual_encode(res, cb_r, m, sd), m, sd, k)
     # raw side (identical spec to ivf_pq_topk, sharing coarse/probes)
-    sub = _pq_sub(emb, m, sd)
-    cb = _local_artifact(_pq_codebooks(sub, ks, sd, pq_iters))
-    codes = _pq_encode(sub.filter(F.col("vec_id") >= n_queries), cb).join(
-        res.select("vec_id", "cell"), "vec_id")
-    lut = (sub.filter(F.col("vec_id") < n_queries)
-           .withColumnRenamed("vec_id", "query_id")
-           .join(F.broadcast(cb), "j")
-           .select("query_id", "j", "cluster", _pq_d2().alias("d2")))
-    topk_raw = _adc_rank(codes.join(F.broadcast(probes), "cell"),
-                         lut, False, k)
-
-    # exact-d2 baseline → measured recall@k per query for both variants
-    d2x = F.aggregate(
-        F.zip_with(F.col("qv"), F.col("v"), lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0).cast("double"), lambda acc, x: acc + x)
-    wx = Window.partitionBy("query_id").orderBy(
-        F.col("exact_d2").asc(), F.col("neighbor_id"))
-    exact = _local_artifact(
-        corpus.join(F.broadcast(queries))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                d2x.alias("exact_d2"))
-        .withColumn("rank", F.row_number().over(wx))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id"))
-
-    def recall_of(topk: DataFrame, name: str) -> DataFrame:
-        return (
-            topk.join(F.broadcast(exact), ["query_id", "neighbor_id"],
-                      "left_semi")
-            .groupBy("query_id")
-            .agg(F.round(F.count("*") / F.lit(float(k)), 6).alias(name))
-        )
-
-    return (
-        topk_r
-        .join(F.broadcast(recall_of(topk_r, "recall_residual")),
-              "query_id", "left")
-        .join(F.broadcast(recall_of(topk_raw, "recall_raw")),
-              "query_id", "left")
-        .select("query_id", "neighbor_id", "rank", "approx_d2",
-                F.coalesce("recall_residual", F.lit(0.0))
-                .alias("recall_residual"),
-                F.coalesce("recall_raw", F.lit(0.0)).alias("recall_raw"))
-    )
+    topk_raw = _raw_ivf_pq(emb, res.select("vec_id", "cell"), probes,
+                           n_queries, m, ks, sd, pq_iters, k)
+    return _with_recall(
+        topk_r, _exact_topk(corpus, queries, k), k,
+        ["query_id", "neighbor_id", "rank", "approx_d2"],
+        recall_residual=topk_r, recall_raw=topk_raw)
 
 
 def ivf_pq_topk(embeddings: DataFrame, k: int = 3, n_queries: int = 10,
@@ -1302,63 +1104,12 @@ def ivf_pq_topk(embeddings: DataFrame, k: int = 3, n_queries: int = 10,
     (nprobe/n_cells of the data in expectation). Probe routing and code
     election are broadcast-centroid argmins; the candidate join keys on
     the CELL id; the ADC LUT broadcasts."""
-    sd = dim // m
     emb = embeddings.select("vec_id", _as_double("embedding").alias("v"))
-    # trained artifacts as LocalRelation literals (bit-identical values;
-    # see `_local_artifact` — kills the per-consumer re-walk of the
-    # training subtrees that the r13 profile measured as driver time)
-    coarse = _local_artifact(
-        _kmeans_centroids(emb, n_cells, coarse_iters, dim).select(
-            "cluster", "cv"))
-    corpus = emb.filter(F.col("vec_id") >= n_queries)
-    cells = _coarse_assign(corpus, coarse)
-    queries = emb.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv"))
-    d2q = F.aggregate(
-        F.zip_with(F.col("qv"), F.col("cv"), lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0).cast("double"), lambda acc, x: acc + x)
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("d2").asc(), F.col("cluster"))
-    probes = (
-        queries.join(F.broadcast(coarse))
-        .select("query_id", d2q.alias("d2"), "cluster")
-        .withColumn("pr", F.row_number().over(wq))
-        .filter(F.col("pr") <= nprobe)
-        .select("query_id", F.col("cluster").alias("cell"))
-    )
-    # PQ codebooks + corpus codes + per-query LUT (same spec as pq_topk;
-    # shared helpers — the persisted-index lifecycle reuses them, which
-    # is what makes `ivf_pq_query_index` bit-equal by construction)
-    sub = _pq_sub(emb, m, sd)
-    cb = _local_artifact(_pq_codebooks(sub, ks, sd, pq_iters))
-    codes = _pq_encode(sub.filter(F.col("vec_id") >= n_queries), cb)
-    d2 = _pq_d2()
-    lut = (
-        sub.filter(F.col("vec_id") < n_queries)
-        .withColumnRenamed("vec_id", "query_id")
-        .join(F.broadcast(cb), "j")
-        .select("query_id", "j", "cluster", d2.alias("d2"))
-    )
-    # candidates: probed cells only — the IVF bound on the ADC scan
-    cand = codes.join(cells, "vec_id").join(
-        F.broadcast(probes), "cell")
-    scored = (
-        cand.join(F.broadcast(lut),
-                  (cand["query_id"] == lut["query_id"])
-                  & (cand["j"] == lut["j"])
-                  & (cand["code"] == lut["cluster"]))
-        .select(cand["query_id"].alias("query_id"), "vec_id", "d2")
-        .groupBy("query_id", "vec_id")
-        .agg(F.sum("d2").alias("approx_d2"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("approx_d2").asc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                "rank", F.round("approx_d2", 6).alias("approx_d2"))
-    )
+    coarse = _coarse(emb, n_cells, coarse_iters, dim)
+    queries, corpus = _split(emb, n_queries)
+    return _raw_ivf_pq(emb, _assign(corpus, coarse, "cell"),
+                       _probes(queries, coarse, nprobe), n_queries, m, ks,
+                       dim // m, pq_iters, k)
 
 
 def _index_scratch() -> str:
@@ -1402,40 +1153,28 @@ def ivf_pq_build_index(embeddings: DataFrame, index_root: str,
     sd = dim // m
     # emb persisted across the build's jobs (coarse training, codebook
     # training, encode) — without it each one re-scans the source
-    # parquet (r14, guide §5)
+    # parquet (guide §5)
     emb = tracked_persist(
         embeddings.select("vec_id", _as_double("embedding").alias("v")))
-    # train → collect the BOUNDED artifact into a 1-partition leaf →
-    # write it as the index table: one training job, a 1-task/1-file
-    # write, and no read-back job at all (the leaf IS what the parquet
-    # roundtrip would return — doubles survive parquet bit-exactly, so
-    # encode-at-build and encode-at-add still read identical values)
-    coarse_t = _local_artifact(
-        _kmeans_centroids(emb, n_cells, coarse_iters, dim).select(
-            "cluster", "cv"))
+    # each bounded artifact is written straight from its leaf: no
+    # read-back job (the leaf IS what the parquet roundtrip would
+    # return — doubles survive parquet bit-exactly, so encode-at-build
+    # and encode-at-add read identical values). The leaf keeps its
+    # default partitioning, so the table lands as that many small files;
+    # coalescing the write lineage was measured slower
+    # (OPTIMIZATION_r14.md) and the files cost nothing on the read side.
+    coarse_t = _coarse(emb, n_cells, coarse_iters, dim)
     cdir = idx.new_data_dir(index_root, "coarse", "v00001")
-    # coalesce ONLY the write lineage: the k-row table lands as one file
-    # (the parallelized leaf would otherwise write core-count near-empty
-    # parts — ADVICE r13); coarse_t itself stays multi-partition for the
-    # downstream encode parallelism (measured: coalescing the leaf
-    # serialized the corpus compute, see OPTIMIZATION_r14.md)
     coarse_t.write.mode("overwrite").parquet(cdir)
 
-    # residual-train the PQ codebooks on the PERSISTED coarse centroids
-    # (bit-stability: encode-at-build and encode-at-add read identical
-    # artifacts); EXTEND form keeps the emb persist above alive
-    corpus = emb.filter(F.col("vec_id") >= n_queries)
-    res = tracked_persist_extend(_residuals(corpus, coarse_t))
-    cb, subr = _residual_codebooks(res, corpus, m, ks, sd, pq_iters)
-    cb_t = _local_artifact(cb)
+    res, cb_t = _residual_train(_split(emb, n_queries)[1], coarse_t, m, ks,
+                                sd, pq_iters)
     bdir = idx.new_data_dir(index_root, "codebooks", "v00001")
     cb_t.write.mode("overwrite").parquet(bdir)
 
-    codes = _pq_encode(subr, cb_t).join(
-        res.select("vec_id", "cell"), "vec_id")
-    codes_out = codes.select("vec_id", "cell", "j", "code")
+    codes = _residual_encode(res, cb_t, m, sd)
     kdir = idx.new_data_dir(index_root, "codes", "b00001")
-    codes_out.write.mode("overwrite").parquet(kdir)
+    codes.write.mode("overwrite").parquet(kdir)
     return idx.commit_manifest(
         index_root,
         {"m": m, "dim": dim, "ks": ks, "n_cells": n_cells,
@@ -1444,7 +1183,7 @@ def ivf_pq_build_index(embeddings: DataFrame, index_root: str,
         {"coarse": [cdir], "codebooks": [bdir], "codes": [kdir]},
         schemas={"coarse": coarse_t.schema.json(),
                  "codebooks": cb_t.schema.json(),
-                 "codes": codes_out.schema.json()})
+                 "codes": codes.schema.json()})
 
 
 def ivf_pq_add_batch(spark, index_root: str,
@@ -1460,19 +1199,14 @@ def ivf_pq_add_batch(spark, index_root: str,
     from ..sources import index_manifest as idx
 
     p = idx.read_manifest(index_root)["params"]
-    m, dim = p["m"], p["dim"]
-    sd = dim // m
     coarse_t = idx.read_index_table(spark, index_root, "coarse")
     cb_t = idx.read_index_table(spark, index_root, "codebooks")
     emb = new_vectors.select("vec_id", _as_double("embedding").alias("v"))
     res = tracked_persist(_residuals(emb, coarse_t))
-    codes = _pq_encode(
-        _pq_sub(res.select("vec_id", F.col("rv").alias("v")), m, sd),
-        cb_t).join(res.select("vec_id", "cell"), "vec_id")
+    codes = _residual_encode(res, cb_t, p["m"], p["dim"] // p["m"])
     kdir = idx.new_data_dir(index_root, "codes",
                             f"b{idx.latest_version(index_root) + 1:05d}")
-    (codes.select("vec_id", "cell", "j", "code")
-     .write.mode("overwrite").parquet(kdir))
+    codes.write.mode("overwrite").parquet(kdir)
     return idx.append_table_dirs(index_root, {"codes": [kdir]})
 
 
@@ -1514,30 +1248,28 @@ def ivf_pq_query_index(spark, index_root: str, queries: DataFrame,
     (n_queries × nprobe × m × ks) broadcasts; candidates key on the
     CELL id; the per-query ranking touches only probed cells' codes.
     Bit-equal to the in-plan residual scoring on the same data by
-    construction (same election tie-breaks, same d2 accumulation order).
+    construction: both rank through `_residual_search`, over codes
+    from `_residual_encode`.
 
     `queries`: (query_id, qv array<double>)."""
     from ..sources import index_manifest as idx
 
     man = idx.read_manifest(index_root, version)
     p = man["params"]
-    m, dim = p["m"], p["dim"]
-    sd = dim // m
     coarse_t = idx.read_index_table(spark, index_root, "coarse", version)
     cb_t = idx.read_index_table(spark, index_root, "codebooks", version)
-    # sequenced-tombstone scan (r13): deleted vec_ids are anti-joined
-    # out of the codes table per sequence group — one broadcast of the
+    # sequenced-tombstone scan: deleted vec_ids are anti-joined out of
+    # the codes table per sequence group — one broadcast of the
     # O(|deleted|) key set; a deleted-then-re-added vector is served
     # from its re-add dir. Tombstone-free manifests scan plain.
     codes_t = idx.scan_sequenced(spark, man, "codes", "vec_id")
 
     # n_queries × nprobe rows, consumed by both the LUT and the
-    # candidate join — a LocalRelation literal (`_local_artifact`), so
-    # the query set is scanned once and both consumers plan on a leaf
+    # candidate join — a leaf (`_local_artifact`), so the query set is
+    # scanned once and both consumers plan on it
     probes = _local_artifact(_probes(queries, coarse_t, nprobe))
-    lut = _residual_lut(queries, probes, coarse_t, cb_t, m, sd)
-    return _adc_rank(codes_t.join(F.broadcast(probes), "cell"),
-                     lut, True, k)
+    return _residual_search(queries, probes, coarse_t, cb_t, codes_t,
+                            p["m"], p["dim"] // p["m"], k)
 
 
 def knn_join(embeddings: DataFrame, k: int = 3, n_clusters: int = 8,
@@ -1563,35 +1295,28 @@ def knn_join(embeddings: DataFrame, k: int = 3, n_clusters: int = 8,
     retained pre-shuffle, asserted in tests/test_plans.py).
     """
     emb = embeddings.select("vec_id", _as_double("embedding").alias("v"))
-    # literal centroids: the persisted `assigned` is self-joined below,
-    # and each alias re-walked the inlined training tree at plan time
-    cents = _local_artifact(
-        _kmeans_centroids(emb, n_clusters, iters, dim).select(
-            "cluster", "cv"))
+    # leaf centroids: the persisted `assigned` is self-joined below,
+    # and each alias would re-walk an inlined training tree at plan time
+    cents = _coarse(emb, n_clusters, iters, dim)
     # nv: per-vector norm computed once, not per pair (see semdedup —
     # bit-identical values, Σ|cell|² fewer HOF folds)
-    assigned = tracked_persist(
-        emb.crossJoin(F.broadcast(_nest_centroids(cents)))
-        .select("vec_id", _nearest_cluster(F.col("v")).alias("cluster"),
-                "v", _norm(F.col("v")).alias("nv"))
-    )
+    assigned = tracked_persist(_assign(
+        emb, cents, "cluster", "v", _norm(F.col("v")).alias("nv")))
     a, b = assigned.alias("a"), assigned.alias("b")
     cos = (_dot(F.col("a.v"), F.col("b.v"))
            / (F.col("a.nv") * F.col("b.nv")))
-    w = Window.partitionBy("vec_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id"))
-    return (
+    pairs = (
         a.join(b, (F.col("a.cluster") == F.col("b.cluster"))
                & (F.col("a.vec_id") != F.col("b.vec_id")))
         .select(F.col("a.vec_id").alias("vec_id"),
                 F.col("b.vec_id").alias("neighbor_id"),
                 cos.alias("cos"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("vec_id", "neighbor_id",
-                F.col("rank").cast("int").alias("rank"),
-                F.round("cos", 6).alias("cos_sim"))
     )
+    return _top(pairs, k, "vec_id", F.col("cos").desc(),
+                F.col("neighbor_id")).select(
+        "vec_id", "neighbor_id",
+        F.col("rank").cast("int").alias("rank"),
+        F.round("cos", 6).alias("cos_sim"))
 
 
 def pca_power_iteration(embeddings: DataFrame, iters: int = 2,
@@ -1616,9 +1341,9 @@ def pca_power_iteration(embeddings: DataFrame, iters: int = 2,
     kmeans pattern); the per-dimension sums go LONG-form — explode to
     (i, d·x_i) and groupBy(i) with map-side combine, so the shuffle
     carries dim rows per partition and, critically, every expression
-    stays SMALL (the first cut built the 64-term norm inside each of
-    the 64 array slots of the next w — a 4096-subexpression projection
-    that failed whole-stage-codegen and fell back to interpreted eval).
+    stays SMALL (building the 64-term norm inside each of the 64 array
+    slots of the next w is a 4096-subexpression projection that fails
+    whole-stage-codegen and falls back to interpreted eval).
     The Gram matrix is never materialized; memory is O(dim).
     """
     emb = tracked_persist(
@@ -1637,9 +1362,9 @@ def pca_power_iteration(embeddings: DataFrame, iters: int = 2,
             ).alias("i", "c"))
         # `sums` (dim rows, bounded) feeds TWO consumers — the norm
         # aggregate and the normalized w — so unpersisted, each
-        # iteration ran the corpus explode+groupBy TWICE (the norm's
-        # broadcast build re-derived it; r14 cold probe: 15 emb scans
-        # for 2 iterations). One partition: it is a dim-row table.
+        # iteration would run the corpus explode+groupBy TWICE (the
+        # norm's broadcast build re-derives it: 15 emb scans for 2
+        # iterations). One partition: it is a dim-row table.
         sums = tracked_persist_extend(
             contrib.groupBy("i").agg(
                 F.sum(F.col("c").cast("decimal(38,12)"))
@@ -1690,36 +1415,19 @@ def ivf_pq_rerank_topk(embeddings: DataFrame, k: int = 3,
     evaluation-harness cost, bounded by n_queries, dropped in the pure
     serving path."""
     sd = dim // m
-    # emb persisted for the operator's artifact jobs (r14, guide §5 —
-    # same rationale as ivf_pq_residual_topk)
+    # emb persisted for the operator's artifact jobs (guide §5 — same
+    # rationale as ivf_pq_residual_topk), whose artifacts are leaves
+    # for the same reason too
     emb = tracked_persist(
         embeddings.select("vec_id", _as_double("embedding").alias("v")))
-    # bounded trained artifacts as parallelized leaves — same
-    # rationale as ivf_pq_residual_topk (`_local_artifact`:
-    # bit-identical values, leaf-sized consumer plans)
-    coarse = _local_artifact(
-        _kmeans_centroids(emb, n_cells, coarse_iters, dim)
-        .select("cluster", "cv"))
-    corpus = emb.filter(F.col("vec_id") >= n_queries)
-    queries = emb.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv"))
+    coarse = _coarse(emb, n_cells, coarse_iters, dim)
+    queries, corpus = _split(emb, n_queries)
     probes = _local_artifact(_probes(queries, coarse, nprobe))
+    res, cb_r = _residual_train(corpus, coarse, m, ks, sd, pq_iters)
+    short = _local_artifact(_residual_search(
+        queries, probes, coarse, cb_r, _residual_encode(res, cb_r, m, sd),
+        m, sd, shortlist))
 
-    # `res` is the one corpus-sized reused intermediate — persisted
-    # (EXTEND form keeps the emb persist above alive)
-    res = tracked_persist_extend(_residuals(corpus, coarse))
-    cb_r, subr = _residual_codebooks(res, corpus, m, ks, sd, pq_iters)
-    cb_r = _local_artifact(cb_r)
-    codes_r = _pq_encode(subr, cb_r).join(
-        res.select("vec_id", "cell"), "vec_id")
-    lut_r = _residual_lut(queries, probes, coarse, cb_r, m, sd)
-    short = _local_artifact(_adc_rank(
-        codes_r.join(F.broadcast(probes), "cell"), lut_r, True,
-        shortlist))
-
-    d2x = F.aggregate(
-        F.zip_with(F.col("qv"), F.col("v"), lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0).cast("double"), lambda acc, x: acc + x)
     # BROADCAST the (n_queries × shortlist)-row candidate list: the
     # ExistingRDD leaf has no size stats, so without the hint the
     # planner would broadcast (or at scale shuffle) the CORPUS side
@@ -1728,41 +1436,14 @@ def ivf_pq_rerank_topk(embeddings: DataFrame, k: int = 3,
         .join(F.broadcast(short.select("query_id", "neighbor_id")),
               "neighbor_id")
         .join(F.broadcast(queries), "query_id")
-        .select("query_id", "neighbor_id", d2x.alias("exact_d2"))
+        .select("query_id", "neighbor_id",
+                _d2(F.col("qv"), F.col("v")).alias("exact_d2"))
     )
-    wr = Window.partitionBy("query_id").orderBy(
-        F.col("exact_d2").asc(), F.col("neighbor_id"))
-    topk_rr = (rer.withColumn("rank", F.row_number().over(wr))
-               .filter(F.col("rank") <= k))
-
-    wx = Window.partitionBy("query_id").orderBy(
-        F.col("exact_d2").asc(), F.col("neighbor_id"))
-    exact = _local_artifact(
-        corpus.join(F.broadcast(queries))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                d2x.alias("exact_d2"))
-        .withColumn("rank", F.row_number().over(wx))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id"))
-
-    def recall_of(topk: DataFrame, name: str) -> DataFrame:
-        return (
-            topk.join(F.broadcast(exact), ["query_id", "neighbor_id"],
-                      "left_semi")
-            .groupBy("query_id")
-            .agg(F.round(F.count("*") / F.lit(float(k)), 6).alias(name))
-        )
-
-    adc_topk = short.filter(F.col("rank") <= k)
-    return (
-        topk_rr
-        .join(F.broadcast(recall_of(topk_rr, "recall_reranked")),
-              "query_id", "left")
-        .join(F.broadcast(recall_of(adc_topk, "recall_adc")),
-              "query_id", "left")
-        .select("query_id", "neighbor_id", "rank",
-                F.round("exact_d2", 6).alias("exact_d2"),
-                F.coalesce("recall_reranked", F.lit(0.0))
-                .alias("recall_reranked"),
-                F.coalesce("recall_adc", F.lit(0.0)).alias("recall_adc"))
-    )
+    topk_rr = _top(rer, k, "query_id", F.col("exact_d2").asc(),
+                   F.col("neighbor_id"))
+    return _with_recall(
+        topk_rr, _exact_topk(corpus, queries, k), k,
+        ["query_id", "neighbor_id", "rank",
+         F.round("exact_d2", 6).alias("exact_d2")],
+        recall_reranked=topk_rr,
+        recall_adc=short.filter(F.col("rank") <= k))

@@ -1,0 +1,141 @@
+"""Pipeline-level checks of the kmeans / IVF / PQ operators.
+
+Partition-count and AQE invariance: each path runs at several
+`spark.sql.shuffle.partitions` × AQE settings and its output row
+multiset must equal the one at the suite's session setting (4 partitions, AQE on, `tests/conftest.py`). Cross-row double
+sums (Lloyd means, ADC sums) are order-dependent in principle, so a
+result that moves with the reducer count or with AQE's re-planning is a
+correctness defect, not noise.
+
+The default gate runs the cheap paths at {1, 32} × AQE {on, off}; the
+full grid over every path and {1, 4, 32} × {on, off} is marked `slow`.
+
+The ADC join must not build a trivially-true predicate (the JVM warns
+when one is constructed).
+"""
+
+from __future__ import annotations
+
+from collections import Counter
+from contextlib import contextmanager
+
+import pytest
+from pyspark.sql import functions as F
+
+_SP = "spark.sql.shuffle.partitions"
+_AQE = "spark.sql.adaptive.enabled"
+_BASE = (4, True)
+_GATE = [(1, True), (1, False), (32, True), (32, False)]
+_GRID = [(sp, aqe) for sp in (1, 4, 32) for aqe in (True, False)]
+
+
+def _build_query(spark, emb):
+    from hive_nexr_spark.datapipe import similarity
+
+    d = similarity._index_scratch()
+    similarity.ivf_pq_build_index(emb, d)
+    queries = (emb.select("vec_id",
+                          F.col("embedding").cast("array<double>")
+                          .alias("qv"))
+               .filter(F.col("vec_id") < 10)
+               .select(F.col("vec_id").alias("query_id"), "qv"))
+    return similarity.ivf_pq_query_index(spark, d, queries)
+
+
+def _op(name):
+    def run(spark, emb):
+        from hive_nexr_spark.datapipe import similarity
+
+        return getattr(similarity, name)(emb)
+    return run
+
+
+_PATHS = {
+    "pq_topk": _op("pq_topk"),
+    "ivf_pq_topk": _op("ivf_pq_topk"),
+    "ivf_pq_residual_topk": _op("ivf_pq_residual_topk"),
+    "ivf_pq_rerank_topk": _op("ivf_pq_rerank_topk"),
+    "ivf_kmeans_topk": _op("ivf_kmeans_topk"),
+    "kmeans_clusters": _op("kmeans_clusters"),
+    "knn_join": _op("knn_join"),
+    "semdedup": _op("semdedup"),
+    "build_query_index": _build_query,
+}
+_GATE_PATHS = ["pq_topk", "ivf_pq_topk", "build_query_index"]
+
+
+def _rows_at(spark, emb, path, sp, aqe):
+    """Row multiset of `path` with the session conf set to (sp, aqe);
+    the previous conf is restored whatever happens."""
+    from hive_nexr_spark.datapipe._cache import release_tracked
+
+    prev = {k: spark.conf.get(k) for k in (_SP, _AQE)}
+    try:
+        spark.conf.set(_SP, str(sp))
+        spark.conf.set(_AQE, str(aqe).lower())
+        # no cached stage of an earlier setting may stand in for this one
+        release_tracked()
+        return Counter(tuple(r) for r in _PATHS[path](spark, emb).collect())
+    finally:
+        release_tracked()
+        for k, v in prev.items():
+            spark.conf.set(k, v)
+
+
+def _check(spark, emb, path, settings):
+    base = _rows_at(spark, emb, path, *_BASE)
+    assert base, f"{path} returned no rows"
+    for sp, aqe in settings:
+        got = _rows_at(spark, emb, path, sp, aqe)
+        assert got == base, (
+            f"{path} differs at shuffle.partitions={sp}, AQE={aqe}: "
+            f"{sorted((got - base).elements())[:5]} vs "
+            f"{sorted((base - got).elements())[:5]}")
+
+
+@pytest.mark.parametrize("path", _GATE_PATHS)
+def test_similarity_partition_and_aqe_invariant(spark, dfs, path):
+    _check(spark, dfs["embeddings"], path, _GATE)
+    assert spark.conf.get(_SP) == str(_BASE[0])
+
+
+@pytest.mark.slow
+@pytest.mark.parametrize("path", sorted(_PATHS))
+def test_similarity_partition_and_aqe_invariant_full_grid(spark, dfs, path):
+    _check(spark, dfs["embeddings"], path,
+           [s for s in _GRID if s != _BASE])
+
+
+@contextmanager
+def _column_warnings(spark):
+    """Capture what the JVM's `org.apache.spark.sql.Column` logger emits
+    (where `Column.===` warns about a trivially-true predicate)."""
+    jvm = spark._jvm
+    core = jvm.org.apache.logging.log4j.core
+    writer = jvm.java.io.StringWriter()
+    layout = core.layout.PatternLayout.newBuilder().withPattern("%m%n").build()
+    app = (core.appender.WriterAppender.newBuilder().setName("column-probe")
+           .setTarget(writer).setLayout(layout).build())
+    app.start()
+    logger = jvm.org.apache.logging.log4j.LogManager.getContext(
+        False).getLogger("org.apache.spark.sql.Column")
+    assert logger.isWarnEnabled()
+    logger.addAppender(app)
+    try:
+        yield writer.toString
+    finally:
+        logger.removeAppender(app)
+        app.stop()
+
+
+def test_adc_join_builds_no_trivially_true_predicate(spark, dfs):
+    """The ADC join of `pq_topk` and `ivf_pq_topk` keys codes on the LUT's
+    subspace j; both sides descend from one subvector table, so an
+    unaliased `codes["j"] == lut["j"]` is a trivially-true predicate
+    that only Dataset.join's self-reference rewrite makes right."""
+    from hive_nexr_spark.datapipe.similarity import ivf_pq_topk, pq_topk
+
+    with _column_warnings(spark) as log:
+        pq_topk(dfs["embeddings"])
+        ivf_pq_topk(dfs["embeddings"])
+    assert "trivially true" not in log(), log()
