@@ -118,8 +118,8 @@ def decontaminate_fuzzy(documents: DataFrame, benchmark_mod: int = 13,
     side is tiny (an eval suite), so AQE broadcast-converts its band
     table; the train side streams. Distinct-before-verify bounds the
     shingle fetch-back to unique candidate pairs."""
-    from .dedup import (MINHASH_BANDS, MINHASH_H, ROWS_PER_BAND,
-                        _with_shingles, with_synthetic_dups)
+    from .dedup import (_signature_bands, _with_shingles,
+                        with_synthetic_dups)
     from ._cache import tracked_persist
 
     corpus = with_synthetic_dups(documents).filter(
@@ -128,20 +128,7 @@ def decontaminate_fuzzy(documents: DataFrame, benchmark_mod: int = 13,
         (F.col("doc_id") % benchmark_mod == 0)
     toks = tracked_persist(_with_shingles(corpus).select("doc_id", "sh"))
     sh = toks.select("doc_id", F.explode("sh").alias("shingle"))
-    hashed = sh.select("doc_id", F.md5("shingle").alias("d"))
-    sig = hashed.groupBy("doc_id").agg(
-        *[F.min(F.substring("d", h * 5 + 1, 5)).alias(f"mh{h}")
-          for h in range(MINHASH_H)])
-    bands = sig.select(
-        "doc_id",
-        F.explode(F.array(*[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.concat(*[F.col(f"mh{b * ROWS_PER_BAND + r}")
-                           for r in range(ROWS_PER_BAND)]).alias("bucket"),
-            ) for b in range(MINHASH_BANDS)
-        ])).alias("bb"),
-    ).select("doc_id", "bb.band", "bb.bucket")
+    bands = _signature_bands(sh)
     train_b = bands.filter(~is_bench).alias("t")
     bench_b = bands.filter(is_bench).alias("e")
     cand = (

@@ -102,18 +102,12 @@ def _with_shingles(df: DataFrame) -> DataFrame:
     ).drop("_toks")
 
 
-def _band_candidates(sh: DataFrame) -> DataFrame:
-    """(doc_id, shingle) → distinct candidate pairs (doc_a, doc_b) via
-    the portable single-md5-split minhash signatures and band-bucket
-    self-join — the shared LSH front end of every minhash-family op.
-    Shuffles: by doc (signature build), by (band, bucket); the join
-    output is |bucket collisions|, never n²."""
-    hashed = sh.select("doc_id", F.md5("shingle").alias("d"))
-    sig = hashed.groupBy("doc_id").agg(
-        *[F.min(F.substring("d", h * 5 + 1, 5)).alias(f"mh{h}")
-          for h in range(MINHASH_H)])
-    bands = sig.select(
-        "doc_id",
+def _band_keys(sig: DataFrame, *keep: str) -> DataFrame:
+    """Signature columns mh0..mh{H-1} → one (band, bucket) row per band,
+    the bucket being the concatenation of the band's ROWS_PER_BAND
+    minhashes — the one band layout of every MinHash-LSH path."""
+    return sig.select(
+        *keep,
         F.explode(F.array(*[
             F.struct(
                 F.lit(b).alias("band"),
@@ -122,7 +116,28 @@ def _band_candidates(sh: DataFrame) -> DataFrame:
             )
             for b in range(MINHASH_BANDS)
         ])).alias("bb"),
-    ).select("doc_id", "bb.band", "bb.bucket")
+    ).select(*keep, "bb.band", "bb.bucket")
+
+
+def _signature_bands(sh: DataFrame) -> DataFrame:
+    """(doc_id, shingle) → (doc_id, band, bucket) through the portable
+    explode+groupBy signature: minhash h of a doc is
+    min(substr(md5(shingle), 5h+1, 5)) over its shingles. Shuffles by
+    doc."""
+    hashed = sh.select("doc_id", F.md5("shingle").alias("d"))
+    sig = hashed.groupBy("doc_id").agg(
+        *[F.min(F.substring("d", h * 5 + 1, 5)).alias(f"mh{h}")
+          for h in range(MINHASH_H)])
+    return _band_keys(sig, "doc_id")
+
+
+def _band_candidates(sh: DataFrame) -> DataFrame:
+    """(doc_id, shingle) → distinct candidate pairs (doc_a, doc_b) via
+    the portable single-md5-split minhash signatures and band-bucket
+    self-join — the shared LSH front end of every minhash-family op.
+    Shuffles: by doc (signature build), by (band, bucket); the join
+    output is |bucket collisions|, never n²."""
+    bands = _signature_bands(sh)
     a, b = bands.alias("a"), bands.alias("b")
     return (
         a.join(b, (F.col("a.band") == F.col("b.band"))
@@ -848,35 +863,32 @@ def bloom_filter_dedup(documents: DataFrame, m_bits: int = 1 << 18,
     )
 
 
+def _md5_slice(h: int):
+    """The h-th minhash's per-shingle value, as a one-argument
+    `transform` lambda. PySpark binds every lambda parameter, defaulted
+    ones included, so `h` must be closed over, not passed as a default
+    (`lambda d, h=h: …` receives the element index as `h`)."""
+    return lambda d: F.substring(d, h * 5 + 1, 5)
+
+
 def hof_bands(df: DataFrame) -> DataFrame:
     """(doc_id, sh) → (doc_id, sh, band, bucket): per-row minhash band
     projection with NO explode/groupBy — `array_min` over transformed
     shingle arrays — so it runs identically on batch and (unaggregated)
     streaming DataFrames. Values are bit-equal to the explode+groupBy
-    path in `minhash_lsh_pairs`: min over the same md5-slice set. Shared
-    by the streaming near-dup matcher and the persisted LSH index."""
+    path `_signature_bands`: min over the same md5-slice set
+    (`tests/test_datapipe.py` pins it). Shared by the streaming near-dup
+    matcher and the persisted LSH index."""
     dg = df.withColumn("_dg", F.transform(F.col("sh"), F.md5))
     sig = dg.select(
         "doc_id", "sh",
         *[
-            F.array_min(F.transform(
-                F.col("_dg"),
-                lambda d, h=h: F.substring(d, h * 5 + 1, 5),
-            )).alias(f"mh{h}")
+            F.array_min(F.transform(F.col("_dg"), _md5_slice(h)))
+            .alias(f"mh{h}")
             for h in range(MINHASH_H)
         ],
     )
-    return sig.select(
-        "doc_id", "sh",
-        F.explode(F.array(*[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.concat(*[F.col(f"mh{b * ROWS_PER_BAND + r}")
-                           for r in range(ROWS_PER_BAND)]).alias("bucket"),
-            )
-            for b in range(MINHASH_BANDS)
-        ])).alias("bb"),
-    ).select("doc_id", "sh", "bb.band", "bb.bucket")
+    return _band_keys(sig, "doc_id", "sh")
 
 
 def lsh_index_build(documents: DataFrame, index_root: str,

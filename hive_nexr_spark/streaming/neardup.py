@@ -254,14 +254,26 @@ def stream_dedup_ingest(spark: SparkSession, sf_dir: str,
     arrivals = _ingest_arrivals(stream, max_doc_id)
 
     def gate(batch_df: DataFrame, _bid: int) -> None:
-        dec = _gate_decisions(spark, index_root, batch_df, threshold,
-                              frozen_v)
-        admitted = batch_df.join(
-            dec.filter(F.col("admitted") == 1).select("doc_id"),
-            "doc_id", "left_semi")
-        if admitted.head(1):
-            dd.lsh_index_add_batch(spark, index_root, admitted)
-        dec.write.mode("append").parquet(landing)
+        # The batch feeds the decisions and the add-batch, the decisions
+        # feed the admission filter and the landing write: persist each
+        # once, for this batch only, so the source is read once per
+        # batch. Not `tracked_persist`: its release would drop the
+        # caller's cached blocks.
+        batch = batch_df.persist()
+        dec = None
+        try:
+            dec = _gate_decisions(spark, index_root, batch, threshold,
+                                  frozen_v).persist()
+            admitted = batch.join(
+                dec.filter(F.col("admitted") == 1).select("doc_id"),
+                "doc_id", "left_semi")
+            if admitted.head(1):
+                dd.lsh_index_add_batch(spark, index_root, admitted)
+            dec.write.mode("append").parquet(landing)
+        finally:
+            if dec is not None:
+                dec.unpersist()
+            batch.unpersist()
 
     q = arrivals.writeStream.foreachBatch(gate).start()
     try:

@@ -38,6 +38,7 @@ def test_final_line_uses_compact_separators():
     import inspect
 
     src = inspect.getsource(bench.main)
+    assert "json.dumps" in src, "bench.main no longer contains 'json.dumps'"
     final_dump = src[src.rindex("json.dumps"):]
     assert 'separators=(",", ":")' in final_dump
 
@@ -67,6 +68,8 @@ def test_metrics_not_in_final_payload_source():
     import inspect
 
     src = inspect.getsource(bench.main)
+    for anchor in ("json.dumps", "metrics_payload"):
+        assert anchor in src, f"bench.main no longer contains {anchor!r}"
     final_dump = src[src.rindex("json.dumps"):]
     assert '"metrics"' not in final_dump and "metrics_payload" not in final_dump
     # and the metrics line/sidecar must still exist earlier in main()
@@ -112,6 +115,8 @@ def test_timed_action_is_noop_sink():
     import inspect
 
     src = inspect.getsource(bench.main)
+    for anchor in ("for name in HEADLINE", "sf = "):
+        assert anchor in src, f"bench.main no longer contains {anchor!r}"
     loop = src[src.index("for name in HEADLINE"):src.index("sf = ")]
     assert 'format("noop")' in loop
     assert "df.count()" not in loop

@@ -74,8 +74,9 @@ def test_hive_metastore_catalog_roundtrip(tmp_path):
     import subprocess
     import sys
 
-    script = """
-import sys; sys.path.insert(0, "/root/repo")
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = f"""
+import sys; sys.path.insert(0, {repo!r})
 from hive_nexr_spark.session import get_session
 spark = get_session(app_name="hive-meta-test", shuffle_partitions=2)
 assert spark.conf.get("spark.sql.catalogImplementation") == "hive"

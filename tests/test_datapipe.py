@@ -1080,6 +1080,33 @@ def test_lsh_index_lifecycle(dfs, spark):
     assert asof == got
 
 
+def test_hof_bands_equal_signature_bands(dfs):
+    """The stateless per-row band projection (`hof_bands`, used by the
+    persisted LSH index and the streaming matchers) must give the same
+    (doc_id, band, bucket) rows as the explode+groupBy signature path,
+    on documents long enough (8-64 distinct shingles) that a minhash
+    slot bound to the element index would differ; and over the 200-doc
+    index slice every band must spread documents over more than one
+    bucket (a constant bucket makes candidate generation all-pairs)."""
+    from hive_nexr_spark.datapipe import dedup
+
+    toks = dedup._with_shingles(
+        dfs["documents"].filter(F.col("doc_id") < 200)
+    ).select("doc_id", "sh")
+    mid = toks.filter(F.size("sh").between(8, 64))
+    assert mid.count() > 0
+    hof = {tuple(r) for r in
+           dedup.hof_bands(mid).select("doc_id", "band", "bucket")
+           .collect()}
+    sig = {tuple(r) for r in dedup._signature_bands(
+        mid.select("doc_id", F.explode("sh").alias("shingle"))).collect()}
+    assert hof == sig and hof
+    spread = dict(dedup.hof_bands(toks).groupBy("band")
+                  .agg(F.count_distinct("bucket")).collect())
+    assert set(spread) == set(range(dedup.MINHASH_BANDS))
+    assert all(n > 1 for n in spread.values()), spread
+
+
 def test_lsh_index_delete_tombstones_and_asof(dfs, spark):
     """Merge-on-read DELETE on the persisted LSH index: tombstoned
     documents stop matching at the new version, no index data file is

@@ -259,11 +259,15 @@ def test_stream_dedup_ingest_gate(spark, sf_dir):
     micro-batch boundaries cannot matter), reject every planted exact
     copy (jaccard 1.0 with its origin), and admit at least one clean
     arrival — and the admitted docs must actually have entered the
-    index (admission = an add-batch manifest bump, 3 band rows/doc)."""
+    index (admission = an add-batch manifest bump, 3 band rows/doc).
+    The gate leaves nothing in the session's cache."""
     from hive_nexr_spark.streaming import neardup as nd
 
-    streamed = {tuple(r) for r in
-                nd.stream_dedup_ingest(spark, sf_dir).collect()}
+    cached = spark.sparkContext._jsc.getPersistentRDDs
+    n_cached = cached().size()
+    landed = nd.stream_dedup_ingest(spark, sf_dir)
+    assert cached().size() == n_cached
+    streamed = {tuple(r) for r in landed.collect()}
     twin = {tuple(r) for r in
             nd.dedup_ingest_batch_twin(spark, sf_dir).collect()}
     # the determinism CONTRACT covers the frozen-index columns

@@ -30,7 +30,7 @@ import sys
 import time
 import traceback
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from hive_nexr_spark.sources.qtest import QFILE_DIR, run_qfile  # noqa: E402
 from hive_nexr_spark.sources.golden import diff_file  # noqa: E402

@@ -10,7 +10,7 @@ import os
 import sys
 from collections import Counter
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from hive_nexr_spark.sources.golden import (canon_df_row, canon_golden_row,
                                             float_col_indexes,

@@ -30,9 +30,10 @@ Run directly (``python tools/oracle_dtype_lint.py [sf_dir]``) or via
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def pandas_kind(dtype, series) -> str:

@@ -7,11 +7,12 @@ Usage: SPARK_GRAFT_WAREHOUSE=/tmp/hnw_probe python tools/qfile_probe.py f1.q f2.
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 import traceback
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from hive_nexr_spark.sources.qtest import run_qfile  # noqa: E402
 
