@@ -23,11 +23,6 @@ def dsum(col: Column | str, scale: int = 2) -> Column:
     return F.sum(c.cast(f"decimal(30,{scale})")).cast("double")
 
 
-def dsum_sql(expr: str, scale: int = 2) -> str:
-    """The matching DuckDB oracle fragment."""
-    return f"CAST(sum(CAST({expr} AS DECIMAL(30,{scale}))) AS DOUBLE)"
-
-
 def revenue_sum(price: Column, discount: Column) -> Column:
     """sum(price * (1 - discount)) with exact decimal accumulation.
 
@@ -67,11 +62,4 @@ def dmean(col: Column | str, scale: int = 2) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     return (
         F.sum(c.cast(f"decimal(30,{scale})")).cast("double") / F.count(c)
-    )
-
-
-def dmean_sql(expr: str, scale: int = 2) -> str:
-    return (
-        f"CAST(sum(CAST({expr} AS DECIMAL(30,{scale}))) AS DOUBLE)"
-        f" / count({expr})"
     )

@@ -16,7 +16,12 @@ import atexit
 import os
 import shutil
 
+from pyspark import SparkContext
+from pyspark.errors import PySparkRuntimeError
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
+
+from . import cds
 
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
@@ -68,6 +73,10 @@ def get_session(
       reference's compile-time skew plans (`optimizer/physical/SkewJoinResolver.java:47`)
       and conditional map-join tasks (`optimizer/physical/CommonJoinResolver.java:55`).
     * Arrow transfer on for the few Pandas-UDF operators (the slow path).
+
+    Cold start: when this call launches the driver JVM, the JVM maps its
+    classes from a class-data-sharing archive, which the first process
+    without one records at exit (``cds.DriverArchive``).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", DEFAULT_CPUS)
     if master is None:
@@ -138,6 +147,27 @@ def get_session(
     # concurrently (embedded Derby is single-process).
     if os.environ.get("SPARK_GRAFT_HIVE_METASTORE", "1") != "0":
         builder = builder.enableHiveSupport()
-    spark = builder.getOrCreate()
+    archive = None
+    if SparkContext._gateway is None and \
+            "PYSPARK_GATEWAY_PORT" not in os.environ:
+        # this call launches the driver JVM: start it on the class-data
+        # archive (or record one). defaultJavaOptions, because callers
+        # such as perfbench replace extraJavaOptions; set only with an
+        # archive flag, so a spark-defaults.conf value otherwise applies.
+        archive = cds.DriverArchive(_find_spark_home())
+        if archive.java_options:
+            builder = builder.config("spark.driver.defaultJavaOptions",
+                                     archive.java_options)
+    try:
+        spark = builder.getOrCreate()
+    except PySparkRuntimeError as e:
+        if archive is None or not archive.mapping or \
+                e.getCondition() != "JAVA_GATEWAY_EXITED":
+            raise
+        archive.rejected()
+        spark = builder.config("spark.driver.defaultJavaOptions",
+                               archive.java_options).getOrCreate()
+    if archive is not None:
+        archive.started(SparkContext._gateway.proc)
     spark.sparkContext.setLogLevel("WARN")
     return spark
