@@ -12,7 +12,8 @@ let Catalyst prune columns — and sometimes whole subtrees — so keys with
 wide or expensive output projections were under-timed (r13 verdict item
 8; OPTIMIZATION_r14.md records a same-host run under BOTH actions so the
 methodology step is visible). Like the count() form, no rows cross to
-the driver.
+the driver. Warm-up, timing and fingerprints come from
+`hive_nexr_spark.measure`, the same code `tools/measure.py` runs.
 """
 
 from __future__ import annotations
@@ -20,7 +21,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -184,170 +184,16 @@ HEADLINE = [
 ]
 
 
-def _job_group_metrics(spark, group: str) -> dict[str, int]:
-    """Plan-metric fingerprint for one query: shuffle/input totals summed
-    over the stages of every job in `group`, read from the same
-    AppStatusStore the Spark UI uses. Wall-clock drifts with the host;
-    these counters only move when the PLAN (or data) changes, so a real
-    regression stays visible inside uniform host drift
-    (BENCH_NOTES.md, round-8 comparison rule)."""
-    tot = {"shuffle_write_bytes": 0, "shuffle_read_bytes": 0,
-           "shuffle_write_records": 0, "input_bytes": 0,
-           "input_records": 0, "n_tasks": 0, "n_stages": 0}
-    try:
-        store = spark.sparkContext._jsc.sc().statusStore()
-        jobs = store.jobsList(None)
-        sids: set[int] = set()
-        for i in range(jobs.size()):
-            j = jobs.apply(i)
-            jg = j.jobGroup()
-            if jg.isDefined() and jg.get() == group:
-                ids = j.stageIds()
-                for k in range(ids.size()):
-                    sids.add(int(ids.apply(k)))
-        for sid in sids:
-            try:
-                st = store.lastStageAttempt(sid)
-            except Exception:  # noqa: BLE001 — skipped stage, never ran
-                continue
-            tot["shuffle_write_bytes"] += st.shuffleWriteBytes()
-            tot["shuffle_read_bytes"] += st.shuffleReadBytes()
-            tot["shuffle_write_records"] += st.shuffleWriteRecords()
-            tot["input_bytes"] += st.inputBytes()
-            tot["input_records"] += st.inputRecords()
-            tot["n_tasks"] += st.numCompleteTasks()
-            tot["n_stages"] += 1
-    except Exception:  # noqa: BLE001 — metrics are best-effort extras
-        return {}
-    return tot
-
-
-def _make_stream_listener():
-    """StreamingQueryListener that accumulates micro-batch progress totals.
-
-    Streaming jobs run under the stream's own runId job group, so
-    `_job_group_metrics` can't see them; this listener drains
-    QueryProgressEvents instead (input rows, batches, state rows) so
-    `events_stream_*` queries get a non-empty fingerprint too
-    (BENCH_NOTES.md round-9). Returns None if the listener API is
-    unavailable — metrics stay best-effort."""
-    try:
-        from pyspark.sql.streaming import StreamingQueryListener
-    except ImportError:
-        return None
-
-    class _L(StreamingQueryListener):
-        def __init__(self) -> None:
-            self.totals = {
-                "stream_input_rows": 0,
-                "stream_batches": 0,
-                "stream_state_rows": 0,
-            }
-
-        def snapshot(self) -> dict[str, int]:
-            return dict(self.totals)
-
-        def onQueryStarted(self, event) -> None:  # noqa: N802
-            pass
-
-        def onQueryProgress(self, event) -> None:  # noqa: N802
-            p = event.progress
-            self.totals["stream_input_rows"] += int(p.numInputRows)
-            self.totals["stream_batches"] += 1
-            for so in p.stateOperators:
-                self.totals["stream_state_rows"] += int(so.numRowsTotal)
-
-        def onQueryIdle(self, event) -> None:  # noqa: N802
-            pass
-
-        def onQueryTerminated(self, event) -> None:  # noqa: N802
-            pass
-
-    return _L()
-
-
-def _stream_delta(listener, before: dict[str, int], timeout: float = 3.0
-                  ) -> dict[str, int]:
-    """Listener events arrive on an async bus thread; poll briefly until the
-    totals stop moving, then return the delta since `before` (zero-valued
-    keys dropped so batch-only queries keep their compact fingerprint)."""
-    if listener is None:
-        return {}
-    deadline = time.perf_counter() + timeout
-    prev = listener.snapshot()
-    while time.perf_counter() < deadline:
-        time.sleep(0.1)
-        cur = listener.snapshot()
-        if cur == prev:
-            break
-        prev = cur
-    return {k: v - before.get(k, 0) for k, v in prev.items()
-            if v - before.get(k, 0) > 0}
-
-
 def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    import __spark_entry__ as entry_mod
+    from hive_nexr_spark import measure
+    from hive_nexr_spark.io import DEFAULT_SF_DIR as sf_dir
     from hive_nexr_spark.session import get_session
-
-    spark = get_session(app_name="hive-nexr-spark-bench")
-    queries = entry_mod.queries()
-
-    listener = _make_stream_listener()
-    if listener is not None:
-        try:
-            spark.streams.addListener(listener)
-        except Exception:  # noqa: BLE001 — metrics are best-effort extras
-            listener = None
-
-    # Absorb one-time costs before timing: JVM/codegen warm-up and the
-    # testdata view registration (parquet footer reads) — otherwise they
-    # land on whichever query touches each table first.
-    spark.range(1).count()
-    from hive_nexr_spark.queries.base import ensure_views
-
-    for df in ensure_views(spark, sf_dir).values():
-        df.count()
-
-    # Per-key independence (r14, VERDICT item 5): tracked_persist_extend
-    # blocks from one key otherwise survive into the next, and Spark's
-    # CacheManager substitutes them into any later key whose canonicalized
-    # subtree matches — measured: bpe_train_merges ran 871 tasks in a
-    # fresh process but 223 mid-sweep in r13. Release between keys
-    # (OUTSIDE the timed region) so every key computes from parquet.
-    from hive_nexr_spark.datapipe._cache import release_tracked
-
-    timings: dict[str, float] = {}
-    metrics: dict[str, dict[str, int]] = {}
-    for name in HEADLINE:
-        fn = queries[name]
-        group = f"bench:{name}"
-        release_tracked()
-        stream_before = listener.snapshot() if listener is not None else {}
-        spark.sparkContext.setJobGroup(group, name)
-        t0 = time.perf_counter()
-        df = fn(spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()
-        timings[name] = round(time.perf_counter() - t0, 3)
-        spark.sparkContext.setJobGroup("bench:idle", "idle")
-        m = _job_group_metrics(spark, group)
-        if name.startswith("events_stream_"):
-            m = {**m, **_stream_delta(listener, stream_before)}
-        if m:
-            metrics[name] = m
 
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
     try:
         sf_val: float | str = float(sf)
     except ValueError:
         sf_val = sf
-    # The driver captures only a bounded tail of stdout, so the FINAL line
-    # must stay compact (guard-tested < 1800 chars in tests/test_bench_contract.py;
-    # round 8's inline `metrics` dict pushed it to ~9,280 chars and the driver
-    # recorded parsed:null). The per-query plan-metric fingerprints are emitted
-    # on their OWN earlier line AND persisted to a sidecar file next to bench.py
-    # so they survive regardless of tail-capture length.
-    metrics_payload = json.dumps({"metrics": metrics, "sf": sf_val})
     here = os.path.dirname(os.path.abspath(__file__))
     sidecars = [os.path.join(here, "BENCH_METRICS.json")]
     # Round-stamped fingerprint sidecar (r10 verdict #2): BENCH_METRICS.json
@@ -356,25 +202,31 @@ def main() -> None:
     # also write BENCH_METRICS_r{N}.json — committed each round alongside
     # BENCH_r{N}.json so wall-clock drift can be judged against plan
     # fingerprints without archaeology. Smoke-sf runs (0.001/0.01) skip the
-    # round file so local iteration never shadows the real record.
-    # The round label is EXPLICIT when the caller knows it
-    # (SPARK_GRAFT_BENCH_ROUND — the recording chain sets it) because the
-    # _next_round_no() inference depends on sweep ordering: an official-sf
-    # re-run AFTER the round's CORRECTNESS file lands would otherwise
-    # mislabel the sidecar as next round's (r11 advisor finding).
+    # round file so local iteration never shadows the real record. The
+    # label is worked out before the first key runs, so a bad
+    # SPARK_GRAFT_BENCH_ROUND fails in seconds, not after the sweep.
     if isinstance(sf_val, float) and sf_val >= 0.1:
-        try:
-            round_env = os.environ.get("SPARK_GRAFT_BENCH_ROUND")
-            if round_env:
-                round_no = int(round_env)
-            else:
-                from hive_nexr_spark.queries import _next_round_no
+        sidecars.append(
+            os.path.join(here, f"BENCH_METRICS_r{measure.round_no()}.json"))
 
-                round_no = _next_round_no()
-            sidecars.append(
-                os.path.join(here, f"BENCH_METRICS_r{round_no}.json"))
-        except Exception:
-            pass
+    spark = get_session(app_name="hive-nexr-spark-bench")
+    listener = measure.warm_up(spark, sf_dir)
+    timings: dict[str, float] = {}
+    metrics: dict[str, dict[str, int]] = {}
+    for name in HEADLINE:
+        _, rec = measure.run_key(spark, name, sf_dir, listener)
+        timings[name] = rec["wall"]
+        metrics[name] = rec["metrics"]
+        if name.startswith("events_stream_"):
+            metrics[name].update(rec["stream"])
+
+    # The driver captures only a bounded tail of stdout, so the FINAL line
+    # must stay compact (guard-tested < 1800 chars in tests/test_bench_contract.py;
+    # round 8's inline `metrics` dict pushed it to ~9,280 chars and the driver
+    # recorded parsed:null). The per-query plan-metric fingerprints are emitted
+    # on their OWN earlier line AND persisted to a sidecar file next to bench.py
+    # so they survive regardless of tail-capture length.
+    metrics_payload = json.dumps({"metrics": metrics, "sf": sf_val})
     for sidecar in sidecars:
         try:
             with open(sidecar, "w") as fh:

@@ -13,6 +13,8 @@ from __future__ import annotations
 
 import json
 
+import pytest
+
 import bench
 
 
@@ -108,15 +110,128 @@ def test_round_metrics_sidecar_covers_headline():
     assert not missing, (latest, missing)
 
 
-def test_timed_action_is_noop_sink():
-    """r14 methodology: the timed materialization must be the guide-§1.4
-    noop sink (computes every column of every row), not count() (lets
-    Catalyst prune columns and under-time wide-output keys)."""
-    import inspect
+class _FakeDF:
+    """Stands in for a key's DataFrame: records the write chain run_key
+    drives and refuses count(), the action the bench stopped timing."""
 
-    src = inspect.getsource(bench.main)
-    for anchor in ("for name in HEADLINE", "sf = "):
-        assert anchor in src, f"bench.main no longer contains {anchor!r}"
-    loop = src[src.index("for name in HEADLINE"):src.index("sf = ")]
-    assert 'format("noop")' in loop
-    assert "df.count()" not in loop
+    def __init__(self, calls: list) -> None:
+        self.calls = calls
+
+    def count(self):
+        raise AssertionError("count() is not the bench action")
+
+    @property
+    def write(self):
+        return self
+
+    def format(self, fmt):
+        self.calls.append(("format", fmt))
+        return self
+
+    def mode(self, mode):
+        self.calls.append(("mode", mode))
+        return self
+
+    def save(self):
+        self.calls.append(("save",))
+
+
+def test_timed_action_is_noop_sink(spark, sf_dir, monkeypatch):
+    """r14 methodology: the timed materialization is the guide-§1.4 noop
+    sink (computes every column of every row), never count() (lets
+    Catalyst prune columns and under-time wide-output keys), and it runs
+    after the previous key's tracked persists are released."""
+    from hive_nexr_spark import measure
+
+    calls: list = []
+    monkeypatch.setattr(measure, "release_tracked",
+                        lambda: calls.append(("release",)))
+    monkeypatch.setattr(measure, "collect_all", lambda: (
+        {"fake": lambda s, d: _FakeDF(calls)}, {}))
+    _, rec = measure.run_key(spark, "fake", sf_dir, measure.StreamTotals())
+    assert calls == [("release",), ("format", "noop"),
+                     ("mode", "overwrite"), ("save",)]
+    assert rec["metrics"] == dict.fromkeys(measure.FINGERPRINT, 0)
+
+
+def test_status_store_read_error_raises(spark, sf_dir, monkeypatch):
+    """A fingerprint the store cannot give is an error, never an empty or
+    partial dict: here every stage of the key reads as evicted."""
+    from py4j.protocol import Py4JJavaError
+
+    from hive_nexr_spark import measure
+
+    class _EvictedStages:
+        def __init__(self, store) -> None:
+            self.store = store
+
+        def jobsList(self, statuses):  # noqa: N802
+            return self.store.jobsList(statuses)
+
+        def lastStageAttempt(self, sid):  # noqa: N802
+            return self.store.lastStageAttempt(-1)
+
+    real_store = measure._store
+    monkeypatch.setattr(measure, "_store",
+                        lambda s: _EvictedStages(real_store(s)))
+    monkeypatch.setattr(measure, "collect_all", lambda: (
+        {"one": lambda s, d: s.range(10).groupBy().count()}, {}))
+    with pytest.raises(Py4JJavaError):
+        measure.run_key(spark, "one", sf_dir, measure.StreamTotals())
+
+
+def test_bench_and_every_tool_measure_through_run_key(
+        spark, sf_dir, tmp_path, monkeypatch):
+    """bench.main and each tools/measure.py subcommand time keys only
+    through measure.run_key; `ab` puts the conf back; a bad round label
+    fails before the first key runs."""
+    import importlib.util
+    import os
+
+    from hive_nexr_spark import io, measure, session
+
+    ran: list[str] = []
+
+    def fake_run_key(spark_, name, sf, listener):
+        ran.append(name)
+        return spark_.range(1), {
+            "wall": 0.5, "driver_gap": 0.1, "jobs": [],
+            "metrics": dict.fromkeys(measure.FINGERPRINT, 1), "stream": {}}
+
+    monkeypatch.setattr(measure, "run_key", fake_run_key)
+    monkeypatch.setattr(measure, "warm_up",
+                        lambda s, d: measure.StreamTotals())
+    monkeypatch.setattr(session, "get_session", lambda **kw: spark)
+    monkeypatch.setattr(io, "DEFAULT_SF_DIR", sf_dir)
+    monkeypatch.setattr(bench, "__file__", str(tmp_path / "bench.py"))
+    bench.main()
+    assert ran == bench.HEADLINE
+    assert (tmp_path / "BENCH_METRICS.json").exists()
+
+    monkeypatch.setattr(io, "DEFAULT_SF_DIR", "/root/testdata/sf0.1")
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_ROUND", "next")
+    ran.clear()
+    with pytest.raises(ValueError):
+        bench.main()
+    assert ran == []
+    monkeypatch.delenv("SPARK_GRAFT_BENCH_ROUND")
+
+    path = os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "tools", "measure.py")
+    spec = importlib.util.spec_from_file_location("measure_tool", path)
+    tool = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(tool)
+    monkeypatch.setattr(tool, "PLANS", str(tmp_path / "plans"))
+    monkeypatch.setattr(tool, "DEFAULT_SF_DIR", sf_dir)
+    conf = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(conf)
+    for argv, expect in (
+            (["run", "-n", "2", "agg_q1"], ["agg_q1"] * 2),
+            (["ab", "-n", "1", conf, "3", "5", "agg_q1"], ["agg_q1"] * 2),
+            (["plans", "t", "agg_q1"], ["agg_q1"])):
+        ran.clear()
+        tool.main(argv)
+        assert ran == expect, argv
+    assert spark.conf.get(conf) == before
+    assert (tmp_path / "plans" / f"r{measure.round_no()}"
+            / "agg_q1_t.txt").read_text().strip()
