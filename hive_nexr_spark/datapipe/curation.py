@@ -37,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..io import local_frame
 from .textops import _tokens
 
 # Default per-language mixture rates for domain_mix_sample: the shape a
@@ -611,9 +612,9 @@ def quality_classifier_train(documents: DataFrame, steps: int = 3,
     from ._cache import tracked_persist
 
     feats = tracked_persist(_surface_feats(documents))
-    weights = feats.sparkSession.createDataFrame(
-        [(0.0,) * 6], "w0 double, w1 double, w2 double, w3 double, "
-                      "w4 double, w5 double")
+    weights = local_frame(
+        feats.sparkSession, [(0.0,) * 6],
+        "w0 double, w1 double, w2 double, w3 double, w4 double, w5 double")
     for _ in range(steps):
         z = sum((F.col(f"w{j}") * F.col(f"x{j}") for j in range(1, 6)),
                 F.col("w0") * F.col("x0"))

@@ -26,6 +26,7 @@ from operator import and_
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..io import local_frame
 from ._cache import tracked_persist, tracked_persist_extend
 
 
@@ -99,29 +100,33 @@ def _local_artifact(df: DataFrame) -> DataFrame:
     """Materialize a BOUNDED trained artifact (coarse centroids, PQ
     codebooks, probe lists, k-row exact baselines — tens-to-thousands of
     rows at ANY corpus scale, by the same bound that lets them
-    broadcast) into a parallelized leaf (plans as `Scan ExistingRDD`):
-    run the producing subtree ONCE, collect its rows (the documented
-    bounded driver-side class — the production ANN posture: trained
-    quantizer artifacts are held in memory, not recomputed per
-    consumer), and rebuild the same rows as a leaf relation. The values
-    are transported verbatim — no arithmetic — so every downstream
-    result is bit-identical; what changes is the PLAN: consumers
-    reference an O(rows) leaf instead of re-inlining the whole training
-    subtree, whose Catalyst walks and codegen over the unrolled
-    64-dim-sum trees otherwise dominate these keys' wall as DRIVER time
-    (thread dumps in OPTIMIZATION_r13.md). Guide §3.3: very large plans
-    make planning itself the bottleneck — materialize intermediates;
-    §5: the driver transfer here is k artifact rows, never corpus data.
+    broadcast) into a JVM-local leaf (`io.local_frame`: plans as
+    `LocalRelation` / `LocalTableScan`): run the producing subtree
+    ONCE, collect it as Arrow (the documented bounded driver-side class
+    — the production ANN posture: trained quantizer artifacts are held
+    in memory, not recomputed per consumer), and rebuild the same
+    values as a leaf relation. The values are transported verbatim — no
+    arithmetic, Arrow doubles are exact — so every downstream result is
+    bit-identical; what changes is the PLAN: consumers reference an
+    O(rows) leaf instead of re-inlining the whole training subtree,
+    whose Catalyst walks and codegen over the unrolled 64-dim-sum trees
+    otherwise dominate these keys' wall as DRIVER time (thread dumps in
+    OPTIMIZATION_r13.md). Guide §3.3: very large plans make planning
+    itself the bottleneck — materialize intermediates; §5: the driver
+    transfer here is k artifact rows, never corpus data.
 
-    Partitioning: createDataFrame spreads the rows over
+    Partitioning: `LocalTableScan` spreads the rows over up to
     defaultParallelism partitions, and the leaf is left that way.
     Coalescing it to one partition serialized the HOF encode stages
     that run over it (OPTIMIZATION_r14.md, "Rejected after
     measurement").
 
-    ExistingRDD carries no size statistics (defaults to
-    spark.sql.defaultSizeInBytes), so consumers joining the leaf must
-    hint F.broadcast explicitly — every call site does."""
+    The leaf stays in the JVM: one rebuilt from Python rows
+    (`createDataFrame(rows, schema)`) is a pickled `Scan ExistingRDD`
+    whose every broadcast runs Python-worker tasks. It carries size
+    statistics, but consumers joining it still hint F.broadcast
+    explicitly — every call site does, so the join strategy does not
+    hang on the estimate."""
     spark = df.sparkSession
     # AQE decomposes even a tiny artifact query into one JOB PER SHUFFLE
     # STAGE (plus driver-side re-planning between them) — pure fixed
@@ -143,16 +148,16 @@ def _local_artifact(df: DataFrame) -> DataFrame:
         spark.conf.set("spark.sql.adaptive.enabled", "false")
         spark.conf.set("spark.sql.shuffle.partitions",
                        str(_ARTIFACT_SHUFFLE_PARTITIONS))
-        rows = df.collect()
+        table = df.toArrow()
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
         spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
-    if len(rows) > _MAX_ARTIFACT_ROWS:
+    if table.num_rows > _MAX_ARTIFACT_ROWS:
         raise ValueError(
-            f"_local_artifact collected {len(rows)} rows (> "
+            f"_local_artifact collected {table.num_rows} rows (> "
             f"{_MAX_ARTIFACT_ROWS}): call sites must be bounded trained "
             "artifacts, never corpus-sized data")
-    return spark.createDataFrame(rows, df.schema)
+    return local_frame(spark, table, df.schema)
 
 
 def brute_force_topk(embeddings: DataFrame, k: int = 3, n_queries: int = 10) -> DataFrame:
@@ -1428,9 +1433,9 @@ def ivf_pq_rerank_topk(embeddings: DataFrame, k: int = 3,
         queries, probes, coarse, cb_r, _residual_encode(res, cb_r, m, sd),
         m, sd, shortlist))
 
-    # BROADCAST the (n_queries × shortlist)-row candidate list: the
-    # ExistingRDD leaf has no size stats, so without the hint the
-    # planner would broadcast (or at scale shuffle) the CORPUS side
+    # BROADCAST the (n_queries × shortlist)-row candidate list: the hint
+    # pins the strategy, so the planner never broadcasts (or at scale
+    # shuffles) the CORPUS side whatever the leaf's size estimate
     rer = (
         corpus.withColumnRenamed("vec_id", "neighbor_id")
         .join(F.broadcast(short.select("query_id", "neighbor_id")),

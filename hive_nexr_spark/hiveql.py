@@ -51,6 +51,9 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .io import local_frame
+
+
 def _register_text_hash(spark: SparkSession, name: str) -> None:
     from .functions.hive_compat import _py_text_hash
 
@@ -546,8 +549,8 @@ class HiveQLSession:
             tbl = m.group("table").strip("`").lower()
             rows = [(n, t, i["cols"], i["index_table"], i["kind"])
                     for (t, n), i in self.indexes.items() if t == tbl]
-            return self.spark.createDataFrame(
-                rows or [("", tbl, "", "", "")],
+            return local_frame(
+                self.spark, rows or [("", tbl, "", "", "")],
                 "idx_name string, tab_name string, col_names string, "
                 "idx_tab_name string, idx_type string")
 
@@ -673,8 +676,8 @@ class HiveQLSession:
             obj = (self._lock_object(tbl, m.group("part"))
                    if tbl else None)
             rows = self.locks.show(obj, extended=ext)
-            return self.spark.createDataFrame(
-                rows, "tab_name string, mode string")
+            return local_frame(
+                self.spark, rows, "tab_name string, mode string")
         return NotImplemented
 
     def _check_duplicate_outputs(self, stmt: str) -> None:
@@ -871,14 +874,14 @@ class HiveQLSession:
             rows = self.auth.show_grant(
                 m.group("ptype"), m.group("pname"), m.group("db"),
                 m.group("tbl"), part, col)
-            return self.spark.createDataFrame(
-                rows, "property string, value string")
+            return local_frame(
+                self.spark, rows, "property string, value string")
         m = _SHOW_ROLE_GRANT.match(stmt)
         if m:
             rows = [("role name", r) for r, _ in
                     self.auth.role_grants(m.group("pname"))]
-            return self.spark.createDataFrame(
-                rows, "property string, value string")
+            return local_frame(
+                self.spark, rows, "property string, value string")
         return NotImplemented
 
     def _auth_after(self, stmt: str) -> None:
@@ -942,8 +945,9 @@ class HiveQLSession:
         try:
             return self.spark.sql(stmt)
         except Exception:
-            return self.spark.createDataFrame(
-                [(f"Function '{name}' does not exist.",)], ["function_desc"])
+            return local_frame(
+                self.spark, [(f"Function '{name}' does not exist.",)],
+                "function_desc string")
 
     def _rewrite_bucket_sample(self, m: re.Match) -> str:
         kw = m.group("kw")
@@ -1281,7 +1285,7 @@ class HiveQLSession:
         rows = [tuple(conv(v, f.dataType)
                       for v, f in zip(r, target.schema.fields))
                 for r in rows]
-        df = self.spark.createDataFrame(rows, schema=target.schema)
+        df = local_frame(self.spark, rows, target.schema)
         df.write.insertInto(idx["index_table"], overwrite=True)
         return True
 
@@ -1738,6 +1742,7 @@ class HiveQLSession:
             return None
         if verb == "LIST":
             rows = [(k, r) for k, r in self.resources if k == kind]
-            return self.spark.createDataFrame(rows or [(kind, "")], ["kind", "resource"])
+            return local_frame(self.spark, rows or [(kind, "")],
+                               "kind string, resource string")
         self.resources = [(k, r) for k, r in self.resources if not (k == kind and r == rest)]
         return None

@@ -59,6 +59,32 @@ def ensure_runtime_compat(spark: SparkSession) -> None:
             pass
 
 
+def local_frame(spark: SparkSession, data, schema) -> DataFrame:
+    """The one way the engine turns driver-held values into a frame:
+    `data` (a pyarrow Table, or a list of row tuples) under `schema` (a
+    StructType or a DDL string) as a JVM `LocalRelation`, planned as
+    `LocalTableScan`. A frame built from Python rows by
+    `createDataFrame(rows, schema)` is a pickled `PythonRDD` leaf
+    (`Scan ExistingRDD`): every scan of it starts Python-worker tasks,
+    and it carries no size statistics. This leaf never leaves the JVM,
+    has size statistics, and a command that only returns it runs no
+    Spark job. Values are carried verbatim (Arrow doubles are exact).
+    pyarrow is imported here, not at module top, to keep it off the
+    session-start path."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    if not isinstance(data, pa.Table):
+        arrow = to_arrow_schema(schema)
+        data = pa.Table.from_arrays(
+            [pa.array([row[i] for row in data], type=f.type)
+             for i, f in enumerate(arrow)], schema=arrow)
+    return spark.createDataFrame(data, schema)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ensure_runtime_compat(spark)
     df = spark.read.parquet(table_path(sf_dir, name))

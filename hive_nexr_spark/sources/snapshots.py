@@ -34,6 +34,7 @@ import os
 from pyspark.sql import DataFrame, DataFrameReader, SparkSession
 from pyspark.sql import functions as F
 
+from ..io import local_frame
 from . import index_manifest as idx
 
 _EMPTY = {"dirs": [], "deletes": [], "key": None, "dir_seqs": {},
@@ -970,7 +971,7 @@ def changes_between(spark: SparkSession, base: str, v_from: int,
     # empty key-column frames instead of dereferencing a dir.
     if not m_from["dirs"] and not m_to["dirs"]:
         key = m_to["key"] or "key"
-        empty = spark.createDataFrame([], f"{key} string")
+        empty = local_frame(spark, [], f"{key} string")
         return empty, empty
     some_dir = (m_from["dirs"] or m_to["dirs"])[0]
     schema_src = spark.read.parquet(some_dir)

@@ -172,6 +172,24 @@ def test_add_list_resources(spark, tmp_path):
     assert any(str(p) in r.resource for r in listed)
 
 
+def test_session_command_replies_run_no_spark_job(spark, dfs):
+    """Session-command results are JVM-local relations: taking the
+    reply (what `server.py` does) runs no Spark job."""
+    hql = HiveQLSession(spark)
+    sc = spark.sparkContext
+    sc.setJobGroup("session-command-replies", "no jobs expected")
+    try:
+        for stmt in ("LIST FILES", "SHOW LOCKS",
+                     "SHOW ROLE GRANT USER hive_test_user",
+                     "SHOW INDEXES ON lineitem",
+                     "DESCRIBE FUNCTION no_such_function"):
+            assert hql.sql(stmt).take(11) is not None, stmt
+    finally:
+        sc._jsc.clearJobGroup()
+    assert list(sc.statusTracker().getJobIdsForGroup(
+        "session-command-replies")) == []
+
+
 def test_stateful_stream_equals_batch_groupby(spark, sf_dir, dfs):
     from pyspark.sql import functions as F
 

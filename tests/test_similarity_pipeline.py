@@ -12,10 +12,17 @@ full grid over every path and {1, 4, 32} × {on, off} is marked `slow`.
 
 The ADC join must not build a trivially-true predicate (the JVM warns
 when one is constructed).
+
+A trained artifact lands as a JVM `LocalRelation` holding exactly the
+collected values, so no IVF-PQ scan or broadcast starts a Python
+worker; and no engine module builds a frame from Python rows except
+through `io.local_frame`.
 """
 
 from __future__ import annotations
 
+import ast
+import os
 from collections import Counter
 from contextlib import contextmanager
 
@@ -139,3 +146,71 @@ def test_adc_join_builds_no_trivially_true_predicate(spark, dfs):
         pq_topk(dfs["embeddings"])
         ivf_pq_topk(dfs["embeddings"])
     assert "trivially true" not in log(), log()
+
+
+def _artifact_source(dfs):
+    return (dfs["embeddings"]
+            .select("vec_id", F.col("embedding").cast("array<double>")
+                    .alias("v"))
+            .filter(F.col("vec_id") < 20))
+
+
+def test_local_artifact_is_a_jvm_local_relation(spark, dfs):
+    from hive_nexr_spark.datapipe.similarity import _local_artifact
+
+    src = _artifact_source(dfs)
+    leaf = _local_artifact(src)
+    plan = leaf._jdf.queryExecution().optimizedPlan()
+    assert plan.getClass().getSimpleName() == "LocalRelation", plan.toString()
+    assert leaf.schema == src.schema
+    # exact values, array<double> included, in the collected order
+    assert leaf.collect() == src.collect()
+
+
+def test_local_artifact_row_bound_still_raises(spark, dfs, monkeypatch):
+    from hive_nexr_spark.datapipe import similarity
+
+    monkeypatch.setattr(similarity, "_MAX_ARTIFACT_ROWS", 5)
+    with pytest.raises(ValueError, match="_local_artifact collected 20 rows"):
+        similarity._local_artifact(_artifact_source(dfs))
+
+
+def test_ivf_pq_query_index_scans_local_leaves(spark, dfs):
+    """The probe list is broadcast from a `LocalTableScan`, never from a
+    pickled Python leaf (`Scan ExistingRDD`)."""
+    df = _build_query(spark, dfs["embeddings"])
+    assert df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan, plan
+    assert "ExistingRDD" not in plan, plan
+
+
+_PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(
+    __file__))), "hive_nexr_spark")
+# io.py holds the helper. The qfile harness and the Hive-0.8 join replay
+# return arbitrary Hive types; everything else builds driver-held frames
+# through the helper.
+_CREATE_DATAFRAME_OK = {"io.py", os.path.join("sources", "qtest.py"),
+                        os.path.join("sources", "hive08_join.py")}
+
+
+def test_only_local_frame_calls_create_dataframe():
+    offenders = []
+    for dirpath, _, files in os.walk(_PKG):
+        for name in files:
+            if not name.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, name)
+            rel = os.path.relpath(path, _PKG)
+            if rel in _CREATE_DATAFRAME_OK:
+                continue
+            with open(path) as fh:
+                tree = ast.parse(fh.read(), path)
+            offenders += [
+                f"{rel}:{node.lineno}" for node in ast.walk(tree)
+                if isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "createDataFrame"]
+    assert not offenders, (
+        "build driver-held frames with io.local_frame (a JVM "
+        f"LocalRelation), not createDataFrame: {offenders}")
