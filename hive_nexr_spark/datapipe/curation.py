@@ -112,24 +112,22 @@ def decontaminate_fuzzy(documents: DataFrame, benchmark_mod: int = 13,
     Output: (doc_id, n_bench_hits, max_jaccard) per contaminated
     training document.
 
-    100 TB shape: identical to `dedup.minhash_lsh_pairs` — shingles
-    persist once, signatures are split-k slices of ONE md5, the
-    candidate join keys on (band, bucket) carrying doc ids only, and
-    verification touches candidates, not |train|x|bench|. The benchmark
-    side is tiny (an eval suite), so AQE broadcast-converts its band
-    table; the train side streams. Distinct-before-verify bounds the
-    shingle fetch-back to unique candidate pairs."""
-    from .dedup import (_signature_bands, _with_shingles,
-                        with_synthetic_dups)
+    100 TB shape: the `dedup.minhash_lsh_pairs` pipeline — shingles
+    persist once, the one band encoder (`dedup.hof_bands`, a per-row
+    signature, no doc-keyed shuffle) bands them, the candidate join keys
+    on (band, bucket) carrying doc ids only, and verification touches
+    candidates, not |train|x|bench|. The benchmark side is tiny (an eval
+    suite), so AQE broadcast-converts its band table; the train side
+    streams. Distinct-before-verify bounds the shingle fetch-back to
+    unique candidate pairs."""
     from ._cache import tracked_persist
+    from .dedup import _bounded_corpus, _jaccard, _with_shingles, hof_bands
 
-    corpus = with_synthetic_dups(documents).filter(
-        (F.col("doc_id") % 100000) < max_doc_id)
+    corpus = _bounded_corpus(documents, max_doc_id)
     is_bench = (F.col("doc_id") < 100000) & \
         (F.col("doc_id") % benchmark_mod == 0)
     toks = tracked_persist(_with_shingles(corpus).select("doc_id", "sh"))
-    sh = toks.select("doc_id", F.explode("sh").alias("shingle"))
-    bands = _signature_bands(sh)
+    bands = hof_bands(toks).select("doc_id", "band", "bucket")
     train_b = bands.filter(~is_bench).alias("t")
     bench_b = bands.filter(is_bench).alias("e")
     cand = (
@@ -145,10 +143,8 @@ def decontaminate_fuzzy(documents: DataFrame, benchmark_mod: int = 13,
         .join(toks.alias("te"), F.col("bench_id") == F.col("te.doc_id"))
         .select(
             "train_id", "bench_id",
-            F.round(
-                F.size(F.array_intersect(F.col("tt.sh"), F.col("te.sh")))
-                / F.size(F.array_union(F.col("tt.sh"), F.col("te.sh"))),
-                6).alias("jaccard"),
+            F.round(_jaccard(F.col("tt.sh"), F.col("te.sh")), 6)
+            .alias("jaccard"),
         )
         .filter(F.col("jaccard") >= jaccard_threshold)
     )

@@ -6,6 +6,17 @@ LSH-band bucketing, so the pairwise verification join touches only
 candidate pairs, not the n² document space. All hash functions are md5
 slices — identical in any engine, so every operator's result is
 reproducible by an external SQL oracle bit-for-bit.
+
+MinHash-LSH is one pipeline, and this module holds its only copy of
+each step: `_with_shingles` (distinct word 3-grams), `hof_bands` (the
+band encoder — a per-row `array_min` signature, no doc-keyed shuffle),
+`_band_candidates` (band-bucket self-join), `_index_matches` (probes ⋈
+index bands, verified against the index shingles), `_jaccard` and
+`_verified_pairs` (exact verification) and `_write_generation` (one
+persisted index generation). Batch pairs, the persisted index, the
+streaming near-dup matcher and ingest gate (`streaming/neardup.py`)
+and fuzzy decontamination (`curation.decontaminate_fuzzy`) are
+composed from them.
 """
 
 from __future__ import annotations
@@ -102,12 +113,33 @@ def _with_shingles(df: DataFrame) -> DataFrame:
     ).drop("_toks")
 
 
-def _band_keys(sig: DataFrame, *keep: str) -> DataFrame:
-    """Signature columns mh0..mh{H-1} → one (band, bucket) row per band,
-    the bucket being the concatenation of the band's ROWS_PER_BAND
-    minhashes — the one band layout of every MinHash-LSH path."""
+def _md5_slice(h: int):
+    """The h-th minhash's per-shingle value, as a one-argument
+    `transform` lambda. PySpark binds every lambda parameter, defaulted
+    ones included, so `h` must be closed over, not passed as a default
+    (`lambda d, h=h: …` receives the element index as `h`)."""
+    return lambda d: F.substring(d, h * 5 + 1, 5)
+
+
+def hof_bands(df: DataFrame) -> DataFrame:
+    """(doc_id, sh) → (doc_id, sh, band, bucket): the one MinHash band
+    encoder. Minhash h of a doc is min(substr(md5(shingle), 5h+1, 5))
+    over its shingles, taken per row by `array_min` over the transformed
+    shingle array — no shingle explode, no doc-keyed shuffle, so it runs
+    unchanged on batch and (unaggregated) streaming frames. A band's
+    bucket is the concatenation of its ROWS_PER_BAND minhashes; one row
+    per band."""
+    dg = df.withColumn("_dg", F.transform(F.col("sh"), F.md5))
+    sig = dg.select(
+        "doc_id", "sh",
+        *[
+            F.array_min(F.transform(F.col("_dg"), _md5_slice(h)))
+            .alias(f"mh{h}")
+            for h in range(MINHASH_H)
+        ],
+    )
     return sig.select(
-        *keep,
+        "doc_id", "sh",
         F.explode(F.array(*[
             F.struct(
                 F.lit(b).alias("band"),
@@ -116,29 +148,28 @@ def _band_keys(sig: DataFrame, *keep: str) -> DataFrame:
             )
             for b in range(MINHASH_BANDS)
         ])).alias("bb"),
-    ).select(*keep, "bb.band", "bb.bucket")
+    ).select("doc_id", "sh", "bb.band", "bb.bucket")
 
 
-def _signature_bands(sh: DataFrame) -> DataFrame:
-    """(doc_id, shingle) → (doc_id, band, bucket) through the portable
-    explode+groupBy signature: minhash h of a doc is
-    min(substr(md5(shingle), 5h+1, 5)) over its shingles. Shuffles by
-    doc."""
-    hashed = sh.select("doc_id", F.md5("shingle").alias("d"))
-    sig = hashed.groupBy("doc_id").agg(
-        *[F.min(F.substring("d", h * 5 + 1, 5)).alias(f"mh{h}")
-          for h in range(MINHASH_H)])
-    return _band_keys(sig, "doc_id")
+def _shingle_bands(docs: DataFrame) -> DataFrame:
+    """(doc_id, text) → `hof_bands` rows of the docs' shingle sets."""
+    return hof_bands(_with_shingles(docs.select("doc_id", "text"))
+                     .select("doc_id", "sh"))
 
 
-def _band_candidates(sh: DataFrame) -> DataFrame:
-    """(doc_id, shingle) → distinct candidate pairs (doc_a, doc_b) via
-    the portable single-md5-split minhash signatures and band-bucket
-    self-join — the shared LSH front end of every minhash-family op.
-    Shuffles: by doc (signature build), by (band, bucket); the join
-    output is |bucket collisions|, never n²."""
-    bands = _signature_bands(sh)
-    a, b = bands.alias("a"), bands.alias("b")
+def _jaccard(a, b) -> "F.Column":
+    """Exact Jaccard |a ∩ b| / |a ∪ b| of two distinct-element arrays —
+    the one verification expression of every set-similarity path."""
+    return F.size(F.array_intersect(a, b)) / F.size(F.array_union(a, b))
+
+
+def _band_candidates(bands: DataFrame) -> DataFrame:
+    """`hof_bands` rows → distinct candidate pairs (doc_a < doc_b) from
+    the band-bucket self-join. Only (doc_id, band, bucket) enters the
+    join, so shingle arrays never ride a band Exchange; the join output
+    is |bucket collisions|, never n²."""
+    keys = bands.select("doc_id", "band", "bucket")
+    a, b = keys.alias("a"), keys.alias("b")
     return (
         a.join(b, (F.col("a.band") == F.col("b.band"))
                & (F.col("a.bucket") == F.col("b.bucket"))
@@ -149,14 +180,52 @@ def _band_candidates(sh: DataFrame) -> DataFrame:
     )
 
 
+def _verified_pairs(cand: DataFrame, toks: DataFrame,
+                    threshold: float) -> DataFrame:
+    """Candidate pairs (doc_a, doc_b) → (doc_a, doc_b, jaccard): both
+    `sh` sets fetched from `toks` by id, pairs below `threshold` dropped,
+    then the Jaccard rounded to 6 places."""
+    return (
+        cand.join(toks.alias("ta"), F.col("doc_a") == F.col("ta.doc_id"))
+        .join(toks.alias("tb"), F.col("doc_b") == F.col("tb.doc_id"))
+        .select("doc_a", "doc_b",
+                _jaccard(F.col("ta.sh"), F.col("tb.sh")).alias("jaccard"))
+        .filter(F.col("jaccard") >= threshold)
+        .select("doc_a", "doc_b", F.round("jaccard", 6).alias("jaccard"))
+    )
+
+
+def _index_matches(probes: DataFrame, bands: DataFrame,
+                   toks: DataFrame, threshold: float) -> DataFrame:
+    """The one probe → index matcher: banded probes (`hof_bands` rows)
+    equi-join the index `bands` (doc_id, band, bucket) on (band, bucket),
+    then exact Jaccard against the index `toks` (doc_id, sh) fetched by
+    id. Every step is a projection or a join against the index, so it
+    also runs on a streaming `probes`. Output (doc_a = index doc, doc_b
+    = probe doc, jaccard); a pair matching in k bands comes out k times."""
+    cand = probes.select(
+        F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"),
+        "band", "bucket",
+    ).join(bands.select(F.col("doc_id").alias("doc_a"), "band", "bucket"),
+           ["band", "bucket"])
+    return (
+        cand.join(toks.select(F.col("doc_id").alias("doc_a"),
+                              F.col("sh").alias("sh_a")), "doc_a")
+        .select("doc_a", "doc_b", _jaccard("sh_a", "sh_b").alias("jaccard"))
+        .filter(F.col("jaccard") >= threshold)
+        .select("doc_a", "doc_b", F.round("jaccard", 6).alias("jaccard"))
+    )
+
+
 def minhash_lsh_pairs(documents: DataFrame, jaccard_threshold: float = 0.5,
                       max_doc_id: int = 200) -> DataFrame:
     """MinHash + LSH near-dup pairs.
 
     Pipeline: shingle → H portable minhashes → band buckets → self-join per
-    bucket → exact Jaccard verification on candidate pairs only. Shuffles:
-    by (doc), by (band, bucket) — both fine at scale; the verification join
-    is |candidates|, not n².
+    bucket → exact Jaccard verification on candidate pairs only. The
+    signature is a per-row projection (`hof_bands`); the candidate join
+    shuffles by (band, bucket) and the verification join is
+    |candidates|, not n².
 
     The H hash functions are disjoint 5-hex-char (20-bit) slices of a
     SINGLE md5 per shingle — one digest call instead of H (measured 7× faster
@@ -164,30 +233,15 @@ def minhash_lsh_pairs(documents: DataFrame, jaccard_threshold: float = 0.5,
     minhash, and still engine-portable: DuckDB's md5 yields the identical
     lowercase hex, so `min(substr(md5(shingle), h*5+1, 5))` reproduces it."""
     corpus = _bounded_corpus(documents, max_doc_id)
-    # The shingle arrays are consumed three times (signature build + both
+    # The shingle arrays are consumed three times (band encoder + both
     # sides of the verification join); persist them once instead of
     # recomputing the tokenize+slice pipeline per consumer (40% faster at
     # sf0.1). MEMORY_AND_DISK by default — at cluster scale this is the
     # standard disk-backed materialization of an expensive shared stage.
     # tracked_persist bounds cache growth across a multi-query sweep.
     toks = tracked_persist(_with_shingles(corpus).select("doc_id", "sh"))
-    sh = toks.select("doc_id", F.explode(F.col("sh")).alias("shingle"))
-    cand = _band_candidates(sh)
-    verified = (
-        cand.join(toks.alias("ta"), F.col("doc_a") == F.col("ta.doc_id"))
-        .join(toks.alias("tb"), F.col("doc_b") == F.col("tb.doc_id"))
-        .select(
-            "doc_a",
-            "doc_b",
-            (
-                F.size(F.array_intersect(F.col("ta.sh"), F.col("tb.sh")))
-                / F.size(F.array_union(F.col("ta.sh"), F.col("tb.sh")))
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= jaccard_threshold)
-        .select("doc_a", "doc_b", F.round("jaccard", 6).alias("jaccard"))
-    )
-    return verified
+    return _verified_pairs(_band_candidates(hof_bands(toks)), toks,
+                           jaccard_threshold)
 
 
 def ngram_jaccard_pairs(documents: DataFrame, threshold: float = 0.8,
@@ -202,10 +256,7 @@ def ngram_jaccard_pairs(documents: DataFrame, threshold: float = 0.8,
         .select(
             F.col("a.doc_id").alias("doc_a"),
             F.col("b.doc_id").alias("doc_b"),
-            (
-                F.size(F.array_intersect(F.col("a.sh"), F.col("b.sh")))
-                / F.size(F.array_union(F.col("a.sh"), F.col("b.sh")))
-            ).alias("jaccard"),
+            _jaccard(F.col("a.sh"), F.col("b.sh")).alias("jaccard"),
         )
         .filter(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", F.round("jaccard", 6).alias("jaccard"))
@@ -473,18 +524,8 @@ def jaccard_prefix_filter_pairs(documents: DataFrame,
                 F.col("b.doc_id").alias("doc_b"))
         .distinct()
     )
-    return (
-        cand.join(toks.alias("ta"), F.col("doc_a") == F.col("ta.doc_id"))
-        .join(toks.alias("tb"), F.col("doc_b") == F.col("tb.doc_id"))
-        .select(
-            "doc_a", "doc_b",
-            (F.size(F.array_intersect(F.col("ta.ts"), F.col("tb.ts")))
-             / F.size(F.array_union(F.col("ta.ts"), F.col("tb.ts"))))
-            .alias("j"),
-        )
-        .filter(F.col("j") >= threshold)
-        .select("doc_a", "doc_b", F.round("j", 6).alias("jaccard"))
-    )
+    return _verified_pairs(cand, toks.withColumnRenamed("ts", "sh"),
+                           threshold)
 
 
 def pagerank_dup_graph(documents: DataFrame,
@@ -863,32 +904,24 @@ def bloom_filter_dedup(documents: DataFrame, m_bits: int = 1 << 18,
     )
 
 
-def _md5_slice(h: int):
-    """The h-th minhash's per-shingle value, as a one-argument
-    `transform` lambda. PySpark binds every lambda parameter, defaulted
-    ones included, so `h` must be closed over, not passed as a default
-    (`lambda d, h=h: …` receives the element index as `h`)."""
-    return lambda d: F.substring(d, h * 5 + 1, 5)
+def _write_generation(spark, index_root: str, docs: DataFrame,
+                      tag: str) -> tuple[dict, dict]:
+    """Write one index generation: the (doc_id, text) `docs` shingled
+    into `shingles_<tag>`, then banded from that read-back (known
+    schema, so no footer-inference job) into `bands_<tag>`. Returns the
+    generation's {table: [dir]} and {table: schema json}."""
+    from ..sources import index_manifest as idx
 
-
-def hof_bands(df: DataFrame) -> DataFrame:
-    """(doc_id, sh) → (doc_id, sh, band, bucket): per-row minhash band
-    projection with NO explode/groupBy — `array_min` over transformed
-    shingle arrays — so it runs identically on batch and (unaggregated)
-    streaming DataFrames. Values are bit-equal to the explode+groupBy
-    path `_signature_bands`: min over the same md5-slice set
-    (`tests/test_datapipe.py` pins it). Shared by the streaming near-dup
-    matcher and the persisted LSH index."""
-    dg = df.withColumn("_dg", F.transform(F.col("sh"), F.md5))
-    sig = dg.select(
-        "doc_id", "sh",
-        *[
-            F.array_min(F.transform(F.col("_dg"), _md5_slice(h)))
-            .alias(f"mh{h}")
-            for h in range(MINHASH_H)
-        ],
-    )
-    return _band_keys(sig, "doc_id", "sh")
+    toks = _with_shingles(docs.select("doc_id", "text")).select(
+        "doc_id", "sh")
+    sdir = idx.new_data_dir(index_root, "shingles", tag)
+    toks.write.mode("overwrite").parquet(sdir)
+    bands = hof_bands(spark.read.schema(toks.schema).parquet(sdir)).select(
+        "doc_id", "band", "bucket")
+    bdir = idx.new_data_dir(index_root, "bands", tag)
+    bands.write.mode("overwrite").parquet(bdir)
+    return ({"shingles": [sdir], "bands": [bdir]},
+            {"shingles": toks.schema.json(), "bands": bands.schema.json()})
 
 
 def lsh_index_build(documents: DataFrame, index_root: str,
@@ -909,21 +942,11 @@ def lsh_index_build(documents: DataFrame, index_root: str,
     text never persists — the index is shingle digests and band keys."""
     from ..sources import index_manifest as idx
 
-    corpus = documents.select("doc_id", "text").filter(
-        (F.col("doc_id") % 100000) < max_doc_id)
-    toks = _with_shingles(corpus).select("doc_id", "sh")
-    sdir = idx.new_data_dir(index_root, "shingles", "b00001")
-    toks.write.mode("overwrite").parquet(sdir)
-    # read-back with the known schema: no footer-inference job
-    toks_t = documents.sparkSession.read.schema(
-        toks.schema).parquet(sdir)
-    bands = hof_bands(toks_t).select("doc_id", "band", "bucket")
-    bdir = idx.new_data_dir(index_root, "bands", "b00001")
-    bands.write.mode("overwrite").parquet(bdir)
+    corpus = documents.filter((F.col("doc_id") % 100000) < max_doc_id)
+    dirs, schemas = _write_generation(documents.sparkSession, index_root,
+                                      corpus, "b00001")
     return idx.commit_manifest(index_root, {"max_doc_id": max_doc_id},
-                               {"shingles": [sdir], "bands": [bdir]},
-                               schemas={"shingles": toks.schema.json(),
-                                        "bands": bands.schema.json()})
+                               dirs, schemas=schemas)
 
 
 def lsh_index_add_batch(spark, index_root: str,
@@ -937,16 +960,8 @@ def lsh_index_add_batch(spark, index_root: str,
     from ..sources import index_manifest as idx
 
     tag = f"b{idx.latest_version(index_root) + 1:05d}"
-    toks = _with_shingles(new_docs.select("doc_id", "text")).select(
-        "doc_id", "sh")
-    sdir = idx.new_data_dir(index_root, "shingles", tag)
-    toks.write.mode("overwrite").parquet(sdir)
-    bdir = idx.new_data_dir(index_root, "bands", tag)
-    (hof_bands(spark.read.schema(toks.schema).parquet(sdir))
-     .select("doc_id", "band", "bucket")
-     .write.mode("overwrite").parquet(bdir))
-    return idx.append_table_dirs(index_root,
-                                 {"shingles": [sdir], "bands": [bdir]})
+    dirs, _ = _write_generation(spark, index_root, new_docs, tag)
+    return idx.append_table_dirs(index_root, dirs)
 
 
 def lsh_index_delete(spark, index_root: str, keys: DataFrame) -> int:
@@ -977,6 +992,18 @@ def lsh_index_compact(spark, index_root: str) -> int:
                               "doc_id")
 
 
+def _index_tables(spark, index_root: str,
+                  version: int | None) -> tuple[DataFrame, DataFrame]:
+    """The persisted index's (bands, shingles) at `version`, each a
+    sequenced scan (`index_manifest.scan_sequenced`): tombstoned docs
+    are gone and re-admitted ones read from their re-add dirs."""
+    from ..sources import index_manifest as idx
+
+    man = idx.read_manifest(index_root, version)
+    return (idx.scan_sequenced(spark, man, "bands", "doc_id"),
+            idx.scan_sequenced(spark, man, "shingles", "doc_id"))
+
+
 def lsh_index_query(spark, index_root: str, probe_docs: DataFrame,
                     threshold: float = 0.5,
                     version: int | None = None) -> DataFrame:
@@ -994,31 +1021,9 @@ def lsh_index_query(spark, index_root: str, probe_docs: DataFrame,
     stale pre-delete array for a re-admitted doc. Output: (doc_a =
     index doc, doc_b = probe doc, jaccard), deduped across multi-band
     matches."""
-    from ..sources import index_manifest as idx
-
-    man = idx.read_manifest(index_root, version)
-    bands_t = idx.scan_sequenced(spark, man, "bands", "doc_id")
-    toks_t = idx.scan_sequenced(spark, man, "shingles", "doc_id")
-    probes = hof_bands(
-        _with_shingles(probe_docs.select("doc_id", "text"))
-        .select("doc_id", "sh")
-    ).select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"),
-             "band", "bucket")
-    cand = probes.join(
-        bands_t.select(F.col("doc_id").alias("doc_a"), "band", "bucket"),
-        ["band", "bucket"])
-    return (
-        cand.join(toks_t.select(F.col("doc_id").alias("doc_a"),
-                                F.col("sh").alias("sh_a")), "doc_a")
-        .select(
-            "doc_a", "doc_b",
-            (F.size(F.array_intersect("sh_a", "sh_b"))
-             / F.size(F.array_union("sh_a", "sh_b"))).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", F.round("jaccard", 6).alias("jaccard"))
-        .distinct()
-    )
+    return _index_matches(_shingle_bands(probe_docs),
+                          *_index_tables(spark, index_root, version),
+                          threshold).distinct()
 
 
 def edit_distance_pairs(documents: DataFrame, max_dist: int = 8,
@@ -1043,9 +1048,7 @@ def edit_distance_pairs(documents: DataFrame, max_dist: int = 8,
     # generator plus BOTH text-fetch joins (same recipe minhash_lsh_pairs
     # applies to this front end)
     corpus = tracked_persist(_bounded_corpus(documents, max_doc_id))
-    toks = _with_shingles(corpus).select("doc_id", "sh")
-    sh = toks.select("doc_id", F.explode(F.col("sh")).alias("shingle"))
-    cand = _band_candidates(sh)
+    cand = _band_candidates(_shingle_bands(corpus))
     texts = corpus.select("doc_id", "text")
     return (
         cand.join(texts.alias("ta"), F.col("doc_a") == F.col("ta.doc_id"))

@@ -26,6 +26,18 @@ from . import cds
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 
+def _driver_memory() -> str:
+    """The driver heap: SPARK_GRAFT_DRIVER_MEM if set, else half of the
+    host's physical memory capped at 16g. The heap fills towards its
+    limit over a long run, so a limit above what the host has ends in
+    the kernel killing the JVM instead of a garbage collection."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(16 << 10, phys // 2 >> 20)}m"
+
+
 def _warehouse_dir() -> str:
     """Warehouse path: SPARK_GRAFT_WAREHOUSE if set (persistent, never
     auto-removed — cross-invocation table sharing, one writer at a time),
@@ -116,7 +128,7 @@ def get_session(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", _driver_memory())
         .config("spark.ui.enabled", "false")
         # the warehouse defaults to a PER-PROCESS dir for the same reason
         # as the Derby home below: two concurrent runs (e.g. a sweep and a

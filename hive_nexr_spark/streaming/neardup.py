@@ -9,14 +9,17 @@ nearest analogue is its GROUP BY rewrite of DISTINCT
 (Broder 1997; the band scheme is the standard Leskovec-Rajaraman-Ullman
 construction) and identical to `datapipe/dedup.minhash_lsh_pairs`.
 
+Every MinHash-LSH step comes from `datapipe/dedup.py`: the band encoder
+`hof_bands`, the probe → index matcher `_index_matches`, the candidate
+self-join `_band_candidates` and the pair verifier `_verified_pairs`.
+
 Scale design (100 TB corpus, unbounded stream):
 - The static index is built ONCE (signatures + band buckets persisted);
   per micro-batch work is proportional to the BATCH, not the corpus.
-- The stream side computes signatures STATELESSLY — `array_min` over a
-  per-row transform of the shingle array (one md5 pass per shingle, then
-  H cheap substring passes) instead of the batch path's explode+groupBy,
-  so no streaming aggregation state exists at all; the only stream-side
-  state is the micro-batch itself.
+- The signature is a per-row projection — `array_min` over the
+  transformed shingle array (one md5 pass per shingle, then H cheap
+  substring passes) — so no streaming aggregation state exists at all;
+  the only stream-side state is the micro-batch itself.
 - Candidate generation is a stream-static equi-join on (band, bucket);
   verification joins the static shingle table by corpus doc_id. Shuffle
   keys are band buckets and ids — raw text never enters an Exchange.
@@ -34,8 +37,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..datapipe import dedup as dd
 from ..datapipe._cache import tracked_persist
-from ..datapipe.dedup import _with_shingles
 
 
 def read_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -46,14 +49,6 @@ def read_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return read_table_stream(spark, sf_dir, "documents")
 
 
-def _hof_bands(df: DataFrame) -> DataFrame:
-    """Stateless per-row minhash band projection — shared implementation
-    in `dedup.hof_bands` (also the persisted-LSH-index encoder)."""
-    from ..datapipe.dedup import hof_bands
-
-    return hof_bands(df)
-
-
 def _incoming(docs: DataFrame, max_doc_id: int) -> DataFrame:
     """The planted arrival stream: the dup-corpus construction's
     synthetic rows only (exact copies +100000, near-dups +200000) —
@@ -61,40 +56,8 @@ def _incoming(docs: DataFrame, max_doc_id: int) -> DataFrame:
     exactly one place (every projection is stateless, so it applies to
     a streaming `docs` unchanged), here playing 'newly ingested
     documents' against the original-documents index."""
-    from ..datapipe.dedup import _bounded_corpus
-
-    return _bounded_corpus(docs, max_doc_id).filter(
+    return dd._bounded_corpus(docs, max_doc_id).filter(
         F.col("doc_id") >= 100000)
-
-
-def _match_against_index(incoming_docs: DataFrame, bands_static: DataFrame,
-                         toks_static: DataFrame,
-                         threshold: float) -> DataFrame:
-    """Shared batch/stream matcher: incoming docs → stateless HOF bands →
-    (band, bucket) equi-join vs the static index → exact-Jaccard verify
-    against the static shingle table. Works on a streaming
-    `incoming_docs` because every step is a projection or stream-static
-    join."""
-    inc = _hof_bands(
-        _with_shingles(incoming_docs).select("doc_id", "sh")
-    ).select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"),
-             "band", "bucket")
-    cand = inc.join(
-        bands_static.select(F.col("doc_id").alias("doc_a"), "band",
-                            "bucket"),
-        ["band", "bucket"],
-    )
-    return (
-        cand.join(toks_static.select(F.col("doc_id").alias("doc_a"),
-                                     F.col("sh").alias("sh_a")), "doc_a")
-        .select(
-            "doc_a", "doc_b",
-            (F.size(F.array_intersect("sh_a", "sh_b"))
-             / F.size(F.array_union("sh_a", "sh_b"))).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", F.round("jaccard", 6).alias("jaccard"))
-    )
 
 
 def _static_index(spark: SparkSession, sf_dir: str, max_doc_id: int):
@@ -105,12 +68,10 @@ def _static_index(spark: SparkSession, sf_dir: str, max_doc_id: int):
         (F.col("doc_id") % 100000) < max_doc_id)
     # repartition(1): the static index slice is max_doc_id rows — cached
     # at shuffle granularity every per-batch stream-static join scanned
-    # it as a core-count task wave (r14)
+    # it as a core-count task wave
     toks_static = tracked_persist(
-        _with_shingles(corpus).select("doc_id", "sh").repartition(1))
-    bands_static = _hof_bands(toks_static).select("doc_id", "band",
-                                                  "bucket")
-    return docs, toks_static, bands_static
+        dd._with_shingles(corpus).select("doc_id", "sh").repartition(1))
+    return docs, toks_static, dd.hof_bands(toks_static)
 
 
 def stream_neardup(spark: SparkSession, sf_dir: str,
@@ -122,8 +83,9 @@ def stream_neardup(spark: SparkSession, sf_dir: str,
     matching in several bands arrive once per band)."""
     _, toks_static, bands_static = _static_index(spark, sf_dir, max_doc_id)
     stream = read_documents_stream(spark, sf_dir)
-    matched = _match_against_index(
-        _incoming(stream, max_doc_id), bands_static, toks_static, threshold)
+    matched = dd._index_matches(
+        dd._shingle_bands(_incoming(stream, max_doc_id)), bands_static,
+        toks_static, threshold)
     name = f"stream_neardup_{uuid.uuid4().hex[:8]}"
     q = (matched.writeStream.outputMode("append").format("memory")
          .queryName(name).start())
@@ -155,40 +117,33 @@ def _gate_decisions(spark: SparkSession, index_root: str,
     n_index_matches, best_jaccard, admitted 0/1, n_batch_matches,
     batch_dup_of).
 
-    The last two columns (r12) SURFACE intra-batch duplicates — arrivals
+    The last two columns SURFACE intra-batch duplicates — arrivals
     that near-dup EACH OTHER within this batch, which the frozen-index
     contract deliberately admits both of (the offline pass owns them):
-    a within-batch band self-join + exact-Jaccard verify, n_batch_matches
-    = distinct batch peers >= threshold, batch_dup_of = the smallest such
-    peer id (NULL when none). They describe the batch itself, so they
-    are the one part of the table that depends on batching; the
-    frozen-index columns (n_index_matches, best_jaccard, admitted)
-    remain batch-boundary-independent — the determinism contract."""
-    from ..datapipe import dedup as dd
-
-    pairs = dd.lsh_index_query(spark, index_root, batch, threshold,
-                               version=frozen_version)
-    m = (pairs.groupBy(F.col("doc_b").alias("doc_id"))
+    the batch's band-candidate pairs, verified by exact Jaccard and
+    counted from both ends, n_batch_matches = batch peers >= threshold,
+    batch_dup_of = the smallest such peer id (NULL when none). They
+    describe the batch itself, so they are the one part of the table
+    that depends on batching; the frozen-index columns
+    (n_index_matches, best_jaccard, admitted) remain
+    batch-boundary-independent — the determinism contract. The batch
+    is shingled and banded in one place (`probes`), which feeds both
+    the index probe and the candidate self-join."""
+    toks = dd._with_shingles(batch.select("doc_id", "text")).select(
+        "doc_id", "sh")
+    probes = dd.hof_bands(toks)
+    bands_t, toks_t = dd._index_tables(spark, index_root, frozen_version)
+    m = (dd._index_matches(probes, bands_t, toks_t, threshold).distinct()
+         .groupBy(F.col("doc_b").alias("doc_id"))
          .agg(F.count("*").cast("int").alias("n_index_matches"),
               F.max("jaccard").alias("best_jaccard")))
-    pb = _hof_bands(
-        _with_shingles(batch.select("doc_id", "text"))
-        .select("doc_id", "sh"))
-    bpairs = (
-        pb.alias("x").join(
-            pb.alias("y"),
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.bucket") == F.col("y.bucket"))
-            & (F.col("x.doc_id") != F.col("y.doc_id")))
-        .select(
-            F.col("x.doc_id").alias("doc_id"),
-            F.col("y.doc_id").alias("peer"),
-            (F.size(F.array_intersect("x.sh", "y.sh"))
-             / F.size(F.array_union("x.sh", "y.sh"))).alias("j"))
-        .filter(F.col("j") >= threshold))
-    bm = (bpairs.groupBy("doc_id")
-          .agg(F.count_distinct("peer").cast("int")
-               .alias("n_batch_matches"),
+    pairs = dd._verified_pairs(dd._band_candidates(probes), toks, threshold)
+    peers = pairs.select(F.explode(F.array(
+        F.struct(F.col("doc_a").alias("doc_id"), F.col("doc_b").alias("peer")),
+        F.struct(F.col("doc_b").alias("doc_id"), F.col("doc_a").alias("peer")),
+    )).alias("p")).select("p.*")
+    bm = (peers.groupBy("doc_id")
+          .agg(F.count("*").cast("int").alias("n_batch_matches"),
                F.min("peer").alias("batch_dup_of")))
     return (
         batch.select("doc_id").join(m, "doc_id", "left")
@@ -228,7 +183,7 @@ def stream_dedup_ingest(spark: SparkSession, sf_dir: str,
     Intra-stream duplicates OF EACH OTHER are therefore both admitted
     and left to the periodic offline dedup pass — the standard posture
     for a streaming gate (the historical index is the contract; the
-    batch MinHash job owns intra-window dups) — but since r12 they are
+    batch MinHash job owns intra-window dups) — but they are
     SURFACED: each decision row carries (n_batch_matches, batch_dup_of)
     from a within-batch band self-join, so the downstream router can see
     which admitted docs arrived alongside their own near-dups. These two
@@ -240,7 +195,6 @@ def stream_dedup_ingest(spark: SparkSession, sf_dir: str,
     id-keyed shingle fetch for verification, one O(batch) parquet
     append; ZERO streaming state, no watermark. Landing-table append is
     the idempotent pattern shared with `events.stream_cdc_upsert`."""
-    from ..datapipe import dedup as dd
     from ..queries.base import ensure_views
     from ..scratch import process_scratch_dir
 
@@ -289,7 +243,6 @@ def dedup_ingest_batch_twin(spark: SparkSession, sf_dir: str,
     """The one-shot batch computation of the same decision table — the
     value oracle for the streaming gate (decisions depend only on the
     frozen index, so batching cannot matter)."""
-    from ..datapipe import dedup as dd
     from ..datapipe.similarity import _index_scratch
     from ..queries.base import ensure_views
 
@@ -309,6 +262,6 @@ def neardup_batch_twin(spark: SparkSession, sf_dir: str,
     and the plan-test surface for the stream's physical shape."""
     docs, toks_static, bands_static = _static_index(spark, sf_dir,
                                                     max_doc_id)
-    return _match_against_index(
-        _incoming(docs.select("doc_id", "text"), max_doc_id),
-        bands_static, toks_static, threshold).distinct()
+    return dd._index_matches(
+        dd._shingle_bands(_incoming(docs, max_doc_id)), bands_static,
+        toks_static, threshold).distinct()

@@ -1081,26 +1081,40 @@ def test_lsh_index_lifecycle(dfs, spark):
 
 
 def test_hof_bands_equal_signature_bands(dfs):
-    """The stateless per-row band projection (`hof_bands`, used by the
-    persisted LSH index and the streaming matchers) must give the same
-    (doc_id, band, bucket) rows as the explode+groupBy signature path,
-    on documents long enough (8-64 distinct shingles) that a minhash
-    slot bound to the element index would differ; and over the 200-doc
-    index slice every band must spread documents over more than one
-    bucket (a constant bucket makes candidate generation all-pairs)."""
+    """The band encoder (`hof_bands`, the one MinHash signature of every
+    LSH path) must give the same (doc_id, band, bucket) rows as the
+    oracles' signature formula, minhash h = min(substr(md5(shingle),
+    5h+1, 5)) over a doc's shingles, run in DuckDB as in
+    `_lsh_match_sql`, on documents long enough (8-64 distinct shingles)
+    that a minhash slot bound to the element index would differ; and
+    over the 200-doc index slice every band must spread documents over
+    more than one bucket (a constant bucket makes candidate generation
+    all-pairs)."""
+    import duckdb
+    import pyarrow as pa
+
     from hive_nexr_spark.datapipe import dedup
 
     toks = dedup._with_shingles(
         dfs["documents"].filter(F.col("doc_id") < 200)
     ).select("doc_id", "sh")
     mid = toks.filter(F.size("sh").between(8, 64))
-    assert mid.count() > 0
+    rows = mid.select("doc_id", F.explode("sh").alias("shingle")).collect()
+    assert rows
     hof = {tuple(r) for r in
            dedup.hof_bands(mid).select("doc_id", "band", "bucket")
            .collect()}
-    sig = {tuple(r) for r in dedup._signature_bands(
-        mid.select("doc_id", F.explode("sh").alias("shingle"))).collect()}
-    assert hof == sig and hof
+    mins = ", ".join(f"min(substr(md5(shingle), {h * 5 + 1}, 5)) AS mh{h}"
+                     for h in range(dedup.MINHASH_H))
+    con = duckdb.connect()
+    con.register("sh", pa.table({"doc_id": [r.doc_id for r in rows],
+                                 "shingle": [r.shingle for r in rows]}))
+    oracle = set(con.execute(f"""
+        WITH sig AS (SELECT doc_id, {mins} FROM sh GROUP BY doc_id)
+        SELECT doc_id, 0 AS band, mh0 || mh1 AS bucket FROM sig
+        UNION ALL SELECT doc_id, 1, mh2 || mh3 FROM sig
+        UNION ALL SELECT doc_id, 2, mh4 || mh5 FROM sig""").fetchall())
+    assert hof == oracle and hof
     spread = dict(dedup.hof_bands(toks).groupBy("band")
                   .agg(F.count_distinct("bucket")).collect())
     assert set(spread) == set(range(dedup.MINHASH_BANDS))

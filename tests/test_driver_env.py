@@ -99,3 +99,29 @@ def test_driver_red_queries_match_under_vanilla_session(tmp_path, spark):
         assert got[name] == exp, (
             f"{name}: vanilla-session result diverges from pinned-session "
             f"result (rows/hash {got[name]} vs {exp})")
+
+
+def _physical_bytes() -> int:
+    return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+
+
+def test_default_driver_heap_fits_physical_memory(monkeypatch):
+    """Without SPARK_GRAFT_DRIVER_MEM the driver heap is half of the
+    host's physical memory, never more than 16g; the variable, when set,
+    wins."""
+    from hive_nexr_spark import session
+
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    mem = session._driver_memory()
+    assert mem.endswith("m"), mem
+    heap = int(mem[:-1]) << 20
+    assert 0 < heap <= min(_physical_bytes() // 2, 16 << 30), mem
+
+    monkeypatch.setattr(session.os, "sysconf",
+                        lambda name: {"SC_PAGE_SIZE": 4096,
+                                      "SC_PHYS_PAGES": (256 << 30) // 4096,
+                                      }[name])
+    assert session._driver_memory() == f"{16 << 10}m"
+
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "3g")
+    assert session._driver_memory() == "3g"
