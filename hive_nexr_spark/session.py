@@ -63,6 +63,18 @@ def _derby_home() -> str:
     return path
 
 
+def _export_package_path() -> None:
+    """Put this package's parent directory on the PYTHONPATH the driver
+    JVM and its Python workers inherit. A caller that found the package
+    through its own `sys.path` (a tool started outside the repo root)
+    otherwise runs UDFs in workers that cannot import it."""
+    parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    paths = [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep)
+             if p]
+    if parent not in paths:
+        os.environ["PYTHONPATH"] = os.pathsep.join([parent, *paths])
+
+
 def get_session(
     app_name: str = "hive-nexr-spark",
     master: str | None = None,
@@ -167,6 +179,7 @@ def get_session(
         # such as perfbench replace extraJavaOptions; set only with an
         # archive flag, so a spark-defaults.conf value otherwise applies.
         archive = cds.DriverArchive(_find_spark_home())
+        _export_package_path()
         if archive.java_options:
             builder = builder.config("spark.driver.defaultJavaOptions",
                                      archive.java_options)

@@ -3,11 +3,17 @@
 Two manifest families share one commit protocol, implemented once here:
 
 - snapshot tables (`snapshots.py`): `<base>/v{N}.json` with `dirs`,
-  `deletes`, `key`, `dir_seqs`, `delete_seqs`, `dir_parts`, `schema`;
-  named refs in `<base>/refs.{N}.json`;
+  `deletes`, `key`, `dir_seqs`, `delete_seqs`, `dir_parts`, `schema`,
+  `schemas`; named refs in `<base>/refs.{N}.json`;
 - named-table indexes (the LSH dedup index, the IVF-PQ vector index):
   `<root>/manifest/v{NNNNN}.json` with `version`, `params`, `tables`,
   `seqs`, `schemas`, data in `<root>/<table>_<tag>/`.
+
+Both families record their table schemas in `schemas` (table or role
+name → StructType JSON), so a reader plans its scan from the manifest
+alone (`table_reader`), as Hive reads a table's columns from the
+metastore instead of from its files: no parquet footer-inference job
+runs before the query.
 
 The shared protocol:
 
@@ -53,6 +59,7 @@ from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, DataFrameReader, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TOMBSTONES = "tombstones"
 
@@ -116,30 +123,29 @@ def applicable_tombs(seqs: dict, tombs: list[str],
     return tuple(sorted(t for t in tombs if seqs[t] > seqs[data_dir]))
 
 
-def read_sequenced(reader: DataFrameReader, dirs: list[str],
-                   tombs: list[str], seqs: dict, key_col: str,
-                   tomb_reader: DataFrameReader,
+def read_sequenced(reader: Callable[[object], DataFrameReader],
+                   dirs: list[str], tombs: list[str], seqs: dict,
+                   key_col: str, tomb_reader: DataFrameReader,
                    group: Callable[[str], object] | None = None,
                    project: Callable[[DataFrame, object], DataFrame]
                    | None = None) -> DataFrame:
     """Scan `dirs` with SEQUENCED tombstones applied: the one tombstone
     grouping behind every snapshot and index read. Dirs are grouped by
     applicable-tombstone set (and by `group(dir)` when given); each
-    group is ONE multi-dir scan through `reader` with at most one
+    group is ONE multi-dir scan through `reader(group)` with at most one
     broadcast anti-join on `key_col` against its tombstones (read
     through `tomb_reader`), shaped by `project(df, group)` when given,
     and the groups union by name. Dirs newer than every tombstone scan
     clean, so common shapes collapse to one or two groups and the cost
     over a plain scan is one broadcast of the O(|deleted|) key set.
-    The readers are the caller's, so mergeSchema or a recorded schema
-    (and with it every plan and job count) stays the caller's choice."""
+    The readers are the caller's (`table_reader` for both families)."""
     groups: dict[tuple, list[str]] = {}
     for d in dirs:
         key = (applicable_tombs(seqs, tombs, d), group(d) if group else None)
         groups.setdefault(key, []).append(d)
     parts = []
     for (ts, g), ds in groups.items():
-        df = reader.parquet(*ds)
+        df = reader(g).parquet(*ds)
         if ts:
             df = df.join(F.broadcast(tomb_reader.parquet(*ts)), key_col,
                          "left_anti")
@@ -329,16 +335,20 @@ def remove_orphans(root: str,
     return _log(root).remove_orphans(older_than_seconds)
 
 
-def _reader(spark: SparkSession, man: dict, table: str) -> DataFrameReader:
-    """A reader with the manifest-recorded schema of `table` (skips the
-    footer-inference job); schema inference for tables committed
-    without one."""
+def table_reader(spark: SparkSession, man: dict, table: str,
+                 merge_schema: bool = False) -> DataFrameReader:
+    """A reader with the schema `man` records for `table` (an index
+    table name, or a snapshot role: `data` or `tombstones`): the scan
+    plans from the manifest alone, without the parquet footer-inference
+    job. A manifest that records none (hand-written, or committed
+    without a schema) infers instead, merging every footer when
+    `merge_schema` (snapshot data, whose deltas may add columns)."""
     sj = man["schemas"].get(table)
-    if not sj:
-        return spark.read
-    from pyspark.sql.types import StructType
-
-    return spark.read.schema(StructType.fromJson(json.loads(sj)))
+    if sj:
+        return spark.read.schema(StructType.fromJson(json.loads(sj)))
+    if merge_schema:
+        return spark.read.option("mergeSchema", "true")
+    return spark.read
 
 
 def read_index_table(spark: SparkSession, root: str, name: str,
@@ -346,7 +356,7 @@ def read_index_table(spark: SparkSession, root: str, name: str,
     """Scan exactly the directories the manifest lists for `name` —
     the AS-OF read path; old versions stay consistent after add-batch."""
     man = read_manifest(root, version)
-    return _reader(spark, man, name).parquet(*man["tables"][name])
+    return table_reader(spark, man, name).parquet(*man["tables"][name])
 
 
 def scan_sequenced(spark: SparkSession, man: dict, table: str,
@@ -356,9 +366,9 @@ def scan_sequenced(spark: SparkSession, man: dict, table: str,
     for the IVF-PQ vector index). A key deleted then re-added survives:
     its re-add dirs outsequence the tombstone."""
     return read_sequenced(
-        _reader(spark, man, table), man["tables"][table],
+        lambda _: table_reader(spark, man, table), man["tables"][table],
         man["tables"].get(TOMBSTONES, []), man["seqs"], key_col,
-        _reader(spark, man, TOMBSTONES))
+        table_reader(spark, man, TOMBSTONES))
 
 
 def commit_tombstones(root: str, keys: DataFrame, key_col: str) -> int:

@@ -10,12 +10,13 @@ analogue is INSERT OVERWRITE into a dated partition; the manifest
 indirection is what makes point-in-time reads cheap and atomic.
 
 The engine mechanics are real: manifests are JSON files on disk, delta
-dirs are parquet, readers use `spark.read.parquet(*dirs)` over the
-manifest's list. Only the catalog (a scratch dir instead of a metastore
-table-property chain) is simplified. The commit protocol (exclusive
-create, sequenced tombstones, append retry, expiry and orphan reclaim)
-is the one in `index_manifest.py`; this module keeps the snapshot
-format `<base>/v{N}.json`:
+dirs are parquet, readers scan the manifest's dir list with the schema
+the manifest records (`index_manifest.table_reader`), so planning a
+read opens no parquet footer. Only the catalog (a scratch dir instead
+of a metastore table-property chain) is simplified. The commit
+protocol (exclusive create, sequenced tombstones, append retry, expiry
+and orphan reclaim) is the one in `index_manifest.py`; this module
+keeps the snapshot format `<base>/v{N}.json`:
 
     dirs         data dirs visible at this version
     deletes      tombstone dirs (equality deletes on `key`)
@@ -24,21 +25,30 @@ format `<base>/v{N}.json`:
     dir_parts    data dir → partition value (partitioned appends)
     schema       field-ID schema [{"id", "name"}], or None until the
                  first ALTER initializes tracking
+    schemas      role (`data`, `tombstones`) → StructType JSON of the
+                 listed dirs, as a footer-merging read infers it: every
+                 field nullable, earlier fields first. A role is absent
+                 while its dirs' columns are unknown (a commit that
+                 wrote no schema); its reads then infer.
 """
 
 from __future__ import annotations
 
 import json
 import os
+from typing import Callable
 
 from pyspark.sql import DataFrame, DataFrameReader, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (ArrayType, DataType, MapType, StructField,
+                               StructType)
 
 from ..io import local_frame
 from . import index_manifest as idx
 
 _EMPTY = {"dirs": [], "deletes": [], "key": None, "dir_seqs": {},
-          "delete_seqs": {}, "dir_parts": {}, "schema": None}
+          "delete_seqs": {}, "dir_parts": {}, "schema": None,
+          "schemas": {}}
 
 
 def _log(base: str) -> idx.ManifestLog:
@@ -51,7 +61,7 @@ def _latest(base: str) -> int:
 
 
 def _load_manifest(base: str, version: int) -> dict:
-    return _log(base).load(version)
+    return {**_EMPTY, **_log(base).load(version)}
 
 
 def _write_manifest(base: str, man: dict) -> None:
@@ -78,24 +88,79 @@ def _commit_changes(base: str, prev: dict, version: int,
     return version
 
 
-def _commit(base: str, version: int, new_dir: str | None) -> int:
+def _nullable(dt: DataType) -> DataType:
+    """`dt` as a parquet read infers it back: every field, element and
+    value nullable."""
+    if isinstance(dt, StructType):
+        return StructType([StructField(f.name, _nullable(f.dataType), True,
+                                       f.metadata) for f in dt.fields])
+    if isinstance(dt, ArrayType):
+        return ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
+
+
+_ROLE_DIRS = {"data": "dirs", idx.TOMBSTONES: "deletes"}
+
+
+def _schemas(prev: dict, **written: StructType | None) -> dict:
+    """`prev`'s recorded schemas with the schema each role (`data`,
+    `tombstones`) was just written with merged in: the previous fields,
+    then the new ones (a field written again takes its new type), as a
+    footer-merging read surfaces them. A role written without a schema,
+    or whose earlier dirs have no recorded one, is left unrecorded:
+    its columns are unknown, so its reads infer."""
+    out = dict(prev["schemas"])
+    for role, schema in written.items():
+        old = out.get(role)
+        if schema is None or (prev[_ROLE_DIRS[role]] and not old):
+            out.pop(role, None)
+            continue
+        fields = {f.name: f for f in
+                  (StructType.fromJson(json.loads(old)).fields
+                   if old else [])}
+        fields.update((f.name, f) for f in _nullable(schema).fields)
+        out[role] = StructType(list(fields.values())).json()
+    return out
+
+
+def _commit(base: str, version: int, new_dir: str | None,
+            schema: StructType | None = None) -> int:
     """Append-only commit: manifest v<N> = v<N-1> dirs + the new delta
-    dir, stamped with sequence N."""
+    dir, stamped with sequence N. `schema` is the frame the delta was
+    written from; without it the table's data schema goes unrecorded
+    and its reads infer from the footers."""
     prev = _prev(base, version)
     new = [new_dir] if new_dir else []
     return _commit_changes(
         base, prev, version, dirs=prev["dirs"] + new,
-        dir_seqs={**prev["dir_seqs"], **{d: version for d in new}})
+        dir_seqs={**prev["dir_seqs"], **{d: version for d in new}},
+        schemas=_schemas(prev, data=schema) if new else prev["schemas"])
+
+
+def _commit_frame(base: str, version: int, name: str,
+                  df: DataFrame) -> str:
+    """Write `df` as the delta dir `<base>/<name>` and `_commit` it as
+    `version` with its schema (the fixtures' append). Returns the
+    dir."""
+    d = os.path.join(base, name)
+    df.write.parquet(d)
+    _commit(base, version, d, df.schema)
+    return d
 
 
 def _scan(spark: SparkSession, man: dict, dirs: list[str],
-          reader: DataFrameReader, **kw) -> DataFrame:
+          reader: Callable[[object], DataFrameReader] | None = None,
+          **kw) -> DataFrame:
     """`index_manifest.read_sequenced` over a snapshot manifest: its
-    `deletes` are the tombstones, keyed on `key`."""
+    `deletes` are the tombstones, keyed on `key`, and both read with
+    the schemas `man` records (`reader(group)` replaces the data
+    reader)."""
     return idx.read_sequenced(
-        reader, dirs, man["deletes"],
-        {**man["dir_seqs"], **man["delete_seqs"]}, man["key"],
-        spark.read, **kw)
+        reader or (lambda _: idx.table_reader(spark, man, "data", True)),
+        dirs, man["deletes"], {**man["dir_seqs"], **man["delete_seqs"]},
+        man["key"], idx.table_reader(spark, man, idx.TOMBSTONES), **kw)
 
 
 def commit_delete(spark: SparkSession, base: str, keys: DataFrame,
@@ -112,11 +177,13 @@ def commit_delete(spark: SparkSession, base: str, keys: DataFrame,
     Returns the new version."""
     v = _latest(base) + 1
     tdir = os.path.join(base, f"tombstones_v{v}")
-    keys.select(key_col).write.parquet(tdir)
+    tomb = keys.select(key_col)
+    tomb.write.parquet(tdir)
     prev = _prev(base, v)
     return _commit_changes(
         base, prev, v, deletes=prev["deletes"] + [tdir], key=key_col,
-        delete_seqs={**prev["delete_seqs"], tdir: v})
+        delete_seqs={**prev["delete_seqs"], tdir: v},
+        schemas=_schemas(prev, tombstones=tomb.schema))
 
 
 def commit_append_with_retry(base: str, new_dir: str | None,
@@ -142,18 +209,23 @@ def commit_merge_upsert(spark: SparkSession, base: str,
     regardless of table size, the merge-on-read property copy-on-write
     MERGE lacks. A key deleted earlier and re-upserted becomes visible
     again (re-insert-after-delete — exactly what unsequenced tombstones
-    could not express). Returns the new version."""
+    could not express). The keys are read back from the written dir,
+    so `updates` is computed once. Returns the new version."""
     v = _latest(base) + 1
     udir = os.path.join(base, f"upsert_v{v}")
     updates.write.parquet(udir)
     tdir = os.path.join(base, f"tombstones_v{v}")
-    updates.select(key_col).write.parquet(tdir)
+    tomb = spark.read.schema(_nullable(updates.schema)).parquet(
+        udir).select(key_col)
+    tomb.write.parquet(tdir)
     prev = _prev(base, v)
     return _commit_changes(
         base, prev, v, dirs=prev["dirs"] + [udir],
         deletes=prev["deletes"] + [tdir], key=key_col,
         dir_seqs={**prev["dir_seqs"], udir: v},
-        delete_seqs={**prev["delete_seqs"], tdir: v})
+        delete_seqs={**prev["delete_seqs"], tdir: v},
+        schemas=_schemas(prev, data=updates.schema,
+                         tombstones=tomb.schema))
 
 
 def compact(spark: SparkSession, base: str) -> int:
@@ -168,10 +240,12 @@ def compact(spark: SparkSession, base: str) -> int:
     scans stop paying the anti-join after it. Returns the new version."""
     v = _latest(base) + 1
     cdir = os.path.join(base, f"compacted_v{v}")
-    read_version(spark, base, v - 1).write.parquet(cdir)
+    df = read_version(spark, base, v - 1)
+    df.write.parquet(cdir)
     return _commit_changes(base, _prev(base, v), v, dirs=[cdir],
                            deletes=[], dir_seqs={cdir: v},
-                           delete_seqs={}, dir_parts={})
+                           delete_seqs={}, dir_parts={},
+                           schemas=_schemas(_EMPTY, data=df.schema))
 
 
 def commit_append_partitioned(spark: SparkSession, base: str,
@@ -226,15 +300,16 @@ def commit_append_partitioned(spark: SparkSession, base: str,
         seqs[d] = v
     shutil.rmtree(tmp)
     return _commit_changes(base, prev, v, dirs=dirs, dir_seqs=seqs,
-                           dir_parts=parts)
+                           dir_parts=parts,
+                           schemas=_schemas(prev, data=df.schema))
 
 
 def _replace_dirs(base: str, man: dict, old: list[str], new_dir: str,
-                  part: str | None) -> int:
+                  part: str | None, schema: StructType) -> int:
     """Commit the next version with the data dirs `old` replaced by the
-    compacted `new_dir` (tagged with partition `part` unless None);
-    every other dir keeps its path, sequence and partition, and the
-    tombstones stay listed for them."""
+    compacted `new_dir` (written with `schema`, tagged with partition
+    `part` unless None); every other dir keeps its path, sequence and
+    partition, and the tombstones stay listed for them."""
     v = man["version"] + 1
     parts = {d: p for d, p in man["dir_parts"].items() if d not in old}
     if part is not None:
@@ -243,7 +318,8 @@ def _replace_dirs(base: str, man: dict, old: list[str], new_dir: str,
     seqs[new_dir] = v
     return _commit_changes(
         base, man, v, dirs=[d for d in man["dirs"] if d not in old]
-        + [new_dir], dir_seqs=seqs, dir_parts=parts)
+        + [new_dir], dir_seqs=seqs, dir_parts=parts,
+        schemas=_schemas(man, data=schema))
 
 
 def compact_partition(spark: SparkSession, base: str,
@@ -268,8 +344,10 @@ def compact_partition(spark: SparkSession, base: str,
         raise ValueError(f"no data dirs for partition {part_value!r}")
     tag = str(part_value).replace("/", "_").replace(" ", "_")
     cdir = os.path.join(base, f"compacted_v{man['version'] + 1}_p{tag}")
-    _scan(spark, man, affected, spark.read).write.parquet(cdir)
-    return _replace_dirs(base, man, affected, cdir, str(part_value))
+    df = _visible(spark, base, man, affected)
+    df.write.parquet(cdir)
+    return _replace_dirs(base, man, affected, cdir, str(part_value),
+                         df.schema)
 
 
 def _payload_bytes(d: str) -> int:
@@ -301,11 +379,11 @@ def compact_binpack(spark: SparkSession, base: str,
     if len(small) < 2:
         return man["version"]
     cdir = os.path.join(base, f"binpack_v{man['version'] + 1}")
-    _scan(spark, man, small,
-          spark.read.option("mergeSchema", "true")).write.parquet(cdir)
+    df = _visible(spark, base, man, small)
+    df.write.parquet(cdir)
     small_parts = {man["dir_parts"].get(d) for d in small}
     part = small_parts.pop() if len(small_parts) == 1 else None
-    return _replace_dirs(base, man, small, cdir, part)
+    return _replace_dirs(base, man, small, cdir, part, df.schema)
 
 
 def expire_snapshots(base: str, keep_from: int) -> list[str]:
@@ -345,15 +423,20 @@ def read_version(spark: SparkSession, base: str, version: int) -> DataFrame:
     common shapes collapse to one or two groups: append-only tables
     have none tombstoned; a MERGE's own dir is the lone clean group."""
     man = _load_manifest(base, version)
+    return _visible(spark, base, man, man["dirs"])
+
+
+def _visible(spark: SparkSession, base: str, man: dict,
+             dirs: list[str]) -> DataFrame:
+    """The rows of `dirs` visible at `man`, under its column names:
+    what a read returns and what a compaction rewrites."""
     if man["schema"]:
-        return _read_version_evolved(spark, base, man)
-    # mergeSchema: commits may EVOLVE the schema (a later delta adds a
-    # column — Iceberg add-column semantics); the merged read surfaces
-    # the union schema with NULLs for pre-evolution rows. (Iceberg keeps
-    # the schema in metadata instead of merging footers; the property —
-    # old files never rewritten on ADD COLUMN — is the same.)
-    return _scan(spark, man, man["dirs"],
-                 spark.read.option("mergeSchema", "true"))
+        return _read_version_evolved(spark, base, man, dirs)
+    # commits may EVOLVE the schema (a later delta adds a column —
+    # Iceberg add-column semantics): the recorded data schema is the
+    # union, so pre-evolution rows read back with NULLs and old files
+    # are never rewritten on ADD COLUMN.
+    return _scan(spark, man, dirs)
 
 
 def _first_schema_version(base: str, upto: int) -> int:
@@ -370,8 +453,8 @@ def _first_schema_version(base: str, upto: int) -> int:
     raise RuntimeError(f"no schema'd manifest <= v{upto} under {base}")
 
 
-def _read_version_evolved(spark: SparkSession, base: str,
-                          man: dict) -> DataFrame:
+def _read_version_evolved(spark: SparkSession, base: str, man: dict,
+                          dirs: list[str]) -> DataFrame:
     """Schema-aware AS-OF read (r13 — Iceberg's field-ID column
     mapping): each data dir's physical column names are the names in
     effect WHEN IT WAS WRITTEN (the schema of the manifest at its
@@ -383,24 +466,29 @@ def _read_version_evolved(spark: SparkSession, base: str,
     untouched, still visible AS-OF pre-drop), and fields a dir never
     wrote arrive NULL via the union. Tombstones apply per sequence
     group exactly as in the plain path; the write schema is one more
-    group key."""
+    group key, and each group reads with the data schema recorded at
+    its write version."""
     target = man["schema"]
     first_v = _first_schema_version(base, man["version"])
-    cache: dict[int, list[dict]] = {}
+    cache: dict[int, dict] = {}
+
+    def at(ws_v: int) -> dict:
+        if ws_v not in cache:
+            cache[ws_v] = _load_manifest(base, ws_v)
+        return cache[ws_v]
 
     def write_version(d: str) -> int:
         return max(man["dir_seqs"][d], first_v)
 
     def project(df: DataFrame, ws_v: int) -> DataFrame:
-        if ws_v not in cache:
-            cache[ws_v] = _load_manifest(base, ws_v)["schema"]
-        phys = {f["id"]: f["name"] for f in cache[ws_v]}
+        phys = {f["id"]: f["name"] for f in at(ws_v)["schema"]}
         return df.select(*[F.col(phys[f["id"]]).alias(f["name"])
                            for f in target if f["id"] in phys
                            and phys[f["id"]] in df.columns])
 
-    return _scan(spark, man, man["dirs"],
-                 spark.read.option("mergeSchema", "true"),
+    return _scan(spark, man, dirs,
+                 lambda ws_v: idx.table_reader(spark, at(ws_v), "data",
+                                               True),
                  group=write_version, project=project)
 
 
@@ -490,12 +578,10 @@ def _build_delete_table(spark: SparkSession, sf_dir: str) -> str:
     orders = spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
     base = process_scratch_dir("snapdel")
     os.makedirs(base, exist_ok=True)
-    v1_dir = os.path.join(base, "data_v1")
-    orders.filter(F.col("o_orderkey") % 3 != 0).write.parquet(v1_dir)
-    _commit(base, 1, v1_dir)
-    delta_dir = os.path.join(base, "data_v2_delta")
-    orders.filter(F.col("o_orderkey") % 3 == 0).write.parquet(delta_dir)
-    _commit(base, 2, delta_dir)
+    _commit_frame(base, 1, "data_v1",
+                  orders.filter(F.col("o_orderkey") % 3 != 0))
+    _commit_frame(base, 2, "data_v2_delta",
+                  orders.filter(F.col("o_orderkey") % 3 == 0))
     commit_delete(spark, base,
                   orders.filter(F.col("o_orderkey") % 5 == 0)
                   .select("o_orderkey"), "o_orderkey")
@@ -749,16 +835,13 @@ def schema_evolution_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
     base = process_scratch_dir("snapevo2")
     os.makedirs(base, exist_ok=True)
-    v1_dir = os.path.join(base, "data_v1")
-    orders.filter(F.col("o_orderkey") % 3 != 0).write.parquet(v1_dir)
-    _commit(base, 1, v1_dir)
-    delta_dir = os.path.join(base, "data_v2_delta")
-    (orders.filter(F.col("o_orderkey") % 3 == 0)
-     .withColumn("o_channel",
-                 F.when(F.col("o_orderkey") % 2 == 0, "web")
-                 .otherwise("store"))
-     .write.parquet(delta_dir))
-    _commit(base, 2, delta_dir)
+    _commit_frame(base, 1, "data_v1",
+                  orders.filter(F.col("o_orderkey") % 3 != 0))
+    _commit_frame(base, 2, "data_v2_delta",
+                  orders.filter(F.col("o_orderkey") % 3 == 0)
+                  .withColumn("o_channel",
+                              F.when(F.col("o_orderkey") % 2 == 0, "web")
+                              .otherwise("store")))
 
     def stats(v: int) -> DataFrame:
         df = read_version(spark, base, v)
@@ -804,23 +887,19 @@ def schema_rename_drop_stats(spark: SparkSession,
     os.makedirs(base, exist_ok=True)
     channel = (F.when(F.col("o_orderkey") % 2 == 0, "web")
                .otherwise("store").alias("o_channel"))
-    v1_dir = os.path.join(base, "data_v1")
-    orders.filter(F.col("o_orderkey") % 3 != 0).write.parquet(v1_dir)
-    _commit(base, 1, v1_dir)
-    delta_dir = os.path.join(base, "data_v2_delta")
-    (orders.filter(F.col("o_orderkey") % 3 == 0)
-     .select("*", channel).write.parquet(delta_dir))
-    _commit(base, 2, delta_dir)
+    _commit_frame(base, 1, "data_v1",
+                  orders.filter(F.col("o_orderkey") % 3 != 0))
+    _commit_frame(base, 2, "data_v2_delta",
+                  orders.filter(F.col("o_orderkey") % 3 == 0)
+                  .select("*", channel))
     assert alter_rename_column(spark, base, "o_totalprice",
                                "o_amount") == 4  # 3 = init commit
     assert alter_drop_column(spark, base, "o_orderpriority") == 5
-    d6 = os.path.join(base, "data_v6_newnames")
-    (orders.filter(F.col("o_orderkey") % 7 == 0)
-     .select("o_orderkey", "o_custkey", "o_orderstatus",
-             F.col("o_totalprice").alias("o_amount"), "o_orderdate",
-             channel)
-     .write.parquet(d6))
-    _commit(base, 6, d6)
+    _commit_frame(base, 6, "data_v6_newnames",
+                  orders.filter(F.col("o_orderkey") % 7 == 0)
+                  .select("o_orderkey", "o_custkey", "o_orderstatus",
+                          F.col("o_totalprice").alias("o_amount"),
+                          "o_orderdate", channel))
 
     def stats(v: int) -> DataFrame:
         df = read_version(spark, base, v)
@@ -868,9 +947,7 @@ def binpack_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("data_v4_bulk", third & (sliver >= 2)),
     ]
     for i, (name, pred) in enumerate(slices, start=1):
-        d = os.path.join(base, name)
-        orders.filter(pred).write.parquet(d)
-        _commit(base, i, d)
+        _commit_frame(base, i, name, orders.filter(pred))
     target = _payload_bytes(os.path.join(base, "data_v4_bulk"))
     v5 = compact_binpack(spark, base, target)
     assert v5 == 5
@@ -904,14 +981,10 @@ def time_travel_versions(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
     base = process_scratch_dir("snap")
     os.makedirs(base, exist_ok=True)
-
-    v1_dir = os.path.join(base, "data_v1")
-    orders.filter(F.col("o_orderkey") % 3 != 0).write.parquet(v1_dir)
-    _commit(base, 1, v1_dir)
-
-    delta_dir = os.path.join(base, "data_v2_delta")
-    orders.filter(F.col("o_orderkey") % 3 == 0).write.parquet(delta_dir)
-    _commit(base, 2, delta_dir)
+    _commit_frame(base, 1, "data_v1",
+                  orders.filter(F.col("o_orderkey") % 3 != 0))
+    _commit_frame(base, 2, "data_v2_delta",
+                  orders.filter(F.col("o_orderkey") % 3 == 0))
 
     def stats(version: int) -> DataFrame:
         return read_version(spark, base, version).agg(
@@ -973,14 +1046,16 @@ def changes_between(spark: SparkSession, base: str, v_from: int,
         key = m_to["key"] or "key"
         empty = local_frame(spark, [], f"{key} string")
         return empty, empty
-    some_dir = (m_from["dirs"] or m_to["dirs"])[0]
-    schema_src = spark.read.parquet(some_dir)
+    src = m_from if m_from["dirs"] else m_to
+    schema_src = idx.table_reader(spark, src, "data", True).parquet(
+        src["dirs"][0])
     if new_dirs:
-        inserted = _scan(spark, m_to, new_dirs, spark.read)
+        inserted = _scan(spark, m_to, new_dirs)
     else:
         inserted = schema_src.limit(0)
     if new_tombs:
-        keys = spark.read.parquet(*new_tombs)
+        keys = idx.table_reader(spark, m_to, idx.TOMBSTONES).parquet(
+            *new_tombs)
         deleted = read_version(spark, base, v_from).join(
             F.broadcast(keys), m_to["key"], "left_semi")
     else:
@@ -1106,14 +1181,14 @@ def partition_evolution_stats(spark: SparkSession,
     orders = spark.read.parquet(_os.path.join(sf_dir, "orders.parquet"))
     base = process_scratch_dir("snapevo")
     _os.makedirs(base, exist_ok=True)
-    v1_dir = _os.path.join(base, "data_v1")
-    orders.filter(F.col("o_orderkey") % 3 != 0).write.parquet(v1_dir)
-    _commit(base, 1, v1_dir)
+    v1_dir = _commit_frame(base, 1, "data_v1",
+                           orders.filter(F.col("o_orderkey") % 3 != 0))
     delta_dir = _os.path.join(base, "data_v2_delta")
-    (orders.filter(F.col("o_orderkey") % 3 == 0)
-     .withColumn("o_month", F.date_format("o_orderdate", "yyyy-MM"))
-     .write.partitionBy("o_month").parquet(delta_dir))
-    _commit(base, 2, delta_dir)
+    delta = (orders.filter(F.col("o_orderkey") % 3 == 0)
+             .withColumn("o_month",
+                         F.date_format("o_orderdate", "yyyy-MM")))
+    delta.write.partitionBy("o_month").parquet(delta_dir)
+    _commit(base, 2, delta_dir, delta.schema)
 
     month = "1997-06"
     legacy = (

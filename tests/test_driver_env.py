@@ -125,3 +125,31 @@ def test_default_driver_heap_fits_physical_memory(monkeypatch):
 
     monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "3g")
     assert session._driver_memory() == "3g"
+
+
+_UDF_SCRIPT = """
+import sys
+sys.path.insert(0, {repo!r})
+from hive_nexr_spark.queries.datapipe_q import QUERIES
+from hive_nexr_spark.session import get_session
+
+spark = get_session(shuffle_partitions=2)
+df = QUERIES["multimodal_phash_dedup"](spark, {sf_dir!r})
+print("ROWS", len(df.collect()), flush=True)
+"""
+
+
+def test_python_udf_key_runs_outside_the_repo(tmp_path, sf_dir):
+    """A tool that finds the package through its own `sys.path`, started
+    from a directory outside the repo with no PYTHONPATH, runs a key
+    whose plan has a Python UDF: `get_session` hands the package's path
+    to the JVM and so to its Python workers."""
+    proc = subprocess.run(
+        [sys.executable, "-c", _UDF_SCRIPT.format(repo=REPO, sf_dir=sf_dir)],
+        cwd=tmp_path, capture_output=True, text=True, timeout=600,
+        env={**os.environ, "PYTHONPATH": "", "SPARK_GRAFT_CPUS": "2",
+             "SPARK_GRAFT_DRIVER_MEM": "1g",
+             "SPARK_GRAFT_HIVE_METASTORE": "0"})
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    assert any(ln.startswith("ROWS ") and int(ln.split()[1]) > 0
+               for ln in proc.stdout.splitlines()), proc.stdout

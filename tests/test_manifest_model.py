@@ -24,7 +24,7 @@ N_OPS = 25
 N_KEYS = 12
 
 SNAPSHOT_KEYS = {"version", "dirs", "deletes", "key", "dir_seqs",
-                 "delete_seqs", "dir_parts", "schema"}
+                 "delete_seqs", "dir_parts", "schema", "schemas"}
 INDEX_KEYS = {"version", "params", "tables", "seqs", "schemas"}
 
 
@@ -79,6 +79,8 @@ def _expect_raises(exc, fn, *args, **kw):
 
 @pytest.mark.parametrize("seed", SEEDS)
 def test_snapshot_table_matches_model(spark, tmp_path, seed):
+    from pyspark.sql.types import StructType
+
     from hive_nexr_spark.sources import snapshots as sn
 
     rng = random.Random(seed)
@@ -89,6 +91,7 @@ def test_snapshot_table_matches_model(spark, tmp_path, seed):
     expired: set[int] = set()
     seen: dict[int, tuple] = {}
     refs: dict[str, dict] = {}
+    schema_checked: set[str] = set()
 
     def man_dirs(man: dict) -> list[str]:
         return man["dirs"] + man["deletes"]
@@ -205,6 +208,12 @@ def test_snapshot_table_matches_model(spark, tmp_path, seed):
             with open(os.path.join(base, f)) as fh:
                 man = json.load(fh)
             assert set(man) == SNAPSHOT_KEYS and f == f"v{man['version']}.json"
+            recorded = man["schemas"].get("data")
+            if recorded and f not in schema_checked:  # manifests are final
+                assert StructType.fromJson(json.loads(recorded)) == (
+                    spark.read.option("mergeSchema", "true")
+                    .parquet(*man["dirs"]).schema)
+                schema_checked.add(f)
         ref_files = [f for f in names if f.startswith("refs")]
         assert all(re.fullmatch(r"refs\.\d+\.json", f) for f in ref_files)
 
