@@ -125,7 +125,7 @@ def applicable_tombs(seqs: dict, tombs: list[str],
 
 def read_sequenced(reader: Callable[[object], DataFrameReader],
                    dirs: list[str], tombs: list[str], seqs: dict,
-                   key_col: str, tomb_reader: DataFrameReader,
+                   key_col: str, tomb_reader: Callable[[], DataFrameReader],
                    group: Callable[[str], object] | None = None,
                    project: Callable[[DataFrame, object], DataFrame]
                    | None = None) -> DataFrame:
@@ -134,7 +134,7 @@ def read_sequenced(reader: Callable[[object], DataFrameReader],
     applicable-tombstone set (and by `group(dir)` when given); each
     group is ONE multi-dir scan through `reader(group)` with at most one
     broadcast anti-join on `key_col` against its tombstones (read
-    through `tomb_reader`), shaped by `project(df, group)` when given,
+    through `tomb_reader()`), shaped by `project(df, group)` when given,
     and the groups union by name. Dirs newer than every tombstone scan
     clean, so common shapes collapse to one or two groups and the cost
     over a plain scan is one broadcast of the O(|deleted|) key set.
@@ -147,7 +147,7 @@ def read_sequenced(reader: Callable[[object], DataFrameReader],
     for (ts, g), ds in groups.items():
         df = reader(g).parquet(*ds)
         if ts:
-            df = df.join(F.broadcast(tomb_reader.parquet(*ts)), key_col,
+            df = df.join(F.broadcast(tomb_reader().parquet(*ts)), key_col,
                          "left_anti")
         parts.append(project(df, g) if project else df)
     return reduce(
@@ -266,11 +266,11 @@ def commit_manifest(root: str, params: dict,
     stamped with the NEW version — the data-sequence number tombstone
     applicability keys on.
 
-    `schemas` (optional) maps table name → StructType.json(): index
-    table schemas are FIXED per table, so recording them at commit
-    lets every reader pass an explicit schema and skip the per-read
-    parquet footer-inference job. Previous-version schemas carry over
-    for tables not re-declared.
+    `schemas` maps table name → StructType.json() for the tables this
+    commit declares (index table schemas are FIXED per table); the
+    previous version's carry over for the rest. Every listed table
+    needs one: readers take the schema from here (`table_reader`)
+    instead of running a parquet footer-inference job.
 
     `base_version` (the version this commit's table lists were derived
     from) pins the target to base+1 so the exclusive create detects a
@@ -335,20 +335,25 @@ def remove_orphans(root: str,
     return _log(root).remove_orphans(older_than_seconds)
 
 
-def table_reader(spark: SparkSession, man: dict, table: str,
-                 merge_schema: bool = False) -> DataFrameReader:
-    """A reader with the schema `man` records for `table` (an index
-    table name, or a snapshot role: `data` or `tombstones`): the scan
-    plans from the manifest alone, without the parquet footer-inference
-    job. A manifest that records none (hand-written, or committed
-    without a schema) infers instead, merging every footer when
-    `merge_schema` (snapshot data, whose deltas may add columns)."""
+def recorded_schema(man: dict, table: str) -> StructType:
+    """The schema `man` records for `table` (an index table name, or a
+    snapshot role: `data` or `tombstones`). A manifest that records
+    none cannot be read or extended: ValueError, never a guess from
+    the parquet footers."""
     sj = man["schemas"].get(table)
-    if sj:
-        return spark.read.schema(StructType.fromJson(json.loads(sj)))
-    if merge_schema:
-        return spark.read.option("mergeSchema", "true")
-    return spark.read
+    if not sj:
+        raise ValueError(f"manifest v{man['version']} records no schema "
+                         f"for table {table!r}")
+    return StructType.fromJson(json.loads(sj))
+
+
+def table_reader(spark: SparkSession, man: dict,
+                 table: str) -> DataFrameReader:
+    """A reader with the schema `man` records for `table`: the scan
+    plans from the manifest alone, without the parquet
+    footer-inference job, as Hive reads a table's columns from the
+    metastore."""
+    return spark.read.schema(recorded_schema(man, table))
 
 
 def read_index_table(spark: SparkSession, root: str, name: str,
@@ -368,7 +373,7 @@ def scan_sequenced(spark: SparkSession, man: dict, table: str,
     return read_sequenced(
         lambda _: table_reader(spark, man, table), man["tables"][table],
         man["tables"].get(TOMBSTONES, []), man["seqs"], key_col,
-        table_reader(spark, man, TOMBSTONES))
+        lambda: table_reader(spark, man, TOMBSTONES))
 
 
 def commit_tombstones(root: str, keys: DataFrame, key_col: str) -> int:

@@ -27,9 +27,10 @@ keeps the snapshot format `<base>/v{N}.json`:
                  first ALTER initializes tracking
     schemas      role (`data`, `tombstones`) → StructType JSON of the
                  listed dirs, as a footer-merging read infers it: every
-                 field nullable, earlier fields first. A role is absent
-                 while its dirs' columns are unknown (a commit that
-                 wrote no schema); its reads then infer.
+                 field nullable, earlier fields first. Recorded for
+                 every role that lists dirs, by the one commit helper
+                 (`_commit_changes`), from the schemas the dirs were
+                 written with; reads and ALTERs take it from here.
 """
 
 from __future__ import annotations
@@ -79,15 +80,6 @@ def _prev(base: str, version: int) -> dict:
     return _load_manifest(base, version - 1) if version > 1 else _EMPTY
 
 
-def _commit_changes(base: str, prev: dict, version: int,
-                    **changes) -> int:
-    """Commit `version` = `prev` with `changes` applied: every field a
-    commit does not touch (tombstones, key, sequences, partitions,
-    schema) carries over."""
-    _write_manifest(base, {**prev, **changes, "version": version})
-    return version
-
-
 def _nullable(dt: DataType) -> DataType:
     """`dt` as a parquet read infers it back: every field, element and
     value nullable."""
@@ -101,42 +93,78 @@ def _nullable(dt: DataType) -> DataType:
     return dt
 
 
-_ROLE_DIRS = {"data": "dirs", idx.TOMBSTONES: "deletes"}
+_Written = tuple[list[str], StructType]
+_ROLES = (("data", "dirs", "dir_seqs"),
+          (idx.TOMBSTONES, "deletes", "delete_seqs"))
 
 
-def _schemas(prev: dict, **written: StructType | None) -> dict:
-    """`prev`'s recorded schemas with the schema each role (`data`,
-    `tombstones`) was just written with merged in: the previous fields,
-    then the new ones (a field written again takes its new type), as a
-    footer-merging read surfaces them. A role written without a schema,
-    or whose earlier dirs have no recorded one, is left unrecorded:
-    its columns are unknown, so its reads infer."""
-    out = dict(prev["schemas"])
-    for role, schema in written.items():
-        old = out.get(role)
-        if schema is None or (prev[_ROLE_DIRS[role]] and not old):
-            out.pop(role, None)
-            continue
-        fields = {f.name: f for f in
-                  (StructType.fromJson(json.loads(old)).fields
-                   if old else [])}
-        fields.update((f.name, f) for f in _nullable(schema).fields)
-        out[role] = StructType(list(fields.values())).json()
-    return out
+def _commit_changes(base: str, prev: dict, version: int, *,
+                    data: _Written | None = None,
+                    tombstones: _Written | None = None,
+                    replaced: list[str] = (),
+                    parts: dict[str, str] | None = None,
+                    key: str | None = None) -> int:
+    """Commit `version` = `prev` with new dirs per role (`data`,
+    `tombstones`: the dirs and the schema they were written with)
+    added, the data or tombstone dirs in `replaced` removed, new data
+    dirs tagged with their partition value from `parts`, and the
+    tombstone `key` set when given. The one code that stamps
+    sequences and records schemas: each new dir gets sequence
+    `version`; a role's recorded schema is the one of its kept dirs
+    with the written one merged in (the previous fields, then the new
+    ones; a field written again takes its new type), as a
+    footer-merging read surfaces them, and a role that lists no dir
+    records none. On a table that tracks field IDs, every name the
+    written data schema adds gets a fresh id, so reads select it."""
+    written = {"data": data, idx.TOMBSTONES: tombstones}
+    man = {**prev, "version": version, "key": key or prev["key"],
+           "schemas": {},
+           "dir_parts": {**{d: p for d, p in prev["dir_parts"].items()
+                            if d not in replaced}, **(parts or {})}}
+    for role, dirs_key, seqs_key in _ROLES:
+        new, schema = written[role] or ([], None)
+        kept = [d for d in prev[dirs_key] if d not in replaced]
+        man[dirs_key] = kept + new
+        man[seqs_key] = {**{d: s for d, s in prev[seqs_key].items()
+                            if d not in replaced},
+                         **{d: version for d in new}}
+        fields = {f.name: f for f in (idx.recorded_schema(prev, role).fields
+                                      if kept else [])}
+        if new:
+            fields.update((f.name, f) for f in _nullable(schema).fields)
+        if man[dirs_key]:
+            man["schemas"][role] = StructType(list(fields.values())).json()
+    if prev["schema"] and data:
+        man["schema"] = _with_field_ids(base, prev["schema"], data[1],
+                                        version)
+    _write_manifest(base, man)
+    return version
 
 
-def _commit(base: str, version: int, new_dir: str | None,
-            schema: StructType | None = None) -> int:
+def _with_field_ids(base: str, fields: list[dict], schema: StructType,
+                    version: int) -> list[dict]:
+    """`fields` plus a fresh id for each name of `schema` it lacks.
+    Fresh means above every id a manifest before `version` assigned: a
+    name written again after a DROP must not take the dropped field's
+    id, or the dirs written before the drop would read their old
+    values under it."""
+    names = {f["name"] for f in fields}
+    new = [n for n in schema.names if n not in names]
+    if not new:
+        return fields
+    top = max(f["id"] for _, schema_v in _field_schemas(base, version - 1)
+              for f in schema_v)
+    return fields + [{"id": top + i, "name": n}
+                     for i, n in enumerate(new, start=1)]
+
+
+def _commit(base: str, version: int, new_dir: str,
+            schema: StructType) -> int:
     """Append-only commit: manifest v<N> = v<N-1> dirs + the new delta
     dir, stamped with sequence N. `schema` is the frame the delta was
-    written from; without it the table's data schema goes unrecorded
-    and its reads infer from the footers."""
-    prev = _prev(base, version)
-    new = [new_dir] if new_dir else []
-    return _commit_changes(
-        base, prev, version, dirs=prev["dirs"] + new,
-        dir_seqs={**prev["dir_seqs"], **{d: version for d in new}},
-        schemas=_schemas(prev, data=schema) if new else prev["schemas"])
+    written from."""
+    return _commit_changes(base, _prev(base, version), version,
+                           data=([new_dir], schema))
 
 
 def _commit_frame(base: str, version: int, name: str,
@@ -158,9 +186,10 @@ def _scan(spark: SparkSession, man: dict, dirs: list[str],
     the schemas `man` records (`reader(group)` replaces the data
     reader)."""
     return idx.read_sequenced(
-        reader or (lambda _: idx.table_reader(spark, man, "data", True)),
+        reader or (lambda _: idx.table_reader(spark, man, "data")),
         dirs, man["deletes"], {**man["dir_seqs"], **man["delete_seqs"]},
-        man["key"], idx.table_reader(spark, man, idx.TOMBSTONES), **kw)
+        man["key"], lambda: idx.table_reader(spark, man, idx.TOMBSTONES),
+        **kw)
 
 
 def commit_delete(spark: SparkSession, base: str, keys: DataFrame,
@@ -179,22 +208,21 @@ def commit_delete(spark: SparkSession, base: str, keys: DataFrame,
     tdir = os.path.join(base, f"tombstones_v{v}")
     tomb = keys.select(key_col)
     tomb.write.parquet(tdir)
-    prev = _prev(base, v)
-    return _commit_changes(
-        base, prev, v, deletes=prev["deletes"] + [tdir], key=key_col,
-        delete_seqs={**prev["delete_seqs"], tdir: v},
-        schemas=_schemas(prev, tombstones=tomb.schema))
+    return _commit_changes(base, _prev(base, v), v,
+                           tombstones=([tdir], tomb.schema), key=key_col)
 
 
-def commit_append_with_retry(base: str, new_dir: str | None,
+def commit_append_with_retry(base: str, new_dir: str, schema: StructType,
                              max_retries: int = 8) -> tuple[int, int]:
     """OPTIMISTIC-CONCURRENCY append: `_commit` of the next version
     under `index_manifest.retry_conflicts`. Each attempt re-reads the
     latest version, so two committers racing DISJOINT appends both
-    succeed and the serialized history contains both. Returns
-    (committed version, conflicts retried)."""
+    succeed and the serialized history contains both. `schema` is the
+    frame `new_dir` was written from. Returns (committed version,
+    conflicts retried)."""
     return idx.retry_conflicts(
-        lambda: _commit(base, _latest(base) + 1, new_dir), max_retries)
+        lambda: _commit(base, _latest(base) + 1, new_dir, schema),
+        max_retries)
 
 
 def commit_merge_upsert(spark: SparkSession, base: str,
@@ -218,14 +246,9 @@ def commit_merge_upsert(spark: SparkSession, base: str,
     tomb = spark.read.schema(_nullable(updates.schema)).parquet(
         udir).select(key_col)
     tomb.write.parquet(tdir)
-    prev = _prev(base, v)
-    return _commit_changes(
-        base, prev, v, dirs=prev["dirs"] + [udir],
-        deletes=prev["deletes"] + [tdir], key=key_col,
-        dir_seqs={**prev["dir_seqs"], udir: v},
-        delete_seqs={**prev["delete_seqs"], tdir: v},
-        schemas=_schemas(prev, data=updates.schema,
-                         tombstones=tomb.schema))
+    return _commit_changes(base, _prev(base, v), v,
+                           data=([udir], updates.schema),
+                           tombstones=([tdir], tomb.schema), key=key_col)
 
 
 def compact(spark: SparkSession, base: str) -> int:
@@ -242,10 +265,9 @@ def compact(spark: SparkSession, base: str) -> int:
     cdir = os.path.join(base, f"compacted_v{v}")
     df = read_version(spark, base, v - 1)
     df.write.parquet(cdir)
-    return _commit_changes(base, _prev(base, v), v, dirs=[cdir],
-                           deletes=[], dir_seqs={cdir: v},
-                           delete_seqs={}, dir_parts={},
-                           schemas=_schemas(_EMPTY, data=df.schema))
+    prev = _prev(base, v)
+    return _commit_changes(base, prev, v, data=([cdir], df.schema),
+                           replaced=prev["dirs"] + prev["deletes"])
 
 
 def commit_append_partitioned(spark: SparkSession, base: str,
@@ -263,9 +285,7 @@ def commit_append_partitioned(spark: SparkSession, base: str,
     from urllib.parse import unquote
 
     v = _latest(base) + 1
-    prev = _prev(base, v)
-    dirs, parts = list(prev["dirs"]), dict(prev["dir_parts"])
-    seqs = dict(prev["dir_seqs"])
+    dirs, parts = [], {}
     # ONE scan + one shuffled-by-value write for ALL partition values
     # (guide §2.4 — the r12 form ran `df.filter(col == val).write` per
     # value: |values| full input scans plus a distinct+collect to even
@@ -280,46 +300,21 @@ def commit_append_partitioned(spark: SparkSession, base: str,
     (df.withColumn("_p", F.col(part_col).cast("string"))
      .repartition("_p")
      .write.partitionBy("_p").parquet(tmp))
-    vals = sorted(unquote(e.split("=", 1)[1])
-                  for e in os.listdir(tmp) if e.startswith("_p="))
-    for val in vals:
-        tag = str(val).replace("/", "_").replace(" ", "_")
+    written = sorted((unquote(e.split("=", 1)[1]), e)  # escaped names
+                     for e in os.listdir(tmp) if e.startswith("_p="))
+    for val, entry in written:
+        tag = val.replace("/", "_").replace(" ", "_")
         d = os.path.join(base, f"data_v{v}_p{tag}")
         os.makedirs(d, exist_ok=True)
-        src_dir = os.path.join(tmp, f"_p={val}")
-        if not os.path.isdir(src_dir):  # value needed URL-escaping
-            src_dir = next(os.path.join(tmp, e)
-                           for e in os.listdir(tmp)
-                           if e.startswith("_p=")
-                           and unquote(e.split("=", 1)[1]) == val)
+        src_dir = os.path.join(tmp, entry)
         for f in os.listdir(src_dir):
             if f.endswith(".parquet"):
                 shutil.move(os.path.join(src_dir, f), os.path.join(d, f))
         dirs.append(d)
-        parts[d] = str(val)
-        seqs[d] = v
+        parts[d] = val
     shutil.rmtree(tmp)
-    return _commit_changes(base, prev, v, dirs=dirs, dir_seqs=seqs,
-                           dir_parts=parts,
-                           schemas=_schemas(prev, data=df.schema))
-
-
-def _replace_dirs(base: str, man: dict, old: list[str], new_dir: str,
-                  part: str | None, schema: StructType) -> int:
-    """Commit the next version with the data dirs `old` replaced by the
-    compacted `new_dir` (written with `schema`, tagged with partition
-    `part` unless None); every other dir keeps its path, sequence and
-    partition, and the tombstones stay listed for them."""
-    v = man["version"] + 1
-    parts = {d: p for d, p in man["dir_parts"].items() if d not in old}
-    if part is not None:
-        parts[new_dir] = part
-    seqs = {d: s for d, s in man["dir_seqs"].items() if d not in old}
-    seqs[new_dir] = v
-    return _commit_changes(
-        base, man, v, dirs=[d for d in man["dirs"] if d not in old]
-        + [new_dir], dir_seqs=seqs, dir_parts=parts,
-        schemas=_schemas(man, data=schema))
+    return _commit_changes(base, _prev(base, v), v, data=(dirs, df.schema),
+                           parts=parts)
 
 
 def compact_partition(spark: SparkSession, base: str,
@@ -346,8 +341,9 @@ def compact_partition(spark: SparkSession, base: str,
     cdir = os.path.join(base, f"compacted_v{man['version'] + 1}_p{tag}")
     df = _visible(spark, base, man, affected)
     df.write.parquet(cdir)
-    return _replace_dirs(base, man, affected, cdir, str(part_value),
-                         df.schema)
+    return _commit_changes(base, man, man["version"] + 1,
+                           data=([cdir], df.schema), replaced=affected,
+                           parts={cdir: str(part_value)})
 
 
 def _payload_bytes(d: str) -> int:
@@ -383,7 +379,9 @@ def compact_binpack(spark: SparkSession, base: str,
     df.write.parquet(cdir)
     small_parts = {man["dir_parts"].get(d) for d in small}
     part = small_parts.pop() if len(small_parts) == 1 else None
-    return _replace_dirs(base, man, small, cdir, part, df.schema)
+    return _commit_changes(base, man, man["version"] + 1,
+                           data=([cdir], df.schema), replaced=small,
+                           parts={cdir: part} if part is not None else {})
 
 
 def expire_snapshots(base: str, keep_from: int) -> list[str]:
@@ -439,18 +437,16 @@ def _visible(spark: SparkSession, base: str, man: dict,
     return _scan(spark, man, dirs)
 
 
-def _first_schema_version(base: str, upto: int) -> int:
-    """Earliest version whose manifest carries a field-ID schema — the
-    schema-initialization commit. Its names ARE the physical column
-    names of every earlier data dir (no rename can precede schema
-    tracking), so older dirs resolve through it."""
+def _field_schemas(base: str, upto: int):
+    """(version, field-ID schema) of every surviving manifest up to
+    `upto` that carries one, oldest first."""
     for v in range(1, upto + 1):
         try:
-            if _load_manifest(base, v)["schema"]:
-                return v
-        except FileNotFoundError:
+            schema = _load_manifest(base, v)["schema"]
+        except FileNotFoundError:  # expired
             continue
-    raise RuntimeError(f"no schema'd manifest <= v{upto} under {base}")
+        if schema:
+            yield v, schema
 
 
 def _read_version_evolved(spark: SparkSession, base: str, man: dict,
@@ -469,7 +465,10 @@ def _read_version_evolved(spark: SparkSession, base: str, man: dict,
     group key, and each group reads with the data schema recorded at
     its write version."""
     target = man["schema"]
-    first_v = _first_schema_version(base, man["version"])
+    # the schema-initialization commit: its names ARE the physical
+    # column names of every earlier data dir (no rename can precede
+    # schema tracking), so older dirs resolve through it
+    first_v = next(v for v, _ in _field_schemas(base, man["version"]))
     cache: dict[int, dict] = {}
 
     def at(ws_v: int) -> dict:
@@ -487,8 +486,7 @@ def _read_version_evolved(spark: SparkSession, base: str, man: dict,
                            and phys[f["id"]] in df.columns])
 
     return _scan(spark, man, dirs,
-                 lambda ws_v: idx.table_reader(spark, at(ws_v), "data",
-                                               True),
+                 lambda ws_v: idx.table_reader(spark, at(ws_v), "data"),
                  group=write_version, project=project)
 
 
@@ -496,26 +494,23 @@ def _commit_metadata(base: str, man: dict, schema: list[dict]) -> int:
     """Metadata-only commit: next version = same dirs / deletes /
     sequences / partitions, new field-ID schema. O(1) — no data file
     touched; this is what makes RENAME/DROP free at 100 TB."""
-    return _commit_changes(base, man, man["version"] + 1, schema=schema)
+    v = man["version"] + 1
+    _write_manifest(base, {**man, "version": v, "schema": schema})
+    return v
 
 
-def init_schema_tracking(spark: SparkSession, base: str) -> int:
-    """Initialize field-ID schema tracking (idempotent): synthesize
-    {id, name} fields from the dirs' parquet footers in COMMIT ORDER
-    (first dir's columns first, then unseen columns of later dirs —
-    deterministic, unlike mergeSchema's merge order) and commit them
-    as a metadata-only version. The synthesized names are the physical
-    names of every pre-existing dir — the anchor legacy dirs resolve
-    through. Returns the version whose manifest carries the schema
-    (the existing one if already initialized)."""
+def init_schema_tracking(base: str) -> int:
+    """Initialize field-ID schema tracking (idempotent): number the
+    names of the recorded data schema in order (earlier commits'
+    columns first) as {id, name} fields and commit them as a
+    metadata-only version; no data file is opened. The names are the
+    physical names of every pre-existing dir — the anchor legacy dirs
+    resolve through. Returns the version whose manifest carries the
+    schema (the existing one if already initialized)."""
     man = _load_manifest(base, _latest(base))
     if man["schema"]:
         return man["version"]
-    names: list[str] = []
-    for d in man["dirs"]:
-        for c in spark.read.parquet(d).columns:
-            if c not in names:
-                names.append(c)
+    names = idx.recorded_schema(man, "data").names if man["dirs"] else []
     schema = [{"id": i + 1, "name": c} for i, c in enumerate(names)]
     return _commit_metadata(base, man, schema)
 
@@ -530,7 +525,7 @@ def alter_rename_column(spark: SparkSession, base: str,
     name-based emulation would read the history as drop+add and
     silently NULL it. Initializes schema tracking (its own commit) on
     first use. Returns the new version."""
-    init_schema_tracking(spark, base)
+    init_schema_tracking(base)
     man = _load_manifest(base, _latest(base))
     names = [f["name"] for f in man["schema"]]
     if old not in names:
@@ -548,7 +543,7 @@ def alter_drop_column(spark: SparkSession, base: str, name: str) -> int:
     untouched, storage reclaimed only by later compaction, and the
     column is still there AS-OF every pre-drop version. Returns the
     new version."""
-    init_schema_tracking(spark, base)
+    init_schema_tracking(base)
     man = _load_manifest(base, _latest(base))
     names = [f["name"] for f in man["schema"]]
     if name not in names:
@@ -822,10 +817,11 @@ def schema_evolution_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     add-column property: old data files are NEVER rewritten when a
     column is added): v1 commits the o_orderkey % 3 != 0 slice with the
     base schema; the v2 delta carries a NEW `o_channel` column
-    (orderkey-parity derived, deterministic). `read_version` merges the
-    footers, so v2 surfaces the union schema — v1's rows read back with
-    o_channel NULL — while a v1 read still returns exactly the original
-    columns (AS-OF includes the schema).
+    (orderkey-parity derived, deterministic). Each commit records the
+    union of the schemas its dirs were written with, so v2 surfaces the
+    union schema — v1's rows read back with o_channel NULL — while a v1
+    read still returns exactly the original columns (AS-OF includes the
+    schema).
 
     Output: (version, n_rows, n_with_channel, sum_totalprice). The
     oracle recomputes from the slice predicates: n_with_channel is 0 at
@@ -1036,18 +1032,18 @@ def changes_between(spark: SparkSession, base: str, v_from: int,
     m_to = _load_manifest(base, v_to)
     new_dirs = [d for d in m_to["dirs"] if d not in m_from["dirs"]]
     new_tombs = [d for d in m_to["deletes"] if d not in m_from["deletes"]]
-    # schema source for empty frames: any manifest dir (the source
-    # version may be an EMPTY table with no data dirs yet). When BOTH
-    # versions list no data dirs (delete-only commits against a
-    # not-yet-loaded table) there is no parquet schema to borrow — the
-    # window's change sets are empty by construction, so return two
-    # empty key-column frames instead of dereferencing a dir.
+    # schema source for empty frames: the recorded data schema of the
+    # source version, or of the target when the source is an EMPTY
+    # table with no data dirs yet. When BOTH versions list no data
+    # dirs (delete-only commits against a not-yet-loaded table) there
+    # is no data schema to borrow — the window's change sets are empty
+    # by construction, so return two empty key-column frames.
     if not m_from["dirs"] and not m_to["dirs"]:
         key = m_to["key"] or "key"
         empty = local_frame(spark, [], f"{key} string")
         return empty, empty
     src = m_from if m_from["dirs"] else m_to
-    schema_src = idx.table_reader(spark, src, "data", True).parquet(
+    schema_src = idx.table_reader(spark, src, "data").parquet(
         src["dirs"][0])
     if new_dirs:
         inserted = _scan(spark, m_to, new_dirs)
@@ -1174,16 +1170,14 @@ def partition_evolution_stats(spark: SparkSession,
 
     Output: (layout, n_rows, sum_totalprice) for the legacy scan, the
     pruned evolved scan, and the combined table, for one month."""
-    import os as _os
-
     from ..scratch import process_scratch_dir
 
-    orders = spark.read.parquet(_os.path.join(sf_dir, "orders.parquet"))
+    orders = spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
     base = process_scratch_dir("snapevo")
-    _os.makedirs(base, exist_ok=True)
+    os.makedirs(base, exist_ok=True)
     v1_dir = _commit_frame(base, 1, "data_v1",
                            orders.filter(F.col("o_orderkey") % 3 != 0))
-    delta_dir = _os.path.join(base, "data_v2_delta")
+    delta_dir = os.path.join(base, "data_v2_delta")
     delta = (orders.filter(F.col("o_orderkey") % 3 == 0)
              .withColumn("o_month",
                          F.date_format("o_orderdate", "yyyy-MM")))

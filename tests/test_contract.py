@@ -336,13 +336,15 @@ def test_schema_evolution_as_of_and_merged_read(spark, sf_dir):
     import os as _os
 
     v1_dir = _os.path.join(base, "data_v1")
-    orders.filter("o_orderkey % 3 != 0").write.parquet(v1_dir)
-    sn._commit(base, 1, v1_dir)
+    v1_rows = orders.filter("o_orderkey % 3 != 0")
+    v1_rows.write.parquet(v1_dir)
+    sn._commit(base, 1, v1_dir, v1_rows.schema)
     files_before = sorted(_os.listdir(v1_dir))
     delta = _os.path.join(base, "data_v2_delta")
-    (orders.filter("o_orderkey % 3 = 0")
-     .withColumn("o_channel", F.lit("web")).write.parquet(delta))
-    sn._commit(base, 2, delta)
+    delta_rows = (orders.filter("o_orderkey % 3 = 0")
+                  .withColumn("o_channel", F.lit("web")))
+    delta_rows.write.parquet(delta)
+    sn._commit(base, 2, delta, delta_rows.schema)
     v1 = sn.read_version(spark, base, 1)
     assert "o_channel" not in v1.columns
     v2 = sn.read_version(spark, base, 2)

@@ -818,7 +818,7 @@ def test_ivf_pq_persisted_lifecycle_bit_equal(dfs, spark):
     idx.commit_manifest(d3, man2["params"],
                         {"coarse": man2["tables"]["coarse"],
                          "codebooks": man2["tables"]["codebooks"],
-                         "codes": []})
+                         "codes": []}, schemas=man2["schemas"])
     similarity.ivf_pq_add_batch(spark, d3, added)
     re_encoded = {tuple(r) for r in
                   idx.read_index_table(spark, d3, "codes").collect()}
@@ -1473,10 +1473,10 @@ def test_schema_rename_drop_field_ids(spark, sf_dir):
     _os.makedirs(base, exist_ok=True)
     v1_dir = _os.path.join(base, "data_v1")
     orders.filter(F.col("o_orderkey") % 3 != 0).write.parquet(v1_dir)
-    sn._commit(base, 1, v1_dir)
+    sn._commit(base, 1, v1_dir, orders.schema)
     d2 = _os.path.join(base, "data_v2")
     orders.filter(F.col("o_orderkey") % 3 == 0).write.parquet(d2)
-    sn._commit(base, 2, d2)
+    sn._commit(base, 2, d2, orders.schema)
 
     def listing(d):
         return sorted((f, _os.path.getsize(_os.path.join(d, f)),
@@ -1515,11 +1515,12 @@ def test_schema_rename_drop_field_ids(spark, sf_dir):
     # append written under the CURRENT names: field-id resolution
     # unifies it with the o_totalprice-named history
     d6 = _os.path.join(base, "data_v6")
-    (orders.filter(F.col("o_orderkey") % 7 == 0)
-     .select("o_orderkey", "o_custkey", "o_orderstatus",
-             F.col("o_totalprice").alias("o_amount"), "o_orderdate")
-     .write.parquet(d6))
-    sn._commit(base, 6, d6)
+    rows6 = (orders.filter(F.col("o_orderkey") % 7 == 0)
+             .select("o_orderkey", "o_custkey", "o_orderstatus",
+                     F.col("o_totalprice").alias("o_amount"),
+                     "o_orderdate"))
+    rows6.write.parquet(d6)
+    sn._commit(base, 6, d6, rows6.schema)
     at6 = sn.read_version(spark, base, 6)
     n7 = orders.filter(F.col("o_orderkey") % 7 == 0).count()
     assert at6.count() == len(before) + n7
@@ -1553,7 +1554,7 @@ def test_compact_binpack_leaves_large_dirs_untouched(spark, sf_dir):
             ("bulk_b", third & (sliver >= 2))], start=1):
         d = _os.path.join(base, name)
         orders.filter(pred).write.parquet(d)
-        sn._commit(base, i, d)
+        sn._commit(base, i, d, orders.schema)
 
     def listing(d):
         return sorted((f, _os.path.getsize(_os.path.join(d, f)),
@@ -1585,15 +1586,18 @@ def _race_worker(tag, base, iroot, n, barrier, q):
     race the same version number."""
     import os as _os
 
+    from pyspark.sql.types import LongType, StructField, StructType
+
     from hive_nexr_spark.sources import index_manifest as idx
     from hive_nexr_spark.sources import snapshots as sn
 
+    schema = StructType([StructField("k", LongType())])
     conflicts = 0
     for i in range(n):
         d = _os.path.join(base, f"data_{tag}_{i}")
         _os.makedirs(d, exist_ok=True)
         barrier.wait()
-        _, r = sn.commit_append_with_retry(base, d)
+        _, r = sn.commit_append_with_retry(base, d, schema)
         conflicts += r
         idir = _os.path.join(iroot, f"t_{tag}_{i}")
         _os.makedirs(idir, exist_ok=True)

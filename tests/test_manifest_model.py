@@ -106,8 +106,9 @@ def test_snapshot_table_matches_model(spark, tmp_path, seed):
         if op == "append":
             rows = _rows(rng)
             d = os.path.join(base, f"data_m{i}")
-            spark.createDataFrame(rows, schema).write.parquet(d)
-            v, retried = sn.commit_append_with_retry(base, d)
+            df = spark.createDataFrame(rows, schema)
+            df.write.parquet(d)
+            v, retried = sn.commit_append_with_retry(base, d, df.schema)
             assert retried == 0
             model[v] = live + Counter(rows)
         elif op == "append_partitioned":
@@ -208,12 +209,18 @@ def test_snapshot_table_matches_model(spark, tmp_path, seed):
             with open(os.path.join(base, f)) as fh:
                 man = json.load(fh)
             assert set(man) == SNAPSHOT_KEYS and f == f"v{man['version']}.json"
-            recorded = man["schemas"].get("data")
-            if recorded and f not in schema_checked:  # manifests are final
-                assert StructType.fromJson(json.loads(recorded)) == (
+            if f in schema_checked:  # manifests are final
+                continue
+            for role, dirs in (("data", man["dirs"]),
+                               ("tombstones", man["deletes"])):
+                if not dirs:
+                    assert role not in man["schemas"], (f, role)
+                    continue
+                assert StructType.fromJson(json.loads(
+                    man["schemas"][role])) == (
                     spark.read.option("mergeSchema", "true")
-                    .parquet(*man["dirs"]).schema)
-                schema_checked.add(f)
+                    .parquet(*dirs).schema), (f, role)
+            schema_checked.add(f)
         ref_files = [f for f in names if f.startswith("refs")]
         assert all(re.fullmatch(r"refs\.\d+\.json", f) for f in ref_files)
 

@@ -1224,13 +1224,15 @@ def test_schema_evolved_read_unions_per_write_schema(spark, sf_dir):
     base = process_scratch_dir("snapevo_plan")
     _os.makedirs(base, exist_ok=True)
     d1 = _os.path.join(base, "data_v1")
-    orders.filter(F.col("o_orderkey") % 3 != 0).write.parquet(d1)
-    sn._commit(base, 1, d1)
+    rows1 = orders.filter(F.col("o_orderkey") % 3 != 0)
+    rows1.write.parquet(d1)
+    sn._commit(base, 1, d1, rows1.schema)
     sn.alter_rename_column(spark, base, "o_totalprice", "o_amount")
     d4 = _os.path.join(base, "data_v4")
-    (orders.filter(F.col("o_orderkey") % 3 == 0)
-     .withColumnRenamed("o_totalprice", "o_amount").write.parquet(d4))
-    sn._commit(base, 4, d4)
+    rows4 = (orders.filter(F.col("o_orderkey") % 3 == 0)
+             .withColumnRenamed("o_totalprice", "o_amount"))
+    rows4.write.parquet(d4)
+    sn._commit(base, 4, d4, rows4.schema)
     df = sn.read_version(spark, base, 4)
     assert "o_amount" in df.columns and "o_totalprice" not in df.columns
     fplan = _formatted(df)

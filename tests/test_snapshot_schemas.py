@@ -5,8 +5,9 @@ Every snapshot commit records the table's schemas (`schemas`: role
 `changes_between` and the compactions build their scans without a
 parquet footer-inference job. These tests pin that planning a read
 runs no Spark job, that the recorded schema reads back exactly as the
-footer-merging read it replaces, and that manifests without a recorded
-schema still read by inference."""
+footer-merging read it replaces, that a manifest without a recorded
+schema raises instead of inferring, and that ALTERs open no data file
+and appends after them read every column they wrote."""
 
 from __future__ import annotations
 
@@ -102,36 +103,93 @@ def test_added_column_reads_as_merge_schema(spark, tmp_path):
     assert sn.read_version(spark, base, v2).columns == ["k", "p", "x", "y"]
 
 
-def test_manifest_without_schemas_reads_by_inference(spark, tmp_path):
-    """A hand-written manifest with no `schemas` field, and a table
-    whose first commit recorded none, still read: through footer
-    inference, which shows as a job at planning. A later commit on such
-    a table does not guess the data schema from its own delta."""
+def test_manifest_without_schemas_raises(spark, tmp_path):
+    """A hand-written manifest that lists data dirs but records no
+    `schemas` cannot be read or altered: the read raises ValueError
+    naming the manifest version and the table instead of inferring
+    the columns from the footers."""
+    import pytest
+
     from hive_nexr_spark.sources import snapshots as sn
 
     base = str(tmp_path / "t")
     os.makedirs(base)
-    d1, d2 = os.path.join(base, "data_v1"), os.path.join(base, "data_v2")
+    d1 = os.path.join(base, "data_v1")
     spark.createDataFrame([(1, "a", 1)], SCHEMA).write.parquet(d1)
-    spark.createDataFrame([(2, "b", 2, 0.5)],
-                          SCHEMA + ", y double").write.parquet(d2)
     with open(os.path.join(base, "v1.json"), "w") as fh:
         json.dump({"version": 1, "dirs": [d1], "deletes": [], "key": None,
                    "dir_seqs": {d1: 1}, "delete_seqs": {},
                    "dir_parts": {}, "schema": None}, fh)
-    sn._commit(base, 2, d2)
-    assert sn._load_manifest(base, 2)["schemas"] == {}
-    for v, dirs in ((1, [d1]), (2, [d1, d2])):
-        df, jobs = _jobs(spark, lambda: sn.read_version(spark, base, v))
-        assert jobs, "a manifest without schemas must infer"
-        want = _merged_read(spark, dirs)
-        assert df.schema == want.schema and _rows(df) == _rows(want)
-    v3 = sn.commit_merge_upsert(
-        spark, base, spark.createDataFrame([(1, "c", 5)], SCHEMA), "k")
-    assert set(sn._load_manifest(base, v3)["schemas"]) == {"tombstones"}
-    got = sn.read_version(spark, base, v3)
-    assert got.columns == ["k", "p", "x", "y"]
-    assert _rows(got) == [(1, "c", 5, None), (2, "b", 2, 0.5)]
+    with pytest.raises(ValueError, match=r"manifest v1 .*'data'"):
+        sn.read_version(spark, base, 1)
+    with pytest.raises(ValueError, match=r"manifest v1 .*'data'"):
+        sn.alter_rename_column(spark, base, "x", "y")
+    assert sn._latest(base) == 1
+
+
+def test_append_after_rename_reads_the_new_column(spark, tmp_path):
+    """An append that adds a column to a table that tracks field IDs
+    (after a RENAME) gives the column an id, so HEAD reads it: the
+    earlier rows read it as NULL."""
+    from hive_nexr_spark.sources import snapshots as sn
+
+    base = str(tmp_path / "t")
+    os.makedirs(base)
+    sn._commit_frame(base, 1, "data_v1",
+                     spark.createDataFrame([(1, 10), (2, 20)],
+                                           "k bigint, v bigint"))
+    assert sn.alter_rename_column(spark, base, "v", "w") == 3
+    sn._commit_frame(base, 4, "data_v4",
+                     spark.createDataFrame([(3, 30, "e")],
+                                           "k bigint, w bigint, "
+                                           "extra string"))
+    got = sn.read_version(spark, base, 4)
+    assert got.columns == ["k", "w", "extra"]
+    assert _rows(got) == [(1, 10, None), (2, 20, None), (3, 30, "e")]
+    assert sn._load_manifest(base, 4)["schema"] == [
+        {"id": 1, "name": "k"}, {"id": 2, "name": "w"},
+        {"id": 3, "name": "extra"}]
+    assert sn.read_version(spark, base, 3).columns == ["k", "w"]
+
+
+def test_dropped_name_appended_again_gets_a_new_id(spark, tmp_path):
+    """A name DROPped and then written again by an append is a new
+    field: it gets an id no manifest used before, so the dirs written
+    before the drop read it as NULL instead of their dropped values."""
+    from hive_nexr_spark.sources import snapshots as sn
+
+    base = str(tmp_path / "t")
+    os.makedirs(base)
+    sn._commit_frame(base, 1, "data_v1",
+                     spark.createDataFrame([(1, 10), (2, 20)],
+                                           "k bigint, v bigint"))
+    assert sn.alter_drop_column(spark, base, "v") == 3
+    sn._commit_frame(base, 4, "data_v4",
+                     spark.createDataFrame([(3, 30)], "k bigint, v bigint"))
+    assert sn._load_manifest(base, 4)["schema"] == [
+        {"id": 1, "name": "k"}, {"id": 3, "name": "v"}]
+    got = sn.read_version(spark, base, 4)
+    assert got.columns == ["k", "v"]
+    assert _rows(got) == [(1, None), (2, None), (3, 30)]
+    assert _rows(sn.read_version(spark, base, 2)) == [(1, 10), (2, 20)]
+
+
+def test_alter_runs_no_job(spark, tmp_path):
+    """RENAME and DROP on a 4-dir table, including the first one that
+    starts field-ID tracking, are manifest commits: no Spark job."""
+    from hive_nexr_spark.sources import snapshots as sn
+
+    base = str(tmp_path / "t")
+    os.makedirs(base)
+    for v in range(1, 5):
+        sn._commit_frame(base, v, f"data_v{v}",
+                         spark.createDataFrame([(v, "a", v)], SCHEMA))
+    v, jobs = _jobs(spark,
+                    lambda: sn.alter_rename_column(spark, base, "x", "y"))
+    assert (v, jobs) == (6, [])
+    v, jobs = _jobs(spark, lambda: sn.alter_drop_column(spark, base, "p"))
+    assert (v, jobs) == (7, [])
+    assert sn.read_version(spark, base, 7).columns == ["k", "y"]
 
 
 def test_upsert_tombstones_the_keys_it_wrote(spark, tmp_path):

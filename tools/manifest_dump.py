@@ -62,9 +62,9 @@ def main() -> None:
     os.makedirs(t)
     d1, d2 = os.path.join(t, "data_v1"), os.path.join(t, "data_v2")
     orders.filter("o_orderkey % 3 != 0").write.parquet(d1)
-    sn._commit(t, 1, d1)
+    sn._commit(t, 1, d1, orders.schema)
     orders.filter("o_orderkey % 3 = 0").write.parquet(d2)
-    sn.commit_append_with_retry(t, d2)
+    sn.commit_append_with_retry(t, d2, orders.schema)
     sn.commit_append_partitioned(spark, t, orders.filter("o_orderkey % 7 = 0"),
                                  "o_orderpriority")
     sn.commit_delete(spark, t, orders.filter("o_orderkey % 5 = 0")
@@ -89,7 +89,7 @@ def main() -> None:
     for v in (1, 2, 3):
         d = os.path.join(t2, f"data_v{v}")
         orders.filter(f"o_orderkey % 3 = {v - 1}").write.parquet(d)
-        sn._commit(t2, v, d)
+        sn._commit(t2, v, d, orders.schema)
     sn.compact(spark, t2)
     record()
     sn.expire_snapshots(t2, 4)
