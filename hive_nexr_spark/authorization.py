@@ -99,10 +99,11 @@ class AuthRegistry:
     # -- config -------------------------------------------------------
 
     def enabled(self) -> bool:
-        try:
-            v = self.spark.conf.get("hive.security.authorization.enabled")
-        except Exception:
-            return False
+        # with a default: an unset key would otherwise throw in the JVM,
+        # and converting that exception costs a dozen Py4J round trips
+        # on every statement
+        v = self.spark.conf.get("hive.security.authorization.enabled",
+                                "false")
         return str(v).lower() == "true"
 
     def _now(self) -> int:

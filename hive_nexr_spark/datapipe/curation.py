@@ -122,6 +122,7 @@ def decontaminate_fuzzy(documents: DataFrame, benchmark_mod: int = 13,
     unique candidate pairs."""
     from ._cache import tracked_persist
     from .dedup import _bounded_corpus, _jaccard, _with_shingles, hof_bands
+    from .similarity import _dbl
 
     corpus = _bounded_corpus(documents, max_doc_id)
     is_bench = (F.col("doc_id") < 100000) & \
@@ -132,21 +133,16 @@ def decontaminate_fuzzy(documents: DataFrame, benchmark_mod: int = 13,
     bench_b = bands.filter(is_bench).alias("e")
     cand = (
         train_b.join(bench_b,
-                     (F.col("t.band") == F.col("e.band"))
-                     & (F.col("t.bucket") == F.col("e.bucket")))
-        .select(F.col("t.doc_id").alias("train_id"),
-                F.col("e.doc_id").alias("bench_id"))
+                     F.expr("t.band = e.band AND t.bucket = e.bucket"))
+        .selectExpr("t.doc_id AS train_id", "e.doc_id AS bench_id")
         .distinct()
     )
     verified = (
-        cand.join(toks.alias("tt"), F.col("train_id") == F.col("tt.doc_id"))
-        .join(toks.alias("te"), F.col("bench_id") == F.col("te.doc_id"))
-        .select(
-            "train_id", "bench_id",
-            F.round(_jaccard(F.col("tt.sh"), F.col("te.sh")), 6)
-            .alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= jaccard_threshold)
+        cand.join(toks.alias("tt"), F.expr("train_id = tt.doc_id"))
+        .join(toks.alias("te"), F.expr("bench_id = te.doc_id"))
+        .selectExpr("train_id", "bench_id",
+                    f"round({_jaccard('tt.sh', 'te.sh')}, 6) AS jaccard")
+        .filter(f"jaccard >= {_dbl(jaccard_threshold)}")
     )
     return verified.groupBy(F.col("train_id").alias("doc_id")).agg(
         F.count("*").alias("n_bench_hits"),
@@ -783,7 +779,7 @@ def decontaminate_embedding(documents: DataFrame, threshold: float = 0.99,
     same-bucket pairs, and the benchmark side is a tiny broadcast."""
     from ._cache import tracked_persist
     from .dedup import with_synthetic_dups
-    from .similarity import _dot, _norm, hash_planes
+    from .similarity import _cos, _dbl, _sign_bits, hash_planes
     from .textops import hash_embeddings
 
     corpus = with_synthetic_dups(documents)
@@ -794,33 +790,19 @@ def decontaminate_embedding(documents: DataFrame, threshold: float = 0.99,
     emb = tracked_persist(hash_embeddings(corpus, dim).select(
         "doc_id", F.col("v").cast("array<double>").alias("v")))
     planes = hash_planes(1, n_planes, dim)[0]
-
-    def bucket(vcol):
-        bits = [
-            F.when(_dot(vcol, F.array(*[F.lit(x) for x in p])) >= 0, "1")
-            .otherwise("0")
-            for p in planes
-        ]
-        return F.concat(*bits)
-
     is_bench = (F.col("doc_id") % benchmark_mod == 0) & \
         (F.col("doc_id") < 100000)
     bench = (emb.filter(is_bench)
-             .select(F.col("doc_id").alias("bench_id"),
-                     F.col("v").alias("bv"))
-             .withColumn("bkt", bucket(F.col("bv"))))
+             .selectExpr("doc_id AS bench_id", "v AS bv",
+                         f"{_sign_bits('v', planes)} AS bkt"))
     train = (emb.filter(~is_bench)
-             .select(F.col("doc_id").alias("train_id"), "v")
-             .withColumn("bkt", bucket(F.col("v"))))
+             .selectExpr("doc_id AS train_id", "v",
+                         f"{_sign_bits('v', planes)} AS bkt"))
     return (
         train.join(F.broadcast(bench), "bkt")
-        .select(
-            "train_id", "bench_id",
-            (_dot(F.col("v"), F.col("bv"))
-             / (_norm(F.col("v")) * _norm(F.col("bv")))).alias("cosine"),
-        )
-        .filter(F.col("cosine") >= threshold)
-        .select("train_id", "bench_id", F.round("cosine", 6).alias("cosine"))
+        .selectExpr("train_id", "bench_id", f"{_cos('v', 'bv')} AS cosine")
+        .filter(f"cosine >= {_dbl(threshold)}")
+        .selectExpr("train_id", "bench_id", "round(cosine, 6) AS cosine")
     )
 
 

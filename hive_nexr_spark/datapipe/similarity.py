@@ -20,72 +20,78 @@ recall baseline (`_exact_topk`, `_with_recall`).
 
 from __future__ import annotations
 
-from functools import reduce
-from operator import and_
-
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..io import local_frame
 from ._cache import tracked_persist, tracked_persist_extend
 
 
-def _sumsq(a: Column) -> Column:
-    return F.aggregate(a, F.lit(0.0).cast("double"), lambda acc, x: acc + x * x)
+# Expression builders return Spark SQL text, and each projection goes to
+# the JVM in one `selectExpr` / `F.expr` call: composing the same
+# expression from Column-API nodes costs two to three Py4J round trips
+# per node, which made plan building the larger part of a query's
+# latency. Lambda parameters start with "_" so they never shadow a
+# column the expression also reads.
+
+def _dbl(x: float) -> str:
+    """A double literal: `repr` round-trips every finite double, so the
+    literal is the same value `F.lit(x)` carries."""
+    return f"{float(x)!r}D"
 
 
-def _dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0).cast("double"),
-        lambda acc, x: acc + x,
-    )
+def _sumsq(a: str) -> str:
+    return f"aggregate({a}, 0D, (_acc, _x) -> _acc + _x * _x)"
 
 
-def _norm(a: Column) -> Column:
-    return F.sqrt(_sumsq(a))
+def _dot(a: str, b: str) -> str:
+    return (f"aggregate(zip_with({a}, {b}, (_x, _y) -> _x * _y), 0D, "
+            "(_acc, _x) -> _acc + _x)")
 
 
-def _cos(a: Column, b: Column) -> Column:
-    return _dot(a, b) / (_norm(a) * _norm(b))
+def _norm(a: str) -> str:
+    return f"sqrt({_sumsq(a)})"
 
 
-def _d2(a: Column, b: Column) -> Column:
+def _cos(a: str, b: str) -> str:
+    return f"({_dot(a, b)} / ({_norm(a)} * {_norm(b)}))"
+
+
+def _d2(a: str, b: str) -> str:
     """Squared euclidean distance as a fixed-order left fold."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0).cast("double"), lambda acc, x: acc + x)
+    return (f"aggregate(zip_with({a}, {b}, (_x, _y) -> (_x - _y) * (_x - _y)"
+            "), 0D, (_acc, _x) -> _acc + _x)")
 
 
-def _as_double(col: str) -> Column:
-    return F.col(col).cast("array<double>")
+def _vectors(embeddings: DataFrame, *extra: str) -> DataFrame:
+    """(vec_id, v array<double>, *extra) from an `embedding` column."""
+    return embeddings.selectExpr(
+        "vec_id", "CAST(embedding AS array<double>) AS v", *extra)
 
 
 def _split(emb: DataFrame, n_queries: int) -> tuple[DataFrame, DataFrame]:
     """(vec_id, v) → (queries (query_id, qv), corpus (vec_id, v)): the
     vectors with vec_id < n_queries are the query set."""
-    queries = emb.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv"))
-    return queries, emb.filter(F.col("vec_id") >= n_queries)
+    queries = emb.filter(f"vec_id < {n_queries}").selectExpr(
+        "vec_id AS query_id", "v AS qv")
+    return queries, emb.filter(f"vec_id >= {n_queries}")
 
 
-def _top(df: DataFrame, k: int, part: str, *order: Column) -> DataFrame:
-    """The first `k` rows of each `part` group in `order`, numbered in
-    column `rank`."""
-    w = Window.partitionBy(part).orderBy(*order)
-    return (df.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
+def _top(df: DataFrame, k: int, part: str, *order: str) -> DataFrame:
+    """The first `k` rows of each `part` group in `order` (SQL sort
+    keys), numbered in column `rank`."""
+    return df.selectExpr(
+        "*", f"row_number() OVER (PARTITION BY {part} ORDER BY "
+        f"{', '.join(order)}) AS rank").filter(f"rank <= {k}")
 
 
 def _cosine_topk(pairs: DataFrame, k: int) -> DataFrame:
     """(query_id, qv, vec_id, v) candidate pairs → (query_id,
     neighbor_id, rank): top-k by cosine, ties to the lower id."""
-    scored = pairs.select(
-        "query_id", F.col("vec_id").alias("neighbor_id"),
-        _cos(F.col("qv"), F.col("v")).alias("cosine"))
-    return _top(scored, k, "query_id", F.col("cosine").desc(),
-                F.col("neighbor_id")).select("query_id", "neighbor_id",
-                                             "rank")
+    scored = pairs.selectExpr("query_id", "vec_id AS neighbor_id",
+                              f"{_cos('qv', 'v')} AS cosine")
+    return _top(scored, k, "query_id", "cosine DESC",
+                "neighbor_id").selectExpr("query_id", "neighbor_id", "rank")
 
 
 _MAX_ARTIFACT_ROWS = 1_000_000  # driver-safety bound; real artifacts are ≤ thousands
@@ -162,8 +168,7 @@ def _local_artifact(df: DataFrame) -> DataFrame:
 
 def brute_force_topk(embeddings: DataFrame, k: int = 3, n_queries: int = 10) -> DataFrame:
     """Exact cosine top-k: query set broadcast against a single corpus scan."""
-    emb = embeddings.select("vec_id", _as_double("embedding").alias("v"))
-    queries, corpus = _split(emb, n_queries)
+    queries, corpus = _split(_vectors(embeddings), n_queries)
     return _cosine_topk(corpus.join(F.broadcast(queries)), k)
 
 
@@ -191,48 +196,46 @@ def mips_topk(embeddings: DataFrame, k: int = 3,
     scan; scoring is corpus × broadcast(queries) with JVM-side
     zip_with/aggregate math (no Python), per-query ranking windows
     partition by the bounded query set."""
-    emb = embeddings.select("vec_id", _as_double("embedding").alias("v"))
-    queries, corpus = _split(emb, n_queries)
+    queries, corpus = _split(_vectors(embeddings), n_queries)
     # persisted: two consumers rescan it (the Phi aggregate and the
     # scoring join) — at scale Phi is computed once per corpus version
     # and stored with it, exactly this plan's cache materialization
     corpus = tracked_persist(corpus)
-    phi2 = corpus.agg(F.max(_sumsq(F.col("v"))).alias("phi2"))
-    n2x = _sumsq(F.col("v"))
-    aug = F.sqrt(F.greatest(F.col("phi2") - n2x, F.lit(0.0)))
+    phi2 = corpus.agg(F.expr(f"max({_sumsq('v')}) AS phi2"))
+    n2x = _sumsq("v")
+    aug = f"sqrt(greatest(phi2 - {n2x}, 0D))"
     # augmented dot: q' carries 0 in the extra coordinate, so the term
     # aug * 0 rides along literally; augmented corpus norm is computed
     # from the components, not collapsed to sqrt(phi2)
-    dot_aug = _dot(F.col("qv"), F.col("v")) + aug * F.lit(0.0)
-    norm_aug = F.sqrt(n2x + aug * aug)
+    dot_aug = f"{_dot('qv', 'v')} + {aug} * 0D"
+    norm_aug = f"sqrt({n2x} + {aug} * {aug})"
     scored = (
         corpus.join(F.broadcast(queries))
         .crossJoin(F.broadcast(phi2))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            _dot(F.col("qv"), F.col("v")).alias("ip"),
-            (dot_aug / (norm_aug * _norm(F.col("qv"))))
-            .alias("cos_aug")))
+        .selectExpr(
+            "query_id", "vec_id AS neighbor_id", f"{_dot('qv', 'v')} AS ip",
+            f"({dot_aug}) / (({norm_aug}) * {_norm('qv')}) AS cos_aug"))
     # cos_aug stays the PRIMARY key (the reduction's order-equivalence
     # demonstration); the raw ip rides as a deterministic tie-break so
     # last-ulp differences in the per-vector norm_aug recomputation
     # cannot invert exactly- or near-tied inner products relative to the
     # oracle (which ranks by raw ip, then neighbor_id)
-    return _top(scored, k, "query_id", F.col("cos_aug").desc(),
-                F.col("ip").desc(), F.col("neighbor_id")).select(
-        "query_id", "neighbor_id",
-        F.round("ip", 6).alias("inner_product"), "rank")
+    return _top(scored, k, "query_id", "cos_aug DESC", "ip DESC",
+                "neighbor_id").selectExpr(
+        "query_id", "neighbor_id", "round(ip, 6) AS inner_product", "rank")
 
 
-def _sign_bits(vcol: Column, planes: list[list[float]]) -> Column:
+def _array(values: list[float]) -> str:
+    """A literal array<double> of `values`."""
+    return f"array({', '.join(_dbl(x) for x in values)})"
+
+
+def _sign_bits(v: str, planes: list[list[float]]) -> str:
     """Sign-LSH bucket: one '1'/'0' per hyperplane, by the sign of the
-    dot product."""
-    return F.concat(*[
-        F.when(_dot(vcol, F.array(*[F.lit(x) for x in p])) >= 0, "1"
-               ).otherwise("0")
-        for p in planes
-    ])
+    dot product of the array column `v` with the plane."""
+    return "concat(" + ", ".join(
+        f"CASE WHEN {_dot(v, _array(p))} >= 0 THEN '1' ELSE '0' END"
+        for p in planes) + ")"
 
 
 def lsh_topk(embeddings: DataFrame, n_planes: int = 4, n_queries: int = 10,
@@ -244,10 +247,9 @@ def lsh_topk(embeddings: DataFrame, n_planes: int = 4, n_queries: int = 10,
     extra corpus scan, and a re-ingest of the corpus cannot change any
     bucket."""
     planes = hash_planes(1, n_planes, dim)[0]
-    emb = embeddings.select("vec_id", _as_double("embedding").alias("v"))
-    queries, corpus = _split(emb, n_queries)
-    corpus = corpus.withColumn("bkt", _sign_bits(F.col("v"), planes))
-    queries = queries.withColumn("bkt", _sign_bits(F.col("qv"), planes))
+    queries, corpus = _split(_vectors(embeddings), n_queries)
+    corpus = corpus.selectExpr("*", f"{_sign_bits('v', planes)} AS bkt")
+    queries = queries.selectExpr("*", f"{_sign_bits('qv', planes)} AS bkt")
     return _cosine_topk(corpus.join(F.broadcast(queries), "bkt"), k)
 
 
@@ -265,19 +267,16 @@ def _sampled_cells(corpus: DataFrame, queries: DataFrame, cents: DataFrame,
     a join+groupBy form would shuffle corpus rows with their vector
     payloads); probing broadcasts n_queries × nprobe rows."""
     vc, cc, qc = "v" + sfx, "cv" + sfx, "qv" + sfx
-    nested = cents.agg(F.collect_list(F.struct("cell", cc)).alias("_cents"))
-    best_cell = F.array_max(F.transform(
-        F.col("_cents"),
-        lambda c: F.struct(_cos(F.col(vc), c[cc]).alias("s"),
-                           c["cell"].alias("cell")),
-    ))["cell"]
+    nested = cents.agg(F.expr(f"collect_list(struct(cell, {cc})) AS _cents"))
+    best_cell = (f"array_max(transform(_cents, _c -> named_struct("
+                 f"'s', {_cos(vc, '_c.' + cc)}, 'cell', _c.cell))).cell")
     assigned = (corpus.crossJoin(F.broadcast(nested))
-                .select("vec_id", best_cell.alias("cell"), "v"))
+                .selectExpr("vec_id", f"{best_cell} AS cell", "v"))
     probes = _top(
-        queries.join(F.broadcast(cents)).select(
-            "query_id", "qv", _cos(F.col(qc), F.col(cc)).alias("s"), "cell"),
-        nprobe, "query_id", F.col("s").desc(), F.col("cell"),
-    ).select("query_id", "qv", "cell")
+        queries.join(F.broadcast(cents)).selectExpr(
+            "query_id", "qv", f"{_cos(qc, cc)} AS s", "cell"),
+        nprobe, "query_id", "s DESC", "cell",
+    ).selectExpr("query_id", "qv", "cell")
     return assigned.join(F.broadcast(probes), "cell")
 
 
@@ -301,10 +300,9 @@ def ivf_topk(embeddings: DataFrame, k: int = 3, n_queries: int = 10,
     whole-stage-codegen/JIT cost of the higher-order-function
     expressions (4.6 s vs 2.0-2.6 s warm at sf0.1), so a single timed
     run swings with what earlier queries already compiled."""
-    emb = embeddings.select("vec_id", _as_double("embedding").alias("v"))
-    queries, corpus = _split(emb, n_queries)
-    cents = corpus.filter(F.col("vec_id") % stride == 0).select(
-        F.col("vec_id").alias("cell"), F.col("v").alias("cv"))
+    queries, corpus = _split(_vectors(embeddings), n_queries)
+    cents = corpus.filter(f"vec_id % {stride} = 0").selectExpr(
+        "vec_id AS cell", "v AS cv")
     return _cosine_topk(_sampled_cells(corpus, queries, cents, nprobe), k)
 
 
@@ -329,36 +327,22 @@ def mips_ivf_topk(embeddings: DataFrame, k: int = 3, n_queries: int = 10,
     is a zero-Exchange nested argmax projection, the rerank join touches
     probed cells only; augmentation adds one JVM-side array element, no
     extra pass."""
-    emb = embeddings.select("vec_id", _as_double("embedding").alias("v"))
-    queries, corpus = _split(emb, n_queries)
-    phi2 = corpus.agg(F.max(_sumsq(F.col("v"))).alias("phi2"))
-
-    def augmented(vcol):
-        return F.concat(
-            vcol,
-            F.array(F.sqrt(F.greatest(F.col("phi2") - _sumsq(vcol),
-                                      F.lit(0.0)))))
-
+    queries, corpus = _split(_vectors(embeddings), n_queries)
+    phi2 = corpus.agg(F.expr(f"max({_sumsq('v')}) AS phi2"))
+    augmented = (f"concat(v, array(sqrt(greatest(phi2 - {_sumsq('v')}, "
+                 "0D))))")
     corpus_a = (corpus.crossJoin(F.broadcast(phi2))
-                .select("vec_id", "v", augmented(F.col("v")).alias("va")))
-    cents = (corpus.filter(F.col("vec_id") % stride == 0)
+                .selectExpr("vec_id", "v", f"{augmented} AS va"))
+    cents = (corpus.filter(f"vec_id % {stride} = 0")
              .crossJoin(F.broadcast(phi2))
-             .select(F.col("vec_id").alias("cell"),
-                     F.col("v").alias("cv"),
-                     augmented(F.col("v")).alias("cva")))
-    queries_a = queries.select(
-        "query_id", "qv",
-        F.concat(F.col("qv"),
-                 F.array(F.lit(0.0).cast("double"))).alias("qva"))
-    scored = _sampled_cells(corpus_a, queries_a, cents, nprobe, "a").select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        _dot(F.col("qv"), F.col("v")).alias("ip"),
-    )
-    return _top(scored, k, "query_id", F.col("ip").desc(),
-                F.col("neighbor_id")).select(
-        "query_id", "neighbor_id",
-        F.round("ip", 6).alias("inner_product"), "rank")
+             .selectExpr("vec_id AS cell", "v AS cv", f"{augmented} AS cva"))
+    queries_a = queries.selectExpr("query_id", "qv",
+                                   "concat(qv, array(0D)) AS qva")
+    scored = _sampled_cells(corpus_a, queries_a, cents, nprobe,
+                            "a").selectExpr(
+        "query_id", "vec_id AS neighbor_id", f"{_dot('qv', 'v')} AS ip")
+    return _top(scored, k, "query_id", "ip DESC", "neighbor_id").selectExpr(
+        "query_id", "neighbor_id", "round(ip, 6) AS inner_product", "rank")
 
 
 def hard_negative_mining(embeddings: DataFrame, k: int = 3,
@@ -379,26 +363,22 @@ def hard_negative_mining(embeddings: DataFrame, k: int = 3,
     different-label filter rides the scoring projection (no second
     pass); best-positive is a map-side-combined per-anchor max; ranking
     windows partition by the bounded anchor set."""
-    emb = embeddings.select("vec_id", _as_double("embedding").alias("v"),
-                            "label")
-    anchors = emb.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv"),
-        F.col("label").alias("qlabel"))
-    corpus = emb.filter(F.col("vec_id") >= n_queries)
-    scored = corpus.join(F.broadcast(anchors)).select(
-        "query_id", "qlabel",
-        F.col("vec_id").alias("neighbor_id"), "label",
-        _cos(F.col("qv"), F.col("v")).alias("cos"))
-    best_pos = (scored.filter(F.col("label") == F.col("qlabel"))
+    emb = _vectors(embeddings, "label")
+    anchors = emb.filter(f"vec_id < {n_queries}").selectExpr(
+        "vec_id AS query_id", "v AS qv", "label AS qlabel")
+    corpus = emb.filter(f"vec_id >= {n_queries}")
+    scored = corpus.join(F.broadcast(anchors)).selectExpr(
+        "query_id", "qlabel", "vec_id AS neighbor_id", "label",
+        f"{_cos('qv', 'v')} AS cos")
+    best_pos = (scored.filter("label = qlabel")
                 .groupBy("query_id")
-                .agg(F.max("cos").alias("best_pos_cos")))
+                .agg(F.expr("max(cos) AS best_pos_cos")))
     return (
-        _top(scored.filter(F.col("label") != F.col("qlabel")), k,
-             "query_id", F.col("cos").desc(), F.col("neighbor_id"))
+        _top(scored.filter("label != qlabel"), k,
+             "query_id", "cos DESC", "neighbor_id")
         .join(F.broadcast(best_pos), "query_id", "left")
-        .select("query_id", "neighbor_id",
-                F.round("cos", 6).alias("cosine"), "rank",
-                (F.col("cos") < F.col("best_pos_cos")).alias("semi_hard"))
+        .selectExpr("query_id", "neighbor_id", "round(cos, 6) AS cosine",
+                    "rank", "cos < best_pos_cos AS semi_hard")
     )
 
 
@@ -471,15 +451,11 @@ def with_synthetic_vec_dups(embeddings: DataFrame, dim: int = 64,
     observable behavior (same rationale as dedup.with_synthetic_dups for
     text). For eps=0.05 the planted pairs land at cosine ≈ 0.993–0.995."""
     delta = hash_planes(1, 1, dim)[0][0]
-    orig = embeddings.select("vec_id", _as_double("embedding").alias("v"))
-    near = orig.filter(F.col("vec_id") % 5 == 0).select(
-        (F.col("vec_id") + 100000).alias("vec_id"),
-        F.zip_with(
-            F.col("v"),
-            F.array(*[F.lit(eps * x) for x in delta]),
-            lambda x, y: x + y,
-        ).alias("v"),
-    )
+    orig = _vectors(embeddings)
+    near = orig.filter("vec_id % 5 = 0").selectExpr(
+        "vec_id + 100000 AS vec_id",
+        f"zip_with(v, {_array([eps * x for x in delta])}, "
+        "(_x, _y) -> _x + _y) AS v")
     return orig.unionAll(near)
 
 
@@ -508,41 +484,32 @@ def embedding_dups_lsh(embeddings: DataFrame, threshold: float = 0.99,
     planes = hash_planes(tables, bits, dim)
     emb = with_synthetic_vec_dups(embeddings, dim=dim)
 
-    bands = emb.select(
+    bands = emb.selectExpr(
         "vec_id",
-        F.explode(
-            F.array(*[
-                F.struct(F.lit(t).alias("tbl"),
-                         _sign_bits(F.col("v"), planes[t]).alias("bkt"))
-                for t in range(tables)
-            ])
-        ).alias("tb"),
-    ).select("vec_id", "tb.tbl", "tb.bkt")
+        "explode(array(" + ", ".join(
+            f"named_struct('tbl', {t}, 'bkt', {_sign_bits('v', planes[t])})"
+            for t in range(tables)) + ")) AS tb",
+    ).selectExpr("vec_id", "tb.tbl", "tb.bkt")
     # tracked_persist: shared band stage cached for the self-join, released
     # when the next persisting operator is constructed (bounded sweep cache)
     bands = tracked_persist(bands)
     a, b = bands.alias("a"), bands.alias("b")
     cand = (
-        a.join(b, (F.col("a.tbl") == F.col("b.tbl"))
-               & (F.col("a.bkt") == F.col("b.bkt"))
-               & (F.col("a.vec_id") < F.col("b.vec_id")))
-        .select(
-            F.col("a.vec_id").alias("id_a"),
-            F.col("b.vec_id").alias("id_b"),
-        )
+        a.join(b, F.expr("a.tbl = b.tbl AND a.bkt = b.bkt "
+                         "AND a.vec_id < b.vec_id"))
+        .selectExpr("a.vec_id AS id_a", "b.vec_id AS id_b")
         .distinct()
     )
-    va = emb.select(F.col("vec_id").alias("id_a"), F.col("v").alias("va"))
-    vb = emb.select(F.col("vec_id").alias("id_b"), F.col("v").alias("vb"))
+    va = emb.selectExpr("vec_id AS id_a", "v AS va")
+    vb = emb.selectExpr("vec_id AS id_b", "v AS vb")
     verified = (
         cand.join(va, "id_a")
         .join(vb, "id_b")
-        .select("id_a", "id_b",
-                _cos(F.col("va"), F.col("vb")).alias("cosine"))
+        .selectExpr("id_a", "id_b", f"{_cos('va', 'vb')} AS cosine")
     )
     return (
-        verified.filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))
+        verified.filter(f"cosine >= {_dbl(threshold)}")
+        .selectExpr("id_a", "id_b", "round(cosine, 6) AS cosine")
     )
 
 
@@ -552,17 +519,14 @@ def embedding_cosine_dups(embeddings: DataFrame, threshold: float = 0.99,
     flavor of similarity search) — the all-pairs baseline that
     `embedding_dups_lsh` approximates at full-corpus scale."""
     emb = with_synthetic_vec_dups(embeddings).filter(
-        (F.col("vec_id") % 100000) < max_id)
+        f"vec_id % 100000 < {max_id}")
     a, b = emb.alias("a"), emb.alias("b")
     return (
-        a.join(b, F.col("a.vec_id") < F.col("b.vec_id"))
-        .select(
-            F.col("a.vec_id").alias("id_a"),
-            F.col("b.vec_id").alias("id_b"),
-            _cos(F.col("a.v"), F.col("b.v")).alias("cosine"),
-        )
-        .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))
+        a.join(b, F.expr("a.vec_id < b.vec_id"))
+        .selectExpr("a.vec_id AS id_a", "b.vec_id AS id_b",
+                    f"{_cos('a.v', 'b.v')} AS cosine")
+        .filter(f"cosine >= {_dbl(threshold)}")
+        .selectExpr("id_a", "id_b", "round(cosine, 6) AS cosine")
     )
 
 
@@ -578,28 +542,25 @@ def _nest(cents: DataFrame, arr: str, *by: str) -> DataFrame:
     must broadcast and evaluate per row); a million-centroid fine
     quantizer would return to the join+groupBy form, sharded."""
     return cents.groupBy(*by).agg(
-        F.collect_list(F.struct("cluster", "cv")).alias(arr))
+        F.expr(f"collect_list(struct(cluster, cv)) AS {arr}"))
 
 
-def _nearest(vcol: Column, arr: str) -> Column:
-    """argmin_{c ∈ arr} ||vcol − c.cv||² with ties to the lower cluster
+def _nearest(v: str, arr: str) -> str:
+    """argmin_{c ∈ arr} ||v − c.cv||² with ties to the lower cluster
     id (the min compares (d2, cluster)), as one JVM expression over the
     nested array."""
-    return F.array_min(F.transform(
-        F.col(arr),
-        lambda c: F.struct(_d2(vcol, c["cv"]).alias("d2"),
-                           c["cluster"].alias("cluster")),
-    ))["cluster"]
+    return (f"array_min(transform({arr}, _c -> named_struct("
+            f"'d2', {_d2(v, '_c.cv')}, 'cluster', _c.cluster))).cluster")
 
 
 def _assign(vecs: DataFrame, cents: DataFrame, name: str,
-            *cols) -> DataFrame:
+            *cols: str) -> DataFrame:
     """(vec_id, v, …) × (cluster, cv) centroids → (vec_id, `name`,
     *cols): every vector's nearest centroid, by the broadcast
     nested-centroid projection."""
     return (
         vecs.crossJoin(F.broadcast(_nest(cents, "_cents")))
-        .select("vec_id", _nearest(F.col("v"), "_cents").alias(name), *cols)
+        .selectExpr("vec_id", f"{_nearest('v', '_cents')} AS {name}", *cols)
     )
 
 
@@ -608,13 +569,11 @@ def _means(assigned: DataFrame, v: str, width: int, *keys: str) -> DataFrame:
     the element-wise mean `cv` of the `width`-long array column `v` —
     one map-side-combined groupBy, the one shuffle an iteration needs."""
     return assigned.groupBy(*keys).agg(
-        F.count("*").alias("n"),
-        *[F.sum(F.col(v)[i]).alias(f"s{i}") for i in range(width)],
-    ).select(
+        F.expr("count(*) AS n"),
+        *[F.expr(f"sum({v}[{i}]) AS s{i}") for i in range(width)],
+    ).selectExpr(
         *keys, "n",
-        F.array(*[F.col(f"s{i}") / F.col("n") for i in range(width)]
-                ).alias("cv"),
-    )
+        "array(" + ", ".join(f"s{i} / n" for i in range(width)) + ") AS cv")
 
 
 def _kmeans_centroids(emb: DataFrame, k: int, iters: int,
@@ -624,8 +583,8 @@ def _kmeans_centroids(emb: DataFrame, k: int, iters: int,
     after `iters` rounds, one lazy unrolled plan. Init centroids are the
     vectors with vec_id < k; assignment is the nested-centroid
     projection (squared euclidean, ties to the lower cluster id)."""
-    cents = emb.filter(F.col("vec_id") < k).select(
-        F.col("vec_id").cast("int").alias("cluster"), F.col("v").alias("cv"))
+    cents = emb.filter(f"vec_id < {k}").selectExpr(
+        "CAST(vec_id AS int) AS cluster", "v AS cv")
     for _ in range(iters):
         cents = _means(_assign(emb, cents, "cluster", "v"), "v", dim,
                        "cluster")
@@ -653,15 +612,11 @@ def kmeans_clusters(embeddings: DataFrame, k: int = 8, iters: int = 2,
     `ivf_topk`'s broadcast centroid slot as the trained-quantizer IVF
     variant.
     """
-    emb = embeddings.select("vec_id", _as_double("embedding").alias("v"))
-    cents = _kmeans_centroids(emb, k, iters, dim)
-    return cents.select(
-        "cluster",
-        F.col("n").alias("n_members"),
-        F.round(
-            F.aggregate(F.col("cv"), F.lit(0.0).cast("double"),
-                        lambda acc, x: acc + x), 6).alias("centroid_checksum"),
-    )
+    cents = _kmeans_centroids(_vectors(embeddings), k, iters, dim)
+    return cents.selectExpr(
+        "cluster", "n AS n_members",
+        "round(aggregate(cv, 0D, (_acc, _x) -> _acc + _x), 6) "
+        "AS centroid_checksum")
 
 
 def semdedup(embeddings: DataFrame, n_clusters: int = 8, iters: int = 2,
@@ -693,7 +648,7 @@ def semdedup(embeddings: DataFrame, n_clusters: int = 8, iters: int = 2,
     # so collecting it into a leaf buys no consumer-dedup and adds
     # eager collect jobs (measured 16→24 tasks and ×2.99 wall, VERDICT
     # r13 item 1).
-    cents = _kmeans_centroids(emb, n_clusters, iters, dim).select(
+    cents = _kmeans_centroids(emb, n_clusters, iters, dim).selectExpr(
         "cluster", "cv")
 
     # `nv` precomputes each vector's norm ONCE at assignment time: the
@@ -702,23 +657,20 @@ def semdedup(embeddings: DataFrame, n_clusters: int = 8, iters: int = 2,
     # it 2·Σ|cell|² times. Same expression over the same doubles →
     # bit-identical values.
     assigned = tracked_persist(_assign(
-        emb, cents, "cluster", "v", _norm(F.col("v")).alias("nv")))
+        emb, cents, "cluster", "v", f"{_norm('v')} AS nv"))
 
     a, b = assigned.alias("a"), assigned.alias("b")
-    cos = (_dot(F.col("a.v"), F.col("b.v"))
-           / (F.col("a.nv") * F.col("b.nv")))
     dup_ids = (
-        a.join(b, (F.col("a.cluster") == F.col("b.cluster"))
-               & (F.col("b.vec_id") < F.col("a.vec_id")))
-        .filter(cos >= threshold)
-        .select(F.col("a.vec_id").alias("vec_id"))
+        a.join(b, F.expr("a.cluster = b.cluster AND b.vec_id < a.vec_id"))
+        .filter(f"{_dot('a.v', 'b.v')} / (a.nv * b.nv) >= "
+                f"{_dbl(threshold)}")
+        .selectExpr("a.vec_id AS vec_id")
     )
-    marks = dup_ids.distinct().withColumn("d", F.lit(True))
+    marks = dup_ids.distinct().selectExpr("*", "true AS d")
     return (
-        assigned.select("vec_id", "cluster")
+        assigned.selectExpr("vec_id", "cluster")
         .join(marks, "vec_id", "left")
-        .select("vec_id", "cluster",
-                F.coalesce("d", F.lit(False)).alias("is_dup"))
+        .selectExpr("vec_id", "cluster", "coalesce(d, false) AS is_dup")
     )
 
 
@@ -727,13 +679,13 @@ def _probes(queries: DataFrame, coarse: DataFrame, nprobe: int,
     """(query_id, qv, …) × coarse (cluster, cv) → (query_id, *carry,
     cell): each query's top-`nprobe` nearest cells by squared euclidean,
     ties to the lower cluster (broadcast-centroid window — the probe
-    routing of every trained-quantizer IVF variant)."""
+    routing of every trained-quantizer IVF variant). `carry` may name
+    the centroid `cv` too."""
     return _top(
-        queries.join(F.broadcast(coarse)).select(
-            "query_id", *carry, _d2(F.col("qv"), F.col("cv")).alias("d2"),
-            "cluster"),
-        nprobe, "query_id", F.col("d2").asc(), F.col("cluster"),
-    ).select("query_id", *carry, F.col("cluster").alias("cell"))
+        queries.join(F.broadcast(coarse)).selectExpr(
+            "query_id", *carry, f"{_d2('qv', 'cv')} AS d2", "cluster"),
+        nprobe, "query_id", "d2 ASC", "cluster",
+    ).selectExpr("query_id", *carry, "cluster AS cell")
 
 
 def ivf_kmeans_topk(embeddings: DataFrame, k: int = 3, n_queries: int = 10,
@@ -752,14 +704,14 @@ def ivf_kmeans_topk(embeddings: DataFrame, k: int = 3, n_queries: int = 10,
     n_queries × nprobe rows; the rerank join touches only vectors in
     probed cells. The k-row centroid table is always broadcast — nothing
     driver-side, no cross product through a shuffle."""
-    emb = embeddings.select("vec_id", _as_double("embedding").alias("v"))
+    emb = _vectors(embeddings)
     # cents stays LAZY: its two consumers are both BROADCAST builds of a
     # k-row table, so the duplicated training subtree costs two cheap
     # broadcast jobs; a `_local_artifact` leaf added eager collect jobs
     # instead (tasks 14→29, no wall win; VERDICT r13 item 2) and hid the
     # training joins from the plan contract pinned in
     # tests/test_plans.py::test_ivf_kmeans_trained_quantizer_broadcasts.
-    cents = _kmeans_centroids(emb, n_cells, iters, dim).select(
+    cents = _kmeans_centroids(emb, n_cells, iters, dim).selectExpr(
         "cluster", "cv")
     queries, corpus = _split(emb, n_queries)
     assigned = _assign(corpus, cents, "cell", "v")
@@ -771,7 +723,8 @@ def _coarse(emb: DataFrame, n_cells: int, iters: int,
             dim: int) -> DataFrame:
     """The trained coarse quantizer (cluster, cv) as a bounded leaf."""
     return _local_artifact(
-        _kmeans_centroids(emb, n_cells, iters, dim).select("cluster", "cv"))
+        _kmeans_centroids(emb, n_cells, iters, dim).selectExpr("cluster",
+                                                               "cv"))
 
 
 def _pq_sub(df: DataFrame, m: int, sd: int, *keys: str,
@@ -780,14 +733,10 @@ def _pq_sub(df: DataFrame, m: int, sd: int, *keys: str,
     subvector slice `sv` — the PQ decomposition that training, encoding
     and every lookup table consume. `keys` defaults to (vec_id,)."""
     keys = keys or ("vec_id",)
-    return df.select(
-        *keys,
-        F.explode(F.array(*[
-            F.struct(F.lit(j).alias("j"),
-                     F.slice(v, j * sd + 1, sd).alias("sv"))
-            for j in range(m)
-        ])).alias("s"),
-    ).select(*keys, F.col("s.j").alias("j"), F.col("s.sv").alias("sv"))
+    subs = ", ".join(f"named_struct('j', {j}, 'sv', slice({v}, "
+                     f"{j * sd + 1}, {sd}))" for j in range(m))
+    return df.selectExpr(*keys, f"explode(array({subs})) AS s").selectExpr(
+        *keys, "s.j AS j", "s.sv AS sv")
 
 
 def _pq_encode(sub: DataFrame, cb: DataFrame, name: str = "code",
@@ -797,8 +746,8 @@ def _pq_encode(sub: DataFrame, cb: DataFrame, name: str = "code",
     an m-row broadcast join on j — no election shuffle."""
     return (
         sub.join(F.broadcast(_nest(cb, "_cbs", "j")), "j")
-        .select("vec_id", "j", _nearest(F.col("sv"), "_cbs").alias(name),
-                *cols)
+        .selectExpr("vec_id", "j", f"{_nearest('sv', '_cbs')} AS {name}",
+                    *cols)
     )
 
 
@@ -810,58 +759,53 @@ def _pq_codebooks(sub: DataFrame, ks: int, sd: int, iters: int,
     codebook — the residual trainer seeds from corpus residuals, whose
     ids don't start at 0."""
     cb = init if init is not None else sub.filter(
-        F.col("vec_id") < ks).select(
-        "j", F.col("vec_id").cast("int").alias("cluster"),
-        F.col("sv").alias("cv"))
+        f"vec_id < {ks}").selectExpr(
+        "j", "CAST(vec_id AS int) AS cluster", "sv AS cv")
     for _ in range(iters):
         cb = _means(_pq_encode(sub, cb, "cluster", "sv"), "sv", sd,
                     "j", "cluster")
-    return cb.select("j", "cluster", "cv")
+    return cb.selectExpr("j", "cluster", "cv")
 
 
 def _pq_lut(qsub: DataFrame, cb: DataFrame, *keys: str) -> DataFrame:
     """ADC lookup table: every (*keys, j) query subvector's squared
     distance to every code of subspace j — (*keys, j, cluster, d2),
     built from a broadcast of the m × ks codebook table."""
-    return qsub.join(F.broadcast(cb), "j").select(
-        *keys, "j", "cluster", _d2(F.col("sv"), F.col("cv")).alias("d2"))
+    return qsub.join(F.broadcast(cb), "j").selectExpr(
+        *keys, "j", "cluster", f"{_d2('sv', 'cv')} AS d2")
 
 
 def _raw_lut(sub: DataFrame, cb: DataFrame, n_queries: int) -> DataFrame:
     """The per-query raw-vector LUT (n_queries × m × ks rows)."""
-    return _pq_lut(sub.filter(F.col("vec_id") < n_queries)
+    return _pq_lut(sub.filter(f"vec_id < {n_queries}")
                    .withColumnRenamed("vec_id", "query_id"), cb, "query_id")
 
 
-def _adc_rank(cand: DataFrame, lut: DataFrame, k: int) -> DataFrame:
+def _adc_rank(cand: DataFrame, lut: DataFrame, k: int,
+              *keys: str) -> DataFrame:
     """ADC scoring: join candidate codes (vec_id, j, code, …) against
-    the broadcast LUT, sum the per-subspace distances, keep the top-k
-    per query (ties to the lower vec_id). The join also keys on
-    query_id when the candidates carry one (probe-restricted IVF
-    candidates) and on the cell when the LUT carries one (residual
-    LUTs: the query residual differs per probed cell). Both sides are
+    the broadcast LUT on (j, code) and on each of `keys` both sides
+    carry, sum the per-subspace distances, keep the top-k per query
+    (ties to the lower vec_id). `keys` holds query_id when the
+    candidates are already restricted per query (the raw IVF-PQ probe
+    join) and the cell when the LUT differs per probed cell (residual
+    LUTs); otherwise query_id comes from the LUT. Both sides are
     aliased: a bare reference to a column both inherit from one
     lineage would build a trivially-true predicate."""
-    on = [("j", "j"), ("code", "cluster")]
-    if "query_id" in cand.columns:
-        on.insert(0, ("query_id", "query_id"))
-    if "cell" in lut.columns:
-        on.append(("cell", "cell"))
-    qside = "_ca" if "query_id" in cand.columns else "_lu"
-    ca, lu = cand.alias("_ca"), lut.alias("_lu")
+    on = ["_ca.j = _lu.j", "_ca.code = _lu.cluster",
+          *[f"_ca.{c} = _lu.{c}" for c in keys]]
+    qside = "_ca" if "query_id" in keys else "_lu"
     scored = (
-        ca.join(F.broadcast(lu), reduce(and_, [
-            F.col(f"_ca.{a}") == F.col(f"_lu.{b}") for a, b in on]))
-        .select(F.col(f"{qside}.query_id").alias("query_id"),
-                F.col("_ca.vec_id").alias("vec_id"),
-                F.col("_lu.d2").alias("d2"))
+        cand.alias("_ca").join(F.broadcast(lut.alias("_lu")),
+                               F.expr(" AND ".join(on)))
+        .selectExpr(f"{qside}.query_id AS query_id", "_ca.vec_id AS vec_id",
+                    "_lu.d2 AS d2")
         .groupBy("query_id", "vec_id")
-        .agg(F.sum("d2").alias("approx_d2"))
+        .agg(F.expr("sum(d2) AS approx_d2"))
     )
-    return _top(scored, k, "query_id", F.col("approx_d2").asc(),
-                F.col("vec_id")).select(
-        "query_id", F.col("vec_id").alias("neighbor_id"),
-        "rank", F.round("approx_d2", 6).alias("approx_d2"))
+    return _top(scored, k, "query_id", "approx_d2 ASC", "vec_id").selectExpr(
+        "query_id", "vec_id AS neighbor_id", "rank",
+        "round(approx_d2, 6) AS approx_d2")
 
 
 def pq_topk(embeddings: DataFrame, k: int = 3, n_queries: int = 10,
@@ -890,21 +834,19 @@ def pq_topk(embeddings: DataFrame, k: int = 3, n_queries: int = 10,
     cells (ivf_kmeans_topk) bounds it per probe list in a production
     index (IVF-PQ), with identical plumbing."""
     sd = dim // m
-    emb = embeddings.select("vec_id", _as_double("embedding").alias("v"))
-    sub = _pq_sub(emb, m, sd)
+    sub = _pq_sub(_vectors(embeddings), m, sd)
     cb = _pq_codebooks(sub, ks, sd, iters)
     # corpus codes by a map-side-combined (vec_id, j) min(struct)
     # election — the same (d2, cluster) tie-break as `_pq_encode`'s
     # projection; this operator keeps the groupBy form, whose
     # partial_min tests/test_plans.py pins as its code election
     codes = (
-        sub.filter(F.col("vec_id") >= n_queries)
+        sub.filter(f"vec_id >= {n_queries}")
         .join(F.broadcast(cb), "j")
-        .select("vec_id", "j", _d2(F.col("sv"), F.col("cv")).alias("d2"),
-                "cluster")
+        .selectExpr("vec_id", "j", f"{_d2('sv', 'cv')} AS d2", "cluster")
         .groupBy("vec_id", "j")
-        .agg(F.min(F.struct("d2", "cluster")).alias("a"))
-        .select("vec_id", "j", F.col("a.cluster").alias("code"))
+        .agg(F.expr("min(struct(d2, cluster)) AS a"))
+        .selectExpr("vec_id", "j", "a.cluster AS code")
     )
     return _adc_rank(codes, _raw_lut(sub, cb, n_queries), k)
 
@@ -918,9 +860,9 @@ def _raw_ivf_pq(emb: DataFrame, cells: DataFrame, probes: DataFrame,
     cells' codes ranked by ADC against the raw per-query LUT."""
     sub = _pq_sub(emb, m, sd)
     cb = _local_artifact(_pq_codebooks(sub, ks, sd, pq_iters))
-    codes = _pq_encode(sub.filter(F.col("vec_id") >= n_queries), cb)
+    codes = _pq_encode(sub.filter(f"vec_id >= {n_queries}"), cb)
     cand = codes.join(cells, "vec_id").join(F.broadcast(probes), "cell")
-    return _adc_rank(cand, _raw_lut(sub, cb, n_queries), k)
+    return _adc_rank(cand, _raw_lut(sub, cb, n_queries), k, "query_id")
 
 
 def _residuals(vecs: DataFrame, coarse: DataFrame) -> DataFrame:
@@ -930,22 +872,18 @@ def _residuals(vecs: DataFrame, coarse: DataFrame) -> DataFrame:
     coarse quantizer did NOT explain). Cell routing is the zero-Exchange
     nested-centroid argmin; the subtraction is a broadcast-joined
     `zip_with` projection — no corpus shuffle anywhere."""
-    return _minus_centroid(_assign(vecs, coarse, "cell", "v"), coarse,
-                           "v", "rv", "vec_id", "cell")
+    ccv = coarse.selectExpr("cluster AS cell", "cv AS _ccv")
+    return (_assign(vecs, coarse, "cell", "v").join(F.broadcast(ccv), "cell")
+            .selectExpr("vec_id", "cell", f"{_minus('v', '_ccv')} AS rv"))
 
 
-def _minus_centroid(df: DataFrame, coarse: DataFrame, v: str, out: str,
-                    *keys: str) -> DataFrame:
-    """(*keys incl. cell, v) → (*keys, out = v − centroid(cell)), the
-    centroid joined from a broadcast of the coarse table."""
-    ccv = coarse.select(F.col("cluster").alias("cell"),
-                        F.col("cv").alias("_ccv"))
-    return df.join(F.broadcast(ccv), "cell").select(
-        *keys, F.zip_with(v, F.col("_ccv"), lambda x, y: x - y).alias(out))
+def _minus(a: str, b: str) -> str:
+    """Element-wise a − b of two array columns."""
+    return f"zip_with({a}, {b}, (_x, _y) -> _x - _y)"
 
 
 def _residual_sub(res: DataFrame, m: int, sd: int) -> DataFrame:
-    return _pq_sub(res.select("vec_id", F.col("rv").alias("v")), m, sd)
+    return _pq_sub(res, m, sd, v="rv")
 
 
 def _residual_train(corpus: DataFrame, coarse: DataFrame, m: int, ks: int,
@@ -965,8 +903,7 @@ def _residual_train(corpus: DataFrame, coarse: DataFrame, m: int, ks: int,
     init_ids = corpus.select("vec_id").orderBy("vec_id").limit(ks)
     init_cb = (
         subr.join(F.broadcast(init_ids), "vec_id")
-        .select("j", F.col("vec_id").cast("int").alias("cluster"),
-                F.col("sv").alias("cv"))
+        .selectExpr("j", "CAST(vec_id AS int) AS cluster", "sv AS cv")
     )
     return res, _local_artifact(
         _pq_codebooks(subr, ks, sd, pq_iters, init=init_cb))
@@ -978,36 +915,40 @@ def _residual_encode(res: DataFrame, cb: DataFrame, m: int,
     one encoder of the in-plan scorers, the index build and the index
     add-batch — so encode-at-build equals encode-at-add by construction."""
     return (_pq_encode(_residual_sub(res, m, sd), cb)
-            .join(res.select("vec_id", "cell"), "vec_id")
-            .select("vec_id", "cell", "j", "code"))
+            .join(res.selectExpr("vec_id", "cell"), "vec_id")
+            .selectExpr("vec_id", "cell", "j", "code"))
 
 
-def _residual_search(queries: DataFrame, probes: DataFrame,
-                     coarse: DataFrame, cb: DataFrame, codes: DataFrame,
-                     m: int, sd: int, k: int) -> DataFrame:
-    """IVFADC query over (coarse, codebooks, codes): the per-(query,
-    PROBED CELL) ADC lookup table — the query residual q − centroid(cell)
+def _residual_search(queries: DataFrame, coarse: DataFrame, cb: DataFrame,
+                     codes: DataFrame, nprobe: int, m: int, sd: int,
+                     k: int) -> DataFrame:
+    """IVFADC query over (coarse, codebooks, codes). One subtree, which
+    reads the query set once, routes each query to its `nprobe` nearest
+    cells (`_probes`), takes the query residual q − centroid(cell) and
+    builds the per-(query, PROBED CELL) ADC lookup table — the residual
     differs per probed cell, so each (query, cell) pair gets its own
-    m × ks distance table (Jégou et al. 2011 §IV-A eq. 17; n_queries ×
-    nprobe × m × ks rows, broadcast, built from broadcasts) — then ADC
-    over the probed cells' codes. `probes` is (query_id, cell). The
-    in-plan scorers and `ivf_pq_query_index` all rank through here."""
-    qres = _minus_centroid(queries.join(F.broadcast(probes), "query_id"),
-                           coarse, "qv", "rqv", "query_id", "cell")
+    m × ks distance table (Jégou et al. 2011 §IV-A eq. 17). The table
+    is a bounded leaf (`_local_artifact`) of n_queries × nprobe × m × ks
+    rows, and the codes join it, broadcast, directly on (cell, j,
+    code): it holds only probed cells, so that join is the probe
+    restriction. (Leaving the table in the plan was measured no
+    faster.) The in-plan scorers and `ivf_pq_query_index` all rank
+    through here."""
+    qres = _probes(queries, coarse, nprobe, "qv", "cv").selectExpr(
+        "query_id", "cell", f"{_minus('qv', 'cv')} AS rqv")
     lut = _pq_lut(_pq_sub(qres, m, sd, "query_id", "cell", v="rqv"), cb,
                   "query_id", "cell")
-    return _adc_rank(codes.join(F.broadcast(probes), "cell"), lut, k)
+    return _adc_rank(codes, _local_artifact(lut), k, "cell")
 
 
 def _exact_topk(corpus: DataFrame, queries: DataFrame, k: int) -> DataFrame:
     """Exact-d2 top-k (query_id, neighbor_id) per query — the recall
     baseline, as a bounded leaf (k × n_queries rows)."""
-    scored = corpus.join(F.broadcast(queries)).select(
-        "query_id", F.col("vec_id").alias("neighbor_id"),
-        _d2(F.col("qv"), F.col("v")).alias("exact_d2"))
+    scored = corpus.join(F.broadcast(queries)).selectExpr(
+        "query_id", "vec_id AS neighbor_id", f"{_d2('qv', 'v')} AS exact_d2")
     return _local_artifact(
-        _top(scored, k, "query_id", F.col("exact_d2").asc(),
-             F.col("neighbor_id")).select("query_id", "neighbor_id"))
+        _top(scored, k, "query_id", "exact_d2 ASC",
+             "neighbor_id").selectExpr("query_id", "neighbor_id"))
 
 
 def _with_recall(out: DataFrame, exact: DataFrame, k: int, cols: list,
@@ -1019,10 +960,9 @@ def _with_recall(out: DataFrame, exact: DataFrame, k: int, cols: list,
         hits = (topk.join(F.broadcast(exact), ["query_id", "neighbor_id"],
                           "left_semi")
                 .groupBy("query_id")
-                .agg(F.round(F.count("*") / F.lit(float(k)), 6).alias(name)))
+                .agg(F.expr(f"round(count(*) / {_dbl(k)}, 6) AS {name}")))
         out = out.join(F.broadcast(hits), "query_id", "left")
-    return out.select(*cols,
-                      *[F.coalesce(n, F.lit(0.0)).alias(n) for n in runs])
+    return out.selectExpr(*cols, *[f"coalesce({n}, 0D) AS {n}" for n in runs])
 
 
 def ivf_pq_residual_topk(embeddings: DataFrame, k: int = 3,
@@ -1063,25 +1003,25 @@ def ivf_pq_residual_topk(embeddings: DataFrame, k: int = 3,
     # emb persisted for the whole operator (guide §5): each artifact
     # collect below is its own job, and without the cache every one
     # re-scans the source parquet (input bytes ×9.5, r13 sidecar).
-    emb = tracked_persist(
-        embeddings.select("vec_id", _as_double("embedding").alias("v")))
-    # BOUNDED trained artifacts (n_cells centroids, n_queries*nprobe
-    # probes, m*ks codebooks, k*n_queries exact baseline) land as
-    # parallelized leaves (`_local_artifact` — bit-identical values,
-    # one producing job each), so the downstream plans (residual
-    # projection, encode, LUT, ADC rank, recall joins) are all O(small)
-    # instead of re-walking the unrolled training subtrees. (A
-    # localCheckpoint variant was measured and rejected: `.rdd` forces
-    # serial physical planning per artifact — +6 s build for −3 s
-    # execution on this key.)
+    emb = tracked_persist(_vectors(embeddings))
+    # BOUNDED trained artifacts (n_cells centroids, m*ks codebooks, the
+    # residual LUT, n_queries*nprobe raw-side probes, k*n_queries exact
+    # baseline) land as parallelized leaves (`_local_artifact` —
+    # bit-identical values, one producing job each), so the downstream
+    # plans (residual projection, encode, ADC rank, recall joins) are
+    # all O(small) instead of re-walking the unrolled training
+    # subtrees. (A localCheckpoint variant was measured and rejected:
+    # `.rdd` forces serial physical planning per artifact — +6 s build
+    # for −3 s execution on this key.)
     coarse = _coarse(emb, n_cells, coarse_iters, dim)
     queries, corpus = _split(emb, n_queries)
-    probes = _local_artifact(_probes(queries, coarse, nprobe))
     res, cb_r = _residual_train(corpus, coarse, m, ks, sd, pq_iters)
-    topk_r = _residual_search(queries, probes, coarse, cb_r,
-                              _residual_encode(res, cb_r, m, sd), m, sd, k)
-    # raw side (identical spec to ivf_pq_topk, sharing coarse/probes)
-    topk_raw = _raw_ivf_pq(emb, res.select("vec_id", "cell"), probes,
+    topk_r = _residual_search(queries, coarse, cb_r,
+                              _residual_encode(res, cb_r, m, sd), nprobe, m,
+                              sd, k)
+    # raw side (identical spec to ivf_pq_topk, sharing coarse)
+    topk_raw = _raw_ivf_pq(emb, res.selectExpr("vec_id", "cell"),
+                           _local_artifact(_probes(queries, coarse, nprobe)),
                            n_queries, m, ks, sd, pq_iters, k)
     return _with_recall(
         topk_r, _exact_topk(corpus, queries, k), k,
@@ -1109,7 +1049,7 @@ def ivf_pq_topk(embeddings: DataFrame, k: int = 3, n_queries: int = 10,
     (nprobe/n_cells of the data in expectation). Probe routing and code
     election are broadcast-centroid argmins; the candidate join keys on
     the CELL id; the ADC LUT broadcasts."""
-    emb = embeddings.select("vec_id", _as_double("embedding").alias("v"))
+    emb = _vectors(embeddings)
     coarse = _coarse(emb, n_cells, coarse_iters, dim)
     queries, corpus = _split(emb, n_queries)
     return _raw_ivf_pq(emb, _assign(corpus, coarse, "cell"),
@@ -1159,8 +1099,7 @@ def ivf_pq_build_index(embeddings: DataFrame, index_root: str,
     # emb persisted across the build's jobs (coarse training, codebook
     # training, encode) — without it each one re-scans the source
     # parquet (guide §5)
-    emb = tracked_persist(
-        embeddings.select("vec_id", _as_double("embedding").alias("v")))
+    emb = tracked_persist(_vectors(embeddings))
     # each bounded artifact is written straight from its leaf: no
     # read-back job (the leaf IS what the parquet roundtrip would
     # return — doubles survive parquet bit-exactly, so encode-at-build
@@ -1206,8 +1145,7 @@ def ivf_pq_add_batch(spark, index_root: str,
     p = idx.read_manifest(index_root)["params"]
     coarse_t = idx.read_index_table(spark, index_root, "coarse")
     cb_t = idx.read_index_table(spark, index_root, "codebooks")
-    emb = new_vectors.select("vec_id", _as_double("embedding").alias("v"))
-    res = tracked_persist(_residuals(emb, coarse_t))
+    res = tracked_persist(_residuals(_vectors(new_vectors), coarse_t))
     codes = _residual_encode(res, cb_t, p["m"], p["dim"] // p["m"])
     kdir = idx.new_data_dir(index_root, "codes",
                             f"b{idx.latest_version(index_root) + 1:05d}")
@@ -1248,10 +1186,11 @@ def ivf_pq_query_index(spark, index_root: str, queries: DataFrame,
     aggregation: the plan reads the manifest's three index tables plus
     the query vectors (m/dim come from the manifest params; `version`
     time-travels to an earlier index state — pre-add-batch results are
-    reproducible forever). Probe routing is a broadcast-centroid window
-    top-nprobe; the per-(query, probed cell) residual ADC LUT
-    (n_queries × nprobe × m × ks) broadcasts; candidates key on the
-    CELL id; the per-query ranking touches only probed cells' codes.
+    reproducible forever). Probe routing (a broadcast-centroid window
+    top-nprobe), the query residuals and the per-(query, probed cell)
+    residual ADC LUT (n_queries × nprobe × m × ks rows) are one subtree
+    over the query set; codes join the broadcast LUT on (cell, j, code),
+    so the per-query ranking touches only probed cells' codes.
     Bit-equal to the in-plan residual scoring on the same data by
     construction: both rank through `_residual_search`, over codes
     from `_residual_encode`.
@@ -1268,12 +1207,7 @@ def ivf_pq_query_index(spark, index_root: str, queries: DataFrame,
     # O(|deleted|) key set; a deleted-then-re-added vector is served
     # from its re-add dir. Tombstone-free manifests scan plain.
     codes_t = idx.scan_sequenced(spark, man, "codes", "vec_id")
-
-    # n_queries × nprobe rows, consumed by both the LUT and the
-    # candidate join — a leaf (`_local_artifact`), so the query set is
-    # scanned once and both consumers plan on it
-    probes = _local_artifact(_probes(queries, coarse_t, nprobe))
-    return _residual_search(queries, probes, coarse_t, cb_t, codes_t,
+    return _residual_search(queries, coarse_t, cb_t, codes_t, nprobe,
                             p["m"], p["dim"] // p["m"], k)
 
 
@@ -1299,29 +1233,23 @@ def knn_join(embeddings: DataFrame, k: int = 3, n_clusters: int = 8,
     with WindowGroupLimit (per-partition heaps — k rows per vector
     retained pre-shuffle, asserted in tests/test_plans.py).
     """
-    emb = embeddings.select("vec_id", _as_double("embedding").alias("v"))
+    emb = _vectors(embeddings)
     # leaf centroids: the persisted `assigned` is self-joined below,
     # and each alias would re-walk an inlined training tree at plan time
     cents = _coarse(emb, n_clusters, iters, dim)
     # nv: per-vector norm computed once, not per pair (see semdedup —
     # bit-identical values, Σ|cell|² fewer HOF folds)
     assigned = tracked_persist(_assign(
-        emb, cents, "cluster", "v", _norm(F.col("v")).alias("nv")))
+        emb, cents, "cluster", "v", f"{_norm('v')} AS nv"))
     a, b = assigned.alias("a"), assigned.alias("b")
-    cos = (_dot(F.col("a.v"), F.col("b.v"))
-           / (F.col("a.nv") * F.col("b.nv")))
     pairs = (
-        a.join(b, (F.col("a.cluster") == F.col("b.cluster"))
-               & (F.col("a.vec_id") != F.col("b.vec_id")))
-        .select(F.col("a.vec_id").alias("vec_id"),
-                F.col("b.vec_id").alias("neighbor_id"),
-                cos.alias("cos"))
+        a.join(b, F.expr("a.cluster = b.cluster AND a.vec_id != b.vec_id"))
+        .selectExpr("a.vec_id AS vec_id", "b.vec_id AS neighbor_id",
+                    f"{_dot('a.v', 'b.v')} / (a.nv * b.nv) AS cos")
     )
-    return _top(pairs, k, "vec_id", F.col("cos").desc(),
-                F.col("neighbor_id")).select(
-        "vec_id", "neighbor_id",
-        F.col("rank").cast("int").alias("rank"),
-        F.round("cos", 6).alias("cos_sim"))
+    return _top(pairs, k, "vec_id", "cos DESC", "neighbor_id").selectExpr(
+        "vec_id", "neighbor_id", "CAST(rank AS int) AS rank",
+        "round(cos, 6) AS cos_sim")
 
 
 def pca_power_iteration(embeddings: DataFrame, iters: int = 2,
@@ -1352,15 +1280,15 @@ def pca_power_iteration(embeddings: DataFrame, iters: int = 2,
     The Gram matrix is never materialized; memory is O(dim).
     """
     emb = tracked_persist(
-        embeddings.select(_as_double("embedding").alias("x")))
+        embeddings.selectExpr("CAST(embedding AS array<double>) AS x"))
     w_df = emb.sparkSession.range(1).select(
         F.array(F.lit(1.0).cast("double"),
                 *[F.lit(0.0).cast("double") for _ in range(dim - 1)])
         .alias("w"))
 
     for _ in range(iters):
-        d = emb.crossJoin(F.broadcast(w_df)).select(
-            "x", _dot(F.col("x"), F.col("w")).alias("d"))
+        d = emb.crossJoin(F.broadcast(w_df)).selectExpr(
+            "x", f"{_dot('x', 'w')} AS d")
         contrib = d.select(
             F.posexplode(
                 F.transform(F.col("x"), lambda xi: xi * F.col("d"))
@@ -1423,14 +1351,12 @@ def ivf_pq_rerank_topk(embeddings: DataFrame, k: int = 3,
     # emb persisted for the operator's artifact jobs (guide §5 — same
     # rationale as ivf_pq_residual_topk), whose artifacts are leaves
     # for the same reason too
-    emb = tracked_persist(
-        embeddings.select("vec_id", _as_double("embedding").alias("v")))
+    emb = tracked_persist(_vectors(embeddings))
     coarse = _coarse(emb, n_cells, coarse_iters, dim)
     queries, corpus = _split(emb, n_queries)
-    probes = _local_artifact(_probes(queries, coarse, nprobe))
     res, cb_r = _residual_train(corpus, coarse, m, ks, sd, pq_iters)
     short = _local_artifact(_residual_search(
-        queries, probes, coarse, cb_r, _residual_encode(res, cb_r, m, sd),
+        queries, coarse, cb_r, _residual_encode(res, cb_r, m, sd), nprobe,
         m, sd, shortlist))
 
     # BROADCAST the (n_queries × shortlist)-row candidate list: the hint
@@ -1441,14 +1367,12 @@ def ivf_pq_rerank_topk(embeddings: DataFrame, k: int = 3,
         .join(F.broadcast(short.select("query_id", "neighbor_id")),
               "neighbor_id")
         .join(F.broadcast(queries), "query_id")
-        .select("query_id", "neighbor_id",
-                _d2(F.col("qv"), F.col("v")).alias("exact_d2"))
+        .selectExpr("query_id", "neighbor_id",
+                    f"{_d2('qv', 'v')} AS exact_d2")
     )
-    topk_rr = _top(rer, k, "query_id", F.col("exact_d2").asc(),
-                   F.col("neighbor_id"))
+    topk_rr = _top(rer, k, "query_id", "exact_d2 ASC", "neighbor_id")
     return _with_recall(
         topk_rr, _exact_topk(corpus, queries, k), k,
         ["query_id", "neighbor_id", "rank",
-         F.round("exact_d2", 6).alias("exact_d2")],
-        recall_reranked=topk_rr,
-        recall_adc=short.filter(F.col("rank") <= k))
+         "round(exact_d2, 6) AS exact_d2"],
+        recall_reranked=topk_rr, recall_adc=short.filter(f"rank <= {k}"))

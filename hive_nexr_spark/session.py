@@ -90,6 +90,9 @@ def get_session(
       matching Hive 0.8 (`exec/FunctionRegistry.java:356-374` cast family).
     * ``spark.sql.session.timeZone=UTC`` — Hive 0.8 timestamps are tz-naive;
       the DuckDB oracle reads the same parquet as UTC-naive.
+    * ``spark.sql.icu.caseMappings.enabled=false`` — ``lower``/``upper`` use
+      Java ``String`` case mapping, as Hive 0.8's UDFs do; the ICU mapper
+      costs over a second of class loading on the first ``lower()`` in a JVM.
 
     Scale pins (100 TB posture):
 
@@ -117,6 +120,7 @@ def get_session(
         # --- Hive-0.8 semantic parity ---
         .config("spark.sql.ansi.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.sql.icu.caseMappings.enabled", "false")
         .config("spark.sql.parquet.int96RebaseModeInRead", "CORRECTED")
         .config("spark.sql.parquet.datetimeRebaseModeInRead", "CORRECTED")
         # testdata events.parquet stores TIMESTAMP(NANOS); read as long and

@@ -1034,19 +1034,25 @@ def changes_between(spark: SparkSession, base: str, v_from: int,
     new_tombs = [d for d in m_to["deletes"] if d not in m_from["deletes"]]
     # schema source for empty frames: the recorded data schema of the
     # source version, or of the target when the source is an EMPTY
-    # table with no data dirs yet. When BOTH versions list no data
-    # dirs (delete-only commits against a not-yet-loaded table) there
-    # is no data schema to borrow — the window's change sets are empty
-    # by construction, so return two empty key-column frames.
+    # table with no data dirs yet — under its current column names
+    # when it tracks field IDs, as its reads are. When BOTH versions
+    # list no data dirs (delete-only commits against a not-yet-loaded
+    # table) there is no data schema to borrow — the window's change
+    # sets are empty by construction, so return two empty key-column
+    # frames.
     if not m_from["dirs"] and not m_to["dirs"]:
         key = m_to["key"] or "key"
         empty = local_frame(spark, [], f"{key} string")
         return empty, empty
     src = m_from if m_from["dirs"] else m_to
-    schema_src = idx.table_reader(spark, src, "data").parquet(
-        src["dirs"][0])
+    schema_src = (_visible(spark, base, src, src["dirs"][:1])
+                  if src["schema"] else
+                  idx.table_reader(spark, src, "data").parquet(
+                      src["dirs"][0]))
     if new_dirs:
-        inserted = _scan(spark, m_to, new_dirs)
+        # under the target's column names, like the delete frame: on a
+        # field-ID table the dirs' physical names may be older ones
+        inserted = _visible(spark, base, m_to, new_dirs)
     else:
         inserted = schema_src.limit(0)
     if new_tombs:

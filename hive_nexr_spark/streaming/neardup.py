@@ -129,36 +129,33 @@ def _gate_decisions(spark: SparkSession, index_root: str,
     batch-boundary-independent — the determinism contract. The batch
     is shingled and banded in one place (`probes`), which feeds both
     the index probe and the candidate self-join."""
-    toks = dd._with_shingles(batch.select("doc_id", "text")).select(
+    toks = dd._with_shingles(batch.selectExpr("doc_id", "text")).selectExpr(
         "doc_id", "sh")
     probes = dd.hof_bands(toks)
     bands_t, toks_t = dd._index_tables(spark, index_root, frozen_version)
     m = (dd._index_matches(probes, bands_t, toks_t, threshold).distinct()
-         .groupBy(F.col("doc_b").alias("doc_id"))
-         .agg(F.count("*").cast("int").alias("n_index_matches"),
-              F.max("jaccard").alias("best_jaccard")))
+         .groupBy(F.expr("doc_b AS doc_id"))
+         .agg(F.expr("CAST(count(*) AS int) AS n_index_matches"),
+              F.expr("max(jaccard) AS best_jaccard")))
     pairs = dd._verified_pairs(dd._band_candidates(probes), toks, threshold)
-    peers = pairs.select(F.explode(F.array(
-        F.struct(F.col("doc_a").alias("doc_id"), F.col("doc_b").alias("peer")),
-        F.struct(F.col("doc_b").alias("doc_id"), F.col("doc_a").alias("peer")),
-    )).alias("p")).select("p.*")
+    peers = pairs.selectExpr(
+        "explode(array(named_struct('doc_id', doc_a, 'peer', doc_b), "
+        "named_struct('doc_id', doc_b, 'peer', doc_a))) AS p",
+    ).selectExpr("p.*")
     bm = (peers.groupBy("doc_id")
-          .agg(F.count("*").cast("int").alias("n_batch_matches"),
-               F.min("peer").alias("batch_dup_of")))
+          .agg(F.expr("CAST(count(*) AS int) AS n_batch_matches"),
+               F.expr("min(peer) AS batch_dup_of")))
     return (
-        batch.select("doc_id").join(m, "doc_id", "left")
+        batch.selectExpr("doc_id").join(m, "doc_id", "left")
         .join(bm, "doc_id", "left")
-        .select(
+        .selectExpr(
             "doc_id",
-            F.coalesce("n_index_matches", F.lit(0)).cast("int")
-            .alias("n_index_matches"),
-            F.round(F.coalesce("best_jaccard", F.lit(0.0)), 6)
-            .alias("best_jaccard"),
-            F.when(F.col("n_index_matches").isNull(), 1).otherwise(0)
-            .cast("int").alias("admitted"),
-            F.coalesce("n_batch_matches", F.lit(0)).cast("int")
-            .alias("n_batch_matches"),
-            F.col("batch_dup_of"),
+            "CAST(coalesce(n_index_matches, 0) AS int) AS n_index_matches",
+            "round(coalesce(best_jaccard, 0D), 6) AS best_jaccard",
+            "CAST(CASE WHEN n_index_matches IS NULL THEN 1 ELSE 0 END "
+            "AS int) AS admitted",
+            "CAST(coalesce(n_batch_matches, 0) AS int) AS n_batch_matches",
+            "batch_dup_of",
         )
     )
 

@@ -126,3 +126,38 @@ def test_negative_auth_corpus_raises(spark, qf):
         df = run_qfile(spark, f"{NEG_DIR}/{qf}")
         if df is not None:
             df.take(5)
+
+
+def test_plain_select_throws_nothing_in_the_jvm(spark, monkeypatch):
+    """A statement on a session that never set
+    `hive.security.authorization.enabled` asks for the key with a
+    default: an unset key read without one throws in the JVM, and each
+    such exception costs about 14 Py4J round trips to convert. Every
+    Java-side exception surfaces through py4j's `get_return_value`, so
+    none may pass through it while the statement runs."""
+    import py4j.java_gateway as gw
+
+    from hive_nexr_spark.hiveql import HiveQLSession
+
+    key = "hive.security.authorization.enabled"
+    prev = spark.conf.get(key, "false")
+    spark.conf.unset(key)
+    h = HiveQLSession(spark)
+    raised = []
+    inner = gw.get_return_value
+
+    def spy(*a, **kw):
+        try:
+            return inner(*a, **kw)
+        except Exception as e:
+            raised.append(e)
+            raise
+
+    monkeypatch.setattr(gw, "get_return_value", spy)
+    try:
+        rows = h.sql("SELECT 1 AS x").collect()
+    finally:
+        monkeypatch.undo()
+        spark.conf.set(key, prev)
+    assert [r.x for r in rows] == [1]
+    assert raised == [], f"Java exceptions during a plain SELECT: {raised}"

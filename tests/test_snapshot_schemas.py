@@ -235,3 +235,29 @@ def test_partition_compaction_after_rename_keeps_values(spark, tmp_path):
     assert want == [(1, "a", 10), (2, "b", 20), (3, "a", 30)]
     v = sn.compact_partition(spark, base, "a")
     assert _rows(sn.read_version(spark, base, v)) == want
+
+
+def test_changes_after_rename_use_the_current_names(spark, tmp_path):
+    """On a table that tracks field IDs, both frames of every
+    `changes_between` window carry the version's current column names:
+    inserts of a dir written after a RENAME, and the empty insert frame
+    of a delete-only window, match the delete frame."""
+    from hive_nexr_spark.sources import snapshots as sn
+
+    base = str(tmp_path / "t")
+    os.makedirs(base)
+    sn._commit_frame(base, 1, "data_v1",
+                     spark.createDataFrame([(1, 10), (2, 20)],
+                                           "k bigint, x bigint"))
+    assert sn.alter_rename_column(spark, base, "x", "y") == 3
+    sn._commit_frame(base, 4, "data_v4",
+                     spark.createDataFrame([(3, 30)], "k bigint, y bigint"))
+    assert sn.commit_delete(spark, base,
+                            spark.createDataFrame([(1,)], "k bigint"),
+                            "k") == 5
+    ins, dels = sn.changes_between(spark, base, 3, 4)
+    assert ins.columns == dels.columns == ["k", "y"]
+    assert _rows(ins) == [(3, 30)] and _rows(dels) == []
+    ins, dels = sn.changes_between(spark, base, 4, 5)
+    assert ins.columns == dels.columns == ["k", "y"]
+    assert _rows(ins) == [] and _rows(dels) == [(1, 10)]
