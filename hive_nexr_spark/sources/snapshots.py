@@ -467,8 +467,10 @@ def _read_version_evolved(spark: SparkSession, base: str, man: dict,
     target = man["schema"]
     # the schema-initialization commit: its names ARE the physical
     # column names of every earlier data dir (no rename can precede
-    # schema tracking), so older dirs resolve through it
-    first_v = next(v for v, _ in _field_schemas(base, man["version"]))
+    # schema tracking), so older dirs resolve through it. It may follow
+    # `man` when `man`'s dirs read under a later version's schema (a
+    # change read's source side)
+    first_v = next(v for v, _ in _field_schemas(base, _latest(base)))
     cache: dict[int, dict] = {}
 
     def at(ws_v: int) -> dict:
@@ -1032,36 +1034,41 @@ def changes_between(spark: SparkSession, base: str, v_from: int,
     m_to = _load_manifest(base, v_to)
     new_dirs = [d for d in m_to["dirs"] if d not in m_from["dirs"]]
     new_tombs = [d for d in m_to["deletes"] if d not in m_from["deletes"]]
-    # schema source for empty frames: the recorded data schema of the
-    # source version, or of the target when the source is an EMPTY
-    # table with no data dirs yet — under its current column names
-    # when it tracks field IDs, as its reads are. When BOTH versions
-    # list no data dirs (delete-only commits against a not-yet-loaded
-    # table) there is no data schema to borrow — the window's change
-    # sets are empty by construction, so return two empty key-column
-    # frames.
+    # When BOTH versions list no data dirs (delete-only commits against
+    # a not-yet-loaded table) there is no data schema to borrow — the
+    # window's change sets are empty by construction, so return two
+    # empty key-column frames.
     if not m_from["dirs"] and not m_to["dirs"]:
         key = m_to["key"] or "key"
         empty = local_frame(spark, [], f"{key} string")
         return empty, empty
-    src = m_from if m_from["dirs"] else m_to
-    schema_src = (_visible(spark, base, src, src["dirs"][:1])
-                  if src["schema"] else
-                  idx.table_reader(spark, src, "data").parquet(
-                      src["dirs"][0]))
+
+    def as_target(man: dict) -> dict:
+        # on a table that tracks field IDs, every frame carries the
+        # target's column names: `man`'s dirs and tombstones read
+        # through its field-ID schema (a field renamed in the window
+        # takes its new name, one dropped in it goes)
+        return {**man, "schema": m_to["schema"]} if m_to["schema"] else man
+
+    def no_rows() -> DataFrame:
+        # the recorded data schema of the source version, or of the
+        # target when the source is an EMPTY table with no data dirs yet
+        src = m_from if m_from["dirs"] else m_to
+        return _visible(spark, base, as_target(src),
+                        src["dirs"][:1]).limit(0)
+
     if new_dirs:
-        # under the target's column names, like the delete frame: on a
-        # field-ID table the dirs' physical names may be older ones
         inserted = _visible(spark, base, m_to, new_dirs)
     else:
-        inserted = schema_src.limit(0)
+        inserted = no_rows()
     if new_tombs:
         keys = idx.table_reader(spark, m_to, idx.TOMBSTONES).parquet(
             *new_tombs)
-        deleted = read_version(spark, base, v_from).join(
-            F.broadcast(keys), m_to["key"], "left_semi")
+        deleted = _visible(spark, base, as_target(m_from),
+                           m_from["dirs"]).join(F.broadcast(keys),
+                                                m_to["key"], "left_semi")
     else:
-        deleted = schema_src.limit(0)
+        deleted = no_rows()
     return inserted, deleted
 
 

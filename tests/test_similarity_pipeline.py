@@ -36,17 +36,19 @@ _GATE = [(1, True), (1, False), (32, True), (32, False)]
 _GRID = [(sp, aqe) for sp in (1, 4, 32) for aqe in (True, False)]
 
 
+def _query_vectors(emb):
+    return (emb.select("vec_id",
+                       F.col("embedding").cast("array<double>").alias("qv"))
+            .filter(F.col("vec_id") < 10)
+            .select(F.col("vec_id").alias("query_id"), "qv"))
+
+
 def _build_query(spark, emb):
     from hive_nexr_spark.datapipe import similarity
 
     d = similarity._index_scratch()
     similarity.ivf_pq_build_index(emb, d)
-    queries = (emb.select("vec_id",
-                          F.col("embedding").cast("array<double>")
-                          .alias("qv"))
-               .filter(F.col("vec_id") < 10)
-               .select(F.col("vec_id").alias("query_id"), "qv"))
-    return similarity.ivf_pq_query_index(spark, d, queries)
+    return similarity.ivf_pq_query_index(spark, d, _query_vectors(emb))
 
 
 def _op(name):
@@ -183,6 +185,31 @@ def test_ivf_pq_query_index_scans_local_leaves(spark, dfs):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "LocalTableScan" in plan, plan
     assert "ExistingRDD" not in plan, plan
+
+
+def test_ivf_pq_query_past_the_artifact_bound_keeps_the_lut_in_plan(
+        spark, dfs, monkeypatch):
+    """A query batch whose ADC table (n_queries × nprobe × m × ks rows)
+    is past `_MAX_ARTIFACT_ROWS` is answered as under the bound, with
+    the table left in the plan instead of collected as a leaf."""
+    from hive_nexr_spark.datapipe import similarity
+
+    emb = dfs["embeddings"]
+    d = similarity._index_scratch()
+    similarity.ivf_pq_build_index(emb, d)
+
+    def query():
+        df = similarity.ivf_pq_query_index(spark, d, _query_vectors(emb))
+        return (sorted(df.collect()),
+                df._jdf.queryExecution().executedPlan().toString())
+
+    leaf_rows, leaf_plan = query()
+    # 10 queries × nprobe 2 × m 4 × ks 16 = 1,280 table rows
+    monkeypatch.setattr(similarity, "_MAX_ARTIFACT_ROWS", 1_279)
+    rows, plan = query()
+    assert rows == leaf_rows and len(rows) == 30
+    assert "LocalTableScan" in leaf_plan, leaf_plan
+    assert "LocalTableScan" not in plan, plan
 
 
 _PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(

@@ -239,9 +239,10 @@ def test_partition_compaction_after_rename_keeps_values(spark, tmp_path):
 
 def test_changes_after_rename_use_the_current_names(spark, tmp_path):
     """On a table that tracks field IDs, both frames of every
-    `changes_between` window carry the version's current column names:
-    inserts of a dir written after a RENAME, and the empty insert frame
-    of a delete-only window, match the delete frame."""
+    `changes_between` window carry the target version's column names:
+    inserts of a dir written after a RENAME, deletes and empty frames
+    read from dirs written before it, in windows that start before or
+    after the RENAME (or a DROP)."""
     from hive_nexr_spark.sources import snapshots as sn
 
     base = str(tmp_path / "t")
@@ -255,9 +256,18 @@ def test_changes_after_rename_use_the_current_names(spark, tmp_path):
     assert sn.commit_delete(spark, base,
                             spark.createDataFrame([(1,)], "k bigint"),
                             "k") == 5
-    ins, dels = sn.changes_between(spark, base, 3, 4)
-    assert ins.columns == dels.columns == ["k", "y"]
-    assert _rows(ins) == [(3, 30)] and _rows(dels) == []
-    ins, dels = sn.changes_between(spark, base, 4, 5)
-    assert ins.columns == dels.columns == ["k", "y"]
-    assert _rows(ins) == [] and _rows(dels) == [(1, 10)]
+    for v_from, v_to, ins_rows, del_rows in [
+            (3, 4, [(3, 30)], []), (4, 5, [], [(1, 10)]),
+            (1, 4, [(3, 30)], []), (1, 5, [(3, 30)], [(1, 10)]),
+            (2, 5, [(3, 30)], [(1, 10)])]:
+        ins, dels = sn.changes_between(spark, base, v_from, v_to)
+        assert ins.columns == dels.columns == ["k", "y"], (v_from, v_to)
+        assert _rows(ins) == ins_rows and _rows(dels) == del_rows, (
+            v_from, v_to)
+    assert sn.alter_drop_column(spark, base, "y") == 6
+    assert sn.commit_delete(spark, base,
+                            spark.createDataFrame([(2,)], "k bigint"),
+                            "k") == 7
+    ins, dels = sn.changes_between(spark, base, 4, 7)
+    assert ins.columns == dels.columns == ["k"]
+    assert _rows(ins) == [] and _rows(dels) == [(1,), (2,)]
